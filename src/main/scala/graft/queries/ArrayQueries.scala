@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** The SURVEY §2.7 declared query set: each query runs the full engine path
   * (distributed ingest already done by ArrayFixtures; here: MVCC resolve →
-  * pruned chunk join → decode → exploded view), and each has a DuckDB
+  * pruned chunk fetch → decode → exploded view), and each has a DuckDB
   * oracle over the same events.parquet ground truth.
   */
 object ArrayQueries {

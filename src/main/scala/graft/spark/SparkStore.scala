@@ -3,6 +3,7 @@ package graft.spark
 import graft.core._
 import graft.filters.FilterChain
 import graft.meta.DatasetMeta
+import graft.spark.source.{ChunkSlabCursor, GraftScan, PinnedGraftTable, Resolved}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1797,10 +1798,6 @@ final class SparkDatasetReader(store: SparkStore, name: String) {
 }
 
 object SparkPinnedReader {
-  /** Windows covering at most this many chunks use the collected-isin
-    * point-lookup path instead of the shuffle join. */
-  val PointLookupThreshold = 1024L
-
   /** `getSlice` assembles the response ON THE DRIVER — cap the cell count
     * so a polite full-variable request can't OOM it (64M cells ≈ 512 MiB
     * of doubles). Larger reads belong on `exploded()`/`streamChunks()`. */
@@ -1817,7 +1814,12 @@ object SparkPinnedReader {
           "from the chunk store (GC'd or lost?) — refusing to read fill")
 }
 
-/** Distributed read path (R1-R6 as one Spark plan). */
+/** Distributed read path (R1-R6) over one committed, chain-verified
+  * version. Chunk blobs have one fetch path, the DSv2 scan's planner and
+  * `ChunkSlabCursor`: `exploded` IS the DSv2 scan, and getSlice /
+  * streamChunks / explodedMulti run that scan's input partitions as an
+  * RDD (`chunkRows`). `statsAggregate` alone joins `chunksDF`, for the
+  * hash list of its boundary chunks. */
 final class SparkPinnedReader(store: SparkStore, name: String, val meta: DatasetMeta) {
   import store.spark
   import spark.implicits._
@@ -1867,49 +1869,27 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     }.foldLeft(lit(true))(_ && _)
   }
 
-  /** Number of chunks covering the request — pure driver arithmetic. */
-  private def coveringChunkCount(varName: String, request: Slice): Long = {
-    val grid = meta.chunkGridSlice(varName)
-    (0 until request.rank).map { i =>
-      Math.floorDiv(request.stop(i) - 1, grid.step(i)) -
-        Math.floorDiv(request.start(i), grid.step(i)) + 1
-    }.foldLeft(1L)(_ * _)
-  }
-
-  /** (coordKey, coord, bytes|null) for every covering chunk: pruned coords
-    * ⋈ resolved index ⋈ chunk blobs. Null bytes ⇒ fill chunk (R5).
-    *
-    * For small windows (≤ `PointLookupThreshold` covering chunks) the
-    * resolved hashes are collected and pushed into the chunk scan as an
-    * `isin` predicate — parquet row-group stats on the hash-sorted blobs
-    * prune to point lookups instead of shuffling the chunk table through
-    * a join. Large reads keep the shuffle join (the isin list would be
-    * unbounded). Duplicate blob rows (possible when concurrent writers
-    * race the append-side dedup) are dropped per coordinate. */
+  /** (coordKey, coord, hash, bytes|null) for every chunk covering the
+    * request's step-1 bounding box, planned and fetched exactly as a DSv2
+    * scan of this version (`GraftScan.planInputPartitions`, one task per
+    * input partition, each draining a `ChunkSlabCursor`): point lookups up
+    * to `GraftScan.PointLookupThreshold` covering chunks, a cached scan
+    * manifest above it, hash-range file pruning and the per-JVM blob cache
+    * either way. Null bytes ⇒ fill chunk (R5); a resolved hash whose blob
+    * is missing fails the task (`SparkPinnedReader.requireBlob`). Planning
+    * runs now, on the driver. */
   private[spark] def chunkRows(varName: String, request: Slice): DataFrame = {
-    val coords = coveringCoordsDF(varName, request)
-    val resolved = store.resolvedIndexPinned(name, varName, meta,
-        coordFilter = coordEnvelopeFilter(varName, request))
-      .select("coordKey", "hash")
-    val joined =
-      if (coveringChunkCount(varName, request) <= SparkPinnedReader.PointLookupThreshold) {
-        import spark.implicits._
-        val pairs = resolved.as[(String, String)].collect()
-        val resolvedLocal = pairs.toIndexedSeq.toDF("coordKey", "hash")
-        val blobs = store.chunksDF
-          .filter(col("hash").isin(pairs.map(_._2).toIndexedSeq: _*))
-          .select("hash", "bytes")
-        coords
-          .join(broadcast(resolvedLocal), Seq("coordKey"), "left")
-          .join(broadcast(blobs), Seq("hash"), "left")
-      } else {
-        coords
-          .join(resolved, Seq("coordKey"), "left")
-          .join(store.chunksDF.select("hash", "bytes"), Seq("hash"), "left")
-      }
-    joined
-      .select(col("coordKey"), col("coord"), col("hash"), col("bytes"))
-      .dropDuplicates("coordKey")
+    val r = Resolved(store, meta, name, varName)
+    val box = Slice(request.start, request.stop)
+    val parts = new GraftScan(r, box, empty = false, r.schema)
+      .planInputPartitions()
+    val metaJson = meta.toJson
+    val hconfBc = StoreFs.broadcastConf()
+    spark.sparkContext.parallelize(parts.toSeq, math.max(1, parts.length))
+      .mapPartitions { it =>
+        StoreFs.installExecutorConf(hconfBc.value)
+        it.flatMap(p => new ChunkSlabCursor(p, metaJson, varName, box).framedChunks)
+      }.toDF("coordKey", "coord", "hash", "bytes")
   }
 
 
@@ -1935,14 +1915,12 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     val req = request
     import spark.implicits._
     chunkRows(varName, request)
-      .select(col("coordKey"), col("coord"), col("hash"), col("bytes"))
       .as[(String, Array[Long], String, Array[Byte])]
       .mapPartitions { it =>
         val m = DatasetMeta.fromJson(metaJson)
         val dt = m.dtype(varN)
         val fill = m.fill(varN)
-        it.map { case (key, coord, hash, framed) =>
-          SparkPinnedReader.requireBlob(key, hash, framed)
+        it.map { case (_, coord, _, framed) =>
           val chunkSlice = m.chunkSlice(varN, coord.toVector)
           val slab =
             if (framed == null) Slab.empty(dt, chunkSlice, fill)
@@ -1952,27 +1930,6 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
         }
       }.toDF("coord", "start", "stop", "bytes")
   }
-
-  /** R1/R2 as the Spark-native exploded view: one row per cell of the
-    * request, schema (dim₁: Long, …, dimₙ: Long, value: <elem type>).
-    * Fill cells are materialized for never-written coordinates
-    * (reference fill semantics: impl.clj:221-223).
-    *
-    * Plan shape: chunk blobs decode to PRIMITIVE arrays via the codegen'd
-    * `graft_cells` expression, then `posexplode` + pure long arithmetic
-    * derive each cell's coordinates inside whole-stage codegen — no boxed
-    * Row-per-cell path (which dominated the full-read bench ~5 s of 8 s
-    * at the 216M-cell reference shape). */
-  /** `chunkRows` with the dangling-index guard applied: a hash whose blob
-    * is missing raises INSIDE the plan instead of silently reading fill. */
-  private def guardedChunkRows(varName: String, request: Slice): DataFrame =
-    chunkRows(varName, request).withColumn("bytes",
-      when(col("hash").isNotNull && col("bytes").isNull,
-        raise_error(concat(
-          lit("chunk "), col("coordKey"), lit(" resolved to blob "), col("hash"),
-          lit(" but the blob is missing from the chunk store (GC'd or lost?)" +
-            " — refusing to read fill"))).cast("binary"))
-        .otherwise(col("bytes")))
 
   /** Multi-variable single-pass read: one wide row per cell, columns
     * (dims…, var₁, var₂, …) — the cross-variable frame that otherwise
@@ -2016,11 +1973,16 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     val rank = dims.length
     val grid = meta.chunkGridSlice(varNames.head)
     graft.functions.ChunkFunctions.register(spark)
+    // blobs hold the FULL chunk volume (edge chunks include the overhang,
+    // filled), so per-chunk shape/stride/volume are chunk-grid constants
+    // and the per-cell loop stays rank × (div, mod, add) on plain columns
+    // (a repeated inline shape expression once blew past the 8KB
+    // HugeMethodLimit and ran the Generate loop interpreted, ~100× slower)
     val chunkShape = (0 until rank).map(i => grid.step(i))
     val strides = (0 until rank).map(i => (i + 1 until rank).map(chunkShape).product)
     val volume = chunkShape.product
     val sides = varNames.map { v =>
-      guardedChunkRows(v, request)
+      chunkRows(v, request)
         .select(col("coordKey"), col("coord"), col("bytes").as(s"__bytes_$v"))
     }
     val joined = sides.reduceLeft { (a, b) =>
@@ -2045,6 +2007,17 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     }
   }
 
+  /** R1/R2 as the Spark-native exploded view: one row per cell of the
+    * request, schema (dim₁: Long, …, dimₙ: Long, value: <elem type>).
+    * Fill cells are materialized for never-written coordinates
+    * (reference fill semantics: impl.clj:221-223).
+    *
+    * This is the DSv2 scan (`GraftScan`) of this reader's own pin: the
+    * request envelope pushes down as dim predicates (build-time chunk
+    * pruning), readers fetch blobs from the hash-sorted chunk files
+    * (per-JVM blob cache, no shuffle of chunk bytes), batches emit
+    * COLUMNAR, and repeated scans of the same version reuse the cached
+    * scan manifest. */
   def exploded(varName: String, request: Slice, checkBounds: Boolean = true): DataFrame = {
     val varSlice = meta.varSlice(varName)
     require(request.nonEmpty, s"request slice is empty: $request")
@@ -2071,59 +2044,11 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
           (col(dims(i)) - lit(request.start(i))) % lit(request.step(i)) === 0)
       }
     }
-    // Committed versions ride the DSv2 scan: the request envelope pushes
-    // down as dim predicates (build-time chunk pruning), blobs are fetched
-    // from hash-sorted files by the readers (no shuffle of chunk bytes,
-    // per-JVM blob cache), batches emit COLUMNAR, and repeated scans of
-    // the same immutable version reuse the cached scan manifest. Same
-    // rows as the join path below (pinned by DataSourceSpec full-scan
-    // parity); the join path remains for uncommitted/in-flight versions.
-    if (meta.versionId.exists(v => store.versions(name).exists(_._2 == v))) {
-      val dimNames = meta.variables(varName).shape
-      val base = spark.read.format("graft")
-        .option("root", store.root).option("dataset", name)
-        .option("variable", varName).option("version", vid.toString)
-        .load()
-      return dimNames.zipWithIndex.foldLeft(base) { case (df, (d, i)) =>
-        df.filter(col(d) >= request.start(i) && col(d) < request.stop(i))
-      }
-    }
-    val dtype = meta.dtype(varName)
-    val fill = meta.fill(varName)
-    val dims = meta.variables(varName).shape
-    val rank = dims.length
-    val grid = meta.chunkGridSlice(varName)
-    graft.functions.ChunkFunctions.register(spark)
-
-    // dangling index entry (hash without blob) fails INSIDE the plan —
-    // same invariant as requireBlob on the driver paths
-    val guarded = guardedChunkRows(varName, request)
-
-    // Blobs ALWAYS hold the full chunk volume — edge chunks include the
-    // overhang, filled (write path: chunkSlice = fromChunkCoordinate,
-    // unclipped). So per-chunk shape/stride/volume are CONSTANTS (the
-    // chunk grid), the per-cell loop is rank × (div, mod, add) on plain
-    // columns (small enough to JIT — a repeated inline shape expression
-    // once blew past the 8KB HugeMethodLimit and ran the Generate loop
-    // interpreted, ~100× slower), and overhang cells fall to the request
-    // filter below (request ⊆ variable extent).
-    val chunkShape = (0 until rank).map(i => grid.step(i))
-    val strides = (0 until rank).map(i => (i + 1 until rank).map(chunkShape).product)
-    val volume = chunkShape.product
-    val perChunk = (0 until rank).map(i =>
-      (col("coord")(i) * lit(grid.step(i))).as(s"__base$i"))
-    val cells = guarded.select(col("bytes") +: perChunk: _*)
-      .select((0 until rank).map(i => col(s"__base$i")) :+
-        posexplode(graft.functions.ChunkFunctions.chunkCells(spark,
-          col("bytes"), lit(volume), lit(dtype.name), lit(fill))): _*)
-    val cellCols = (0 until rank).map { i =>
-      s"(__base$i + (CAST(pos AS BIGINT) div ${strides(i)}L) % ${chunkShape(i)}L)" +
-        s" AS `${dims(i)}`"
-    }
-    val out = cells.selectExpr((cellCols :+ "col AS value"): _*)
-    // clip boundary chunks to the request (interior cells pass trivially)
-    (0 until rank).foldLeft(out) { (df, i) =>
-      df.filter(col(dims(i)) >= request.start(i) && col(dims(i)) < request.stop(i))
+    val dimNames = meta.variables(varName).shape
+    val base = org.apache.spark.sql.graft.TableFrames.of(spark,
+      new PinnedGraftTable(Resolved(store, meta, name, varName)))
+    dimNames.zipWithIndex.foldLeft(base) { case (df, (d, i)) =>
+      df.filter(col(d) >= request.start(i) && col(d) < request.stop(i))
     }
   }
 
@@ -2253,9 +2178,15 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     val dtype = meta.dtype(varName)
     val fill = meta.fill(varName)
     val response = Slab.empty(dtype, request, fill)
-    chunkRows(varName, request).collect().foreach { r =>
-      SparkPinnedReader.requireBlob(r.getString(0), r.getString(2),
-        if (r.isNullAt(3)) null else r.getAs[Array[Byte]](3))
+    // a missing blob fails the fetch task; the driver-side API keeps
+    // raising it as requireBlob's IllegalStateException
+    val rows =
+      try chunkRows(varName, request).collect()
+      catch {
+        case e: org.apache.spark.SparkException
+            if e.getCause.isInstanceOf[IllegalStateException] => throw e.getCause
+      }
+    rows.foreach { r =>
       if (!r.isNullAt(3)) {
         val coord = r.getSeq[Long](1).toVector
         val chunkSlice = meta.chunkSlice(varName, coord)

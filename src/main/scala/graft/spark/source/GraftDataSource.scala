@@ -53,7 +53,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
     })
 }
 
-private[source] final case class Resolved(store: SparkStore, meta: DatasetMeta,
+private[spark] final case class Resolved(store: SparkStore, meta: DatasetMeta,
     dataset: String, variable: String, chunked: Boolean = false,
     create: Boolean = false) { // meta is a PROPOSED definition, not committed
   def dims: Vector[String] = meta.variables(variable).shape
@@ -172,6 +172,22 @@ private[source] object GraftSource {
           variables = Map(variable -> VariableDef(
             options.getOrElse("type", "double"), triples.map(_._1), fill)))
     }
+}
+
+/** Read-only table over a pin its caller already resolved — a
+  * `SparkPinnedReader`'s store handle and manifest. The scan then
+  * resolves through THAT handle's verified chain, so the reader's
+  * snapshot (a pin taken before a rollback keeps reading) and the expire
+  * tripwire govern it like every other read of the reader; the `version`
+  * option would re-resolve through a fresh handle instead. */
+private[spark] final class PinnedGraftTable(r: Resolved)
+    extends Table with SupportsRead {
+  override def name(): String = s"graft:${r.dataset}/${r.variable}"
+  override def schema(): StructType = r.schema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(r)
 }
 
 private[source] class GraftTable(options: Map[String, String])
@@ -817,7 +833,7 @@ private[source] object ScanMath {
   }
 }
 
-private[source] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
+private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     required: StructType, scanOptions: Map[String, String] = Map.empty,
     aggSpec: Option[GraftAgg.AggSpec] = None,
     valueFilters: Array[Filter] = Array.empty,
@@ -980,7 +996,7 @@ private[source] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
       val l = limit.get
       var acc = 0L
       var k = 0L
-      val maxWalk = math.min(n, SparkPinnedReader.PointLookupThreshold)
+      val maxWalk = math.min(n, GraftScan.PointLookupThreshold)
       while (k < maxWalk && acc < l) {
         val c = ScanMath.coordOf(k, lo, counts)
         var cells = 1L
@@ -999,7 +1015,7 @@ private[source] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
           ScanMath.coordOf(j, lo, counts).toVector)))
       // acc < l after the walk cap: fall through to normal planning
     }
-    if (n <= SparkPinnedReader.PointLookupThreshold) planPoint()
+    if (n <= GraftScan.PointLookupThreshold) planPoint()
     else planRange(n, lo, counts)
   }
 
@@ -1248,6 +1264,13 @@ private[source] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
 }
 
 private[source] object GraftScan {
+  /** Windows covering at most this many chunks plan as point partitions
+    * (resolved driver-side, exact hash lookups); larger ones plan through
+    * the distributed, cached scan manifest (`planRange`). The one
+    * point-vs-range decision for every chunk read — DSv2 scans and
+    * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti. */
+  val PointLookupThreshold = 1024L
+
   /** Upper bound on `chunked=true` partitions: one task + one driver-side
     * (coord, hash) entry per chunk. The 64 Ki default ≈ a few MiB of
     * driver state and a schedulable task count; larger windows must use
@@ -1328,7 +1351,7 @@ private[source] class GraftReaderFactory(metaJson: String, variable: String,
   * pairs (point partitions carry them verbatim; range partitions derive
   * coords arithmetically and consult their manifest bucket), fetches the
   * wanted blobs, and yields each covering chunk CLIPPED to the request. */
-private[source] final class ChunkSlabCursor(part: InputPartition,
+private[spark] final class ChunkSlabCursor(part: InputPartition,
     metaJson: String, variable: String, request: Slice,
     valueFilters: Array[Filter] = Array.empty) {
 
@@ -1384,8 +1407,6 @@ private[source] final class ChunkSlabCursor(part: InputPartition,
     case _: GraftFillRangePartition => Array.empty
   }
 
-  private def pairs: Iterator[(Array[Long], String)] = kept.iterator
-
   private lazy val bytesByHash: Map[String, Array[Byte]] = {
     val wanted = kept.iterator.map(_._2).filter(_ != null).toSet
     // sibling-harvest only for chunked (one-chunk-per-task) partitions:
@@ -1398,18 +1419,26 @@ private[source] final class ChunkSlabCursor(part: InputPartition,
     else ChunkBlobReader.read(chunkFiles, wanted, harvest)
   }
 
+  /** Each kept chunk as (coordKey, chunk-grid coordinate, hash, framed
+    * blob bytes); hash and bytes are null for a fill chunk. A resolved
+    * hash whose blob is missing raises instead of reading fill. */
+  def framedChunks: Iterator[(String, Array[Long], String, Array[Byte])] =
+    kept.iterator.map { case (coord, hash) =>
+      val key = SparkStore.coordKey(coord.toIndexedSeq)
+      val framed = if (hash == null) null else bytesByHash.getOrElse(hash, null)
+      SparkPinnedReader.requireBlob(key, hash, framed)
+      (key, coord, hash, framed)
+    }
+
   /** Each covering chunk as (chunk-grid coordinate, slab clipped to the
     * request). */
-  def clippedSlabs: Iterator[(Array[Long], Slab)] = pairs.map { case (coord, hash) =>
-    val chunkSlice = meta.chunkSlice(variable, coord.toVector)
-    val slab =
-      if (hash == null) Slab.empty(dtype, chunkSlice, fill)
-      else Slab(dtype, chunkSlice,
-        FilterChain.decode(bytesByHash.getOrElse(hash,
-          throw new IllegalStateException(s"chunk ${coord.mkString(",")} " +
-            s"resolved to blob $hash but the blob is missing from the chunk " +
-            "store (GC'd or lost?) — refusing to read fill"))))
-    (coord, slab.intersectWith(request))
+  def clippedSlabs: Iterator[(Array[Long], Slab)] = framedChunks.map {
+    case (_, coord, _, framed) =>
+      val chunkSlice = meta.chunkSlice(variable, coord.toVector)
+      val slab =
+        if (framed == null) Slab.empty(dtype, chunkSlice, fill)
+        else Slab(dtype, chunkSlice, FilterChain.decode(framed))
+      (coord, slab.intersectWith(request))
   }
 
   /** Projection codes for `requiredFields`: dim index ≥ 0, value = −1,

@@ -98,7 +98,17 @@ object FileFeed {
     tailSlices.foldLeft(mainSlices)(_ unionByName _)
       .repartition(col("_slice"))
       .write.partitionBy("_slice").parquet(tmpAll)
-    for (i <- 0 until nBatches + tails.length) {
+    val slices = 0 until nBatches + tails.length
+    // a knownBounds narrower than the real tsCol range puts rows in slice
+    // dirs outside [0, nBatches + tails): the loop below never moves
+    // those, so deleting tmpAll would drop them silently — refuse instead
+    val stray = Option(new java.io.File(tmpAll).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("_slice="))
+      .filterNot(_.stripPrefix("_slice=").toIntOption.exists(slices.contains))
+    require(stray.isEmpty, s"FileFeed.sliced: rows landed in " +
+      s"${stray.sorted.mkString(", ")}, outside slices [0, ${slices.end}) — " +
+      s"knownBounds $knownBounds does not cover the $tsCol range")
+    for (i <- slices) {
       val dir = new java.io.File(tmpAll, s"_slice=$i")
       val parts = Option(dir.listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet"))

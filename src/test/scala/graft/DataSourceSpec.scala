@@ -213,7 +213,7 @@ class DataSourceSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-dsv2-full").toString
     val store = new SparkStore(spark, root)
     store.create("big")
-    // 1100 covering chunks > PointLookupThreshold (1024) → range path
+    // 1100 covering chunks > GraftScan.PointLookupThreshold (1024) → range path
     val meta = DatasetMeta(
       dimensions = Map("x" -> 2200L), chunkDimensions = Map("x" -> 2L),
       variables = Map("v" -> VariableDef("long", Vector("x"), -9.0)))

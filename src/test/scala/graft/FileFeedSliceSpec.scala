@@ -73,6 +73,20 @@ class FileFeedSliceSpec extends AnyFunSuite {
     assert(mtimes.sliding(2).forall { case Array(a, b) => a < b })
   }
 
+  test("knownBounds narrower than the data fails loudly instead of dropping rows") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("ff-bounds").toString
+    val df = (0L to 89L).toDF("ts_s")
+    // claimed range [30, 59]: rows at 0-29 map below slice 0, 60-89 above
+    // the last slice
+    val e = intercept[IllegalArgumentException] {
+      FileFeed.sliced(df, "ts_s", nBatches = 3, workDir = work,
+        knownBounds = Some((30L, 59L)))
+    }
+    assert(e.getMessage.contains("outside slices [0, 3)"), e.getMessage)
+    assert(e.getMessage.contains("_slice=-"), e.getMessage)
+  }
+
   test("NIO checkpoint manager: atomic create honors no-overwrite contract") {
     val dir = java.nio.file.Files.createTempDirectory("ff-nio")
     val mgr = new graft.streaming.LocalNioCheckpointFileManager(

@@ -413,6 +413,76 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("getSlice, streamChunks and explodedMulti match exploded cell for " +
+      "cell on both planner shapes, strided and unchecked-overhang reads") {
+    val store = freshStore()
+    store.create("pp")
+    // 70×66 in 2×2 chunks = 35×33 = 1,155 chunks, so a near-full window
+    // is range-planned (above the 1,024-chunk point-lookup threshold)
+    val m = DatasetMeta(
+      dimensions = Map("x" -> 70L, "y" -> 66L),
+      chunkDimensions = Map("x" -> 2L, "y" -> 2L),
+      variables = Map(
+        "a" -> VariableDef("double", Vector("x", "y"), -9.0),
+        "b" -> VariableDef("long", Vector("x", "y"), -1.0)))
+    val w = store.addVersion("pp", m)
+    // unaligned partial writes: both variables keep fill regions
+    val aBox = Slice(Seq(0L, 0L), Seq(61L, 66L))
+    w.write("a", Seq(Slab.fromDoubles(DType.DOUBLE, aBox,
+      aBox.iter.map(c => (c(0) * 100 + c(1) + 1).toDouble).toSeq)))
+    val bBox = Slice(Seq(5L, 9L), Seq(70L, 40L))
+    w.write("b", Seq(Slab.fromDoubles(DType.LONG, bBox,
+      bBox.iter.map(c => (c(0) * 1000 + c(1)).toDouble).toSeq)))
+    val r = store.reader("pp").onVersion(w.finishVersion())
+    val extent = Slice(Seq(0L, 0L), Seq(70L, 66L))
+    def inExtent(c: Array[Long]) = c(0) >= 0 && c(0) < 70 && c(1) >= 0 && c(1) < 66
+    def covering(s: Slice) = (0 to 1).map(i =>
+      Math.floorDiv(s.stop(i) - 1, 2L) - Math.floorDiv(s.start(i), 2L) + 1).product
+
+    // (name, request, checkBounds, range-planned)
+    val cases = Seq(
+      ("point window", Slice(Seq(3L, 5L), Seq(41L, 30L)), true, false),
+      ("range window", Slice(Seq(1L, 1L), Seq(69L, 65L)), true, true),
+      ("strided", Slice(Vector(1L, 0L), Vector(70L, 66L), Vector(3L, 5L)), true, true),
+      ("overhang", Slice(Seq(55L, 50L), Seq(75L, 71L)), false, false))
+    cases.foreach { case (name, req, checkBounds, ranged) =>
+      assert((covering(req) > 1024) == ranged, s"$name: planner shape precondition")
+      assert(checkBounds == req.isContainedIn(extent), s"$name: bounds precondition")
+      val key = (c: Array[Long]) => (c(0), c(1))
+      val ea = r.exploded("a", req, checkBounds).collect()
+        .map(row => (row.getLong(0), row.getLong(1)) -> row.getDouble(2)).toMap
+      val eb = r.exploded("b", req, checkBounds).collect()
+        .map(row => (row.getLong(0), row.getLong(1)) -> row.getLong(2)).toMap
+      val cells = req.iter.toSeq
+      assert(ea.size == cells.count(inExtent) && eb.size == ea.size, name)
+      // exploded yields only in-extent cells; the overhang reads as fill
+      def wantA(c: Array[Long]) = if (inExtent(c)) ea(key(c)) else -9.0
+      def wantB(c: Array[Long]) = if (inExtent(c)) eb(key(c)) else -1L
+
+      val slab = r.getSlice("a", req, checkBounds)
+      assert(slab.slice == req, name)
+      cells.foreach(c => assert(slab.valueAt(c.toIndexedSeq) == wantA(c), s"$name getSlice $c"))
+
+      if (req.stepIsOne) {
+        val frames = r.streamChunks("a", req, checkBounds).collect()
+        assert(frames.length == covering(req), s"$name: one frame per covering chunk")
+        val assembled = Slab.empty(DType.DOUBLE, req, Double.NaN)
+        frames.foreach { row =>
+          assembled.mergeFrom(Slab(DType.DOUBLE,
+            Slice(row.getSeq[Long](1), row.getSeq[Long](2)), row.getAs[Array[Byte]](3)))
+        }
+        cells.foreach(c =>
+          assert(assembled.valueAt(c.toIndexedSeq) == wantA(c), s"$name streamChunks $c"))
+      }
+
+      val wide = r.explodedMulti(Seq("a", "b"), req, checkBounds).collect()
+        .map(row => (row.getLong(0), row.getLong(1)) -> ((row.getDouble(2), row.getLong(3))))
+      assert(wide.length == cells.size, s"$name: explodedMulti cell count")
+      assert(wide.toMap == cells.map(c => key(c) -> ((wantA(c), wantB(c)))).toMap,
+        s"$name explodedMulti")
+    }
+  }
+
   test("shrink on spark backend: retained data inside new bounds; old extent rejected") {
     val store = freshStore()
     store.create("ds")

@@ -62,16 +62,19 @@ class VacuumAndFunctionsSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       r.getSlice("v", Slice(Seq(0L), Seq(4L)))
     }
-    // plan-side raise_error (SparkRuntimeException) — message keeps the invariant
     val ex = intercept[Exception] {
       r.exploded("v", Slice(Seq(0L), Seq(4L))).collect()
     }
     assert(ex.getMessage.contains("refusing to read fill"), ex.getMessage)
-    // streamChunks carries the same guard (executor-side requireBlob)
+    // streamChunks and explodedMulti fetch through the same chunk cursor
     val ex2 = intercept[Exception] {
       r.streamChunks("v", Slice(Seq(0L), Seq(4L))).collect()
     }
     assert(ex2.getMessage.contains("refusing to read fill"), ex2.getMessage)
+    val ex3 = intercept[Exception] {
+      r.explodedMulti(Seq("v"), Slice(Seq(0L), Seq(4L))).collect()
+    }
+    assert(ex3.getMessage.contains("refusing to read fill"), ex3.getMessage)
   }
 
   test("writeRows rejects slab seq outside the 20-bit per-call space") {

@@ -191,7 +191,7 @@ class AggSkipSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-skipR").toString
     val store = new SparkStore(spark, root)
     store.create("ds")
-    // 2048 chunks > PointLookupThreshold → manifest-planned range scan
+    // 2048 chunks > GraftScan.PointLookupThreshold → manifest-planned range scan
     val meta = DatasetMeta(
       dimensions = Map("x" -> 16384L), chunkDimensions = Map("x" -> 8L),
       variables = Map("v" -> VariableDef("long", Vector("x"), -1.0)))

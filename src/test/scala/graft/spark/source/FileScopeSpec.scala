@@ -51,7 +51,7 @@ class FileScopeSpec extends AnyFunSuite {
   }
 
   test("hash-range partitions carry only their bucket's overlapping files") {
-    val (root, store) = mk(2048) // > PointLookupThreshold -> range path
+    val (root, store) = mk(2048) // > GraftScan.PointLookupThreshold -> range path
     val total = SparkStore.parquetFilesUnder(
       store.chunksDir).length
     assert(total >= 6, s"expected a multi-file store, got $total files")
@@ -77,7 +77,7 @@ class FileScopeSpec extends AnyFunSuite {
   }
 
   test("point partitions scope files to their own hashes") {
-    val (root, store) = mk(64) // <= PointLookupThreshold -> point path
+    val (root, store) = mk(64) // <= GraftScan.PointLookupThreshold -> point path
     val total = SparkStore.parquetFilesUnder(
       store.chunksDir).length
     assert(total >= 6)

@@ -91,6 +91,21 @@ class PruningMetricsSpec extends AnyFunSuite {
       s"window payload $bWin outside the 8-chunk envelope")
   }
 
+  test("getSlice and streamChunks decode exactly the window's covering chunks") {
+    val (s, v) = mkStore(salt = 6L)
+    val r = s.reader("ds").onVersion(v)
+    // chunk-aligned window over 2×2×2 = 8 data chunks
+    val win = Slice(Seq(90L, 30L, 0L), Seq(150L, 90L, 60L))
+    SparkStore.clearBlobCache()
+    val (nSlice, _) = decoded { r.getSlice("foo", win) }
+    assert(nSlice == 8L, s"getSlice over 8 chunks decoded $nSlice blobs")
+    SparkStore.clearBlobCache()
+    val (nStream, _) = decoded {
+      r.streamChunks("foo", win).write.format("noop").mode("overwrite").save()
+    }
+    assert(nStream == 8L, s"streamChunks over 8 chunks decoded $nStream blobs")
+  }
+
   test("unaligned window still decodes only overlapping chunks") {
     val (s, v) = mkStore(salt = 4L)
     // 10×10×10 window straddling a chunk corner: overlaps 2×2×2 chunks
