@@ -611,15 +611,16 @@ object Dedup {
     // (profiled: the CC gates are driver/job-count bound, ~55 jobs at
     // ~20 ms of scheduling gap each)
     var labels = jump(prop0).localCheckpoint(false)
-    // the fused round materialized `und`; the pre-repartition copy is now
-    // dead weight — release it before the (memory-hungry) rounds
-    undAll.unpersist()
     // Labels only ever decrease, so sum(lbl) is strictly monotone until the
     // fixpoint — an O(|V|) scan of the freshly checkpointed frame decides
     // convergence with no second comparison join.
     def lblSum(df: DataFrame): BigDecimal =
       BigDecimal(df.agg(sum(col("lbl").cast("decimal(38,0)"))).first().getDecimal(0))
     var prevSum = lblSum(labels)
+    // that sum materialized the lazy checkpoint and `und` from undAll's
+    // cached blocks; the pre-repartition copy is now dead weight —
+    // release it before the (memory-hungry) rounds
+    undAll.unpersist()
     var converged = false
     var it = 1 // the fused initialization IS round 1
     while (!converged) {

@@ -3,7 +3,8 @@ package graft.spark
 import graft.core._
 import graft.filters.FilterChain
 import graft.meta.DatasetMeta
-import graft.spark.source.{ChunkSlabCursor, GraftScan, PinnedGraftTable, Resolved}
+import graft.spark.source.{ChunkBlobReader, ChunkFileScope, ChunkSlabCursor, GraftScan,
+  PinnedGraftTable, Resolved}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -694,28 +695,20 @@ final class SparkStore(val spark: SparkSession, val root: String) {
         .getOrElse(spark.emptyDataset[(String, String, String)]
           .toDF("var", "coordKey", "parentHash"))
 
-      // 3. attach blobs (torn chunks only — the joins broadcast the tiny
-      //    torn side against the content-addressed store)
-      // LEFT join so a torn row whose own blob is missing from the
-      // store cannot be silently dropped (the fold would then replay
-      // history without that row's cells and append a WRONG "repaired"
-      // blob); the fold throws on a null rowBytes, mirroring the
-      // missing-baseBytes guard below.
-      val blobs = chunksDF.select(col("hash"), col("bytes"))
-      val withBytes = torn
-        .join(blobs.withColumnRenamed("bytes", "rowBytes"), Seq("hash"), "left")
-        .join(blobs.select(col("hash").as("baseHash"),
-          col("bytes").as("baseBytes")), Seq("baseHash"), "left")
-        .dropDuplicates("var", "coordKey", "seq", "hash")
+      // 3. attach blobs (torn chunks only), fetched by hash. A missing
+      //    blob arrives as null bytes and the fold below throws on it:
+      //    replaying history without a row's cells, its base's or the
+      //    version-start content would append a WRONG "repaired" blob.
+      val withBytes = withBlobs(withBlobs(torn, "hash", "rowBytes"),
+          "baseHash", "baseBytes")
         .select(col("var"), col("coordKey"), col("coord"), col("seq"),
           col("hash"), col("baseHash"), col("rowBytes"), col("baseBytes"))
         .as[(String, String, Array[Long], Long, String, Option[String],
           Option[Array[Byte]], Option[Array[Byte]])]
-      val parentBytes = parents
-        .join(blobs.select(col("hash").as("parentHash"),
-          col("bytes").as("parentBytes")), Seq("parentHash"))
-        .select(col("var"), col("coordKey"), col("parentBytes"))
-        .as[(String, String, Array[Byte])]
+      val parentBytes = withBlobs(parents, "parentHash", "parentBytes")
+        .select(col("var"), col("coordKey"), col("parentHash"),
+          col("parentBytes"))
+        .as[(String, String, String, Option[Array[Byte]])]
 
       // 4. per-chunk diff-fold replay
       val repaired = withBytes.groupByKey(r => (r._1, r._2))
@@ -729,7 +722,10 @@ final class SparkStore(val spark: SparkSession, val root: String) {
               val coord = rs.head._3.toVector
               val chunkSlice = m.chunkSlice(varN, coord)
               val pristine = pIt.toSeq.headOption
-                .map(p => FilterChain.decode(p._3))
+                .map(p => FilterChain.decode(p._4.getOrElse(
+                  throw new java.io.IOException(
+                    s"torn-write repair: parent blob ${p._3} of " +
+                      s"$name/$varN@$ck missing from the chunk store"))))
                 .getOrElse(Slab.empty(dt, chunkSlice, m.fill(varN)).bytes)
               val state = pristine.clone()
               rs.foreach { r =>
@@ -770,7 +766,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
         if (repaired.isEmpty) return
         val newBlobs = repaired
           .select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-          .join(chunksDF.select("hash"), Seq("hash"), "left_anti")
+          .join(chunkHashesDF, Seq("hash"), "left_anti")
         val staging = newChunkStagingDir()
         newBlobs.repartitionByRange(col("hash")).sortWithinPartitions("hash")
           .write.option("compression", "uncompressed").parquet(staging)
@@ -798,11 +794,60 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     else spark.read.schema(indexSchema).parquet(dir)
   }
 
-  private[spark] def chunksDF: DataFrame = {
+  /** The `hash` column of every stored blob — the dedup probes' view of
+    * the chunk table. Blob BYTES are never read through it: windows fetch
+    * through the DSv2 planner and `ChunkSlabCursor`, hash lists through
+    * [[withBlobs]]. */
+  private[spark] def chunkHashesDF: DataFrame = {
     healChunksDir()
     if (!StoreFs.exists(chunksDir)) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], chunksSchema)
-    else spark.read.schema(chunksSchema).parquet(chunksDir)
+      spark.sparkContext.emptyRDD[Row], chunksSchema).select("hash")
+    else spark.read.schema(chunksSchema).parquet(chunksDir).select("hash")
+  }
+
+  /** `rows` plus a `bytesCol` column: the framed blob of each row's
+    * `hashCol` hash, fetched BY HASH — the one blob fetch for hash lists
+    * that are not a read window (write-path bases, boundary chunks,
+    * diffs, torn-write repair). Never a join against the chunk table,
+    * which would scan every blob byte in the store. Rows are
+    * repartitioned into the scan manifest's hash buckets
+    * (`ChunkFileScope.hashBucket`, n = spark.sql.shuffle.partitions) and
+    * sorted by hash, so each task reads hash-contiguous batches
+    * of ≤ `ChunkBlobReader.OrTreeLimit` hashes, each through only the
+    * chunk files whose hash range can hold one: a bulk update opens each
+    * chunk file about once. The chunk-file listing is taken once, now,
+    * on the driver. A null or empty hash fetches nothing (null bytes). A
+    * blob missing for a real hash yields null bytes too — or, with
+    * `requireKeyCol`, fails the task with `SparkPinnedReader.requireBlob`'s
+    * error naming that column's chunk. */
+  private[spark] def withBlobs(rows: DataFrame, hashCol: String,
+      bytesCol: String, requireKeyCol: Option[String] = None): DataFrame = {
+    val rangedBc = spark.sparkContext.broadcast(ChunkFileScope.ranged(this))
+    val hconfBc = StoreFs.broadcastConf()
+    val n = spark.sessionState.conf.numShufflePartitions
+    val bucketed = rows
+      .repartition(n, ChunkFileScope.hashBucket(col(hashCol), n))
+      .sortWithinPartitions(hashCol)
+    val hi = bucketed.schema.fieldIndex(hashCol)
+    val ki = requireKeyCol.fold(-1)(bucketed.schema.fieldIndex)
+    bucketed.mapPartitions { (it: Iterator[Row]) =>
+      StoreFs.installExecutorConf(hconfBc.value)
+      it.grouped(ChunkBlobReader.OrTreeLimit).flatMap { batch =>
+        def hashOf(r: Row) = Option(r.getString(hi)).filter(_.nonEmpty).orNull
+        val wanted = batch.iterator.map(hashOf).filter(_ != null).toSet
+        val got =
+          if (wanted.isEmpty) Map.empty[String, Array[Byte]]
+          else ChunkBlobReader.read(
+            ChunkFileScope.filesFor(rangedBc.value, wanted.iterator),
+            wanted, harvest = false)
+        batch.iterator.map { r =>
+          val h = hashOf(r)
+          val bytes = if (h == null) null else got.getOrElse(h, null)
+          if (ki >= 0) SparkPinnedReader.requireBlob(r.getString(ki), h, bytes)
+          Row.fromSeq(r.toSeq :+ bytes)
+        }
+      }
+    }(Encoders.row(bucketed.schema.add(bytesCol, BinaryType)))
   }
 
   /** Crash recovery for vacuum's two-rename swap: if the live chunks dir
@@ -1462,7 +1507,18 @@ final class SparkStore(val spark: SparkSession, val root: String) {
   private[spark] def resolvedIndexPinned(name: String, varName: String,
       pinned: DatasetMeta,
       includeUncommitted: Option[Long] = None,
-      coordFilter: Column = lit(true)): DataFrame = {
+      coordFilter: Column = lit(true)): DataFrame =
+    resolvedOver(name, varName,
+      pinnedAdmissible(name, varName, pinned) ++ includeUncommitted.toSeq,
+      coordFilter)
+
+  /** The versions a pinned resolve of `varName` admits: the pinned
+    * version's verified parent chain, truncated at its newest REPLACE of
+    * the variable, behind the expire tripwire. The one admissible-set
+    * rule for both pinned resolves ([[resolvedIndexPinned]] and
+    * [[resolvedPointsPinned]]). */
+  private def pinnedAdmissible(name: String, varName: String,
+      pinned: DatasetMeta): Seq[Long] = {
     val chain = pinnedChain(name, pinned)
     // EXPIRE TRIPWIRE (one point GET per plan): a compact+expireHistory
     // that ran after this handle verified its chain deletes the
@@ -1493,8 +1549,28 @@ final class SparkStore(val spark: SparkSession, val root: String) {
           "materializable; re-pin at or after the checkpoint")
     val replaceAt = chain.indexWhere(m => SparkStore.isReplaceOf(m, varName))
     val floored = if (replaceAt >= 0) chain.take(replaceAt + 1) else chain
-    val admissible = floored.map(_.versionId.get) ++ includeUncommitted.toSeq
-    resolvedOver(name, varName, admissible, coordFilter)
+    floored.map(_.versionId.get)
+  }
+
+  /** Pinned MVCC resolve for point plans, collected to the driver as
+    * coordKey → (hash, stats): the same winners as [[resolvedIndexPinned]]
+    * in ONE job with no shuffle. Each task keeps, per coordKey, its
+    * greatest (version, seq, hash) row ([[keepWinners]]); the driver
+    * reduces the per-task winners the same way. Driver rows are bounded
+    * by covering chunks × index input partitions, so callers keep to
+    * point-sized windows (`GraftScan.PointLookupThreshold`,
+    * `chunked=true`'s ChunkedMaxChunks). */
+  private[spark] def resolvedPointsPinned(name: String, varName: String,
+      pinned: DatasetMeta, coordFilter: Column): Map[String, (String, Row)] = {
+    val admissible = pinnedAdmissible(name, varName, pinned)
+    val winners = admittedIndexDF(name, varName, admissible)
+      .filter(col("var") === varName && col("version").isin(admissible: _*))
+      .filter(coordFilter)
+      .select("coordKey", "version", "seq", "hash", "stats")
+      .rdd.mapPartitions(SparkStore.keepWinners)
+      .collect()
+    SparkStore.keepWinners(winners.iterator)
+      .map(r => r.getString(0) -> (r.getString(3), r.getStruct(4))).toMap
   }
 
   /** `coordFilter` is applied to the RAW index scan, before the group-by:
@@ -1639,6 +1715,28 @@ object SparkStore {
     * the Hadoop FS layer so remote store roots list identically. */
   def parquetFilesUnder(dir: String): Array[String] =
     StoreFs.filesUnder(dir).filter(_.endsWith(".parquet")).toArray
+
+  /** Per-coordKey winner of (coordKey, version, seq, hash, stats) rows:
+    * the greatest (version, seq, hash) — exactly `resolvedOver`'s
+    * max_by order, hash the final tie-breaker (a null hash ranks lowest,
+    * as in Spark's struct ordering). Associative, so it runs per task and
+    * again over the collected per-task winners. */
+  private[spark] def keepWinners(rows: Iterator[Row]): Iterator[Row] = {
+    val best = new java.util.HashMap[String, Row]()
+    rows.foreach { r =>
+      val cur = best.get(r.getString(0))
+      if (cur == null || outranks(r, cur)) best.put(r.getString(0), r)
+    }
+    best.values().iterator().asScala
+  }
+
+  private def outranks(a: Row, b: Row): Boolean =
+    if (a.getLong(1) != b.getLong(1)) a.getLong(1) > b.getLong(1)
+    else if (a.getLong(2) != b.getLong(2)) a.getLong(2) > b.getLong(2)
+    else {
+      val (ha, hb) = (a.getString(3), b.getString(3))
+      ha != null && (hb == null || ha > hb)
+    }
 
   /** Bench/ops hygiene hook: drop the per-JVM content-addressed blob
     * cache (see ChunkBlobReader.clearBlobCache). */
@@ -1812,14 +1910,27 @@ object SparkPinnedReader {
       throw new IllegalStateException(
         s"chunk $coordKey resolved to blob $hash but the blob is missing " +
           "from the chunk store (GC'd or lost?) — refusing to read fill")
+
+  /** Runs a driver-side Spark action, rethrowing a task's
+    * IllegalStateException (`requireBlob`'s missing-blob error) as itself
+    * rather than wrapped in the job failure. */
+  private[spark] def raisingMissingBlob[T](action: => T): T =
+    try action
+    catch {
+      case e: org.apache.spark.SparkException =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case ise: IllegalStateException => ise }
+          .getOrElse(e)
+    }
 }
 
 /** Distributed read path (R1-R6) over one committed, chain-verified
-  * version. Chunk blobs have one fetch path, the DSv2 scan's planner and
-  * `ChunkSlabCursor`: `exploded` IS the DSv2 scan, and getSlice /
-  * streamChunks / explodedMulti run that scan's input partitions as an
-  * RDD (`chunkRows`). `statsAggregate` alone joins `chunksDF`, for the
-  * hash list of its boundary chunks. */
+  * version. Window reads fetch chunk blobs through one path, the DSv2
+  * scan's planner and `ChunkSlabCursor`: `exploded` IS the DSv2 scan, and
+  * getSlice / streamChunks / explodedMulti run that scan's input
+  * partitions as an RDD (`chunkRows`). `statsAggregate`'s boundary chunks
+  * are a hash list, not a window: they fetch by hash
+  * (`SparkStore.withBlobs`). No read joins the chunk table. */
 final class SparkPinnedReader(store: SparkStore, name: String, val meta: DatasetMeta) {
   import store.spark
   import spark.implicits._
@@ -2119,19 +2230,17 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
         (if (fillNaN) clippedCnt else lit(0L)).as("nan")): _*)
 
     // 3. boundary or stats-less indexed chunks: decode, clip, aggregate
-    val needBytes = rows
+    val needBytes = store.withBlobs(rows
       .filter(col("hash").isNotNull && (col("stats").isNull || !interior))
-      .select("coordKey", "coord", "hash")
-      .join(store.chunksDF.select("hash", "bytes"), Seq("hash"), "left")
-      .dropDuplicates("coordKey")
+      .select("coordKey", "coord", "hash"), "hash", "bytes",
+      requireKeyCol = Some("coordKey"))
     val decoded = needBytes
-      .select(col("coordKey"), col("coord"), col("hash"), col("bytes"))
-      .as[(String, Array[Long], String, Array[Byte])]
+      .select(col("coord"), col("bytes"))
+      .as[(Array[Long], Array[Byte])]
       .mapPartitions { it =>
         val m = DatasetMeta.fromJson(metaJson)
         val dt = m.dtype(varN)
-        it.map { case (key, coord, hash, framed) =>
-          SparkPinnedReader.requireBlob(key, hash, framed)
+        it.map { case (coord, framed) =>
           val chunkSlice = m.chunkSlice(varN, coord.toVector)
           val st = Slab(dt, chunkSlice, FilterChain.decode(framed))
             .intersectWith(req).stats
@@ -2178,14 +2287,8 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     val dtype = meta.dtype(varName)
     val fill = meta.fill(varName)
     val response = Slab.empty(dtype, request, fill)
-    // a missing blob fails the fetch task; the driver-side API keeps
-    // raising it as requireBlob's IllegalStateException
-    val rows =
-      try chunkRows(varName, request).collect()
-      catch {
-        case e: org.apache.spark.SparkException
-            if e.getCause.isInstanceOf[IllegalStateException] => throw e.getCause
-      }
+    val rows = SparkPinnedReader.raisingMissingBlob(
+      chunkRows(varName, request).collect())
     rows.foreach { r =>
       if (!r.isNullAt(3)) {
         val coord = r.getSeq[Long](1).toVector
@@ -2256,10 +2359,11 @@ final class SparkVersionWriter(store: SparkStore, name: String,
   // additionally bump past an observed winner before retrying.
   private val lastSeqBase = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def writeRows(varName: String, slabRows: DataFrame): Unit = {
-    val mine = writeOnce(varName, slabRows, collectHashes = shared)
-    if (shared) verifySharedWrite(varName, slabRows, mine.get, attempt = 0)
-  }
+  def writeRows(varName: String, slabRows: DataFrame): Unit =
+    SparkPinnedReader.raisingMissingBlob {
+      val mine = writeOnce(varName, slabRows, collectHashes = shared)
+      if (shared) verifySharedWrite(varName, slabRows, mine.get, attempt = 0)
+    }
 
   /** One merge-and-append pass. With `collectHashes` (shared writers
     * only) returns this pass's per-chunk (content hash, base row seq,
@@ -2308,30 +2412,32 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     // 2. base chunks: current in-flight version's own entries (read-modify-
     //    write across write() calls) ∪ committed ancestry ≤ parent
     //    (reference: impl.clj:232-250), semi-joined to the coordinates the
-    //    slabs actually touch. FIRST-WRITE FAST PATH: when the variable
-    //    provably has no index data (no admissible version partition on
-    //    disk — every initial bulk ingest), skip the touched-coordinate
-    //    scan (a second full pass over slabRows), the MVCC resolve, and
-    //    the semi-join + blob join entirely; the cogroup below then sees
-    //    an empty base side and folds fragments onto fill.
+    //    slabs actually touch, each base row's blob then fetched BY HASH
+    //    (`SparkStore.withBlobs`: hash-bucketed batches through the chunk
+    //    files whose hash range can hold them — never a scan of the whole
+    //    blob store). A resolved base hash whose blob is missing fails
+    //    the write (`SparkPinnedReader.requireBlob`): merging onto fill
+    //    would silently erase the chunk's untouched cells. FIRST-WRITE
+    //    FAST PATH: when the variable provably has no index data (no
+    //    admissible version partition on disk — every initial bulk
+    //    ingest), skip the touched-coordinate scan (a second full pass
+    //    over slabRows), the MVCC resolve, and the blob fetch entirely;
+    //    the cogroup below then sees an empty base side and folds
+    //    fragments onto fill.
     // (coordKey, baseBytes, baseSeq, baseHash): base row content plus its
     // identity — baseSeq −1 / baseHash "" for a committed-version or fill
     // base (only THIS version's rows can contend, so only a vid base
     // needs an identity)
-    val baseChunks: Dataset[(String, Array[Byte], Long, String)] =
-      if (baseOverride.isDefined) {
-        val ov = baseOverride.get.toDF("coordKey", "obSeq", "obHash")
-        ov.join(store.chunksDF.select(col("hash").as("obHash"), col("bytes")),
-            Seq("obHash"))
-          .select(col("coordKey"), col("bytes"), col("obSeq"), col("obHash"))
-          .dropDuplicates("coordKey")
-          .as[(String, Array[Byte], Long, String)]
-      } else if (!store.hasIndexData(name, varN, meta.parent, vid) ||
+    val baseIdx: Option[DataFrame] =
+      if (baseOverride.isDefined)
+        Some(baseOverride.get.toDF("coordKey", "baseSeq", "baseHash")
+          .withColumn("hash", col("baseHash")))
+      else if (!store.hasIndexData(name, varN, meta.parent, vid) ||
           // REPLACE version (INSERT OVERWRITE): merge against FILL, never
           // the parent — the committed version must contain only this
           // write's cells, with everything else reading as fill
           SparkStore.isReplaceOf(meta, varN))
-        spark.emptyDataset[(String, Array[Byte], Long, String)]
+        None
       else {
         // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
         // base-chunk loading is restricted to these (writing one slab to a
@@ -2346,7 +2452,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
         // manifest (not the listing): a writer chained on a
         // just-committed parent a lagging listing still omits must merge
         // against the parent's real state, never the grandparent's
-        val baseIdx = (parentMeta match {
+        Some((parentMeta match {
           case Some(pm) => store.resolvedIndexPinned(name, varN, pm,
             includeUncommitted = Some(vid))
           case None => store.resolvedOver(name, varN, Seq(vid),
@@ -2357,13 +2463,16 @@ final class SparkVersionWriter(store: SparkStore, name: String,
             when(col("winVersion") === vid, col("winSeq")).otherwise(-1L)
               .as("baseSeq"),
             when(col("winVersion") === vid, col("hash")).otherwise("")
-              .as("baseHash"))
-        baseIdx
-          .join(store.chunksDF.select("hash", "bytes"), Seq("hash"))
-          .select(col("coordKey"), col("bytes").as("baseBytes"),
-            col("baseSeq"), col("baseHash"))
-          .dropDuplicates("coordKey") // tolerate duplicate blob rows (racy dedup)
-          .as[(String, Array[Byte], Long, String)]
+              .as("baseHash")))
+      }
+    val baseChunks: Dataset[(String, Array[Byte], Long, String)] =
+      baseIdx match {
+        case None => spark.emptyDataset[(String, Array[Byte], Long, String)]
+        case Some(idx) =>
+          store.withBlobs(idx, "hash", "baseBytes", requireKeyCol = Some("coordKey"))
+            .select(col("coordKey"), col("baseBytes"), col("baseSeq"),
+              col("baseHash"))
+            .as[(String, Array[Byte], Long, String)]
       }
 
     // On a pinned-base retry, merge ONLY the overridden coordinates: the
@@ -2445,7 +2554,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       //    blob BYTES move exactly ONCE — the range shuffle that lays out
       //    hash-sorted disjoint part files (needed regardless):
       //    - already-in-store hashes (re-ingested content) are a
-      //      string-only semi join against chunksDF, broadcast back as a
+      //      string-only semi join against chunkHashesDF, broadcast back as a
       //      LEFT-ANTI filter below the range shuffle. The broadcast is
       //      bounded by the batch's re-ingested DISTINCT hashes (40 B
       //      each); the worst case — an idempotent full re-write —
@@ -2463,7 +2572,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       //    (the cogroup's coordKey clustering does not survive object
       //    serialization, so the join could not reuse it).
       val existing = merged.select("hash").distinct()
-        .join(store.chunksDF.select("hash"), Seq("hash"), "left_semi")
+        .join(store.chunkHashesDF, Seq("hash"), "left_semi")
       // blobs are already LZ4-framed — skip parquet's recompression.
       // RANGE-partition by hash, then sort within partitions: each part
       // file owns a DISJOINT hash range (footer min/max), so a point

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *     makes "chunk unchanged" a string equality — structurally shared
   *     chunks drop out here, which is the entire point: a version that
   *     touched 1 of 10⁶ chunks diffs by decoding 1 chunk pair);
-  *  3. decode only those chunk pairs (absent side → fill) and emit cells
-  *     whose values differ, clipped to the intersection of both extents
-  *     (grow/shrink: regions exclusive to one version have no
-  *     counterpart to diff against — extent changes are metadata).
+  *  3. fetch only those chunk pairs' blobs by hash (`SparkStore.withBlobs`;
+  *     a missing blob fails the diff), decode them (an unindexed side is
+  *     fill) and emit cells whose values differ, clipped to the
+  *     intersection of both extents (grow/shrink: regions exclusive to
+  *     one version have no counterpart to diff against — extent changes
+  *     are metadata).
   *
   * At 100 TB this reads MBs of index plus the changed blobs only; the
   * shuffle is one coordKey join of two index frames.
@@ -45,18 +47,19 @@ object VersionDiff {
       .select(col("coordKey"), col("coord").as("coordN"), col("hash").as("hashN"))
     val changed = idxO.join(idxN, Seq("coordKey"), "full_outer")
       .filter(!(col("hashO") <=> col("hashN")))
-      .select(coalesce(col("coordN"), col("coordO")).as("coord"),
+      .select(col("coordKey"), coalesce(col("coordN"), col("coordO")).as("coord"),
         col("hashO"), col("hashN"))
     val inExtent =
       if (rank == 0) lit(true)
       else (0 until rank).map(i =>
         col("coord")(i) * lit(grid.step(i)) < lit(ext(i))).reduce(_ && _)
 
-    def blobsAs(h: String, b: String) =
-      store.chunksDF.select(col("hash").as(h), col("bytes").as(b))
-    val withBytes = changed.filter(inExtent)
-      .join(blobsAs("hashO", "bytesO"), Seq("hashO"), "left")
-      .join(blobsAs("hashN", "bytesN"), Seq("hashN"), "left")
+    // fetched by hash; a resolved hash whose blob is missing fails the
+    // diff (`SparkPinnedReader.requireBlob`) instead of diffing as fill
+    def blobs(df: DataFrame, h: String, b: String) =
+      store.withBlobs(df, h, b, requireKeyCol = Some("coordKey"))
+    val withBytes = blobs(blobs(changed.filter(inExtent), "hashO", "bytesO"),
+      "hashN", "bytesN")
 
     graft.functions.ChunkFunctions.register(spark)
     val chunkShape = (0 until rank).map(i => grid.step(i))

@@ -745,7 +745,7 @@ private[source] final case class GraftFillRangePartition(
   * per-JVM cache the executors use (`ChunkBlobReader.fileHashRange` —
   * part files are write-once, entries never go stale), so re-plans are
   * directory-listing-only. */
-private[source] object ChunkFileScope {
+private[spark] object ChunkFileScope {
   /** (file, minHash, maxHash) for every chunk part file under the store.
     * Ranges come from the ingest-time sidecars (see
     * SparkStore.writeChunkRangeSidecar) seeded into the per-JVM cache —
@@ -794,8 +794,19 @@ private[source] object ChunkFileScope {
     } => f }
   }
 
+  /** Hash bucket of a hash column, `hb = (hash32 × nBuckets) div 2³²`
+    * over its first 8 hex chars: contiguous hash ranges, one per bucket,
+    * with no sampling job. The scan manifest's data layout and
+    * `SparkStore.withBlobs`' fetch batches both bucket by it. */
+  def hashBucket(hash: org.apache.spark.sql.Column, nBuckets: Int)
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{conv, lit, shiftright, substring}
+    shiftright(conv(substring(hash, 1, 8), 16, 10).cast("bigint") *
+      lit(nBuckets.toLong), 32)
+  }
+
   /** Full-hash string span of manifest hash bucket `b` of `nBuckets`.
-    * The manifest assigns `hb = (hash32 × nBuckets) div 2³²` over the
+    * [[hashBucket]] assigns `hb = (hash32 × nBuckets) div 2³²` over the
     * first 8 hex chars, so bucket b holds hash32 ∈
     * [⌈b·2³²/n⌉, ⌈(b+1)·2³²/n⌉ − 1]; endpoints widen to 40-char bounds
     * (prefix as lower bound, prefix + 32×'f' as upper). */
@@ -1057,16 +1068,26 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
       coveringChunks.toInt)
   }
 
-  /** One partition per covering chunk, resolved driver-side (bounded by
-    * ChunkedMaxChunks — grid-aligned mode is for analytics at moderate
-    * chunk counts; beyond it use the default range path). */
+  @volatile private var resolvedMemo: ((Slice, Option[Seq[Vector[Long]]]),
+    Map[String, (String, SlabStats)]) = _
+
   /** (coordKey → (hash, stats)) resolved driver-side — callers are bounded
     * by PointLookupThreshold / ChunkedMaxChunks. With an explicit coord
     * list (limit-pushdown prefix) the index scan is pre-filtered to that
     * list's bounding box, NOT the whole request envelope — a LIMIT against
-    * a petabyte variable must not collect its full resolved index. */
+    * a petabyte variable must not collect its full resolved index.
+    *
+    * Memoized per (request, coord list): Spark plans one scan object more
+    * than once (at `executedPlan` and again inside the action), and a
+    * pinned version's resolved hashes never go stale. `filter()` replaces
+    * `request`, which misses the memo and re-resolves the narrowed
+    * window. File scoping is not memoized — each plan re-lists the chunk
+    * files, so a re-run after vacuum compaction finds the live ones. */
   private def resolveWithStats(coordsOpt: Option[Seq[Vector[Long]]] = None)
       : Map[String, (String, SlabStats)] = {
+    val key = (request, coordsOpt)
+    val hit = resolvedMemo
+    if (hit != null && hit._1 == key) return hit._2
     val filt = coordsOpt match {
       case Some(cs) if cs.nonEmpty =>
         (0 until request.rank).map { i =>
@@ -1075,10 +1096,11 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
         }.foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
       case _ => envelope
     }
-    r.store.resolvedIndexPublic(r.dataset, r.variable, r.meta, filt)
-      .select("coordKey", "hash", "stats").collect()
-      .map(row => row.getString(0) ->
-        (row.getString(1), GraftScan.rowStats(row, 2))).toMap
+    GraftScan.pointResolves.incrementAndGet()
+    val resolved = r.store.resolvedPointsPinned(r.dataset, r.variable, r.meta, filt)
+      .map { case (k, (h, st)) => k -> (h, GraftScan.statsOf(st)) }
+    resolvedMemo = (key, resolved)
+    resolved
   }
 
   /** Grouped aggregate pushdown: each chunk is one whole GROUP (keys are
@@ -1110,6 +1132,9 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     }.toArray
   }
 
+  /** One partition per covering chunk, resolved driver-side (bounded by
+    * ChunkedMaxChunks — grid-aligned mode is for analytics at moderate
+    * chunk counts; beyond it use the default range path). */
   private def planChunked(): Array[InputPartition] = {
     val n = coveringChunks
     require(n <= chunkedMaxChunks,
@@ -1220,8 +1245,7 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
         // (tasks × buckets writer inits — measured 17 s for an 8400-row
         // manifest vs ~1 s repartitioned)
         joined
-          .withColumn("hb", expr(
-            s"(cast(conv(substring(hash, 1, 8), 16, 10) as bigint) * ${nBuckets}L) div 4294967296L"))
+          .withColumn("hb", ChunkFileScope.hashBucket(col("hash"), nBuckets))
           .repartition(nBuckets, col("hb"))
           .write.partitionBy("hb").parquet(s"$staging/data")
         joined
@@ -1271,6 +1295,10 @@ private[source] object GraftScan {
     * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti. */
   val PointLookupThreshold = 1024L
 
+  /** Point resolves run by `GraftScan` plans (per JVM, monotonic) — the
+    * observable the per-scan resolve memo is pinned on. */
+  val pointResolves = new java.util.concurrent.atomic.AtomicLong()
+
   /** Upper bound on `chunked=true` partitions: one task + one driver-side
     * (coord, hash) entry per chunk. The 64 Ki default ≈ a few MiB of
     * driver state and a schedulable task count; larger windows must use
@@ -1304,11 +1332,10 @@ private[source] object GraftScan {
     }
   }
 
-  /** Decode a nullable stats struct column of a collected Row. */
-  def rowStats(row: org.apache.spark.sql.Row, i: Int): SlabStats =
-    if (row.isNullAt(i)) null
+  /** Decode a collected stats struct (null for index rows without one). */
+  def statsOf(st: org.apache.spark.sql.Row): SlabStats =
+    if (st == null) null
     else {
-      val st = row.getStruct(i)
       def optL(j: Int) = if (st.isNullAt(j)) None else Some(st.getLong(j))
       def optD(j: Int) = if (st.isNullAt(j)) None else Some(st.getDouble(j))
       SlabStats(st.getLong(0), optL(1), optL(2), optL(3), optD(4), optD(5),

@@ -324,6 +324,38 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.valueAt(Seq(3L, 2L)) == 1.0) // first write retained
   }
 
+  test("a commit whose base blob is missing fails naming the chunk; no " +
+      "version lands and its untouched cells never turn into fill") {
+    val store = freshStore()
+    store.create("ds")
+    val meta = DatasetMeta(
+      dimensions = Map("x" -> 32L), chunkDimensions = Map("x" -> 8L),
+      variables = Map("v" -> VariableDef("long", Vector("x"), -1.0)))
+    val w1 = store.addVersion("ds", meta)
+    // distinct content per chunk: one blob per chunk, no dedup
+    w1.write("v", Seq(Slab.fromDoubles(DType.LONG, Slice(Seq(0L), Seq(32L)),
+      (0 until 32).map(_.toDouble))))
+    val v1 = w1.finishVersion()
+    SparkStore.clearBlobCache()
+    val h1 = store.resolvedIndexPublic("ds", "v", store.metadata("ds", v1),
+        org.apache.spark.sql.functions.lit(true))
+      .filter(org.apache.spark.sql.functions.col("coordKey") === "1")
+      .select("hash").head().getString(0)
+    val holders = SparkStore.parquetFilesUnder(store.chunksDir).filter { f =>
+      spark.read.parquet(f).filter(s"hash = '$h1'").count() > 0
+    }
+    assert(holders.length == 1)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(
+      if (holders.head.startsWith("file:")) new java.net.URI(holders.head).getPath
+      else holders.head))
+    val w2 = store.addVersion("ds", meta)
+    val e = intercept[IllegalStateException] {
+      w2.write("v", Seq(Slab.empty(DType.LONG, Slice(Seq(10L), Seq(12L)), 99.0)))
+    }
+    assert(e.getMessage.contains(s"chunk 1 resolved to blob $h1"), e.getMessage)
+    assert(store.versions("ds").map(_._2) == Seq(v1))
+  }
+
   test("first-write fast path: hasIndexData flips exactly when base data appears") {
     val store = freshStore()
     store.create("ds")

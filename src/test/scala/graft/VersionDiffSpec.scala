@@ -68,6 +68,35 @@ class VersionDiffSpec extends AnyFunSuite {
     assert(d.toSeq == Seq((0L, 0L, 5L), (1L, 3L, 5L)))
   }
 
+  test("a changed chunk whose blob is missing fails the diff instead of " +
+      "diffing against fill") {
+    val store = newStore()
+    store.create("m")
+    val w1 = store.addVersion("m", meta(16))
+    w1.write("v", Seq(Slab.fromDoubles(DType.LONG,
+      Slice(Seq(0L), Seq(16L)), (0 until 16).map(_ * 1.0))))
+    val v1 = w1.finishVersion()
+    Thread.sleep(2)
+    val w2 = store.addVersion("m", meta(16))
+    w2.write("v", Seq(Slab.empty(DType.LONG, Slice(Seq(9L), Seq(10L)), 42.0)))
+    val v2 = w2.finishVersion()
+    assert(VersionDiff.diffCells(store, "m", "v", v1, v2).count() == 1L)
+    SparkStore.clearBlobCache()
+    // lose v1's blob of the changed chunk 1 (v2's lands in a later file)
+    val h = store.resolvedIndexPublic("m", "v", store.metadata("m", v1),
+        org.apache.spark.sql.functions.lit(true))
+      .filter(org.apache.spark.sql.functions.col("coordKey") === "1")
+      .select("hash").head().getString(0)
+    SparkStore.parquetFilesUnder(store.chunksDir)
+      .filter(f => spark.read.parquet(f).filter(s"hash = '$h'").count() > 0)
+      .foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(
+        if (f.startsWith("file:")) new java.net.URI(f).getPath else f)))
+    val e = intercept[Exception] {
+      VersionDiff.diffCells(store, "m", "v", v1, v2).collect()
+    }
+    assert(e.getMessage.contains(s"chunk 1 resolved to blob $h"), e.getMessage)
+  }
+
   test("diff decodes ONLY hash-changed chunk pairs (plan-level: the " +
       "unchanged chunks never reach the decode)") {
     val store = newStore()

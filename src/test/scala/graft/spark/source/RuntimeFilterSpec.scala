@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class RuntimeFilterSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def mkScan(): GraftScan = {
+  private def mkStore(): String = {
     val root = java.nio.file.Files.createTempDirectory("graft-rtf").toString
     val store = new SparkStore(spark, root)
     store.create("ds")
@@ -22,8 +22,30 @@ class RuntimeFilterSpec extends AnyFunSuite {
     val w = store.addVersion("ds", meta)
     w.write("v", Seq(Slab.empty(DType.LONG, Slice(Seq(0L), Seq(64L)), 5.0)))
     w.finishVersion()
-    val r = GraftSource.resolve(Map("root" -> root, "dataset" -> "ds", "variable" -> "v"))
+    root
+  }
+
+  private def mkScan(): GraftScan = {
+    val r = GraftSource.resolve(
+      Map("root" -> mkStore(), "dataset" -> "ds", "variable" -> "v"))
     new GraftScanBuilder(r).build().asInstanceOf[GraftScan]
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(300) // listener bus is async; give a job time to surface
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
   }
 
   private def plannedChunks(scan: GraftScan): Int =
@@ -51,5 +73,28 @@ class RuntimeFilterSpec extends AnyFunSuite {
     scan.filter(Array[Filter](EqualTo("x", 10L)))
     scan.filter(Array[Filter](EqualTo("x", 50L)))
     assert(scan.planInputPartitions().isEmpty)
+  }
+
+  test("re-planning an unchanged request reuses the resolve (zero Spark " +
+      "jobs); filter() re-resolves the narrowed window") {
+    val scan = mkScan()
+    assert(plannedChunks(scan) == 8)
+    assert(jobsDuring(scan.planInputPartitions()) == 0)
+    val before = GraftScan.pointResolves.get
+    scan.filter(Array[Filter](EqualTo("x", 40L)))
+    assert(plannedChunks(scan) == 1)
+    assert(GraftScan.pointResolves.get == before + 1)
+    assert(plannedChunks(scan) == 1)
+    assert(GraftScan.pointResolves.get == before + 1)
+  }
+
+  test("a point-planned DSv2 window aggregate runs the index resolve once") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val df = spark.read.format("graft").option("root", mkStore())
+      .option("dataset", "ds").option("variable", "v").load()
+      .filter(col("x") >= 4L && col("x") < 20L)
+    val before = GraftScan.pointResolves.get
+    assert(df.agg(sum("value")).collect().head.getLong(0) == 16L * 5L)
+    assert(GraftScan.pointResolves.get == before + 1)
   }
 }
