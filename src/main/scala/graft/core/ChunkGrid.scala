@@ -44,3 +44,65 @@ object ChunkGrid {
       acc.flatMap(prefix => axis.map(prefix :+ _))
     }
 }
+
+/** The chunks a step-1 `request` covers on a chunk grid (reference:
+  * chunk.clj:11-25): per axis the first covering chunk `lo(i)`, the last
+  * `hi(i)` and the count `counts(i)`, with the covered chunks numbered
+  * row-major by a linear id in [0, size). Built once per (request, grid)
+  * and shipped to executors inside input partitions — the one place the
+  * read path turns a request into chunk coordinates. */
+final class ChunkWindow(request: Slice, grid: Slice) extends Serializable {
+  require(request.rank == grid.rank)
+  val rank: Int = request.rank
+  private val steps: Array[Long] = grid.step.toArray
+  val lo: Array[Long] = Array.tabulate(rank)(i => Math.floorDiv(request.start(i), steps(i)))
+  val hi: Array[Long] = Array.tabulate(rank)(i => Math.floorDiv(request.stop(i) - 1, steps(i)))
+  val counts: Array[Long] = Array.tabulate(rank)(i => math.max(0L, hi(i) - lo(i) + 1))
+
+  /** Covering-chunk count, saturating at Long.MaxValue. */
+  val size: Long = counts.foldLeft(1L) { (acc, d) =>
+    if (acc != 0L && d > Long.MaxValue / acc) Long.MaxValue else acc * d }
+
+  /** Chunk coordinate of linear id `linear`. */
+  def coordOf(linear: Long): Array[Long] = {
+    val c = new Array[Long](rank)
+    var rem = linear; var i = rank - 1
+    while (i >= 0) { c(i) = lo(i) + rem % counts(i); rem /= counts(i); i -= 1 }
+    c
+  }
+
+  /** Linear id of a covered chunk coordinate (inverse of [[coordOf]]). */
+  def linearOf(coord: Array[Long]): Long = {
+    var l = 0L; var i = 0
+    while (i < rank) { l = l * counts(i) + (coord(i) - lo(i)); i += 1 }
+    l
+  }
+
+  def contains(coord: Array[Long]): Boolean =
+    (0 until rank).forall(i => coord(i) >= lo(i) && coord(i) <= hi(i))
+
+  /** Every covered chunk coordinate, in linear-id order. */
+  def coords: Iterator[Array[Long]] = (0L until size).iterator.map(coordOf)
+
+  /** Chunk `coord` clipped to the request. */
+  def clip(coord: Array[Long]): ChunkWindow.Clip = {
+    val s = new Array[Long](rank); val e = new Array[Long](rank)
+    var n = 1L; var interior = true
+    var i = 0
+    while (i < rank) {
+      val c0 = coord(i) * steps(i); val c1 = c0 + steps(i)
+      s(i) = math.max(c0, request.start(i)); e(i) = math.min(c1, request.stop(i))
+      if (s(i) != c0 || e(i) != c1) interior = false
+      n *= math.max(e(i) - s(i), 0L)
+      i += 1
+    }
+    ChunkWindow.Clip(s, e, n, interior)
+  }
+}
+
+object ChunkWindow {
+  /** A chunk's part of the request: [start, stop), its cell count, and
+    * whether the whole chunk lies inside the request (`interior`). */
+  final case class Clip(start: Array[Long], stop: Array[Long], cells: Long,
+      interior: Boolean)
+}

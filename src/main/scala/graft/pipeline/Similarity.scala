@@ -656,7 +656,14 @@ object Similarity {
     * the K candidates of each vector inside the scan task, so only N
     * rows cross the exchange (guide §2.3 "aggregate before you shuffle";
     * at K = √N this removes a ×K shuffle inflation). min_by/struct are
-    * codegen-friendly DeclarativeAggregates (guide step 4). */
+    * codegen-friendly DeclarativeAggregates (guide step 4).
+    *
+    * The winner differs from the window's in one case: a zero norm makes
+    * `csim` NaN, which Spark orders above every double. The window
+    * (csim descending) ranked a NaN candidate FIRST; `min_by` over
+    * −csim (still NaN) ranks it LAST. So a zero-norm centroid no longer
+    * wins every vector; a zero-norm vector, whose candidates are all NaN,
+    * still goes to the lowest cent_id under both. */
   private def ivfAssign(n: DataFrame, cents: DataFrame,
       d: (Column, Column) => Column): DataFrame =
     n.crossJoin(cents)

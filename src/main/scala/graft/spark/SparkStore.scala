@@ -5,7 +5,7 @@ import graft.filters.FilterChain
 import graft.meta.DatasetMeta
 import graft.spark.source.{ChunkBlobReader, ChunkFileScope, ChunkSlabCursor, GraftScan,
   PinnedGraftTable, Resolved}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -807,8 +807,8 @@ final class SparkStore(val spark: SparkSession, val root: String) {
 
   /** `rows` plus a `bytesCol` column: the framed blob of each row's
     * `hashCol` hash, fetched BY HASH — the one blob fetch for hash lists
-    * that are not a read window (write-path bases, boundary chunks,
-    * diffs, torn-write repair). Never a join against the chunk table,
+    * that are not a read window (write-path bases, diffs, torn-write
+    * repair). Never a join against the chunk table,
     * which would scan every blob byte in the store. Rows are
     * repartitioned into the scan manifest's hash buckets
     * (`ChunkFileScope.hashBucket`, n = spark.sql.shuffle.partitions) and
@@ -1925,12 +1925,12 @@ object SparkPinnedReader {
 }
 
 /** Distributed read path (R1-R6) over one committed, chain-verified
-  * version. Window reads fetch chunk blobs through one path, the DSv2
-  * scan's planner and `ChunkSlabCursor`: `exploded` IS the DSv2 scan, and
-  * getSlice / streamChunks / explodedMulti run that scan's input
-  * partitions as an RDD (`chunkRows`). `statsAggregate`'s boundary chunks
-  * are a hash list, not a window: they fetch by hash
-  * (`SparkStore.withBlobs`). No read joins the chunk table. */
+  * version. Every read fetches chunk blobs through one chain: the chunk
+  * window (`ChunkWindow`), the DSv2 scan's planner (`GraftScan`) and
+  * `ChunkSlabCursor`. `exploded` IS the DSv2 scan; getSlice /
+  * streamChunks / explodedMulti / statsAggregate run that scan's input
+  * partitions as an RDD of cursors (`overCursors`). No read joins the
+  * chunk table. */
 final class SparkPinnedReader(store: SparkStore, name: String, val meta: DatasetMeta) {
   import store.spark
   import spark.implicits._
@@ -1949,60 +1949,36 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     (s"${store.root}/$name", vid)
   }
 
-  /** (coordKey, coord) of every chunk covering `request` — generated
-    * distributedly from the chunk-grid arithmetic (the pruned "physical
-    * plan", reference: io/mandoline.clj:250-256 + chunk.clj:11-25). */
-  private def coveringCoordsDF(varName: String, request: Slice): DataFrame = {
-    val grid = meta.chunkGridSlice(varName)
-    val lo = (0 until request.rank).map(i => Math.floorDiv(request.start(i), grid.step(i)))
-    val hi = (0 until request.rank).map(i => Math.floorDiv(request.stop(i) - 1, grid.step(i)))
-    val counts = (0 until request.rank).map(i => hi(i) - lo(i) + 1)
-    val n = counts.foldLeft(1L)(_ * _)
-    val loB = lo.toArray; val cB = counts.toArray
-    spark.range(n).map { linear =>
-      val rank = loB.length
-      val c = new Array[Long](rank)
-      var rem = linear
-      var i = rank - 1
-      while (i >= 0) { c(i) = loB(i) + rem % cB(i); rem /= cB(i); i -= 1 }
-      (SparkStore.coordKey(c.toIndexedSeq), c)
-    }.toDF("coordKey", "coord")
-  }
-
-  /** Per-axis coordinate range filter applied to the index scan BEFORE the
-    * MVCC resolve — cuts the shuffle to the request's chunk envelope. */
-  private def coordEnvelopeFilter(varName: String, request: Slice) = {
-    val grid = meta.chunkGridSlice(varName)
-    (0 until request.rank).map { i =>
-      val lo = Math.floorDiv(request.start(i), grid.step(i))
-      val hi = Math.floorDiv(request.stop(i) - 1, grid.step(i))
-      col("coord")(i).between(lo, hi)
-    }.foldLeft(lit(true))(_ && _)
-  }
-
-  /** (coordKey, coord, hash, bytes|null) for every chunk covering the
-    * request's step-1 bounding box, planned and fetched exactly as a DSv2
-    * scan of this version (`GraftScan.planInputPartitions`, one task per
-    * input partition, each draining a `ChunkSlabCursor`): point lookups up
-    * to `GraftScan.PointLookupThreshold` covering chunks, a cached scan
-    * manifest above it, hash-range file pruning and the per-JVM blob cache
-    * either way. Null bytes ⇒ fill chunk (R5); a resolved hash whose blob
-    * is missing fails the task (`SparkPinnedReader.requireBlob`). Planning
-    * runs now, on the driver. */
-  private[spark] def chunkRows(varName: String, request: Slice): DataFrame = {
+  /** Runs `rows` over a `ChunkSlabCursor` for every input partition of
+    * this version's DSv2 scan of `request`'s step-1 bounding box
+    * (`GraftScan.planInputPartitions`: point lookups up to
+    * `GraftScan.PointLookupThreshold` covering chunks, a cached scan
+    * manifest above it), one task per partition with the driver's Hadoop
+    * conf installed. Planning runs now, on the driver; a resolved hash
+    * whose blob is missing fails the task (`SparkPinnedReader.requireBlob`). */
+  private def overCursors[T: Encoder: scala.reflect.ClassTag](varName: String,
+      request: Slice)(rows: ChunkSlabCursor => Iterator[T]): Dataset[T] = {
     val r = Resolved(store, meta, name, varName)
     val box = Slice(request.start, request.stop)
     val parts = new GraftScan(r, box, empty = false, r.schema)
       .planInputPartitions()
     val metaJson = meta.toJson
     val hconfBc = StoreFs.broadcastConf()
-    spark.sparkContext.parallelize(parts.toSeq, math.max(1, parts.length))
-      .mapPartitions { it =>
-        StoreFs.installExecutorConf(hconfBc.value)
-        it.flatMap(p => new ChunkSlabCursor(p, metaJson, varName, box).framedChunks)
-      }.toDF("coordKey", "coord", "hash", "bytes")
+    spark.createDataset(
+      spark.sparkContext.parallelize(parts.toSeq, math.max(1, parts.length))
+        .mapPartitions { it =>
+          StoreFs.installExecutorConf(hconfBc.value)
+          it.flatMap(p => rows(new ChunkSlabCursor(p, metaJson, varName, box)))
+        })
   }
 
+  /** (coordKey, coord, hash, bytes|null) for every chunk covering the
+    * request's step-1 bounding box, fetched through the scan's cursors
+    * (hash-range file pruning and the per-JVM blob cache). Null bytes ⇒
+    * fill chunk (R5). */
+  private[spark] def chunkRows(varName: String, request: Slice): DataFrame =
+    overCursors(varName, request)(_.framedChunks)
+      .toDF("coordKey", "coord", "hash", "bytes")
 
   /** R2 `stream` as a Spark-native Dataset: one row per covering chunk,
     * decoded and clipped to the request — (coord, start, stop, bytes)
@@ -2021,25 +1997,9 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     if (checkBounds && !request.isContainedIn(varSlice))
       throw new IndexOutOfBoundsException(
         s"Request slice $request crosses the variable's extent: $varSlice.")
-    val metaJson = meta.toJson
-    val varN = varName
-    val req = request
-    import spark.implicits._
-    chunkRows(varName, request)
-      .as[(String, Array[Long], String, Array[Byte])]
-      .mapPartitions { it =>
-        val m = DatasetMeta.fromJson(metaJson)
-        val dt = m.dtype(varN)
-        val fill = m.fill(varN)
-        it.map { case (_, coord, _, framed) =>
-          val chunkSlice = m.chunkSlice(varN, coord.toVector)
-          val slab =
-            if (framed == null) Slab.empty(dt, chunkSlice, fill)
-            else Slab(dt, chunkSlice, FilterChain.decode(framed))
-          val clipped = slab.intersectWith(req)
-          (coord, clipped.slice.start.toArray, clipped.slice.stop.toArray, clipped.bytes)
-        }
-      }.toDF("coord", "start", "stop", "bytes")
+    overCursors(varName, request)(_.clippedSlabs.map { case (coord, clipped) =>
+      (coord, clipped.slice.start.toArray, clipped.slice.stop.toArray, clipped.bytes)
+    }).toDF("coord", "start", "stop", "bytes")
   }
 
   /** Multi-variable single-pass read: one wide row per cell, columns
@@ -2175,8 +2135,12 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     *    fraction) and legacy index rows without stats decode their blob,
     *    clip, and aggregate cells.
     *
-    * A full-variable aggregate therefore scans the index, not the data:
-    * at the target scale that is MBs instead of TBs. Output is one row —
+    * It is a scan, not an index join: one partial row per covering chunk
+    * from this version's DSv2 scan partitions through `ChunkSlabCursor`
+    * (the same planner and blob fetch as every other pinned read), then
+    * one aggregate. A full-variable aggregate therefore reads the index
+    * and scan manifest, not the data: at the target scale that is MBs
+    * instead of TBs. Output is one row —
     * integral dtypes: (vmin, vmax, vsum, vcnt) as BIGINT with vsum exact
     * (null only if a chunk's running sum overflowed Int64); float dtypes:
     * (vmin, vmax) as DOUBLE with Spark's NaN-greatest semantics, plus
@@ -2190,65 +2154,32 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
         s"Request slice $request crosses the variable's extent: $varSlice.")
     val dtype = meta.dtype(varName)
     val fill = meta.fill(varName)
-    val grid = meta.chunkGridSlice(varName)
     val isFloat = dtype == DType.FLOAT || dtype == DType.DOUBLE
-    val metaJson = meta.toJson
-    val varN = varName
-    val req = request
-
-    val rows = coveringCoordsDF(varName, request)
-      .join(store.resolvedIndexPinned(name, varName, meta,
-        coordFilter = coordEnvelopeFilter(varName, request))
-        .select("coordKey", "hash", "stats"), Seq("coordKey"), "left")
-    val interior = (0 until request.rank).map { i =>
-      (col("coord")(i) * grid.step(i) >= request.start(i)) &&
-        ((col("coord")(i) + 1) * grid.step(i) <= request.stop(i))
-    }.foldLeft(lit(true))(_ && _)
-    val clippedCnt = (0 until request.rank).map { i =>
-      least((col("coord")(i) + 1) * grid.step(i), lit(request.stop(i))) -
-        greatest(col("coord")(i) * grid.step(i), lit(request.start(i)))
-    }.foldLeft(lit(1L).cast("long"))(_ * _)
-
-    val partialCols = Seq("cnt", "lmin", "lmax", "lsum", "dmin", "dmax", "nan")
-
-    // 1. interior indexed chunks with stats: straight off the index
-    val fromStats = rows
-      .filter(col("hash").isNotNull && col("stats").isNotNull && interior)
-      .select(col("stats.cnt"), col("stats.lmin"), col("stats.lmax"),
-        col("stats.lsum"), col("stats.dmin"), col("stats.dmax"), col("stats.nan"))
-
-    // 2. unindexed chunks: pure fill arithmetic over the clipped volume
-    val fillNaN = fill.isNaN
-    val fromFill = rows.filter(col("hash").isNull).select(
-      Seq(
-        clippedCnt.as("cnt"),
-        (if (isFloat) lit(null).cast("long") else lit(fill.toLong)).as("lmin"),
-        (if (isFloat) lit(null).cast("long") else lit(fill.toLong)).as("lmax"),
-        (if (isFloat) lit(null).cast("long") else lit(fill.toLong) * clippedCnt).as("lsum"),
-        (if (isFloat && !fillNaN) lit(fill) else lit(null).cast("double")).as("dmin"),
-        (if (isFloat && !fillNaN) lit(fill) else lit(null).cast("double")).as("dmax"),
-        (if (fillNaN) clippedCnt else lit(0L)).as("nan")): _*)
-
-    // 3. boundary or stats-less indexed chunks: decode, clip, aggregate
-    val needBytes = store.withBlobs(rows
-      .filter(col("hash").isNotNull && (col("stats").isNull || !interior))
-      .select("coordKey", "coord", "hash"), "hash", "bytes",
-      requireKeyCol = Some("coordKey"))
-    val decoded = needBytes
-      .select(col("coord"), col("bytes"))
-      .as[(Array[Long], Array[Byte])]
-      .mapPartitions { it =>
-        val m = DatasetMeta.fromJson(metaJson)
-        val dt = m.dtype(varN)
-        it.map { case (coord, framed) =>
-          val chunkSlice = m.chunkSlice(varN, coord.toVector)
-          val st = Slab(dt, chunkSlice, FilterChain.decode(framed))
-            .intersectWith(req).stats
-          (st.cnt, st.lmin, st.lmax, st.lsum, st.dmin, st.dmax, st.nan)
-        }
-      }.toDF(partialCols: _*)
-
-    val partials = fromStats.unionByName(fromFill).unionByName(decoded)
+    val partials = overCursors(varName, request) { cursor =>
+      def partial(st: SlabStats) =
+        (st.cnt, st.lmin, st.lmax, st.lsum, st.dmin, st.dmax, st.nan)
+      // fill chunks: arithmetic over the clipped volume; Math.multiplyExact
+      // keeps an integral sum overflow an error
+      def fillStats(n: Long) = {
+        val integral = if (isFloat) None else Some(fill.toLong)
+        val real = if (isFloat && !fill.isNaN) Some(fill) else None
+        SlabStats(n, integral, integral, integral.map(Math.multiplyExact(_, n)),
+          real, real, if (fill.isNaN) n else 0L)
+      }
+      val window = cursor.window
+      // only boundary and stats-less data chunks decode; interior chunks
+      // answer from their index stats
+      val (decoded, direct) = cursor.entries.partition { case (coord, hash, st) =>
+        hash != null && (st == null || !window.clip(coord).interior)
+      }
+      val bytes = cursor.blobs(decoded)
+      direct.iterator.map {
+        case (coord, null, _) => partial(fillStats(window.clip(coord).cells))
+        case (_, _, st) => partial(st)
+      } ++ decoded.iterator.map { case (coord, hash, _) =>
+        partial(cursor.clippedSlab(coord, bytes(hash)).stats)
+      }
+    }.toDF("cnt", "lmin", "lmax", "lsum", "dmin", "dmax", "nan")
     if (!isFloat) {
       // vsum is null (never wrong) if any chunk-level sum overflowed
       partials.agg(
@@ -2442,12 +2373,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
         // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
         // base-chunk loading is restricted to these (writing one slab to a
         // petabyte variable must not load the whole variable's chunks)
-        val touched = slabRows.select("start", "stop").as[(Array[Long], Array[Long])]
-          .flatMap { case (start, stop) =>
-            val m = DatasetMeta.fromJson(metaJson)
-            ChunkGrid.toChunkCoordinates(Slice(start.toVector, stop.toVector),
-              m.chunkGridSlice(varN)).iterator.map(SparkStore.coordKey)
-          }.distinct().toDF("coordKey")
+        val touched = touchedKeys(varN, slabRows)
         // base resolution is CHAIN-scoped on the writer's own parent
         // manifest (not the listing): a writer chained on a
         // just-committed parent a lagging listing still omits must merge
@@ -2646,6 +2572,23 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     } finally merged.unpersist()
   }
 
+  /** Keys of the chunks one slab row's [start, stop) box covers — the
+    * writer's one slab → chunk-key rule (serializable: executor-side). */
+  private def slabChunkKeys(varName: String)
+      : (scala.collection.Seq[Long], scala.collection.Seq[Long]) => Iterator[String] = {
+    val grid = meta.chunkGridSlice(varName)
+    (start, stop) => ChunkGrid.toChunkCoordinates(
+      Slice(start.toVector, stop.toVector), grid).iterator.map(SparkStore.coordKey)
+  }
+
+  /** Distinct keys of the chunks `slabRows` touch, as a `coordKey` frame. */
+  private def touchedKeys(varName: String, slabRows: DataFrame): DataFrame = {
+    val keysOf = slabChunkKeys(varName)
+    slabRows.select("start", "stop").as[(Array[Long], Array[Long])]
+      .flatMap { case (start, stop) => keysOf(start, stop) }
+      .distinct().toDF("coordKey")
+  }
+
   /** Post-landing ownership check for SHARED (token) writers — the
     * CAS-retry analog at Spark-job granularity, and what lets concurrent
     * writers share chunks without lost updates (the reference's
@@ -2673,15 +2616,8 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     * write() call — paid only by token writers. */
   private def verifySharedWrite(varName: String, slabRows: DataFrame,
       mine: Map[String, (String, Long, String)], attempt: Int): Unit = {
-    val metaJson = meta.toJson
     val varN = varName
-    val touched = slabRows.select("start", "stop")
-      .as[(Array[Long], Array[Long])]
-      .flatMap { case (start, stop) =>
-        val m = DatasetMeta.fromJson(metaJson)
-        ChunkGrid.toChunkCoordinates(Slice(start.toVector, stop.toVector),
-          m.chunkGridSlice(varN)).iterator.map(SparkStore.coordKey)
-      }.distinct().toDF("coordKey")
+    val touched = touchedKeys(varN, slabRows)
     val winners = store.admittedIndexDF(name, varN, Seq(vid))
       .filter(col("var") === varN && col("version") === vid)
       .join(touched, Seq("coordKey"), "left_semi")
@@ -2717,13 +2653,10 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     lastSeqBase.updateAndGet(prev => math.max(prev, maxWin >> 20))
     Thread.sleep(50L + scala.util.Random.nextInt(150 * (attempt + 1)))
     val lost = losers.iterator.map(_.getString(0)).toSet
+    val keysOf = slabChunkKeys(varN)
     val retryRows = slabRows.filter { row =>
-      val start = row.getAs[scala.collection.Seq[Long]]("start")
-      val stop = row.getAs[scala.collection.Seq[Long]]("stop")
-      val m = DatasetMeta.fromJson(metaJson)
-      ChunkGrid.toChunkCoordinates(
-        Slice(start.toVector, stop.toVector), m.chunkGridSlice(varN))
-        .exists(c => lost.contains(SparkStore.coordKey(c)))
+      keysOf(row.getAs[scala.collection.Seq[Long]]("start"),
+        row.getAs[scala.collection.Seq[Long]]("stop")).exists(lost.contains)
     }
     // pin the retry's merge base to the OBSERVED winner rows (the CAS
     // "re-read current, merge onto it" step made explicit): across

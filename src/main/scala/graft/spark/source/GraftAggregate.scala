@@ -1,14 +1,12 @@
 package graft.spark.source
 
 import graft.core._
-import graft.filters.FilterChain
 import graft.meta.DatasetMeta
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Aggregate pushdown + zone-map chunk skipping for the graft DSv2 source.
   *
@@ -23,7 +21,10 @@ import scala.jdk.CollectionConverters._
   *     path that touches data, an O(perimeter) fraction of a window.
   * A full-variable `SELECT min(value), max(value), count(*)` therefore
   * reads the scan manifest and index stats — MBs at the 100 TB target —
-  * instead of every chunk blob.
+  * instead of every chunk blob. Each partition's (coord, hash, stats)
+  * entries and its boundary blobs come from `ChunkSlabCursor`, the fetch
+  * every pinned read shares; `SparkPinnedReader.statsAggregate` runs the
+  * same three-source rule as a scan over the same partitions.
   */
 private[source] object GraftAgg {
   // kinds
@@ -110,44 +111,6 @@ private[source] object StatsPredicate {
   }
 }
 
-private[source] object ScanManifestStatsReader {
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  /** (linear → (hash, stats|null)) for a data-bucket manifest. Field
-    * presence is checked per row: manifests written before stats existed
-    * read as stats-null (callers fall back to decode). */
-  def read(files: Array[String])
-      : java.util.HashMap[java.lang.Long, (String, SlabStats)] = {
-    val out = new java.util.HashMap[java.lang.Long, (String, SlabStats)]()
-    val conf = ChunkBlobReader.sharedConf
-    files.foreach { f =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          def optL(n: String): Option[Long] =
-            if (g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0)
-              Some(g.getLong(n, 0)) else None
-          def optD(n: String): Option[Double] =
-            if (g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0)
-              Some(g.getDouble(n, 0)) else None
-          val st = optL("scnt") match {
-            case Some(c) => SlabStats(c, optL("slmin"), optL("slmax"),
-              optL("slsum"), optD("sdmin"), optD("sdmax"), optL("snan").getOrElse(0L))
-            case None => null
-          }
-          out.put(g.getLong("linear", 0), (g.getString("hash", 0), st))
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    out
-  }
-}
-
 /** The one partition of an EMPTY pushed-aggregate scan: its reader emits
   * a single (count=0, min/max/sum=null) row so Spark's bare-SUM merge of
   * COUNT partials yields 0 rather than NULL. */
@@ -179,7 +142,6 @@ private[source] class GraftAggPartitionReader(part: InputPartition,
   private val meta = DatasetMeta.fromJson(metaJson)
   private val dtype = meta.dtype(variable)
   private val fill = meta.fill(variable)
-  private val grid = meta.chunkGridSlice(variable)
   private val rank = request.rank
   private val isFloat = dtype == DType.FLOAT || dtype == DType.DOUBLE
 
@@ -259,20 +221,6 @@ private[source] class GraftAggPartitionReader(part: InputPartition,
     }
   }
 
-  private def clipOf(coord: Array[Long]): (Array[Long], Array[Long], Long, Boolean) = {
-    val s = new Array[Long](rank); val e = new Array[Long](rank)
-    var n = 1L; var interior = true
-    var i = 0
-    while (i < rank) {
-      val c0 = coord(i) * grid.step(i); val c1 = (coord(i) + 1) * grid.step(i)
-      s(i) = math.max(c0, request.start(i)); e(i) = math.min(c1, request.stop(i))
-      if (s(i) != c0 || e(i) != c1) interior = false
-      n *= math.max(e(i) - s(i), 0L)
-      i += 1
-    }
-    (s, e, n, interior)
-  }
-
   /** Wrapped cell sum of a slab — Spark's non-ANSI sum(long) wraps, so a
     * chunk whose exact stats sum overflowed (lsum null) is re-summed with
     * plain wrapping adds for bit-parity with a full scan. */
@@ -290,98 +238,44 @@ private[source] class GraftAggPartitionReader(part: InputPartition,
     s
   }
 
-  /** (coord, hash, stats) triples + chunk files for this partition. */
-  private def triples
-      : (Iterator[(Array[Long], String, SlabStats)], Array[String]) = part match {
-    case p: GraftChunkPartition =>
-      (Iterator.single((p.coord, p.hash, p.stats)), p.files)
-    case p: GraftPointPartition =>
-      val st = if (p.stats == null) Array.fill[SlabStats](p.coords.length)(null)
-        else p.stats
-      (p.coords.iterator.zip(p.hashes.iterator).zip(st.iterator)
-        .map { case ((c, h), s) => (c, h, s) }, p.files)
-    case p: GraftDataHashPartition =>
-      val m = ScanManifestStatsReader.read(p.manifestFiles)
-      (m.entrySet().iterator().asScala.map { e =>
-        (ScanMath.coordOf(e.getKey, p.lo, p.counts), e.getValue._1, e.getValue._2)
-      }, p.chunkFiles)
-    case p: GraftFillRangePartition =>
-      val dataLinears = ScanManifestReader.readLinears(p.manifestFiles)
-      (Iterator.range(p.linearFrom, p.linearTo)
-        .filterNot(dataLinears.contains)
-        .map(l => (ScanMath.coordOf(l, p.lo, p.counts), null: String, null: SlabStats)),
-        Array.empty[String])
-    case other => throw new IllegalStateException(s"unexpected partition $other")
-  }
-
-  private def decodeInto(
-      pending: Seq[(Array[Long], String, Acc)], files: Array[String]): Unit = {
-    if (pending.isEmpty) return
-    val bytes = ChunkBlobReader.read(files, pending.map(_._2).toSet)
-    pending.foreach { case (coord, hash, acc) =>
-      val framed = bytes.getOrElse(hash,
-        throw new IllegalStateException(s"missing blob for hash $hash"))
-      val chunkSlice = meta.chunkSlice(variable, coord.toVector)
-      val clipped = Slab(dtype, chunkSlice, FilterChain.decode(framed))
-        .intersectWith(request)
-      val st = clipped.stats
-      if (spec.needsSum && !isFloat && st.lsum.isEmpty)
-        acc.accumValueStats(st.copy(lsum = Some(wrappedSum(clipped))))
-      else acc.accumValueStats(st)
-    }
-  }
-
-  /** Route one chunk's value partials into `acc`, or defer to `decode`. */
-  private def accumChunk(coord: Array[Long], hash: String, st: SlabStats,
-      n: Long, interior: Boolean, acc: Acc,
-      decode: scala.collection.mutable.ArrayBuffer[(Array[Long], String, Acc)]): Unit =
-    if (spec.needsValue) {
-      if (hash == null) acc.accumFill(n)
-      else if (st != null && interior &&
-        !(spec.needsSum && !isFloat && st.lsum.isEmpty)) acc.accumValueStats(st)
-      else decode += ((coord, hash, acc))
-    }
-
-  private lazy val rows: Iterator[InternalRow] = {
+  private lazy val rows: Iterator[InternalRow] =
     if (part == GraftEmptyAggPartition)
       Iterator.single(new GenericInternalRow(spec.funcs.map { f =>
         if (f.kind == Count) 0L else null
       }.toArray[Any]))
     else {
-      val (ts, files) = triples
-      val decode =
-        scala.collection.mutable.ArrayBuffer.empty[(Array[Long], String, Acc)]
-      if (spec.groupDims.isEmpty) {
-        val acc = new Acc
-        var any = false
-        ts.foreach { case (coord, hash, st) =>
-          val (s, e, n, interior) = clipOf(coord)
-          if (n > 0) {
-            any = true
-            acc.accumGeometry(s, e, n)
-            accumChunk(coord, hash, st, n, interior, acc, decode)
-          }
+      val cursor = new ChunkSlabCursor(part, metaJson, variable, request)
+      val window = cursor.window
+      val global = spec.groupDims.isEmpty
+      // one Acc per output row: the whole partition (global) or each chunk
+      // (grouped: chunks are whole groups); blob decodes batched across
+      // the partition
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Acc)]
+      val decode = scala.collection.mutable.ArrayBuffer
+        .empty[((Array[Long], String, SlabStats), Acc)]
+      cursor.entries.foreach { case entry @ (coord, hash, st) =>
+        val clip = window.clip(coord)
+        val acc =
+          if (global && out.nonEmpty) out.head._2
+          else { val a = new Acc; out += ((coord, a)); a }
+        acc.accumGeometry(clip.start, clip.stop, clip.cells)
+        if (spec.needsValue) {
+          if (hash == null) acc.accumFill(clip.cells)
+          else if (st != null && clip.interior &&
+            !(spec.needsSum && !isFloat && st.lsum.isEmpty)) acc.accumValueStats(st)
+          else decode += ((entry, acc))
         }
-        decodeInto(decode.toSeq, files)
-        if (any) Iterator.single(acc.row(null)) else Iterator.empty
-      } else {
-        // grouped: each chunk is its own group → one row per chunk, blob
-        // decodes still batched across the partition
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Array[Long], Acc)]
-        ts.foreach { case (coord, hash, st) =>
-          val (s, e, n, interior) = clipOf(coord)
-          if (n > 0) {
-            val acc = new Acc
-            acc.accumGeometry(s, e, n)
-            accumChunk(coord, hash, st, n, interior, acc, decode)
-            out += ((coord, acc))
-          }
-        }
-        decodeInto(decode.toSeq, files)
-        out.iterator.map { case (coord, acc) => acc.row(coord) }
       }
+      val bytes = cursor.blobs(decode.map(_._1))
+      decode.foreach { case ((coord, hash, _), acc) =>
+        val clipped = cursor.clippedSlab(coord, bytes(hash))
+        val st = clipped.stats
+        if (spec.needsSum && !isFloat && st.lsum.isEmpty)
+          acc.accumValueStats(st.copy(lsum = Some(wrappedSum(clipped))))
+        else acc.accumValueStats(st)
+      }
+      out.iterator.map { case (coord, acc) => acc.row(if (global) null else coord) }
     }
-  }
 
   private var current: InternalRow = _
   override def next(): Boolean =

@@ -254,31 +254,17 @@ private[source] class GraftTable(options: Map[String, String])
       // (clipped to the envelope) — a 100 TB-region delete never builds
       // a region-sized buffer on the driver, and all-fill chunk blobs
       // content-dedup to one blob in the store
-      val grid = r.meta.chunkGridSlice(r.variable)
-      val steps = (0 until rank).map(i => grid.step(i)).toArray
-      val cLo = (0 until rank).map(i => Math.floorDiv(lo(i), steps(i))).toArray
-      val counts = (0 until rank)
-        .map(i => Math.floorDiv(hi(i) - 1, steps(i)) - cLo(i) + 1).toArray
-      val total = counts.map(_.toLong).product
+      val window = new ChunkWindow(Slice(lo.toVector, hi.toVector),
+        r.meta.chunkGridSlice(r.variable))
       val dtName = r.meta.dtype(r.variable).name
       val fillV = r.meta.fill(r.variable)
-      val (loB, hiB) = (lo.clone(), hi.clone())
       val spark = SparkSession.active
       import spark.implicits._
-      val slabRows = spark.range(total).map { linear =>
-        var rem = linear
-        val start = new Array[Long](rank)
-        val stop = new Array[Long](rank)
-        var i = rank - 1
-        while (i >= 0) {
-          val c = cLo(i) + rem % counts(i); rem /= counts(i)
-          start(i) = math.max(loB(i), c * steps(i))
-          stop(i) = math.min(hiB(i), (c + 1) * steps(i))
-          i -= 1
-        }
+      val slabRows = spark.range(window.size).map { linear =>
+        val c = window.clip(window.coordOf(linear))
         val slab = graft.core.Slab.empty(graft.core.DType(dtName),
-          graft.core.Slice(start.toIndexedSeq, stop.toIndexedSeq), fillV)
-        (start, stop, slab.bytes, linear)
+          graft.core.Slice(c.start.toIndexedSeq, c.stop.toIndexedSeq), fillV)
+        (c.start, c.stop, slab.bytes, linear.longValue)
       }.toDF("start", "stop", "bytes", "seq")
       w.writeRows(r.variable, slabRows)
     }
@@ -702,7 +688,7 @@ private[source] class GraftScanBuilder(r: Resolved,
 private[source] final case class GraftPointPartition(
     coords: Array[Array[Long]], hashes: Array[String], // hashes(i) == null → fill chunk
     files: Array[String],
-    stats: Array[graft.core.SlabStats] = null) extends InputPartition
+    stats: Array[graft.core.SlabStats]) extends InputPartition // null entry → no stats
 
 /** `chunked=true` scans: exactly ONE covering chunk per partition, keyed
   * by its chunk-grid coordinate so the scan can report
@@ -723,15 +709,14 @@ private[source] final case class GraftChunkPartition(coord: Array[Long],
   * bucket's hashes would be uniform across the whole SHA space — its
   * range predicate would prune nothing). Coords derive from the manifest's
   * linear ids. */
-private[source] final case class GraftDataHashPartition(
-    lo: Array[Long], counts: Array[Long], // chunk-grid window (per-axis)
+private[source] final case class GraftDataHashPartition(window: ChunkWindow,
     manifestFiles: Array[String], chunkFiles: Array[String]) extends InputPartition
 
 /** Fill chunks of one linear coordinate range: enumerate [from, to),
   * skip the linears the manifest lists as having data, emit fill cells. */
 private[source] final case class GraftFillRangePartition(
     linearFrom: Long, linearTo: Long, // [from, to)
-    lo: Array[Long], counts: Array[Long],
+    window: ChunkWindow,
     manifestFiles: Array[String]) extends InputPartition
 
 /** Driver-side chunk-file scoping: each InputPartition ships only the
@@ -833,17 +818,6 @@ private[spark] object ChunkFileScope {
   }
 }
 
-private[source] object ScanMath {
-  /** Inverse of the linear chunk id: per-axis chunk coordinate. */
-  def coordOf(linear: Long, lo: Array[Long], counts: Array[Long]): Array[Long] = {
-    val rank = lo.length
-    val c = new Array[Long](rank)
-    var rem = linear; var i = rank - 1
-    while (i >= 0) { c(i) = lo(i) + rem % counts(i); rem /= counts(i); i -= 1 }
-    c
-  }
-}
-
 private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     required: StructType, scanOptions: Map[String, String] = Map.empty,
     aggSpec: Option[GraftAgg.AggSpec] = None,
@@ -914,15 +888,11 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     new org.apache.spark.sql.connector.read.Statistics {
       private val rows: Long =
         if (isEmpty) 0L
+        // pushed-aggregate scans emit at most one row per covering chunk,
+        // not one per cell
+        else if (aggSpec.isDefined) window.size
         else (0 until request.rank).foldLeft(1L) { (acc, i) =>
-          // pushed-aggregate scans emit at most one row per covering
-          // chunk, not one per cell
-          val d =
-            if (aggSpec.isDefined) {
-              val step = r.meta.chunkGridSlice(r.variable).step(i)
-              Math.floorDiv(request.stop(i) - 1, step) -
-                Math.floorDiv(request.start(i), step) + 1
-            } else request.stop(i) - request.start(i)
+          val d = request.stop(i) - request.start(i)
           if (acc != 0L && d > Long.MaxValue / acc) Long.MaxValue else acc * d
         }
       private val rowBytes: Long =
@@ -970,16 +940,13 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
       (if (valueFilters.nonEmpty)
         s" skipFilters=${valueFilters.mkString(",")}" else "")
 
-  private def grid = r.meta.chunkGridSlice(r.variable)
+  /** The chunks the (possibly narrowed) request covers. */
+  private def window = new ChunkWindow(request, r.meta.chunkGridSlice(r.variable))
 
-  private def envelope = {
-    import org.apache.spark.sql.functions.col
-    (0 until request.rank).map { i =>
-      val lo = Math.floorDiv(request.start(i), grid.step(i))
-      val hi = Math.floorDiv(request.stop(i) - 1, grid.step(i))
-      col("coord")(i).between(lo, hi)
-    }.foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
-  }
+  /** Index-scan filter to the chunk-coordinate box [lo, hi] (inclusive). */
+  private def coordFilter(lo: Seq[Long], hi: Seq[Long]): org.apache.spark.sql.Column =
+    lo.indices.map(i => col("coord")(i).between(lo(i), hi(i)))
+      .foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
 
   override def planInputPartitions(): Array[InputPartition] = {
     // An EMPTY pushed-aggregate scan must still emit ONE partial row:
@@ -993,13 +960,7 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     if (r.chunked)
       return if (aggSpec.exists(_.groupDims.nonEmpty)) planGroupedAgg()
         else planChunked()
-    val g = grid
-    val lo = (0 until request.rank)
-      .map(i => Math.floorDiv(request.start(i), g.step(i))).toArray
-    val counts = (0 until request.rank).map { i =>
-      Math.floorDiv(request.stop(i) - 1, g.step(i)) - lo(i) + 1
-    }.toArray
-    val n = counts.foldLeft(1L)(_ * _)
+    val w = window
     // pushed LIMIT: a chunk-prefix covering `l` cells suffices — dense
     // arrays yield exactly their clipped cell count per chunk, and Spark
     // re-applies the global limit above the scan
@@ -1007,36 +968,13 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
       val l = limit.get
       var acc = 0L
       var k = 0L
-      val maxWalk = math.min(n, GraftScan.PointLookupThreshold)
-      while (k < maxWalk && acc < l) {
-        val c = ScanMath.coordOf(k, lo, counts)
-        var cells = 1L
-        var i = 0
-        while (i < request.rank) {
-          val c0 = c(i) * g.step(i); val c1 = (c(i) + 1) * g.step(i)
-          cells *= math.max(math.min(c1, request.stop(i)) -
-            math.max(c0, request.start(i)), 0L)
-          i += 1
-        }
-        acc += cells
-        k += 1
-      }
-      if (acc >= l)
-        return planPoint(Some((0L until k).map(j =>
-          ScanMath.coordOf(j, lo, counts).toVector)))
+      val maxWalk = math.min(w.size, GraftScan.PointLookupThreshold)
+      while (k < maxWalk && acc < l) { acc += w.clip(w.coordOf(k)).cells; k += 1 }
+      if (acc >= l) return planPoint(Some(k))
       // acc < l after the walk cap: fall through to normal planning
     }
-    if (n <= GraftScan.PointLookupThreshold) planPoint()
-    else planRange(n, lo, counts)
-  }
-
-  /** Covering-chunk count of the (possibly narrowed) request window. */
-  private def coveringChunks: Long = {
-    val g = grid
-    (0 until request.rank).map { i =>
-      Math.floorDiv(request.stop(i) - 1, g.step(i)) -
-        Math.floorDiv(request.start(i), g.step(i)) + 1
-    }.foldLeft(1L)(_ * _)
+    if (w.size <= GraftScan.PointLookupThreshold) planPoint()
+    else planRange(w)
   }
 
   /** Grid-aligned clustering report (`chunked=true` scans only): the scan
@@ -1060,41 +998,42 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     // pushdown has no merge above the scan; subset-key partials shuffle
     // one tiny row per chunk)
     if (!r.chunked || isEmpty || aggSpec.isDefined ||
-        coveringChunks > chunkedMaxChunks)
+        window.size > chunkedMaxChunks)
       new UnknownPartitioning(0)
     else new KeyGroupedPartitioning(
       r.dims.map(d => org.apache.spark.sql.connector.expressions.Expressions
         .identity(s"_chunk_$d"): org.apache.spark.sql.connector.expressions.Expression).toArray,
-      coveringChunks.toInt)
+      window.size.toInt)
   }
 
-  @volatile private var resolvedMemo: ((Slice, Option[Seq[Vector[Long]]]),
+  @volatile private var resolvedMemo: ((Slice, Option[Long]),
     Map[String, (String, SlabStats)]) = _
 
   /** (coordKey → (hash, stats)) resolved driver-side — callers are bounded
-    * by PointLookupThreshold / ChunkedMaxChunks. With an explicit coord
-    * list (limit-pushdown prefix) the index scan is pre-filtered to that
-    * list's bounding box, NOT the whole request envelope — a LIMIT against
-    * a petabyte variable must not collect its full resolved index.
+    * by PointLookupThreshold / ChunkedMaxChunks. With a `prefix` (the
+    * limit-pushdown walk: the window's first `prefix` linear chunks) the
+    * index scan is pre-filtered to that prefix's bounding box, NOT the
+    * whole window — a LIMIT against a petabyte variable must not collect
+    * its full resolved index.
     *
-    * Memoized per (request, coord list): Spark plans one scan object more
+    * Memoized per (request, prefix): Spark plans one scan object more
     * than once (at `executedPlan` and again inside the action), and a
     * pinned version's resolved hashes never go stale. `filter()` replaces
     * `request`, which misses the memo and re-resolves the narrowed
     * window. File scoping is not memoized — each plan re-lists the chunk
     * files, so a re-run after vacuum compaction finds the live ones. */
-  private def resolveWithStats(coordsOpt: Option[Seq[Vector[Long]]] = None)
+  private def resolveWithStats(prefix: Option[Long] = None)
       : Map[String, (String, SlabStats)] = {
-    val key = (request, coordsOpt)
+    val key = (request, prefix)
     val hit = resolvedMemo
     if (hit != null && hit._1 == key) return hit._2
-    val filt = coordsOpt match {
-      case Some(cs) if cs.nonEmpty =>
-        (0 until request.rank).map { i =>
-          val vs = cs.map(_(i))
-          col("coord")(i).between(vs.min, vs.max)
-        }.foldLeft(org.apache.spark.sql.functions.lit(true))(_ && _)
-      case _ => envelope
+    val w = window
+    val filt = prefix match {
+      case Some(k) =>
+        val cs = (0L until k).map(w.coordOf)
+        coordFilter(w.lo.indices.map(i => cs.map(_(i)).min),
+          w.lo.indices.map(i => cs.map(_(i)).max))
+      case None => coordFilter(w.lo.toSeq, w.hi.toSeq)
     }
     GraftScan.pointResolves.incrementAndGet()
     val resolved = r.store.resolvedPointsPinned(r.dataset, r.variable, r.meta, filt)
@@ -1103,44 +1042,31 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     resolved
   }
 
+  private def requireChunkedBound(): Unit = {
+    val n = window.size
+    require(n <= chunkedMaxChunks,
+      s"chunked=true scan covers $n chunks > $chunkedMaxChunks; " +
+        "narrow the request or drop the chunked option (default range scan)")
+  }
+
   /** Grouped aggregate pushdown: each chunk is one whole GROUP (keys are
     * the `_chunk_*` columns), so the one-task-per-chunk layout planChunked
     * needs for KeyGroupedPartitioning would pay thousands of task
     * launches for rows that are mostly zone-map arithmetic. Pack many
-    * chunks per partition instead — the reader emits one (already final
-    * or subset-partial) row per chunk, and no partitioning is reported
-    * (nothing above the scan needs it: complete pushdown has no merge;
-    * subset keys shuffle tiny keyed partials). */
+    * chunks per partition instead (the point packing) — the reader emits
+    * one (already final or subset-partial) row per chunk, and no
+    * partitioning is reported (nothing above the scan needs it: complete
+    * pushdown has no merge; subset keys shuffle tiny keyed partials). */
   private def planGroupedAgg(): Array[InputPartition] = {
-    val n = coveringChunks
-    require(n <= chunkedMaxChunks,
-      s"chunked=true scan covers $n chunks > $chunkedMaxChunks; " +
-        "narrow the request or drop the chunked option (default range scan)")
-    val coords = ChunkGrid.toChunkCoordinates(request, grid)
-    val resolved = resolveWithStats()
-    val ranged = ChunkFileScope.ranged(r.store)
-    val perPartition = math.max(8, coords.size / math.max(1,
-      SparkSession.active.sparkContext.defaultParallelism * 2))
-    coords.grouped(perPartition).map { group =>
-      val entries = group.map(c => resolved.get(SparkStore.coordKey(c)))
-      val hashes = entries.map(_.map(_._1).orNull).toArray
-      GraftPointPartition(
-        group.map(_.toArray).toArray,
-        hashes,
-        ChunkFileScope.filesFor(ranged, hashes.iterator),
-        entries.map(_.map(_._2).orNull).toArray): InputPartition
-    }.toArray
+    requireChunkedBound()
+    planPoint()
   }
 
   /** One partition per covering chunk, resolved driver-side (bounded by
     * ChunkedMaxChunks — grid-aligned mode is for analytics at moderate
     * chunk counts; beyond it use the default range path). */
   private def planChunked(): Array[InputPartition] = {
-    val n = coveringChunks
-    require(n <= chunkedMaxChunks,
-      s"chunked=true scan covers $n chunks > $chunkedMaxChunks; " +
-        "narrow the request or drop the chunked option (default range scan)")
-    val coords = ChunkGrid.toChunkCoordinates(request, grid)
+    requireChunkedBound()
     val resolved = resolveWithStats()
     // one pass over the file ranges for ALL chunk hashes — per-chunk
     // filesFor calls would cost O(chunks × files) at plan time
@@ -1150,9 +1076,9 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     // non-empty — chunked scans report KeyGroupedPartitioning, and dropping
     // partitions would change the reported key set under a co-partitioned
     // join. Readers still skip blob fetches.
-    coords.map { c =>
-      val (h, st) = resolved.getOrElse(SparkStore.coordKey(c), (null, null))
-      GraftChunkPartition(c.toArray, h,
+    window.coords.map { c =>
+      val (h, st) = resolved.getOrElse(SparkStore.coordKey(c.toIndexedSeq), (null, null))
+      GraftChunkPartition(c, h,
         if (h == null) Array.empty[String] else byHash.getOrElse(h, Array.empty),
         st): InputPartition
     }.toArray
@@ -1164,37 +1090,28 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     * a chunk whose zone-map stats (or fill value, for unindexed chunks)
     * prove no cell can match is never planned — sound because Spark
     * re-applies the residual filter row-wise above the scan. */
-  private def planPoint(coordsOpt: Option[Seq[Vector[Long]]] = None)
-      : Array[InputPartition] = {
-    val coords = coordsOpt.getOrElse(ChunkGrid.toChunkCoordinates(request, grid))
-    val resolved = resolveWithStats(coordsOpt)
-    val ranged = ChunkFileScope.ranged(r.store)
+  private def planPoint(prefix: Option[Long] = None): Array[InputPartition] = {
+    val w = window
+    val resolved = resolveWithStats(prefix)
     val fill = r.meta.fill(r.variable)
-    // one coordKey build + map lookup per coord, entry reused for the
-    // skip filter and both partition arrays
-    val kept = coords
-      .map(c => (c, resolved.get(SparkStore.coordKey(c))))
-      .filter { case (_, entry) =>
-        valueFilters.isEmpty || (entry match {
-          case Some((_, st)) => StatsPredicate.statsSatisfiable(st, valueFilters)
-          case None => StatsPredicate.fillSatisfiable(fill, valueFilters)
-        })
+    val entries = prefix.fold(w.coords)(k => (0L until k).iterator.map(w.coordOf))
+      .map { c =>
+        resolved.get(SparkStore.coordKey(c.toIndexedSeq)) match {
+          case Some((h, st)) => (c, h, st)
+          case None => (c, null: String, null: SlabStats)
+        }
       }
-    val perPartition = math.max(1, kept.size / math.max(1,
-      SparkSession.active.sparkContext.defaultParallelism))
-    kept.grouped(math.max(perPartition, 8)).map { group =>
-      val hashes = group.map(_._2.map(_._1).orNull).toArray
-      GraftPointPartition(
-        group.map(_._1.toArray).toArray,
-        hashes,
-        ChunkFileScope.filesFor(ranged, hashes.iterator),
-        group.map(_._2.map(_._2).orNull).toArray)
-    }.toArray
+      .filter { case (_, h, st) =>
+        valueFilters.isEmpty ||
+          (if (h == null) StatsPredicate.fillSatisfiable(fill, valueFilters)
+          else StatsPredicate.statsSatisfiable(st, valueFilters))
+      }.toSeq
+    GraftScan.pointPartitions(r.store, entries)
   }
 
   /** Large scans: ONE distributed job resolves the MVCC index and writes a
-    * (linear, hash) scan manifest under the store root (shared storage, so
-    * executors can read it), bucketed TWO ways:
+    * (linear, hash, stats) scan manifest under the store root (shared
+    * storage, so executors can read it), bucketed TWO ways:
     *  - data rows by HASH RANGE (first 8 hex chars) — each data partition's
     *    wanted blobs are hash-contiguous, so its fetch prunes row groups
     *    with one tight min/max range over the hash-sorted chunk files;
@@ -1207,37 +1124,31 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     * CACHED under a key of exactly those inputs: a repeated scan of the
     * same window reuses the published manifest and skips the planning job
     * entirely (locally ~18% of a full-table DSv2 read). */
-  private def planRange(n: Long, lo: Array[Long],
-      counts: Array[Long]): Array[InputPartition] = {
+  private def planRange(w: ChunkWindow): Array[InputPartition] = {
     val spark = SparkSession.active
-    import spark.implicits._
+    val n = w.size
     val par = math.max(1, spark.sparkContext.defaultParallelism)
     val chunksPer = math.max(256L, (n + 4L * par - 1) / (4L * par))
     val nBuckets = ((n + chunksPer - 1) / chunksPer).toInt
     val cacheKey = graft.core.Sha1.hex(
       (Seq(r.dataset, r.variable, r.meta.versionId.get.toString,
-        lo.mkString(","), counts.mkString(","), chunksPer.toString)
+        w.lo.mkString(","), w.counts.mkString(","), chunksPer.toString)
         .mkString("|")).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val dir = r.store.cachedScanManifest(cacheKey).getOrElse {
       val staging = r.store.newScanManifestDir()
-      val loB = lo; val cB = counts
-      val coordsDF = spark.range(n).map { linear =>
-        val l = linear.toLong
-        (l, SparkStore.coordKey(ScanMath.coordOf(l, loB, cB).toIndexedSeq))
-      }.toDF("linear", "coordKey")
+      val linearOf = org.apache.spark.sql.functions.udf(
+        (c: scala.collection.Seq[Long]) => w.linearOf(c.toArray))
       // stats ride along FLATTENED (parquet-mr Group readers on the
       // executors read primitive fields; struct access via GroupReadSupport
-      // is clumsier and no cheaper)
-      val resolved = r.store.resolvedIndexPublic(r.dataset, r.variable,
-        r.meta, envelope)
-        .select(col("coordKey"), col("hash"),
+      // is clumsier and no cheaper); the window filter keeps data chunks
+      // of the window only
+      val joined = r.store.resolvedIndexPublic(r.dataset, r.variable,
+        r.meta, coordFilter(w.lo.toSeq, w.hi.toSeq))
+        .select(linearOf(col("coord")).as("linear"), col("hash"),
           col("stats.cnt").as("scnt"), col("stats.lmin").as("slmin"),
           col("stats.lmax").as("slmax"), col("stats.lsum").as("slsum"),
           col("stats.dmin").as("sdmin"), col("stats.dmax").as("sdmax"),
           col("stats.nan").as("snan"))
-      val joined = coordsDF.join(resolved, Seq("coordKey")) // inner: data chunks only
-        .select("linear", "hash", "scnt", "slmin", "slmax", "slsum",
-          "sdmin", "sdmax", "snan")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // repartition ON the bucket column before partitionBy: otherwise every
@@ -1267,12 +1178,12 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     // (~files/nBuckets each, vs the full listing in every task)
     val dataParts = dataFiles.toSeq.sortBy(_._1).map { case (b, fs) =>
       val (wLo, wHi) = ChunkFileScope.bucketSpan(b, nBuckets)
-      GraftDataHashPartition(lo, counts, fs,
+      GraftDataHashPartition(w, fs,
         ChunkFileScope.filesForSpan(ranged, wLo, wHi)): InputPartition
     }
     val fillParts = (0 until nBuckets).map { b =>
       GraftFillRangePartition(b * chunksPer, math.min((b + 1) * chunksPer, n),
-        lo, counts, fillFiles.getOrElse(b.toLong, Array.empty)): InputPartition
+        w, fillFiles.getOrElse(b.toLong, Array.empty)): InputPartition
     }
     (dataParts ++ fillParts).toArray
   }
@@ -1332,6 +1243,24 @@ private[source] object GraftScan {
     }
   }
 
+  /** Packs (coord, hash | null, stats | null) chunk entries into point
+    * partitions of max(8, n / defaultParallelism) chunks each, every
+    * partition shipping only the chunk files that can hold its hashes. */
+  def pointPartitions(store: SparkStore,
+      entries: Seq[(Array[Long], String, SlabStats)]): Array[InputPartition] =
+    if (entries.isEmpty) Array.empty
+    else {
+      val ranged = ChunkFileScope.ranged(store)
+      val perPartition = math.max(8, entries.size / math.max(1,
+        SparkSession.active.sparkContext.defaultParallelism))
+      entries.grouped(perPartition).map { group =>
+        val hashes = group.map(_._2).toArray
+        GraftPointPartition(group.map(_._1).toArray, hashes,
+          ChunkFileScope.filesFor(ranged, hashes.iterator),
+          group.map(_._3).toArray): InputPartition
+      }.toArray
+    }
+
   /** Decode a collected stats struct (null for index rows without one). */
   def statsOf(st: org.apache.spark.sql.Row): SlabStats =
     if (st == null) null
@@ -1360,11 +1289,10 @@ private[source] class GraftReaderFactory(metaJson: String, variable: String,
   // value materializes once per executor and later tasks resolve it from
   // the block manager.
   private val hconfBc = graft.spark.StoreFs.broadcastConf()
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    graft.spark.StoreFs.installExecutorConf(hconfBc.value)
-    new GraftPartitionReader(p, metaJson, variable, request, requiredFields,
-      valueFilters)
-  }
+  // every partition reads columnar, so Spark never asks for a row reader
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "graft scans read columnar batches only (GraftColumnarReader)")
   override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1374,10 +1302,14 @@ private[source] class GraftReaderFactory(metaJson: String, variable: String,
   }
 }
 
-/** Shared per-partition cursor: resolves this partition's (coord, hash)
-  * pairs (point partitions carry them verbatim; range partitions derive
-  * coords arithmetically and consult their manifest bucket), fetches the
-  * wanted blobs, and yields each covering chunk CLIPPED to the request. */
+/** The one per-partition chunk cursor of every pinned-version read: turns
+  * an input partition into its (coord, hash, stats) entries (point and
+  * chunk partitions carry them verbatim; range partitions derive coords
+  * from their chunk window and read their manifest bucket) and fetches
+  * the blobs a reader asks for in one batch. Readers on top of it: the
+  * columnar scan, the pushed-aggregate partials, and
+  * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti /
+  * statsAggregate. */
 private[spark] final class ChunkSlabCursor(part: InputPartition,
     metaJson: String, variable: String, request: Slice,
     valueFilters: Array[Filter] = Array.empty) {
@@ -1386,46 +1318,32 @@ private[spark] final class ChunkSlabCursor(part: InputPartition,
   val dtype: DType = meta.dtype(variable)
   val dims: Vector[String] = meta.variables(variable).shape
   private val fill = meta.fill(variable)
+  lazy val window: ChunkWindow = new ChunkWindow(request, meta.chunkGridSlice(variable))
 
-  private def statsOk(st: SlabStats): Boolean =
-    valueFilters.isEmpty || StatsPredicate.statsSatisfiable(st, valueFilters)
-  private def fillOk: Boolean =
-    valueFilters.isEmpty || StatsPredicate.fillSatisfiable(fill, valueFilters)
-
-  // (coord, hash) per chunk this partition emits, post zone-map skipping:
-  // chunks whose stats (or the fill value) prove no cell can match the
-  // residual value predicates are dropped here, BEFORE any blob fetch —
-  // sound because Spark re-applies those predicates row-wise above the
-  // scan. Materialized once so the blob fetch wants exactly the kept set.
-  private val kept: Array[(Array[Long], String)] = (part match {
-    case p: GraftChunkPartition =>
-      val st = p.stats
-      if (p.hash == null) { if (fillOk) Iterator.single((p.coord, p.hash)) else Iterator.empty }
-      else if (statsOk(st)) Iterator.single((p.coord, p.hash))
-      else Iterator.empty
+  /** This partition's chunks as (chunk-grid coordinate, hash, stats): the
+    * hash is null for a fill chunk, the stats null where the index holds
+    * none. Chunks whose stats (or the fill value) prove no cell can match
+    * the residual value predicates are dropped here, BEFORE any blob
+    * fetch — sound because Spark re-applies those predicates row-wise
+    * above the scan. */
+  val entries: Array[(Array[Long], String, SlabStats)] = (part match {
+    case p: GraftChunkPartition => Iterator.single((p.coord, p.hash, p.stats))
     case p: GraftPointPartition =>
-      // point partitions were already stats-skipped at planning; the
-      // per-chunk check here only re-fires for fill chunks (cheap, sound)
-      p.coords.iterator.zip(p.hashes.iterator)
-        .filter { case (_, h) => if (h == null) fillOk else true }
+      p.coords.indices.iterator.map(i => (p.coords(i), p.hashes(i), p.stats(i)))
     case p: GraftDataHashPartition =>
-      if (valueFilters.isEmpty)
-        ScanManifestReader.read(p.manifestFiles).entrySet().iterator().asScala.map { e =>
-          (ScanMath.coordOf(e.getKey, p.lo, p.counts), e.getValue)
-        }
-      else
-        ScanManifestStatsReader.read(p.manifestFiles).entrySet().iterator().asScala
-          .filter(e => statsOk(e.getValue._2))
-          .map(e => (ScanMath.coordOf(e.getKey, p.lo, p.counts), e.getValue._1))
-    case p: GraftFillRangePartition =>
-      if (!fillOk) Iterator.empty
-      else {
-        val dataLinears = ScanManifestReader.readLinears(p.manifestFiles)
-        Iterator.range(p.linearFrom, p.linearTo)
-          .filterNot(dataLinears.contains)
-          .map(l => (ScanMath.coordOf(l, p.lo, p.counts), null: String))
+      ScanManifestReader.read(p.manifestFiles).entrySet().iterator().asScala.map { e =>
+        (p.window.coordOf(e.getKey), e.getValue._1, e.getValue._2)
       }
-  }).toArray
+    case p: GraftFillRangePartition =>
+      val dataLinears = ScanManifestReader.readLinears(p.manifestFiles)
+      Iterator.range(p.linearFrom, p.linearTo)
+        .filterNot(dataLinears.contains)
+        .map(l => (p.window.coordOf(l), null: String, null: SlabStats))
+  }).filter { case (_, hash, st) =>
+    valueFilters.isEmpty ||
+      (if (hash == null) StatsPredicate.fillSatisfiable(fill, valueFilters)
+      else StatsPredicate.statsSatisfiable(st, valueFilters))
+  }.toArray
 
   private val chunkFiles: Array[String] = part match {
     case p: GraftChunkPartition => p.files
@@ -1434,39 +1352,49 @@ private[spark] final class ChunkSlabCursor(part: InputPartition,
     case _: GraftFillRangePartition => Array.empty
   }
 
-  private lazy val bytesByHash: Map[String, Array[Byte]] = {
-    val wanted = kept.iterator.map(_._2).filter(_ != null).toSet
+  /** Framed blob bytes, by hash, of the data chunks among `chosen`,
+    * fetched in one batch. A resolved hash whose blob is missing raises
+    * `SparkPinnedReader.requireBlob`'s error naming its chunk. */
+  def blobs(chosen: Iterable[(Array[Long], String, SlabStats)]): Map[String, Array[Byte]] = {
+    val wanted = chosen.iterator.map(_._2).filter(_ != null).toSet
     // sibling-harvest only for chunked (one-chunk-per-task) partitions:
     // their row-group-mates are wanted by OTHER tasks of the same scan,
-    // so pre-decoding them into the blob cache amortizes. A windowed
-    // exploded read's point/bucket partitions own their whole wanted set
-    // — harvesting there decodes row groups nobody else reads.
-    val harvest = part.isInstanceOf[GraftChunkPartition]
-    if (wanted.isEmpty) Map.empty
-    else ChunkBlobReader.read(chunkFiles, wanted, harvest)
-  }
-
-  /** Each kept chunk as (coordKey, chunk-grid coordinate, hash, framed
-    * blob bytes); hash and bytes are null for a fill chunk. A resolved
-    * hash whose blob is missing raises instead of reading fill. */
-  def framedChunks: Iterator[(String, Array[Long], String, Array[Byte])] =
-    kept.iterator.map { case (coord, hash) =>
-      val key = SparkStore.coordKey(coord.toIndexedSeq)
-      val framed = if (hash == null) null else bytesByHash.getOrElse(hash, null)
-      SparkPinnedReader.requireBlob(key, hash, framed)
-      (key, coord, hash, framed)
+    // so pre-decoding them into the blob cache amortizes. Point and
+    // bucket partitions own their whole wanted set — harvesting there
+    // decodes row groups nobody else reads.
+    val got =
+      if (wanted.isEmpty) Map.empty[String, Array[Byte]]
+      else ChunkBlobReader.read(chunkFiles, wanted,
+        harvest = part.isInstanceOf[GraftChunkPartition])
+    chosen.foreach { case (coord, hash, _) =>
+      SparkPinnedReader.requireBlob(SparkStore.coordKey(coord.toIndexedSeq), hash,
+        if (hash == null) null else got.getOrElse(hash, null))
     }
-
-  /** Each covering chunk as (chunk-grid coordinate, slab clipped to the
-    * request). */
-  def clippedSlabs: Iterator[(Array[Long], Slab)] = framedChunks.map {
-    case (_, coord, _, framed) =>
-      val chunkSlice = meta.chunkSlice(variable, coord.toVector)
-      val slab =
-        if (framed == null) Slab.empty(dtype, chunkSlice, fill)
-        else Slab(dtype, chunkSlice, FilterChain.decode(framed))
-      (coord, slab.intersectWith(request))
+    got
   }
+
+  /** Each entry as (coordKey, chunk-grid coordinate, hash, framed blob
+    * bytes); hash and bytes are null for a fill chunk. */
+  def framedChunks: Iterator[(String, Array[Long], String, Array[Byte])] = {
+    val got = blobs(entries)
+    entries.iterator.map { case (coord, hash, _) =>
+      (SparkStore.coordKey(coord.toIndexedSeq), coord, hash,
+        if (hash == null) null else got(hash))
+    }
+  }
+
+  /** Chunk `coord` as a slab clipped to the request; null `framed` ⇒ fill. */
+  def clippedSlab(coord: Array[Long], framed: Array[Byte]): Slab = {
+    val chunkSlice = meta.chunkSlice(variable, coord.toVector)
+    val slab =
+      if (framed == null) Slab.empty(dtype, chunkSlice, fill)
+      else Slab(dtype, chunkSlice, FilterChain.decode(framed))
+    slab.intersectWith(request)
+  }
+
+  /** Each entry as (chunk-grid coordinate, slab clipped to the request). */
+  def clippedSlabs: Iterator[(Array[Long], Slab)] =
+    framedChunks.map { case (_, coord, _, framed) => (coord, clippedSlab(coord, framed)) }
 
   /** Projection codes for `requiredFields`: dim index ≥ 0, value = −1,
     * `_chunk_<dim>` = −2 − dimIndex (constant per chunk). */
@@ -1477,40 +1405,6 @@ private[spark] final class ChunkSlabCursor(part: InputPartition,
         -2 - dims.indexOf(f.stripPrefix("_chunk_"))
       case d => dims.indexOf(d)
     }
-}
-
-private[source] class GraftPartitionReader(part: InputPartition,
-    metaJson: String, variable: String, request: Slice,
-    requiredFields: Array[String],
-    valueFilters: Array[Filter] = Array.empty) extends PartitionReader[InternalRow] {
-
-  private val cursor = new ChunkSlabCursor(part, metaJson, variable, request, valueFilters)
-  private val dtype = cursor.dtype
-  // projection: dim index, -1 for value, -2-dimIdx for _chunk_<dim>
-  private val proj: Array[Int] = cursor.projectionOf(requiredFields)
-
-  private val cells: Iterator[InternalRow] =
-    cursor.clippedSlabs.flatMap { case (chunkCoord, clipped) =>
-      clipped.slice.iter.map { cell =>
-        val out = new Array[Any](proj.length)
-        var i = 0
-        while (i < proj.length) {
-          val p = proj(i)
-          out(i) =
-            if (p >= 0) cell(p)
-            else if (p == -1) dtype.getBoxed(clipped.bytes, clipped.offsetOf(cell.toIndexedSeq))
-            else chunkCoord(-2 - p)
-          i += 1
-        }
-        new GenericInternalRow(out): InternalRow
-      }
-    }
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (cells.hasNext) { current = cells.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 /** Columnar read path: one ColumnarBatch per clipped chunk, dim columns
@@ -1528,7 +1422,7 @@ private[source] class GraftColumnarReader(part: InputPartition,
   private val cursor = new ChunkSlabCursor(part, metaJson, variable, request, valueFilters)
   private val dtype = cursor.dtype
   private val proj: Array[Int] = cursor.projectionOf(requiredFields)
-  private val slabs = cursor.clippedSlabs
+  private lazy val slabs = cursor.clippedSlabs
   private var batch: ColumnarBatch = _
 
   private def buildBatch(chunkCoord: Array[Long], clipped: Slab): ColumnarBatch = {
@@ -1642,11 +1536,6 @@ private[source] class GraftMicroBatchStream(r: Resolved, request: Slice,
     val s = start.asInstanceOf[GraftOffset].version
     val e = end.asInstanceOf[GraftOffset].version
     if (empty || e <= s) return Array.empty
-    val grid = r.meta.chunkGridSlice(r.variable)
-    val envLo = (0 until request.rank)
-      .map(i => Math.floorDiv(request.start(i), grid.step(i)))
-    val envHi = (0 until request.rank)
-      .map(i => Math.floorDiv(request.stop(i) - 1, grid.step(i)))
     // delta-bounded driver collect: only chunks touched in (s, e]. The
     // limit guards the one unbounded case — startingVersion=earliest on a
     // huge variable turns the FIRST batch into a full scan; that backfill
@@ -1663,19 +1552,10 @@ private[source] class GraftMicroBatchStream(r: Resolved, request: Slice,
         s"streaming batch ($s, $e] covers more than $cap chunks — backfill " +
           "with a batch spark.read.format(\"graft\") (scan-manifest planned) " +
           "and start the stream with startingVersion=latest")
-    val changed = collected
-      .map(row => (row.getSeq[Long](0).toArray, row.getString(1)))
-      .filter { case (c, _) => // clip to the pushed-down window
-        c.indices.forall(i => c(i) >= envLo(i) && c(i) <= envHi(i))
-      }
-    if (changed.isEmpty) return Array.empty
-    val ranged = ChunkFileScope.ranged(r.store)
-    val perPartition = math.max(8, changed.length / math.max(1,
-      SparkSession.active.sparkContext.defaultParallelism))
-    changed.grouped(perPartition).map { group =>
-      GraftPointPartition(group.map(_._1), group.map(_._2),
-        ChunkFileScope.filesFor(ranged, group.iterator.map(_._2))): InputPartition
-    }.toArray
+    val window = new ChunkWindow(request, r.meta.chunkGridSlice(r.variable))
+    GraftScan.pointPartitions(r.store, collected.toSeq
+      .map(row => (row.getSeq[Long](0).toArray, row.getString(1), null: SlabStats))
+      .filter { case (c, _, _) => window.contains(c) }) // the pushed-down window
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1689,48 +1569,52 @@ private[source] object GraftMicroBatchStream {
   val MaxChunksPerBatch: Int = 1 << 20
 }
 
-/** Executor-side reader for scan-manifest buckets: (linear, hash) rows. */
+/** Executor-side reader for scan-manifest buckets. */
 private[source] object ScanManifestReader {
+  import org.apache.parquet.example.data.Group
   import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.GroupReadSupport
 
-  def read(files: Array[String]): java.util.HashMap[java.lang.Long, String] = {
-    val out = new java.util.HashMap[java.lang.Long, String]()
+  private def foreachRow(files: Array[String])(f: Group => Unit): Unit = {
     // the installed driver conf (shipped via the reader factory), NOT a
     // classpath default: manifest files live under the store root, whose
     // scheme may need driver-session spark.hadoop.* settings to resolve
     val conf = ChunkBlobReader.sharedConf
-    files.foreach { f =>
+    files.foreach { file =>
       val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
+        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file))
         .withConf(conf).build()
       try {
         var g = reader.read()
-        while (g != null) {
-          out.put(g.getLong("linear", 0), g.getString("hash", 0))
-          g = reader.read()
-        }
+        while (g != null) { f(g); g = reader.read() }
       } finally reader.close()
+    }
+  }
+
+  /** Data-bucket manifest: linear → (hash, stats | null). Field presence
+    * is checked per row: manifests written before stats existed read as
+    * stats-null (readers then decode the blob). */
+  def read(files: Array[String])
+      : java.util.HashMap[java.lang.Long, (String, SlabStats)] = {
+    val out = new java.util.HashMap[java.lang.Long, (String, SlabStats)]()
+    foreachRow(files) { g =>
+      def present(n: String) = g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+      def optL(n: String) = if (present(n)) Some(g.getLong(n, 0)) else None
+      def optD(n: String) = if (present(n)) Some(g.getDouble(n, 0)) else None
+      val st = optL("scnt") match {
+        case Some(c) => SlabStats(c, optL("slmin"), optL("slmax"),
+          optL("slsum"), optD("sdmin"), optD("sdmax"), optL("snan").getOrElse(0L))
+        case None => null
+      }
+      out.put(g.getLong("linear", 0), (g.getString("hash", 0), st))
     }
     out
   }
 
-  /** Fill-manifest variant: linear ids only. */
+  /** Fill-bucket manifest: linear ids only. */
   def readLinears(files: Array[String]): java.util.HashSet[Long] = {
     val out = new java.util.HashSet[Long]()
-    val conf = ChunkBlobReader.sharedConf
-    files.foreach { f =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out.add(g.getLong("linear", 0))
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
+    foreachRow(files)(g => out.add(g.getLong("linear", 0)))
     out
   }
 }
@@ -1898,7 +1782,7 @@ private[spark] object ChunkBlobReader {
     * otherwise decode whole row groups (at production row-group sizes,
     * 100× the wanted bytes) for siblings nobody asks for. */
   def read(files: Array[String], wanted: Set[String],
-      harvest: Boolean = true): Map[String, Array[Byte]] = {
+      harvest: Boolean): Map[String, Array[Byte]] = {
     val out = scala.collection.mutable.Map.empty[String, Array[Byte]]
     val useCache = wanted.size <= BlobCacheWantedLimit
     if (useCache) wanted.foreach { h =>

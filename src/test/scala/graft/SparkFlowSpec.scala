@@ -170,9 +170,9 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v1 = w.finishVersion()
     val r = store.reader("ds").onVersion(v1)
 
-    def check(req: Slice): Unit = {
-      val agg = r.statsAggregate("v", req).collect()(0)
-      val exp = r.exploded("v", req)
+    def check(req: Slice, rd: graft.spark.SparkPinnedReader = r): Unit = {
+      val agg = rd.statsAggregate("v", req).collect()(0)
+      val exp = rd.exploded("v", req)
         .agg(org.apache.spark.sql.functions.min("value"),
           org.apache.spark.sql.functions.max("value"),
           org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)))
@@ -185,6 +185,15 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     check(Slice(Seq(2L, 3L), Seq(6L, 7L))) // window: boundary decode only
     check(Slice(Seq(8L, 0L), Seq(9L, 4L))) // pure fill window
     check(Slice(Seq(0L, 0L), Seq(4L, 3L))) // exactly one interior chunk (stats only)
+    // 35×35 = 1,225 covering chunks (> GraftScan.PointLookupThreshold): the
+    // range-planned scan manifest supplies the stats
+    store.create("big")
+    val wb = store.addVersion("big", meta2d.copy(
+      dimensions = Map("x" -> 70L, "y" -> 70L),
+      chunkDimensions = Map("x" -> 2L, "y" -> 2L)))
+    wb.write("v", Seq(Slab.fromDoubles(DType.DOUBLE, Slice(Seq(0L, 0L), Seq(40L, 50L)),
+      (1 to 2000).map(_.toDouble))))
+    check(Slice(Seq(1L, 1L), Seq(69L, 70L)), store.reader("big").onVersion(wb.finishVersion()))
 
     // long variable: exact sum, and the fill-math sum over the unwritten tail
     val metaL = DatasetMeta(
@@ -220,12 +229,19 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     val allNaN = rf.statsAggregate("f", Slice(Seq(8L), Seq(32L))).collect()(0)
     assert(allNaN.getDouble(0).isNaN && allNaN.getDouble(1).isNaN)
 
-    // the full-extent aggregate of the long variable must not read interior
-    // blobs: force-drop the chunks dir and keep only the index — interior
-    // stats + fill math still answer a purely interior window
-    val interiorOnly = Slice(Seq(16L), Seq(32L))
-    val before = rl.statsAggregate("n", interiorOnly).collect()(0)
-    assert(before.getLong(3) == 16L)
+    // an interior window must not read blobs: delete every chunk part file
+    // and the blob cache, keeping only the index — interior stats still
+    // answer (cells 17..32)
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(java.nio.file.Files.walk(
+        java.nio.file.Paths.get(store.chunksDir))) {
+      _.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq.foreach(java.nio.file.Files.delete)
+    }
+    SparkStore.clearBlobCache()
+    val interiorOnly = rl.statsAggregate("n", Slice(Seq(16L), Seq(32L))).collect()(0)
+    assert(interiorOnly.getLong(0) == 17L && interiorOnly.getLong(1) == 32L)
+    assert(interiorOnly.getLong(2) == (17 to 32).sum.toLong && interiorOnly.getLong(3) == 16L)
   }
 
   test("pruned read touches only covering chunks; windowed slice correct") {

@@ -75,6 +75,25 @@ class VacuumAndFunctionsSpec extends AnyFunSuite {
       r.explodedMulti(Seq("v"), Slice(Seq(0L), Seq(4L))).collect()
     }
     assert(ex3.getMessage.contains("refusing to read fill"), ex3.getMessage)
+    // the aggregate readers fetch through the same cursor: x ≥ 1 cuts
+    // chunk 0, whose blob must be decoded (chunk 1 answers from its stats)
+    SparkStore.clearBlobCache()
+    def graft = spark.read.format("graft").option("root", root)
+      .option("dataset", "ds").option("variable", "v")
+    val aggs = Seq(min("value"), max("value"), sum("value"), count(lit(1)))
+    val aggInputs = Seq[(String, () => Any)](
+      "point-planned pushed aggregate" -> (() =>
+        graft.load().filter(col("x") >= 1).agg(aggs.head, aggs.tail: _*).collect()),
+      "grouped chunked pushed aggregate" -> (() =>
+        graft.option("chunked", "true").load().filter(col("x") >= 1)
+          .groupBy("_chunk_x").agg(aggs.head, aggs.tail: _*).collect()),
+      "statsAggregate" -> (() =>
+        r.statsAggregate("v", Slice(Seq(1L), Seq(4L))).collect()))
+    aggInputs.foreach { case (what, run) =>
+      val e = intercept[Exception](run())
+      assert(e.getMessage.contains("chunk 0 resolved to blob") &&
+        e.getMessage.contains("refusing to read fill"), s"$what: ${e.getMessage}")
+    }
   }
 
   test("writeRows rejects slab seq outside the 20-bit per-call space") {

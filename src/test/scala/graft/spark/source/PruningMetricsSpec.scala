@@ -106,6 +106,33 @@ class PruningMetricsSpec extends AnyFunSuite {
     assert(nStream == 8L, s"streamChunks over 8 chunks decoded $nStream blobs")
   }
 
+  test("a pushed aggregate and statsAggregate decode only the window's boundary chunks") {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+    val (s, v) = mkStore(salt = 7L)
+    // x, y ∈ [15, 105) cut chunks 0 and 3 of each axis; z spans both
+    // z-chunks whole: 4×4×2 = 32 covering chunks, 2×2×2 = 8 of them interior
+    val win = Slice(Seq(15L, 15L, 0L), Seq(105L, 105L, 60L))
+    val boundary = 32L - 8L
+    SparkStore.clearBlobCache()
+    val (nPushed, _) = decoded {
+      val row = spark.read.format("graft").option("root", s.root)
+        .option("dataset", "ds").option("variable", "foo").load()
+        .filter(col("x") >= 15 && col("x") < 105 && col("y") >= 15 && col("y") < 105)
+        .agg(min("value"), max("value"), sum("value"), count(lit(1)))
+        .collect()(0)
+      assert(row.getLong(3) == 90L * 90L * 60L)
+    }
+    assert(nPushed == boundary,
+      s"pushed aggregate decoded $nPushed blobs, want the $boundary boundary chunks")
+    SparkStore.clearBlobCache()
+    val (nStats, _) = decoded {
+      val row = s.reader("ds").onVersion(v).statsAggregate("foo", win).collect()(0)
+      assert(row.getLong(3) == 90L * 90L * 60L)
+    }
+    assert(nStats == boundary,
+      s"statsAggregate decoded $nStats blobs, want the $boundary boundary chunks")
+  }
+
   test("unaligned window still decodes only overlapping chunks") {
     val (s, v) = mkStore(salt = 4L)
     // 10×10×10 window straddling a chunk corner: overlaps 2×2×2 chunks
