@@ -3,8 +3,10 @@ package graft.spark
 import graft.core._
 import graft.filters.FilterChain
 import graft.meta.DatasetMeta
+import graft.metrics.Instrument
 import graft.spark.source.{ChunkBlobReader, ChunkFileScope, ChunkSlabCursor, GraftScan,
   PinnedGraftTable, Resolved}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,9 +28,14 @@ import scala.jdk.CollectionConverters._
   *    chunk coordinate — each coordinate is owned by exactly one task, which
   *    makes the reference's CAS retry loop unnecessary intra-job
   *    (reference: impl.clj:246-278; SURVEY §4).
-  *  - chunk blobs are written once, content-deduplicated with
-  *    dropDuplicates(hash) + left-anti join against existing hashes
-  *    (reference dedup bound: test/io/mandoline/impl_test.clj:17-39).
+  *  - writes take the reads' point/range split (SparkVersionWriter): an
+  *    update touching ≤ GraftScan.PointLookupThreshold chunks resolves
+  *    its bases to the driver and lands its blobs as one file.
+  *  - chunk blobs are written once, content-deduplicated within the
+  *    batch (drop-adjacent over hash-sorted rows) and against the store —
+  *    a left-anti join against existing hashes, or a by-hash probe on
+  *    point writes (reference dedup bound:
+  *    test/io/mandoline/impl_test.clj:17-39).
   *  - reads enumerate ONLY covering chunk coordinates (array-analog of
   *    partition pruning, reference: io/mandoline.clj:250-256) — generated
   *    distributedly with spark.range, never collected on the driver — and
@@ -465,7 +472,10 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     *    that crashes before its rollback is additionally neutralized by
     *    the read-side fork resolution in [[versionManifests]].
     */
-  private[spark] def commitVersion(name: String, meta: DatasetMeta): Long = {
+  private[spark] def commitVersion(name: String, meta: DatasetMeta): Long =
+    Instrument.timed("store.commitVersion")(commitOnce(name, meta))
+
+  private def commitOnce(name: String, meta: DatasetMeta): Long = {
     val vid = meta.versionId.get
     val myTs =
       // the read-latest / parent-check / stamp / move sequence is atomic
@@ -941,7 +951,10 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * when no ingest can be running. Concurrent READERS of the specific
     * old files being deleted can still fail mid-query — schedule vacuum
     * off-peak. */
-  def vacuum(graceMs: Long = SparkStore.VacuumGraceMs): Long = {
+  def vacuum(graceMs: Long = SparkStore.VacuumGraceMs): Long =
+    Instrument.timed("store.vacuum")(sweepBlobs(graceMs))
+
+  private def sweepBlobs(graceMs: Long): Long = {
     healChunksDir()
     sweepScanManifests(System.currentTimeMillis() -
       math.max(graceMs, SparkStore.ManifestSweepMinAgeMs))
@@ -1031,7 +1044,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * the streaming version-tail source skips W (nothing changed in it).
     * Commit is the same atomic manifest move as any version: a crashed
     * compact leaves only an invisible uncommitted partition. */
-  def compact(name: String): Long =
+  def compact(name: String): Long = Instrument.timed("store.compact") {
     SparkStore.commitLock(root, name).synchronized {
       val vs = versions(name)
       require(vs.nonEmpty, s"compact($name): no committed versions")
@@ -1052,6 +1065,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
       }
       commitVersion(name, SparkStore.markCheckpoint(w.meta))
     }
+  }
 
   /** Retention: physically drop the index partitions AND version
     * manifests of every version strictly below the dataset's newest
@@ -1080,7 +1094,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * (copyFile throws; nothing partial becomes visible). Maintenance
     * and clones of one dataset belong in one serial schedule (the
     * commitLock serializes commits, not clones). */
-  def expireHistory(name: String): Long =
+  def expireHistory(name: String): Long = Instrument.timed("store.expireHistory") {
     SparkStore.commitLock(root, name).synchronized {
       val cp = latestCheckpointUpTo(name, Long.MaxValue).getOrElse(
         throw new IllegalStateException(
@@ -1126,6 +1140,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
         }
       expired.size.toLong
     }
+  }
 
   /** Zero-copy dataset clone (the SHALLOW-CLONE analog; beyond the
     * reference): `dst` gets copies of `src`'s version manifests and
@@ -1152,7 +1167,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * move.
     * Crashed temp trees are swept by vacuum's quiet-floor staging sweep.
     * Returns the number of committed versions cloned. */
-  def cloneDataset(src: String, dst: String): Long = {
+  def cloneDataset(src: String, dst: String): Long = Instrument.timed("store.cloneDataset") {
     require(StoreFs.exists(dsPath(src)), s"cloneDataset: dataset $src does not exist")
     validateDatasetName(dst, "cloneDataset")
     if (StoreFs.exists(dsPath(dst)))
@@ -1516,8 +1531,9 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * version's verified parent chain, truncated at its newest REPLACE of
     * the variable, behind the expire tripwire. The one admissible-set
     * rule for both pinned resolves ([[resolvedIndexPinned]] and
-    * [[resolvedPointsPinned]]). */
-  private def pinnedAdmissible(name: String, varName: String,
+    * [[resolvedPointsPinned]]) and the writer's point-planned base
+    * resolve. */
+  private[spark] def pinnedAdmissible(name: String, varName: String,
       pinned: DatasetMeta): Seq[Long] = {
     val chain = pinnedChain(name, pinned)
     // EXPIRE TRIPWIRE (one point GET per plan): a compact+expireHistory
@@ -1561,16 +1577,23 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * point-sized windows (`GraftScan.PointLookupThreshold`,
     * `chunked=true`'s ChunkedMaxChunks). */
   private[spark] def resolvedPointsPinned(name: String, varName: String,
-      pinned: DatasetMeta, coordFilter: Column): Map[String, (String, Row)] = {
-    val admissible = pinnedAdmissible(name, varName, pinned)
+      pinned: DatasetMeta, coordFilter: Column): Map[String, (String, Row)] =
+    resolvedPoints(name, varName, pinnedAdmissible(name, varName, pinned),
+      coordFilter).map { case (k, r) => k -> (r.getString(3), r.getStruct(4)) }
+
+  /** The point resolve over an explicit admissible set: coordKey → its
+    * winning (coordKey, version, seq, hash, stats) row, in ONE job with
+    * no shuffle. The writer's point-planned base resolve calls it with
+    * the parent's admissible set plus its own in-flight version. */
+  private[spark] def resolvedPoints(name: String, varName: String,
+      admissible: Seq[Long], coordFilter: Column): Map[String, Row] = {
     val winners = admittedIndexDF(name, varName, admissible)
       .filter(col("var") === varName && col("version").isin(admissible: _*))
       .filter(coordFilter)
       .select("coordKey", "version", "seq", "hash", "stats")
       .rdd.mapPartitions(SparkStore.keepWinners)
       .collect()
-    SparkStore.keepWinners(winners.iterator)
-      .map(r => r.getString(0) -> (r.getString(3), r.getStruct(4))).toMap
+    SparkStore.keepWinners(winners.iterator).map(r => r.getString(0) -> r).toMap
   }
 
   /** `coordFilter` is applied to the RAW index scan, before the group-by:
@@ -2243,7 +2266,21 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
   }
 }
 
-/** Distributed write path (W1-W8 as one shuffle + two appends). */
+/** Distributed write path (W1-W8): shred slabs into chunk fragments,
+  * merge each touched chunk onto its base, append the new blobs, append
+  * the index rows. Writes take the reads' point/range split at the same
+  * threshold (`GraftScan.PointLookupThreshold`):
+  *  - POINT: a write that merges onto resolved bases and touches at most
+  *    the threshold's chunks. Its touched keys and base rows come to the
+  *    driver in one shuffle-free job each; one shuffle groups fragments
+  *    by chunk, each task fetching its bases by hash; the new blobs land
+  *    as ONE hash-sorted file after a by-hash dedup probe.
+  *  - RANGE: every other write (first writes, REPLACE versions, larger
+  *    updates). Bases join in by coordinate (`withBlobs`), fragments
+  *    cogroup with them, and blobs dedup against the chunk table and land
+  *    in hash-range-partitioned files.
+  * Both plans fold, encode and take stats through one kernel
+  * (`SparkVersionWriter.mergeChunk`) and append index rows the same way. */
 final class SparkVersionWriter(store: SparkStore, name: String,
     val meta: DatasetMeta, val parentMeta: Option[DatasetMeta],
     /** True for writers rebuilt from a token: the version may have
@@ -2257,14 +2294,10 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     shared: Boolean = false) {
   import store.spark
   import spark.implicits._
+  import SparkVersionWriter.{Frag, Merged}
 
   def token: String = meta.toJson
   private def vid = meta.versionId.get
-
-  /** Shredded slab fragment: a slab clipped to one chunk.
-    * `seq` carries write order for last-writer-wins determinism
-    * (reference overlap semantics: concurrency.clj:75-160; SURVEY §7.4). */
-  private type Frag = (String, Array[Long], Long, Array[Long], Array[Long], Array[Byte])
 
   /** Driver-convenience write. */
   def write(varName: String, slabs: Seq[Slab]): Unit = {
@@ -2291,9 +2324,11 @@ final class SparkVersionWriter(store: SparkStore, name: String,
   private val lastSeqBase = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def writeRows(varName: String, slabRows: DataFrame): Unit =
-    SparkPinnedReader.raisingMissingBlob {
-      val mine = writeOnce(varName, slabRows, collectHashes = shared)
-      if (shared) verifySharedWrite(varName, slabRows, mine.get, attempt = 0)
+    Instrument.timed("store.writeRows") {
+      SparkPinnedReader.raisingMissingBlob {
+        val mine = writeOnce(varName, slabRows, collectHashes = shared)
+        if (shared) verifySharedWrite(varName, slabRows, mine.get, attempt = 0)
+      }
     }
 
   /** One merge-and-append pass. With `collectHashes` (shared writers
@@ -2304,14 +2339,15 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     * collects nothing. `baseOverride` (retry passes only) pins each
     * chunk's merge base to an explicit (seq, hash) row chosen at verify
     * time instead of the MVCC resolve — the CAS-retry "re-read current,
-    * merge onto it" step. */
+    * merge onto it" step. The pass is point-planned when it resolves a
+    * base and touches at most `GraftScan.PointLookupThreshold` chunks,
+    * range-planned otherwise (see the class doc). */
   private def writeOnce(varName: String, slabRows: DataFrame,
       collectHashes: Boolean = false,
       baseOverride: Option[Seq[(String, Long, String)]] = None,
       replacesByCoord: Map[String, String] = Map.empty)
       : Option[Map[String, (String, Long, String)]] = {
     val metaJson = meta.toJson
-    val parentJson = parentMeta.map(_.toJson)
     val varN = varName
     val jobSeqBase = lastSeqBase.updateAndGet(prev =>
       math.max(System.currentTimeMillis(), prev + 1)) << 20
@@ -2340,70 +2376,9 @@ final class SparkVersionWriter(store: SparkStore, name: String,
         }
       }
 
-    // 2. base chunks: current in-flight version's own entries (read-modify-
-    //    write across write() calls) ∪ committed ancestry ≤ parent
-    //    (reference: impl.clj:232-250), semi-joined to the coordinates the
-    //    slabs actually touch, each base row's blob then fetched BY HASH
-    //    (`SparkStore.withBlobs`: hash-bucketed batches through the chunk
-    //    files whose hash range can hold them — never a scan of the whole
-    //    blob store). A resolved base hash whose blob is missing fails
-    //    the write (`SparkPinnedReader.requireBlob`): merging onto fill
-    //    would silently erase the chunk's untouched cells. FIRST-WRITE
-    //    FAST PATH: when the variable provably has no index data (no
-    //    admissible version partition on disk — every initial bulk
-    //    ingest), skip the touched-coordinate scan (a second full pass
-    //    over slabRows), the MVCC resolve, and the blob fetch entirely;
-    //    the cogroup below then sees an empty base side and folds
-    //    fragments onto fill.
-    // (coordKey, baseBytes, baseSeq, baseHash): base row content plus its
-    // identity — baseSeq −1 / baseHash "" for a committed-version or fill
-    // base (only THIS version's rows can contend, so only a vid base
-    // needs an identity)
-    val baseIdx: Option[DataFrame] =
-      if (baseOverride.isDefined)
-        Some(baseOverride.get.toDF("coordKey", "baseSeq", "baseHash")
-          .withColumn("hash", col("baseHash")))
-      else if (!store.hasIndexData(name, varN, meta.parent, vid) ||
-          // REPLACE version (INSERT OVERWRITE): merge against FILL, never
-          // the parent — the committed version must contain only this
-          // write's cells, with everything else reading as fill
-          SparkStore.isReplaceOf(meta, varN))
-        None
-      else {
-        // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
-        // base-chunk loading is restricted to these (writing one slab to a
-        // petabyte variable must not load the whole variable's chunks)
-        val touched = touchedKeys(varN, slabRows)
-        // base resolution is CHAIN-scoped on the writer's own parent
-        // manifest (not the listing): a writer chained on a
-        // just-committed parent a lagging listing still omits must merge
-        // against the parent's real state, never the grandparent's
-        Some((parentMeta match {
-          case Some(pm) => store.resolvedIndexPinned(name, varN, pm,
-            includeUncommitted = Some(vid))
-          case None => store.resolvedOver(name, varN, Seq(vid),
-            org.apache.spark.sql.functions.lit(true))
-        })
-          .join(touched, Seq("coordKey"), "left_semi")
-          .select(col("coordKey"), col("hash"),
-            when(col("winVersion") === vid, col("winSeq")).otherwise(-1L)
-              .as("baseSeq"),
-            when(col("winVersion") === vid, col("hash")).otherwise("")
-              .as("baseHash")))
-      }
-    val baseChunks: Dataset[(String, Array[Byte], Long, String)] =
-      baseIdx match {
-        case None => spark.emptyDataset[(String, Array[Byte], Long, String)]
-        case Some(idx) =>
-          store.withBlobs(idx, "hash", "baseBytes", requireKeyCol = Some("coordKey"))
-            .select(col("coordKey"), col("baseBytes"), col("baseSeq"),
-              col("baseHash"))
-            .as[(String, Array[Byte], Long, String)]
-      }
-
     // On a pinned-base retry, merge ONLY the overridden coordinates: the
     // retry's slab rows can span both lost and still-owned chunks, and an
-    // owned chunk absent from the override would otherwise cogroup with
+    // owned chunk absent from the override would otherwise merge with
     // no base at all and re-merge onto FILL — erasing cells it already
     // holds, with a bumped seq that would make the damage win
     val fragsEff = baseOverride match {
@@ -2413,133 +2388,62 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       case None => frags
     }
 
-    // 3. ONE shuffle: cogroup fragments with base chunks by coordinate;
-    //    each coordinate owned by exactly one task → fold in seq order
-    val merged = fragsEff.groupByKey(_._1)
-      .cogroup(baseChunks.groupByKey(_._1)) { (key, fIt, bIt) =>
-        val fs = fIt.toArray
-        if (fs.isEmpty) Iterator.empty
-        else {
-          val m = DatasetMeta.fromJson(metaJson)
-          val dt = m.dtype(varN)
-          val coord = key.split(',').filter(_.nonEmpty).map(_.toLong).toVector
-          val chunkSlice = m.chunkSlice(varN, coord)
-          val baseRow = bIt.toSeq.headOption
-          val base = baseRow match {
-            case Some((_, bb, _, _)) =>
-              // base chunk's slice == child chunk slice (grid is frozen
-              // across versions, reference: dataset.clj:55-61)
-              Slab(dt, chunkSlice, FilterChain.decode(bb))
-            case None => Slab.empty(dt, chunkSlice, m.fill(varN))
-          }
-          val (baseSeq, baseHash) = baseRow match {
-            case Some((_, _, bs, bh)) => (bs, bh)
-            case None => (-1L, "")
-          }
-          // total order: seq, then fragment origin, then payload bytes (a
-          // caller CAN ship duplicate coordinates with equal seq — e.g.
-          // the cell-ingest path — and without a full tie-break the merge
-          // would follow nondeterministic shuffle-fetch order, so a
-          // persisted-partition recompute could hash differently than the
-          // stored blob)
-          fs.sortWith { (a, b) =>
-            if (a._3 != b._3) a._3 < b._3
-            else {
-              val so = java.util.Arrays.compare(a._4, b._4)
-              if (so != 0) so < 0
-              else {
-                val eo = java.util.Arrays.compare(a._5, b._5)
-                if (eo != 0) eo < 0
-                else java.util.Arrays.compareUnsigned(a._6, b._6) < 0
-              }
-            }
-          }.foreach {
-            case (_, _, _, fStart, fStop, fBytes) =>
-              base.mergeFrom(Slab(dt, Slice(fStart.toVector, fStop.toVector), fBytes))
-          }
-          val framed = FilterChain.encode(m.filters match {
-            case Nil => FilterChain.DefaultWriteChain
-            case f => f
-          }, base.bytes)
-          // zone-map stats over the merged chunk, computed while the slab
-          // is already in memory — read-side aggregates and value-predicate
-          // skipping answer from these without touching the blob
-          val st = base.stats
-          Iterator((key, coord.toArray, base.contentHash, framed,
-            st.cnt, st.lmin, st.lmax, st.lsum, st.dmin, st.dmax, st.nan,
-            baseSeq, baseHash))
-        }
-      }.toDF("coordKey", "coord", "hash", "bytes",
+    // 2. plan. A pass RESOLVES A BASE — the current in-flight version's
+    //    own entries (read-modify-write across write() calls) ∪ committed
+    //    ancestry ≤ parent (reference: impl.clj:232-250) — unless it is a
+    //    first write or a REPLACE. FIRST-WRITE FAST PATH: when the
+    //    variable provably has no index data (no admissible version
+    //    partition on disk — every initial bulk ingest), the pass skips
+    //    the touched-coordinate scan, the MVCC resolve and the blob fetch
+    //    entirely and folds fragments onto fill. A REPLACE version (INSERT
+    //    OVERWRITE) merges against FILL, never the parent — the committed
+    //    version must contain only this write's cells. A retry's bases
+    //    are its pinned override. A base-resolving pass that touches at
+    //    most the point threshold's chunks is point-planned.
+    val resolvesBase = baseOverride.isDefined ||
+      (store.hasIndexData(name, varN, meta.parent, vid) &&
+        !SparkStore.isReplaceOf(meta, varN))
+    val threshold = GraftScan.PointLookupThreshold
+    val pointKeys: Option[Seq[String]] =
+      if (!resolvesBase) None
+      else baseOverride match {
+        case Some(ov) => Some(ov.map(_._1).distinct).filter(_.size <= threshold)
+        case None => touchedAtMost(varN, slabRows, threshold)
+      }
+    // a point pass lists the chunk files once: its base fetch and its
+    // dedup probe both scope by that listing
+    val point = pointKeys.map(keys =>
+      (keys, spark.sparkContext.broadcast(ChunkFileScope.ranged(store))))
+
+    // 3. merge: one row per touched chunk — the merged blob, its stats
+    //    and the base row it folded
+    val merged = (point match {
+      case Some((keys, ranged)) =>
+        pointMerged(varN, fragsEff, keys, baseOverride, ranged)
+      case None => rangeMerged(varN, slabRows, fragsEff, resolvesBase, baseOverride)
+    }).toDF("coordKey", "coord", "hash", "bytes",
         "scnt", "slmin", "slmax", "slsum", "sdmin", "sdmax", "snan",
         "baseSeq", "baseHash")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     try {
-      // 4. chunk append: content-dedup within the batch AND against the
-      //    store (reference dedup bound impl_test.clj:17-39), arranged so
-      //    blob BYTES move exactly ONCE — the range shuffle that lays out
-      //    hash-sorted disjoint part files (needed regardless):
-      //    - already-in-store hashes (re-ingested content) are a
-      //      string-only semi join against chunkHashesDF, broadcast back as a
-      //      LEFT-ANTI filter below the range shuffle. The broadcast is
-      //      bounded by the batch's re-ingested DISTINCT hashes (40 B
-      //      each); the worst case — an idempotent full re-write —
-      //      broadcasts the batch's hash set and then writes zero blobs.
-      //    - within-batch duplicates land ADJACENT in the hash-sorted
-      //      range partitions and are dropped in-pass (mapPartitions),
-      //      costing no shuffle at all.
-      //    Earlier shapes both failed at scale, caught by the round-18
-      //    incompressible-content probe: a plain join of the cogroup
-      //    output with the winner coordKeys let the planner BROADCAST
-      //    the blob side (the cogroup's static size estimate derives
-      //    from its tiny spark.range inputs — 1.6 GB of driver results
-      //    at the x4 shape), and pinning the build side with a
-      //    shuffle-hash hint re-shuffled every blob byte a second time
-      //    (the cogroup's coordKey clustering does not survive object
-      //    serialization, so the join could not reuse it).
-      val existing = merged.select("hash").distinct()
-        .join(store.chunkHashesDF, Seq("hash"), "left_semi")
-      // blobs are already LZ4-framed — skip parquet's recompression.
-      // RANGE-partition by hash, then sort within partitions: each part
-      // file owns a DISJOINT hash range (footer min/max), so a point
-      // lookup opens one candidate file per ingest generation instead of
-      // every file (file-level pruning in ChunkBlobReader.fileHashRange —
-      // without disjoint files, per-chunk tasks paid an open per file:
-      // measured 277 ms/task on a 2240-chunk grid agg, ~8 ms after).
-      // The batch lands in a STAGING dir and its part files are adopted
-      // into the live chunks dir — the exact new-file list then comes
-      // from one O(new files) listing (diffing the live dir would cost
-      // two full walks per ingest at millions of part files, and could
-      // capture a concurrent writer's in-flight _temporary files), and
-      // this generation's (file → hash range) sidecar means scan planning
-      // never has to open footers. Same adopt pattern as vacuum's
-      // compaction; part-file names carry fresh UUIDs, so no collision.
+      // 4. chunk append, content-deduplicated within the batch AND against
+      //    the store (reference dedup bound impl_test.clj:17-39). The
+      //    batch lands in a STAGING dir and its part files are adopted
+      //    into the live chunks dir — the exact new-file list then comes
+      //    from one O(new files) listing (diffing the live dir would cost
+      //    two full walks per ingest at millions of part files, and could
+      //    capture a concurrent writer's in-flight _temporary files), and
+      //    this generation's (file → hash range) sidecar means scan
+      //    planning never has to open footers. Same adopt pattern as
+      //    vacuum's compaction; part-file names carry fresh UUIDs, so no
+      //    collision. Blobs are already LZ4-framed — parquet does not
+      //    recompress them.
       val staging = store.newChunkStagingDir()
-      merged.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-        .join(broadcast(existing), Seq("hash"), "left_anti")
-        .as[(String, Long, Array[Byte])]
-        // map-side pre-dedup (hashes only in memory, bounded by the
-        // partition's distinct chunks): a constant variable collapses to
-        // one row per partition BEFORE the shuffle, preserving the old
-        // shape's property that duplicate content never moves
-        .mapPartitions { it =>
-          val seen = new java.util.HashSet[String]()
-          it.filter(r => seen.add(r._1))
-        }
-        .repartitionByRange(col("_1")).sortWithinPartitions("_1")
-        // cross-partition duplicates land adjacent in the hash-sorted
-        // range partitions: drop-adjacent finishes the dedup shuffle-free
-        .mapPartitions { it =>
-          var last: String = null
-          it.filter { r =>
-            val keep = r._1 != last
-            last = r._1
-            keep
-          }
-        }
-        .toDF("hash", "ref", "bytes")
-        .write.option("compression", "uncompressed")
-        .parquet(staging)
+      point match {
+        case Some((_, ranged)) => appendBlobsPoint(merged, staging, ranged)
+        case None => appendBlobsRange(merged, staging)
+      }
       store.writeChunkRangeSidecar(store.adoptChunkFiles(staging))
 
       // 5. index append, hive-partitioned by (var, version) so the MVCC
@@ -2572,6 +2476,196 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     } finally merged.unpersist()
   }
 
+  /** RANGE-planned merge: base chunks are semi-joined to the coordinates
+    * the slabs actually touch, each base row's blob then fetched BY HASH
+    * (`SparkStore.withBlobs`: hash-bucketed batches through the chunk
+    * files whose hash range can hold them — never a scan of the whole
+    * blob store); then ONE shuffle cogroups fragments with base chunks
+    * by coordinate, so each coordinate is owned by exactly one task. A
+    * resolved base hash whose blob is missing fails the write
+    * (`SparkPinnedReader.requireBlob`): merging onto fill would silently
+    * erase the chunk's untouched cells. Without a base the cogroup sees
+    * an empty base side and folds fragments onto fill. */
+  private def rangeMerged(varN: String, slabRows: DataFrame, frags: Dataset[Frag],
+      resolvesBase: Boolean, baseOverride: Option[Seq[(String, Long, String)]])
+      : Dataset[Merged] = {
+    // (coordKey, hash, baseSeq, baseHash): base row identity — baseSeq −1
+    // / baseHash "" for a committed-version or fill base (only THIS
+    // version's rows can contend, so only a vid base needs an identity)
+    val baseIdx: Option[DataFrame] =
+      if (baseOverride.isDefined)
+        Some(baseOverride.get.toDF("coordKey", "baseSeq", "baseHash")
+          .withColumn("hash", col("baseHash")))
+      else if (!resolvesBase) None
+      else {
+        // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
+        // base-chunk loading is restricted to these (writing one slab to a
+        // petabyte variable must not load the whole variable's chunks)
+        val touched = touchedKeys(varN, slabRows)
+        // base resolution is CHAIN-scoped on the writer's own parent
+        // manifest (not the listing): a writer chained on a
+        // just-committed parent a lagging listing still omits must merge
+        // against the parent's real state, never the grandparent's
+        Some((parentMeta match {
+          case Some(pm) => store.resolvedIndexPinned(name, varN, pm,
+            includeUncommitted = Some(vid))
+          case None => store.resolvedOver(name, varN, Seq(vid),
+            org.apache.spark.sql.functions.lit(true))
+        })
+          .join(touched, Seq("coordKey"), "left_semi")
+          .select(col("coordKey"), col("hash"),
+            when(col("winVersion") === vid, col("winSeq")).otherwise(-1L)
+              .as("baseSeq"),
+            when(col("winVersion") === vid, col("hash")).otherwise("")
+              .as("baseHash")))
+      }
+    val baseChunks: Dataset[(String, Array[Byte], Long, String)] =
+      baseIdx match {
+        case None => spark.emptyDataset[(String, Array[Byte], Long, String)]
+        case Some(idx) =>
+          store.withBlobs(idx, "hash", "baseBytes", requireKeyCol = Some("coordKey"))
+            .select(col("coordKey"), col("baseBytes"), col("baseSeq"),
+              col("baseHash"))
+            .as[(String, Array[Byte], Long, String)]
+      }
+    val metaJson = meta.toJson
+    frags.groupByKey(_._1)
+      .cogroup(baseChunks.groupByKey(_._1)) { (key, fIt, bIt) =>
+        val fs = fIt.toArray
+        if (fs.isEmpty) Iterator.empty
+        else {
+          val base = bIt.toSeq.headOption
+          Iterator(SparkVersionWriter.mergeChunk(DatasetMeta.fromJson(metaJson),
+            varN, key, fs, base.map(_._2).orNull, base.fold(-1L)(_._3),
+            base.fold("")(_._4)))
+        }
+      }
+  }
+
+  /** POINT-planned merge over the ≤ threshold touched `keys`. Base rows
+    * resolve to the driver in ONE job with no shuffle (the parent's
+    * admissible versions plus this in-flight one, `coordKey IN keys`); a
+    * retry takes them from its pinned override with no job. ONE shuffle
+    * then groups fragments by coordinate, and each task fetches its
+    * chunks' base blobs by hash in batches, through only the chunk files
+    * whose hash range can hold them. A base whose blob is missing fails
+    * the write (`SparkPinnedReader.requireBlob`). */
+  private def pointMerged(varN: String, frags: Dataset[Frag], keys: Seq[String],
+      baseOverride: Option[Seq[(String, Long, String)]],
+      ranged: Broadcast[Array[(String, String, String)]]): Dataset[Merged] = {
+    // coordKey → (base blob hash, baseSeq, baseHash); absent → fill base
+    val bases: Map[String, (String, Long, String)] = baseOverride match {
+      case Some(ov) => ov.iterator.map { case (k, s, h) => k -> ((h, s, h)) }.toMap
+      case None =>
+        val admissible =
+          parentMeta.toSeq.flatMap(store.pinnedAdmissible(name, varN, _)) :+ vid
+        store.resolvedPoints(name, varN, admissible, col("coordKey").isin(keys: _*))
+          .map { case (k, r) =>
+            val own = r.getLong(1) == vid
+            k -> ((r.getString(3), if (own) r.getLong(2) else -1L,
+              if (own) r.getString(3) else ""))
+          }
+    }
+    val metaJson = meta.toJson
+    val hconfBc = StoreFs.broadcastConf()
+    frags.repartition(col("_1")).sortWithinPartitions("_1").mapPartitions { it =>
+      StoreFs.installExecutorConf(hconfBc.value)
+      val m = DatasetMeta.fromJson(metaJson)
+      SparkVersionWriter.runsByKey(it).grouped(ChunkBlobReader.OrTreeLimit)
+        .flatMap { batch =>
+          val wanted = batch.iterator.flatMap(g => bases.get(g._1)).map(_._1).toSet
+          val got =
+            if (wanted.isEmpty) Map.empty[String, Array[Byte]]
+            else ChunkBlobReader.read(
+              ChunkFileScope.filesFor(ranged.value, wanted.iterator),
+              wanted, harvest = false)
+          batch.iterator.map { case (key, fs) =>
+            bases.get(key) match {
+              case Some((h, baseSeq, baseHash)) =>
+                val bytes = got.getOrElse(h, null)
+                SparkPinnedReader.requireBlob(key, h, bytes)
+                SparkVersionWriter.mergeChunk(m, varN, key, fs, bytes, baseSeq, baseHash)
+              case None => SparkVersionWriter.mergeChunk(m, varN, key, fs, null, -1L, "")
+            }
+          }
+        }
+    }
+  }
+
+  /** RANGE blob append, arranged so blob BYTES move exactly ONCE — the
+    * range shuffle that lays out hash-sorted disjoint part files:
+    *  - already-in-store hashes (re-ingested content) are a string-only
+    *    semi join against chunkHashesDF, broadcast back as a LEFT-ANTI
+    *    filter below the range shuffle. The broadcast is bounded by the
+    *    batch's re-ingested DISTINCT hashes (40 B each); the worst case —
+    *    an idempotent full re-write — broadcasts the batch's hash set and
+    *    then writes zero blobs.
+    *  - within-batch duplicates land ADJACENT in the hash-sorted range
+    *    partitions and are dropped in-pass (mapPartitions), costing no
+    *    shuffle at all.
+    * Earlier shapes both failed at scale, caught by the round-18
+    * incompressible-content probe: a plain join of the cogroup output
+    * with the winner coordKeys let the planner BROADCAST the blob side
+    * (the cogroup's static size estimate derives from its tiny
+    * spark.range inputs — 1.6 GB of driver results at the x4 shape), and
+    * pinning the build side with a shuffle-hash hint re-shuffled every
+    * blob byte a second time (the cogroup's coordKey clustering does not
+    * survive object serialization, so the join could not reuse it).
+    * RANGE-partitioning by hash, then sorting within partitions, gives
+    * each part file a DISJOINT hash range (footer min/max), so a point
+    * lookup opens one candidate file per ingest generation instead of
+    * every file (file-level pruning in ChunkBlobReader.fileHashRange —
+    * without disjoint files, per-chunk tasks paid an open per file:
+    * measured 277 ms/task on a 2240-chunk grid agg, ~8 ms after). */
+  private def appendBlobsRange(merged: DataFrame, staging: String): Unit = {
+    val existing = merged.select("hash").distinct()
+      .join(store.chunkHashesDF, Seq("hash"), "left_semi")
+    merged.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
+      .join(broadcast(existing), Seq("hash"), "left_anti")
+      .as[(String, Long, Array[Byte])]
+      // map-side pre-dedup (hashes only in memory, bounded by the
+      // partition's distinct chunks): a constant variable collapses to
+      // one row per partition BEFORE the shuffle, preserving the old
+      // shape's property that duplicate content never moves
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[String]()
+        it.filter(r => seen.add(r._1))
+      }
+      .repartitionByRange(col("_1")).sortWithinPartitions("_1")
+      // cross-partition duplicates land adjacent in the hash-sorted
+      // range partitions: drop-adjacent finishes the dedup shuffle-free
+      .mapPartitions(it => SparkVersionWriter.dropAdjacent(it))
+      .toDF("hash", "ref", "bytes")
+      .write.option("compression", "uncompressed")
+      .parquet(staging)
+  }
+
+  /** POINT blob append: ONE hash-sorted, drop-adjacent file. Its dedup
+    * probe runs in the same task, by hash: each batch of new hashes reads
+    * only the `hash` column of the chunk files whose range can hold one
+    * (`ChunkBlobReader.storedHashes`), and never the per-JVM blob cache —
+    * a cached blob may already be vacuumed from the store. */
+  private def appendBlobsPoint(merged: DataFrame, staging: String,
+      ranged: Broadcast[Array[(String, String, String)]]): Unit = {
+    val hconfBc = StoreFs.broadcastConf()
+    merged.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
+      .coalesce(1).sortWithinPartitions("hash")
+      .as[(String, Long, Array[Byte])]
+      .mapPartitions { it =>
+        StoreFs.installExecutorConf(hconfBc.value)
+        SparkVersionWriter.dropAdjacent(it).grouped(ChunkBlobReader.OrTreeLimit)
+          .flatMap { batch =>
+            val hs = batch.iterator.map(_._1).toSet
+            val stored = ChunkBlobReader.storedHashes(
+              ChunkFileScope.filesFor(ranged.value, hs.iterator), hs)
+            batch.iterator.filterNot(r => stored.contains(r._1))
+          }
+      }
+      .toDF("hash", "ref", "bytes")
+      .write.option("compression", "uncompressed")
+      .parquet(staging)
+  }
+
   /** Keys of the chunks one slab row's [start, stop) box covers — the
     * writer's one slab → chunk-key rule (serializable: executor-side). */
   private def slabChunkKeys(varName: String)
@@ -2587,6 +2681,27 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     slabRows.select("start", "stop").as[(Array[Long], Array[Long])]
       .flatMap { case (start, stop) => keysOf(start, stop) }
       .distinct().toDF("coordKey")
+  }
+
+  /** Distinct keys of the chunks `slabRows` touch when there are at most
+    * `limit` of them, else None — ONE job with no shuffle: each task
+    * stops collecting at `limit` + 1 distinct keys, so the driver holds
+    * at most (`limit` + 1) × tasks keys. */
+  private def touchedAtMost(varName: String, slabRows: DataFrame,
+      limit: Long): Option[Seq[String]] = {
+    val keysOf = slabChunkKeys(varName)
+    val keys = slabRows.select("start", "stop").as[(Array[Long], Array[Long])]
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[String]()
+        while (it.hasNext && seen.size <= limit) {
+          val (start, stop) = it.next()
+          val ks = keysOf(start, stop)
+          while (ks.hasNext && seen.size <= limit) seen.add(ks.next())
+        }
+        seen.iterator.asScala
+      }
+      .collect().distinct
+    if (keys.length > limit) None else Some(keys.toSeq)
   }
 
   /** Post-landing ownership check for SHARED (token) writers — the
@@ -2676,4 +2791,86 @@ final class SparkVersionWriter(store: SparkStore, name: String,
 
   /** V3 commit. */
   def finishVersion(): Long = store.commitVersion(name, meta)
+}
+
+object SparkVersionWriter {
+  /** Shredded slab fragment: a slab clipped to one chunk, as (coordKey,
+    * coord, seq, start, stop, bytes). `seq` carries write order for
+    * last-writer-wins determinism (reference overlap semantics:
+    * concurrency.clj:75-160; SURVEY §7.4). */
+  private[spark] type Frag =
+    (String, Array[Long], Long, Array[Long], Array[Long], Array[Byte])
+
+  /** One merged chunk: (coordKey, coord, content hash, framed blob, stats
+    * cnt/lmin/lmax/lsum/dmin/dmax/nan, baseSeq, baseHash). */
+  private[spark] type Merged = (String, Array[Long], String, Array[Byte],
+    Long, Option[Long], Option[Long], Option[Long], Option[Double],
+    Option[Double], Long, Long, String)
+
+  /** The merge kernel of both write plans, for one touched chunk: fold
+    * its fragments in write order onto its base (`baseFramed`, a framed
+    * blob, or fill when null), encode the result and take its zone-map
+    * stats — computed while the slab is in memory, so read-side
+    * aggregates and value-predicate skipping answer from them without
+    * touching the blob. */
+  private[spark] def mergeChunk(m: DatasetMeta, varN: String, key: String,
+      fs: Array[Frag], baseFramed: Array[Byte], baseSeq: Long,
+      baseHash: String): Merged = {
+    val dt = m.dtype(varN)
+    val coord = key.split(',').filter(_.nonEmpty).map(_.toLong).toVector
+    val chunkSlice = m.chunkSlice(varN, coord)
+    // base chunk's slice == child chunk slice (grid is frozen across
+    // versions, reference: dataset.clj:55-61)
+    val base =
+      if (baseFramed == null) Slab.empty(dt, chunkSlice, m.fill(varN))
+      else Slab(dt, chunkSlice, FilterChain.decode(baseFramed))
+    // total order: seq, then fragment origin, then payload bytes (a
+    // caller CAN ship duplicate coordinates with equal seq — e.g. the
+    // cell-ingest path — and without a full tie-break the merge would
+    // follow nondeterministic shuffle-fetch order, so a persisted-
+    // partition recompute could hash differently than the stored blob)
+    fs.sortWith { (a, b) =>
+      if (a._3 != b._3) a._3 < b._3
+      else {
+        val so = java.util.Arrays.compare(a._4, b._4)
+        if (so != 0) so < 0
+        else {
+          val eo = java.util.Arrays.compare(a._5, b._5)
+          if (eo != 0) eo < 0
+          else java.util.Arrays.compareUnsigned(a._6, b._6) < 0
+        }
+      }
+    }.foreach { case (_, _, _, fStart, fStop, fBytes) =>
+      base.mergeFrom(Slab(dt, Slice(fStart.toVector, fStop.toVector), fBytes))
+    }
+    val framed = FilterChain.encode(m.filters match {
+      case Nil => FilterChain.DefaultWriteChain
+      case f => f
+    }, base.bytes)
+    val st = base.stats
+    (key, coord.toArray, base.contentHash, framed, st.cnt, st.lmin, st.lmax,
+      st.lsum, st.dmin, st.dmax, st.nan, baseSeq, baseHash)
+  }
+
+  /** The runs of equal coordKey in a coordKey-sorted fragment stream. */
+  private[spark] def runsByKey(it: Iterator[Frag]): Iterator[(String, Array[Frag])] = {
+    val buf = it.buffered
+    Iterator.continually(buf).takeWhile(_.hasNext).map { b =>
+      val key = b.head._1
+      val run = Array.newBuilder[Frag]
+      while (b.hasNext && b.head._1 == key) run += b.next()
+      (key, run.result())
+    }
+  }
+
+  /** Blob rows of a hash-sorted stream with adjacent duplicates dropped. */
+  private[spark] def dropAdjacent(it: Iterator[(String, Long, Array[Byte])])
+      : Iterator[(String, Long, Array[Byte])] = {
+    var last: String = null
+    it.filter { r =>
+      val keep = r._1 != last
+      last = r._1
+      keep
+    }
+  }
 }

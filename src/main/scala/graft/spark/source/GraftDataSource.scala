@@ -1198,12 +1198,13 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     }
 }
 
-private[source] object GraftScan {
+private[spark] object GraftScan {
   /** Windows covering at most this many chunks plan as point partitions
     * (resolved driver-side, exact hash lookups); larger ones plan through
     * the distributed, cached scan manifest (`planRange`). The one
     * point-vs-range decision for every chunk read — DSv2 scans and
-    * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti. */
+    * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti — and
+    * for every base-resolving write (`SparkVersionWriter`). */
   val PointLookupThreshold = 1024L
 
   /** Point resolves run by `GraftScan` plans (per JVM, monotonic) — the
@@ -1644,6 +1645,14 @@ private[spark] object ChunkBlobReader {
       FilterApi.or(balancedOr(hs, from, mid), balancedOr(hs, mid, to))
     }
 
+  /** Filter on `hash` for a sorted wanted set: the or tree up to
+    * OrTreeLimit hashes, the min/max range beyond. */
+  private def hashFilter(sorted: Array[String]): FilterPredicate =
+    if (sorted.length <= OrTreeLimit) balancedOr(sorted, 0, sorted.length)
+    else FilterApi.and(
+      FilterApi.gtEq(FilterApi.binaryColumn("hash"), Binary.fromString(sorted.head)),
+      FilterApi.ltEq(FilterApi.binaryColumn("hash"), Binary.fromString(sorted.last)))
+
   /** Per-JVM cache of each chunk file's (min, max) hash from its footer
     * row-group stats. Chunk part files are WRITE-ONCE (appends create new
     * files; vacuum deletes and writes new names), so a path-keyed entry
@@ -1793,11 +1802,7 @@ private[spark] object ChunkBlobReader {
     if (missing.isEmpty) return out.toMap
     val conf = if (useCache && harvest) harvestConf else sharedConf
     val sorted = missing.toArray.sorted
-    val pred: FilterPredicate =
-      if (sorted.length <= OrTreeLimit) balancedOr(sorted, 0, sorted.length)
-      else FilterApi.and(
-        FilterApi.gtEq(FilterApi.binaryColumn("hash"), Binary.fromString(sorted.head)),
-        FilterApi.ltEq(FilterApi.binaryColumn("hash"), Binary.fromString(sorted.last)))
+    val pred = hashFilter(sorted)
     // prune to files whose footer hash range overlaps the wanted span
     val (wLo, wHi) = (sorted.head, sorted.last)
     val candidates = files.filter { f =>
@@ -1831,5 +1836,46 @@ private[spark] object ChunkBlobReader {
     }
     if (useCache) out.foreach { case (h, b) => cachePut(h, b) }
     out.toMap
+  }
+
+  /** The subset of `wanted` that `files` hold — the point writer's dedup
+    * probe. Reads only the `hash` column, row-group and record filtered
+    * to the wanted hashes, and never consults the blob cache: a cached
+    * blob may already be vacuumed from the store. Opens no file once
+    * every wanted hash is found. */
+  def storedHashes(files: Array[String], wanted: Set[String]): Set[String] = {
+    if (wanted.isEmpty) return Set.empty
+    val found = scala.collection.mutable.Set.empty[String]
+    val pred = hashFilter(wanted.toArray.sorted)
+    files.foreach { f =>
+      if (found.size < wanted.size) {
+        val reader = ParquetReader
+          .builder(new HashColumnReadSupport, new org.apache.hadoop.fs.Path(f))
+          .withConf(sharedConf)
+          .withFilter(FilterCompat.get(pred))
+          .build()
+        try {
+          var g = reader.read()
+          while (g != null) {
+            val h = g.getString("hash", 0)
+            if (wanted.contains(h)) found += h
+            g = reader.read()
+          }
+        } finally reader.close()
+      }
+    }
+    found.toSet
+  }
+
+  /** Projects a chunk file onto its `hash` column, whatever the file's
+    * declared repetition of it. */
+  private final class HashColumnReadSupport extends GroupReadSupport {
+    override def init(conf: org.apache.hadoop.conf.Configuration,
+        keyValueMetaData: java.util.Map[String, String],
+        fileSchema: org.apache.parquet.schema.MessageType)
+        : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
+      new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
+        new org.apache.parquet.schema.MessageType(fileSchema.getName,
+          fileSchema.getType(fileSchema.getFieldIndex("hash"))))
   }
 }

@@ -37,13 +37,20 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * only when the checkpoint root resolves to the local filesystem —
   * see [[FileFeed.withLocalCheckpoints]].
   */
-final class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
+class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
     extends CheckpointFileManager {
 
   require(root.toUri.getScheme == null || root.toUri.getScheme == "file",
     s"LocalNioCheckpointFileManager handles only local paths, got $root")
 
   private def nio(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
+
+  /** Hard-link `existing` as `link` (link(2)): fails with EEXIST when
+    * `link` exists. */
+  protected def hardLink(link: java.nio.file.Path,
+      existing: java.nio.file.Path): Unit = {
+    Files.createLink(link, existing); ()
+  }
 
   private def qualify(p: Path): Path =
     if (p.toUri.getScheme != null) p
@@ -77,16 +84,23 @@ final class LocalNioCheckpointFileManager(root: Path, conf: Configuration)
             // EEXIST when dst exists, so the first writer genuinely wins
             // with no check-then-move race window (round-18 advice). The
             // metadata logs' first-writer-wins catch needs the Hadoop
-            // exception type. Filesystems without hard links fall back to
+            // exception type. Filesystems without hard links, and mounts
+            // or security policies that refuse them (any other
+            // IOException, a SecurityException), fall back to
             // check-then-move — still Hadoop-local-rename parity.
-            try { Files.createLink(dst, tmp); Files.deleteIfExists(tmp) }
-            catch {
-              case _: NioExists => alreadyExists()
-              case _: UnsupportedOperationException =>
-                if (Files.exists(dst)) alreadyExists()
-                try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-                  StandardCopyOption.REPLACE_EXISTING)
-                catch { case _: NioExists => alreadyExists() }
+            val linked =
+              try { hardLink(dst, tmp); true }
+              catch {
+                case _: NioExists => alreadyExists()
+                case _: UnsupportedOperationException | _: SecurityException |
+                    _: java.io.IOException => false
+              }
+            if (linked) Files.deleteIfExists(tmp)
+            else {
+              if (Files.exists(dst)) alreadyExists()
+              try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+                StandardCopyOption.REPLACE_EXISTING)
+              catch { case _: NioExists => alreadyExists() }
             }
           }
         }

@@ -121,4 +121,34 @@ class FileFeedSliceSpec extends AnyFunSuite {
     mgr.delete(new org.apache.hadoop.fs.Path(s"$dir/offsets"))
     assert(!mgr.exists(new org.apache.hadoop.fs.Path(s"$dir/offsets")))
   }
+
+  test("NIO checkpoint manager: a refused hard link falls back to " +
+      "check-then-move and keeps the no-overwrite contract") {
+    val refusals = Seq[() => Unit](
+      () => throw new java.nio.file.FileSystemException(
+        "dst", "src", "Operation not permitted"),
+      () => throw new SecurityException("hard links denied"))
+    refusals.foreach { refuse =>
+      val dir = java.nio.file.Files.createTempDirectory("ff-nio-nolink")
+      val mgr = new graft.streaming.LocalNioCheckpointFileManager(
+          new org.apache.hadoop.fs.Path(dir.toString),
+          spark.sparkContext.hadoopConfiguration) {
+        override protected def hardLink(link: java.nio.file.Path,
+            existing: java.nio.file.Path): Unit = refuse()
+      }
+      val p = new org.apache.hadoop.fs.Path(s"$dir/commits/0")
+      val out = mgr.createAtomic(p, overwriteIfPossible = false)
+      out.write("v1".getBytes); out.close()
+      assert(mgr.exists(p))
+      val out2 = mgr.createAtomic(p, overwriteIfPossible = false)
+      out2.write("v2".getBytes)
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException] { out2.close() }
+      val buf = new Array[Byte](2)
+      val in = mgr.open(p); in.readFully(0, buf); in.close()
+      assert(new String(buf) == "v1")
+      val leftovers = new java.io.File(s"$dir/commits").listFiles()
+        .map(_.getName).filter(_.endsWith(".tmp"))
+      assert(leftovers.isEmpty)
+    }
+  }
 }

@@ -42,4 +42,38 @@ class InstrumentSpec extends AnyFunSuite {
     assert(Instrument.snapshot("sql.count")("count") == before + 1.0)
     Instrument.disable()
   }
+
+  test("store timers count one call each when enabled, nothing when disabled") {
+    val spark = SparkTestSession.spark
+    Instrument.disable()
+    Instrument.reset()
+    val meta = DatasetMeta(Map("x" -> 4L), Map("x" -> 2L),
+      Map("v" -> VariableDef("int", Vector("x"), 0.0)))
+    val slab = Slab.fromDoubles(DType.INT, Slice(Seq(0L), Seq(4L)), Seq(1, 2, 3, 4))
+    // one call of each timed store operation
+    def exercise(store: graft.spark.SparkStore, ds: String): Unit = {
+      store.create(ds)
+      val w = store.addVersion(ds, meta)
+      w.write("v", Seq(slab)) // writeRows
+      w.finishVersion()       // commitVersion
+      store.compact(ds)       // compact, plus its own checkpoint commit
+      store.expireHistory(ds)
+      store.cloneDataset(ds, ds + "_clone")
+      store.vacuum(0L)
+    }
+    def root() = java.nio.file.Files.createTempDirectory("graft-timers").toString
+    exercise(new graft.spark.SparkStore(spark, root()), "off")
+    assert(!Instrument.snapshot.keys.exists(_.startsWith("store.")))
+    Instrument.enable(spark)
+    try {
+      exercise(new graft.spark.SparkStore(spark, root()), "on")
+      val counts = Instrument.snapshot.collect {
+        case (k, v) if k.startsWith("store.") => k -> v("count")
+      }
+      assert(counts == Map("store.writeRows" -> 1.0,
+        "store.commitVersion" -> 2.0, "store.compact" -> 1.0,
+        "store.expireHistory" -> 1.0, "store.cloneDataset" -> 1.0,
+        "store.vacuum" -> 1.0))
+    } finally Instrument.disable()
+  }
 }

@@ -47,6 +47,23 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(300) // listener bus is async; give a job time to surface
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 /** Distributed read/write path over the Parquet-backed SparkStore —

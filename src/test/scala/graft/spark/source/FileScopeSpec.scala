@@ -30,6 +30,9 @@ class FileScopeSpec extends AnyFunSuite {
     // at test scale AQE coalesces each ingest's repartitionByRange to ONE
     // shuffle partition = one full-span part file; a real ingest writes
     // many hash-range-disjoint files. Force that shape for the fixture.
+    // (The second version is an update: it takes that range-planned
+    // shape only above GraftScan.PointLookupThreshold chunks — a point-
+    // planned update lands as one hash-sorted file.)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
       val w1 = store.addVersion("ds", meta)
@@ -51,7 +54,9 @@ class FileScopeSpec extends AnyFunSuite {
   }
 
   test("hash-range partitions carry only their bucket's overlapping files") {
-    val (root, store) = mk(2048) // > GraftScan.PointLookupThreshold -> range path
+    // each half > GraftScan.PointLookupThreshold chunks: both versions
+    // are range-planned writes, and the full read takes the range path
+    val (root, store) = mk(2100)
     val total = SparkStore.parquetFilesUnder(
       store.chunksDir).length
     assert(total >= 6, s"expected a multi-file store, got $total files")
@@ -70,14 +75,16 @@ class FileScopeSpec extends AnyFunSuite {
     // and the scoped read is still correct
     val df = spark.read.format("graft").option("root", root)
       .option("dataset", "ds").option("variable", "v").load()
-    val n = 2048L * 4
+    val n = 2100L * 4
     assert(df.count() == n)
     assert(df.agg(org.apache.spark.sql.functions.sum("value")).head.getLong(0)
       == n * (n - 1) / 2)
   }
 
   test("point partitions scope files to their own hashes") {
-    val (root, store) = mk(64) // <= GraftScan.PointLookupThreshold -> point path
+    // two range-planned generations, as above; the window below is
+    // point-planned
+    val (root, store) = mk(2100)
     val total = SparkStore.parquetFilesUnder(
       store.chunksDir).length
     assert(total >= 6)
@@ -99,7 +106,7 @@ class FileScopeSpec extends AnyFunSuite {
     }
     val df = spark.read.format("graft").option("root", root)
       .option("dataset", "ds").option("variable", "v").load()
-    assert(df.count() == 64L * 4)
+    assert(df.count() == 2100L * 4)
   }
 
   test("ingest writes hash-range sidecars; they agree with the footers " +

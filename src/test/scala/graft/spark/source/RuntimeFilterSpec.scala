@@ -1,6 +1,7 @@
 package graft.spark.source
 
 import graft.SparkTestSession
+import graft.SparkTestSession.jobsDuring
 import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.SparkStore
@@ -29,23 +30,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     val r = GraftSource.resolve(
       Map("root" -> mkStore(), "dataset" -> "ds", "variable" -> "v"))
     new GraftScanBuilder(r).build().asInstanceOf[GraftScan]
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(300) // listener bus is async; give a job time to surface
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
   }
 
   private def plannedChunks(scan: GraftScan): Int =

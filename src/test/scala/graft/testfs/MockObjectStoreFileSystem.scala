@@ -129,6 +129,12 @@ class MockObjectStoreFileSystem extends RawLocalFileSystem {
       val kids = Option(s.listFiles()).getOrElse(Array.empty[File]).sortBy(_.getName)
       kids.foreach(k => copyLikeObjectStore(k, new File(d, k.getName)))
     } else {
+      MockObjectStoreFileSystem.beforeNextCopyMatching match {
+        case (m, hook) if d.getPath.contains(m) =>
+          MockObjectStoreFileSystem.beforeNextCopyMatching = null
+          hook()
+        case _ =>
+      }
       maybeCrash(d)
       val tmp = new File(d.getParentFile, "." + d.getName + ".copytmp")
       NFiles.copy(s.toPath, tmp.toPath, StandardCopyOption.REPLACE_EXISTING)
@@ -163,6 +169,12 @@ object MockObjectStoreFileSystem {
   val DirPerm: FsPermission = FsPermission.valueOf("drwxrwxrwx")
   /** One-shot crash injection: destination-PATH substring to fail on. */
   @volatile var failNextCopyMatching: String = _
+  /** One-shot interleaving injection: (destination-PATH substring, hook).
+    * The hook runs, and the slot clears, right before the next
+    * per-object copy whose target matches — on the copying thread, so a
+    * test can land another writer's work between two steps of a rename
+    * sequence. */
+  @volatile var beforeNextCopyMatching: (String, () => Unit) = _
   /** When > 0, objects PUT within the last N ms are invisible to
     * listStatus (legacy-S3 eventual LIST visibility); point reads stay
     * consistent. Reset to 0 after use. */
