@@ -473,9 +473,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     *    the read-side fork resolution in [[versionManifests]].
     */
   private[spark] def commitVersion(name: String, meta: DatasetMeta): Long =
-    Instrument.timed("store.commitVersion")(commitOnce(name, meta))
-
-  private def commitOnce(name: String, meta: DatasetMeta): Long = {
+      Instrument.timed("store.commitVersion") {
     val vid = meta.versionId.get
     val myTs =
       // the read-latest / parent-check / stamp / move sequence is atomic
@@ -842,20 +840,10 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     val ki = requireKeyCol.fold(-1)(bucketed.schema.fieldIndex)
     bucketed.mapPartitions { (it: Iterator[Row]) =>
       StoreFs.installExecutorConf(hconfBc.value)
-      it.grouped(ChunkBlobReader.OrTreeLimit).flatMap { batch =>
-        def hashOf(r: Row) = Option(r.getString(hi)).filter(_.nonEmpty).orNull
-        val wanted = batch.iterator.map(hashOf).filter(_ != null).toSet
-        val got =
-          if (wanted.isEmpty) Map.empty[String, Array[Byte]]
-          else ChunkBlobReader.read(
-            ChunkFileScope.filesFor(rangedBc.value, wanted.iterator),
-            wanted, harvest = false)
-        batch.iterator.map { r =>
-          val h = hashOf(r)
-          val bytes = if (h == null) null else got.getOrElse(h, null)
-          if (ki >= 0) SparkPinnedReader.requireBlob(r.getString(ki), h, bytes)
-          Row.fromSeq(r.toSeq :+ bytes)
-        }
+      def hashOf(r: Row) = Option(r.getString(hi)).filter(_.nonEmpty).orNull
+      ChunkFileScope.fetchByHash(rangedBc.value, it)(hashOf).map { case (r, bytes) =>
+        if (ki >= 0) SparkPinnedReader.requireBlob(r.getString(ki), hashOf(r), bytes)
+        Row.fromSeq(r.toSeq :+ bytes)
       }
     }(Encoders.row(bucketed.schema.add(bytesCol, BinaryType)))
   }
@@ -952,80 +940,82 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * old files being deleted can still fail mid-query — schedule vacuum
     * off-peak. */
   def vacuum(graceMs: Long = SparkStore.VacuumGraceMs): Long =
-    Instrument.timed("store.vacuum")(sweepBlobs(graceMs))
-
-  private def sweepBlobs(graceMs: Long): Long = {
+      Instrument.timed("store.vacuum") {
     healChunksDir()
     sweepScanManifests(System.currentTimeMillis() -
       math.max(graceMs, SparkStore.ManifestSweepMinAgeMs))
-    if (!StoreFs.exists(chunksDir)) return 0L
     val cutoff = System.currentTimeMillis() - graceMs
     val old = StoreFs.list(chunksDir).collect {
       case (p, n, mtime, _) if n.endsWith(".parquet") && mtime <= cutoff => p
     }
-    if (old.isEmpty) { compactRangeSidecars(); return 0L }
-    // mark phase: live hashes from every dataset's index PLUS any
-    // in-flight clone temp trees — a clone still copying references blobs
-    // that only ITS temp index names (the temp dirs are invisible to
-    // listDatasets by design, so they need an explicit leg). Clones are
-    // concurrent-safe via two mechanisms: (a) ignoreMissingFiles below —
-    // a clone LANDING mid-mark renames its temp files away, which must
-    // not crash the mark job; (b) the pre-delete snapshot check at the
-    // bottom — if any dataset or clone-tmp appeared/vanished while we
-    // marked, the sweep yields (deletes nothing) and the next vacuum
-    // retries against a quiesced root. The one unsupported interleaving
-    // is destroy(src) issued WHILE a clone of that same src is in flight
-    // — inherently contradictory (the clone itself fails mid-copy).
-    def rootSnapshot(): (Set[String], Set[String]) = {
-      val entries = StoreFs.list(root)
-      (listDatasets.toSet,
-       entries.collect { case (_, n, _, _) if n.startsWith(".clone_tmp_") => n }.toSet)
+    if (old.isEmpty) {
+      if (StoreFs.exists(chunksDir)) compactRangeSidecars()
+      0L
+    } else {
+      // mark phase: live hashes from every dataset's index PLUS any
+      // in-flight clone temp trees — a clone still copying references blobs
+      // that only ITS temp index names (the temp dirs are invisible to
+      // listDatasets by design, so they need an explicit leg). Clones are
+      // concurrent-safe via two mechanisms: (a) ignoreMissingFiles below —
+      // a clone LANDING mid-mark renames its temp files away, which must
+      // not crash the mark job; (b) the pre-delete snapshot check at the
+      // bottom — if any dataset or clone-tmp appeared/vanished while we
+      // marked, the sweep yields (deletes nothing) and the next vacuum
+      // retries against a quiesced root. The one unsupported interleaving
+      // is destroy(src) issued WHILE a clone of that same src is in flight
+      // — inherently contradictory (the clone itself fails mid-copy).
+      def rootSnapshot(): (Set[String], Set[String]) = {
+        val entries = StoreFs.list(root)
+        (listDatasets.toSet,
+         entries.collect { case (_, n, _, _) if n.startsWith(".clone_tmp_") => n }.toSet)
+      }
+      val snapBefore = rootSnapshot()
+      val cloneTmpIdx = StoreFs.list(root)
+        .collect { case (p, n, _, _) if n.startsWith(".clone_tmp_") =>
+          StoreFs.child(p, "index") }
+        .filter(StoreFs.exists)
+        .map(p => spark.read.schema(indexSchema)
+          .option("ignoreMissingFiles", "true").parquet(p).select("hash"))
+      val referenced = (listDatasets.map(ds => indexDF(ds).select("hash")) ++
+          cloneTmpIdx)
+        .reduceOption(_ union _)
+        .getOrElse(spark.emptyDataFrame.withColumn("hash", lit("")).select("hash"))
+        .distinct()
+      val oldDF = spark.read.schema(SparkStore.chunksSchema)
+        .parquet(old: _*)
+      val before = oldDF.count()
+      val keptDir = StoreFs.child(root, ".chunks_compact")
+      StoreFs.deleteTree(keptDir) // leftover from a crashed vacuum
+      oldDF.join(referenced, Seq("hash"), "left_semi")
+        .dropDuplicates("hash") // compact duplicate rows from racy appends
+        // range-partition: compaction leaves the WHOLE swept store as one
+        // disjoint-file generation (see writeRows blob append)
+        .repartitionByRange(col("hash")).sortWithinPartitions("hash")
+        .write.option("compression", "uncompressed").mode("overwrite").parquet(keptDir)
+      val after = spark.read.parquet(keptDir).count()
+      // Pre-delete snapshot check: if a dataset or clone temp tree appeared
+      // or vanished while the mark ran, its references may be missing from
+      // `referenced` — yield without deleting anything. Vacuum is periodic;
+      // losing one cycle to a concurrent clone/create is the safe trade.
+      if (rootSnapshot() != snapBefore) {
+        StoreFs.deleteTree(keptDir)
+        0L
+      } else {
+        // adopt the compacted part files into the live dir (part-file names
+        // carry fresh UUIDs — no collision), then delete exactly the files we
+        // compacted; concurrent appends are untouched throughout
+        val adopted = adoptChunkFiles(keptDir)
+        old.foreach(StoreFs.delete)
+        // every chunk file at or before the cutoff is gone now: their
+        // sidecars are fully stale — sweep them (and crashed-ingest staging
+        // leftovers), and record the compacted generation's ranges
+        sweepRangeSidecars(cutoff)
+        sweepChunkStaging(cutoff)
+        writeChunkRangeSidecar(adopted)
+        compactRangeSidecars()
+        before - after
+      }
     }
-    val snapBefore = rootSnapshot()
-    val cloneTmpIdx = StoreFs.list(root)
-      .collect { case (p, n, _, _) if n.startsWith(".clone_tmp_") =>
-        StoreFs.child(p, "index") }
-      .filter(StoreFs.exists)
-      .map(p => spark.read.schema(indexSchema)
-        .option("ignoreMissingFiles", "true").parquet(p).select("hash"))
-    val referenced = (listDatasets.map(ds => indexDF(ds).select("hash")) ++
-        cloneTmpIdx)
-      .reduceOption(_ union _)
-      .getOrElse(spark.emptyDataFrame.withColumn("hash", lit("")).select("hash"))
-      .distinct()
-    val oldDF = spark.read.schema(SparkStore.chunksSchema)
-      .parquet(old: _*)
-    val before = oldDF.count()
-    val keptDir = StoreFs.child(root, ".chunks_compact")
-    StoreFs.deleteTree(keptDir) // leftover from a crashed vacuum
-    oldDF.join(referenced, Seq("hash"), "left_semi")
-      .dropDuplicates("hash") // compact duplicate rows from racy appends
-      // range-partition: compaction leaves the WHOLE swept store as one
-      // disjoint-file generation (see writeRows blob append)
-      .repartitionByRange(col("hash")).sortWithinPartitions("hash")
-      .write.option("compression", "uncompressed").mode("overwrite").parquet(keptDir)
-    val after = spark.read.parquet(keptDir).count()
-    // Pre-delete snapshot check: if a dataset or clone temp tree appeared
-    // or vanished while the mark ran, its references may be missing from
-    // `referenced` — yield without deleting anything. Vacuum is periodic;
-    // losing one cycle to a concurrent clone/create is the safe trade.
-    if (rootSnapshot() != snapBefore) {
-      StoreFs.deleteTree(keptDir)
-      return 0L
-    }
-    // adopt the compacted part files into the live dir (part-file names
-    // carry fresh UUIDs — no collision), then delete exactly the files we
-    // compacted; concurrent appends are untouched throughout
-    val adopted = adoptChunkFiles(keptDir)
-    old.foreach(StoreFs.delete)
-    // every chunk file at or before the cutoff is gone now: their
-    // sidecars are fully stale — sweep them (and crashed-ingest staging
-    // leftovers), and record the compacted generation's ranges
-    sweepRangeSidecars(cutoff)
-    sweepChunkStaging(cutoff)
-    writeChunkRangeSidecar(adopted)
-    compactRangeSidecars()
-    before - after
   }
 
   /** OPTIMIZE / checkpoint (beyond the reference, whose resolve always
@@ -2280,7 +2270,11 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
   *    cogroup with them, and blobs dedup against the chunk table and land
   *    in hash-range-partitioned files.
   * Both plans fold, encode and take stats through one kernel
-  * (`SparkVersionWriter.mergeChunk`) and append index rows the same way. */
+  * (`SparkVersionWriter.mergeChunk`) and append index rows the same way.
+  * The point plan writes all new blobs from one task, so the larger the
+  * chunks, the fewer it can take before the range plan is faster:
+  * measured on 4 cores, incompressible 128 KB chunks break even near
+  * 1,000 chunks (README, "Scale design"). */
 final class SparkVersionWriter(store: SparkStore, name: String,
     val meta: DatasetMeta, val parentMeta: Option[DatasetMeta],
     /** True for writers rebuilt from a token: the version may have
@@ -2408,7 +2402,9 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       if (!resolvesBase) None
       else baseOverride match {
         case Some(ov) => Some(ov.map(_._1).distinct).filter(_.size <= threshold)
-        case None => touchedAtMost(varN, slabRows, threshold)
+        case None =>
+          Some(touchedCapped(varN, slabRows, threshold).asScala.toSeq)
+            .filter(_.size <= threshold)
       }
     // a point pass lists the chunk files once: its base fetch and its
     // dedup probe both scope by that listing
@@ -2571,24 +2567,15 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     frags.repartition(col("_1")).sortWithinPartitions("_1").mapPartitions { it =>
       StoreFs.installExecutorConf(hconfBc.value)
       val m = DatasetMeta.fromJson(metaJson)
-      SparkVersionWriter.runsByKey(it).grouped(ChunkBlobReader.OrTreeLimit)
-        .flatMap { batch =>
-          val wanted = batch.iterator.flatMap(g => bases.get(g._1)).map(_._1).toSet
-          val got =
-            if (wanted.isEmpty) Map.empty[String, Array[Byte]]
-            else ChunkBlobReader.read(
-              ChunkFileScope.filesFor(ranged.value, wanted.iterator),
-              wanted, harvest = false)
-          batch.iterator.map { case (key, fs) =>
-            bases.get(key) match {
-              case Some((h, baseSeq, baseHash)) =>
-                val bytes = got.getOrElse(h, null)
-                SparkPinnedReader.requireBlob(key, h, bytes)
-                SparkVersionWriter.mergeChunk(m, varN, key, fs, bytes, baseSeq, baseHash)
-              case None => SparkVersionWriter.mergeChunk(m, varN, key, fs, null, -1L, "")
-            }
-          }
+      ChunkFileScope.fetchByHash(ranged.value, SparkVersionWriter.runsByKey(it))(
+        g => bases.get(g._1).map(_._1).orNull).map { case ((key, fs), bytes) =>
+        bases.get(key) match {
+          case Some((h, baseSeq, baseHash)) =>
+            SparkPinnedReader.requireBlob(key, h, bytes)
+            SparkVersionWriter.mergeChunk(m, varN, key, fs, bytes, baseSeq, baseHash)
+          case None => SparkVersionWriter.mergeChunk(m, varN, key, fs, null, -1L, "")
         }
+      }
     }
   }
 
@@ -2683,25 +2670,28 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       .distinct().toDF("coordKey")
   }
 
-  /** Distinct keys of the chunks `slabRows` touch when there are at most
-    * `limit` of them, else None — ONE job with no shuffle: each task
-    * stops collecting at `limit` + 1 distinct keys, so the driver holds
-    * at most (`limit` + 1) × tasks keys. */
-  private def touchedAtMost(varName: String, slabRows: DataFrame,
-      limit: Long): Option[Seq[String]] = {
+  /** Distinct keys of the chunks `slabRows` touch, capped: all of them
+    * when there are at most `limit`, else `limit` + 1 of them. ONE job
+    * with no shuffle: each task stops at `limit` + 1 distinct keys, and
+    * the driver folds each task's set in as it arrives, stopping at
+    * `limit` + 1 too — so however many partitions the slab frame has, the
+    * driver holds `limit` + 1 keys plus the task results in flight. */
+  private[spark] def touchedCapped(varName: String, slabRows: DataFrame,
+      limit: Long): java.util.Set[String] = {
+    import SparkVersionWriter.addCapped
     val keysOf = slabChunkKeys(varName)
-    val keys = slabRows.select("start", "stop").as[(Array[Long], Array[Long])]
+    slabRows.select("start", "stop").as[(Array[Long], Array[Long])].rdd
       .mapPartitions { it =>
         val seen = new java.util.HashSet[String]()
         while (it.hasNext && seen.size <= limit) {
           val (start, stop) = it.next()
-          val ks = keysOf(start, stop)
-          while (ks.hasNext && seen.size <= limit) seen.add(ks.next())
+          addCapped(seen, keysOf(start, stop), limit)
         }
-        seen.iterator.asScala
+        Iterator.single(seen)
       }
-      .collect().distinct
-    if (keys.length > limit) None else Some(keys.toSeq)
+      .aggregate(new java.util.HashSet[String]())(
+        (acc, seen) => addCapped(acc, seen.iterator.asScala, limit),
+        (acc, seen) => addCapped(acc, seen.iterator.asScala, limit))
   }
 
   /** Post-landing ownership check for SHARED (token) writers — the
@@ -2806,6 +2796,13 @@ object SparkVersionWriter {
   private[spark] type Merged = (String, Array[Long], String, Array[Byte],
     Long, Option[Long], Option[Long], Option[Long], Option[Double],
     Option[Double], Long, Long, String)
+
+  /** Adds `keys` to `into` until it holds more than `limit` keys. */
+  private[spark] def addCapped(into: java.util.HashSet[String],
+      keys: Iterator[String], limit: Long): java.util.HashSet[String] = {
+    while (keys.hasNext && into.size <= limit) into.add(keys.next())
+    into
+  }
 
   /** The merge kernel of both write plans, for one touched chunk: fold
     * its fragments in write order onto its base (`baseFramed`, a framed

@@ -779,6 +779,26 @@ private[spark] object ChunkFileScope {
     } => f }
   }
 
+  /** Each of `items` with its blob, fetched by hash in batches of ≤
+    * `ChunkBlobReader.OrTreeLimit` hashes, each batch through only the
+    * files whose range can hold one of its hashes — the executor-side
+    * by-hash fetch of `SparkStore.withBlobs` and of the point-planned
+    * write's bases. An item whose `hashOf` is null fetches nothing; a
+    * blob the store does not hold comes back null. */
+  def fetchByHash[T](ranged: Array[(String, String, String)], items: Iterator[T])(
+      hashOf: T => String): Iterator[(T, Array[Byte])] =
+    items.grouped(ChunkBlobReader.OrTreeLimit).flatMap { batch =>
+      val wanted = batch.iterator.map(hashOf).filter(_ != null).toSet
+      val got =
+        if (wanted.isEmpty) Map.empty[String, Array[Byte]]
+        else ChunkBlobReader.read(filesFor(ranged, wanted.iterator), wanted,
+          harvest = false)
+      batch.iterator.map { t =>
+        val h = hashOf(t)
+        (t, if (h == null) null else got.getOrElse(h, null))
+      }
+    }
+
   /** Hash bucket of a hash column, `hb = (hash32 × nBuckets) div 2³²`
     * over its first 8 hex chars: contiguous hash ranges, one per bucket,
     * with no sampling job. The scan manifest's data layout and

@@ -123,6 +123,30 @@ class PointWriteSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(sliceAt(master, v2), expected.bytes))
   }
 
+  test("the touched-key collect is one job whose driver-side set stops at " +
+      "threshold + 1 keys, however many tasks hit the cap") {
+    val (s, _) = seeded(tmpRoot())
+    val w = s.addVersion("d", grid)
+    val t = GraftScan.PointLookupThreshold
+    // one slab row per partition, 48 partitions
+    import spark.implicits._
+    def frame(stop: Long) = spark.createDataset(spark.sparkContext.parallelize(
+      (0 until 48).map(i => (Array(0L, 0L), Array(stop, 80L), Array.emptyByteArray,
+        i.toLong)), 48)).toDF("start", "stop", "bytes", "seq")
+    // each task alone touches all 1,600 chunks, so each stops at t + 1
+    // keys; the driver's merged set stops there too
+    val wide = frame(80L)
+    assert(wide.rdd.getNumPartitions == 48)
+    var capped: java.util.Set[String] = null
+    assert(jobsDuring { capped = w.touchedCapped("v", wide, t) } == 1)
+    assert(capped.size == t + 1)
+    // at or under the threshold every task reports the same 840 keys, and
+    // the merged set is exactly them
+    val narrow = w.touchedCapped("v", frame(42L), t)
+    assert(narrow.size == 21 * 40)
+    assert(narrow.contains(SparkStore.coordKey(Vector(20L, 39L))))
+  }
+
   test("an 8-chunk update over existing data commits in at most 8 Spark jobs") {
     val cube = DatasetMeta(
       dimensions = Map("x" -> 30L, "y" -> 30L, "z" -> 30L),
