@@ -119,30 +119,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // floor of 1: the summary loop reads runs(name) for every entry, so a
     // zero-pass run would crash instead of printing the JSON line
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Sort-based shuffle writer even for no-combine (repartition)
-      // shuffles: the bypass writer creates R partition files PER MAP
-      // TASK (M×R creates/shuffle — stack-sampled as the dominant wait
-      // of the fanned-out gates: FileOutputStream.open0 + mmap under
-      // IndexShuffleBlockResolver), the sort writer one data+index pair
-      // per task. With our R ≈ cores and row-sized records the sort is
-      // noise; bypass's file-create storm is not. Env-overridable so a
-      // deployment whose reducer count is huge (where bypass exists to
-      // win) can restore it.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", defaultCpus = 32)
 
     // Warm up: fixture ingest + parquet footer caches, excluded from
     // timings. MUST NOT abort the run — a broken fixture voids only the

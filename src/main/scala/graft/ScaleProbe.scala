@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe for the LLM-pipeline operators (dev tool, not a gate):
@@ -25,23 +25,8 @@ object ScaleProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scales = sys.env.getOrElse("SPARK_GRAFT_PROBE_SCALES", "1,4")
       .split(",").toSeq.map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try f catch { case e: Throwable =>
-        System.err.println(s"[probe] failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.local("graft-scale-probe", defaultCpus = 32)
+    val probe = new graft.tools.ProbeRecord("pipeline-scale")
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -53,7 +38,6 @@ object ScaleProbe {
     val docStride = docs0.agg(max("doc_id")).head.getLong(0) + 1L
     val vecStride = emb0.agg(max("vec_id")).head.getLong(0) + 1L
 
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     for (sc <- scales) {
       // replicate with fresh ids + per-replica text salt (prepended: the
       // shingle stream shifts so MinHash fingerprints differ per replica;
@@ -73,11 +57,7 @@ object ScaleProbe {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       noop(docs); noop(emb) // materialize the replicas outside the timers
 
-      def rec(name: String)(f: => Unit): Unit = {
-        val t = time(f)
-        results(s"${name}_x$sc") = t
-        System.err.println(f"[probe] ${name}_x$sc: $t%.2f s")
-      }
+      def rec(name: String)(f: => Unit): Unit = probe.time(s"${name}_x$sc")(f)
       rec("minhash") {
         noop(graft.pipeline.Dedup.minHashCandidatePairs(docs, k = 8)) }
       rec("dup_clusters") {
@@ -92,10 +72,7 @@ object ScaleProbe {
         noop(graft.pipeline.Curation.dsirTopDocs(docs, col("lang") === "en")) }
       docs.unpersist(); emb.unpersist()
     }
-    val line = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"pipeline-scale","sf":"$sfDir","timings":$line}""")
+    println(probe.line("sf" -> sfDir))
     spark.stop()
   }
 }

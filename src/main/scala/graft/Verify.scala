@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,18 +15,7 @@ object Verify {
       require(names.exists(n => pats.exists(n.contains)),
         s"filter ${pats.mkString(",")} matches no query in ${names.toSeq.sorted}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same rationale as Bench: sort writer beats bypass's M×R
-      // file-create storm at local reducer counts
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THRESHOLD", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify", defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // A query that throws must surface as an explicit red row, not a
     // silently-absent parquet dir (round 7: 18 queries vanished from the

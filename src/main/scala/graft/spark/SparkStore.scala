@@ -1216,15 +1216,25 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     StoreFs.child(root, s".chunks_ingest_${java.util.UUID.randomUUID}")
 
   /** Move a staged generation's part files into the live chunks dir and
-    * return their new paths; removes the staging dir. A crash mid-adopt
-    * leaves some files adopted (orphan blobs until their index rows land
-    * — same exposure as a direct append) and the staging leftovers for
-    * vacuum's sweep. */
+    * return their new paths; removes the staging dir. A part file whose
+    * footer holds no row groups (a write with nothing new to store: a
+    * dedup-only commit, a vacuum with no live swept blob) is dropped with
+    * the staging dir — adopted, it would have no hash range and stay a
+    * scan candidate for every hash until the next vacuum. Each adopted
+    * file's footer range seeds the range cache, so the generation's
+    * sidecar needs no second footer read. A crash mid-adopt leaves some
+    * files adopted (orphan blobs until their index rows land — same
+    * exposure as a direct append) and the staging leftovers for vacuum's
+    * sweep. */
   private[graft] def adoptChunkFiles(staging: String): Seq[String] = {
     StoreFs.mkdirs(chunksDir)
+    val conf = graft.spark.source.ChunkBlobReader.sharedConf
     val adopted = StoreFs.list(staging)
       .collect { case (p, n, _, _) if n.endsWith(".parquet") => (p, n) }
-      .map { case (p, n) =>
+      .flatMap { case (p, n) =>
+        graft.spark.source.ChunkBlobReader.footerRange(p, conf).map((p, n, _))
+      }
+      .map { case (p, n, (mn, mx)) =>
         val dst = StoreFs.child(chunksDir, n)
         // moveInto reports failure (dst exists / racing rename) as false
         // rather than throwing; adopting MUST fail loudly before the
@@ -1235,6 +1245,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
           throw new java.io.IOException(
             s"adoptChunkFiles: failed to move staged chunk file $p -> $dst" +
               "; staging dir left in place for retry/vacuum")
+        graft.spark.source.ChunkBlobReader.seedRange(dst, mn, mx)
         dst
       }
     StoreFs.deleteTree(staging)
@@ -1490,13 +1501,6 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * `upTo`, plus (optionally) the in-flight version itself
     * (reference read rule: backend/mem.clj:32-49; write-side base lookup:
     * impl.clj:246-250). */
-  /** Public wrapper for the DSv2 source's planning step — pinned
-    * (chain-scoped) resolution, since DSv2 reads always hold a resolved
-    * manifest (explicit `version` option or the listing's head). */
-  def resolvedIndexPublic(name: String, varName: String, pinned: DatasetMeta,
-      coordFilter: Column): DataFrame =
-    resolvedIndexPinned(name, varName, pinned, coordFilter = coordFilter)
-
   /** MVCC resolve for a PINNED read: the admissible version set is the
     * pinned version's own verified parent chain ([[pinnedChain]] — point
     * GETs, O(depth), checkpoint-floored), truncated at the newest
@@ -1509,7 +1513,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     *  - a duplicate-parent LOSER pin resolves its branch's rows and
     *    never admits the rival winner's overlay (the listing-based set
     *    would mix the two branches). */
-  private[spark] def resolvedIndexPinned(name: String, varName: String,
+  private[graft] def resolvedIndexPinned(name: String, varName: String,
       pinned: DatasetMeta,
       includeUncommitted: Option[Long] = None,
       coordFilter: Column = lit(true)): DataFrame =

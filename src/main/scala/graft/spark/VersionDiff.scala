@@ -41,9 +41,9 @@ object VersionDiff {
     val dtype = mNew.dtype(varName)
     val fill = mNew.fill(varName)
 
-    val idxO = store.resolvedIndexPublic(name, varName, mOld, lit(true))
+    val idxO = store.resolvedIndexPinned(name, varName, mOld)
       .select(col("coordKey"), col("coord").as("coordO"), col("hash").as("hashO"))
-    val idxN = store.resolvedIndexPublic(name, varName, mNew, lit(true))
+    val idxN = store.resolvedIndexPinned(name, varName, mNew)
       .select(col("coordKey"), col("coord").as("coordN"), col("hash").as("hashN"))
     val changed = idxO.join(idxN, Seq("coordKey"), "full_outer")
       .filter(!(col("hashO") <=> col("hashN")))

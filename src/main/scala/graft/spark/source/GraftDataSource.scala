@@ -1162,8 +1162,8 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
       // executors read primitive fields; struct access via GroupReadSupport
       // is clumsier and no cheaper); the window filter keeps data chunks
       // of the window only
-      val joined = r.store.resolvedIndexPublic(r.dataset, r.variable,
-        r.meta, coordFilter(w.lo.toSeq, w.hi.toSeq))
+      val joined = r.store.resolvedIndexPinned(r.dataset, r.variable,
+        r.meta, coordFilter = coordFilter(w.lo.toSeq, w.hi.toSeq))
         .select(linearOf(col("coord")).as("linear"), col("hash"),
           col("stats.cnt").as("scnt"), col("stats.lmin").as("slmin"),
           col("stats.lmax").as("slmax"), col("stats.lsum").as("slsum"),
@@ -1698,28 +1698,35 @@ private[spark] object ChunkBlobReader {
       conf: org.apache.hadoop.conf.Configuration): (String, String) = {
     val hit = rangeCache.get(f)
     if (hit != null) return hit
-    val computed =
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val ranges = r.getFooter.getBlocks.asScala.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == "hash")
-              .flatMap { c =>
-                val s = c.getStatistics
-                if (s == null || !s.hasNonNullValue) None
-                else Some((s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
-                  s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
-              }
-          }
-          if (ranges.isEmpty) FullRange
-          else (ranges.map(_._1).min, ranges.map(_._2).max)
-        } finally r.close()
-      } catch { case _: Exception => FullRange } // unreadable stats: scan it
+    val computed = footerRange(f, conf).getOrElse(FullRange)
     rangeCache.putIfAbsent(f, computed)
     computed
   }
+
+  /** A part file's footer hash range, uncached; None when the footer
+    * holds no row groups (a file with no blobs — never worth adopting). */
+  private[spark] def footerRange(f: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[(String, String)] =
+    try {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val blocks = r.getFooter.getBlocks.asScala
+        val ranges = blocks.flatMap { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "hash")
+            .flatMap { c =>
+              val s = c.getStatistics
+              if (s == null || !s.hasNonNullValue) None
+              else Some((s.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+                s.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
+            }
+        }
+        if (blocks.isEmpty) None
+        else if (ranges.isEmpty) Some(FullRange)
+        else Some((ranges.map(_._1).min, ranges.map(_._2).max))
+      } finally r.close()
+    } catch { case _: Exception => Some(FullRange) } // unreadable stats: scan it
 
   /** Budget for the per-JVM content-addressed blob LRU (bytes). Blobs are
     * immutable and globally unique by hash, so caching is trivially

@@ -83,31 +83,37 @@ object FileFeed {
     // floor(((d+1)*nBatches - 1) / span) — row-identical to the old
     // per-slice range filters (pinned by FileFeedSliceSpec).
     val tmpAll = s"$workDir/slices_tmp"
+    // A knownBounds narrower than the real position range would put a
+    // main row outside [0, nBatches): below slice 0, past the last slice,
+    // or onto a tail's index, where it would ride silently in a sentinel
+    // batch. The write job itself refuses any row outside [minT, maxT]
+    // (raise_error), so the check costs no extra job.
+    val outside = s"FileFeed.sliced: rows landed outside slices [0, $nBatches) — " +
+      s"knownBounds $knownBounds does not cover the $tsCol range"
+    val mainSlices = withPos
+      .withColumn("_slice", when(col("_feed_pos").between(minT, maxT), expr(
+        s"CAST(((_feed_pos - ${minT}L + 1L) * ${nBatches}L - 1L) div ${span}L AS INT)"))
+        .otherwise(raise_error(concat(lit(s"$outside: position "),
+          coalesce(col("_feed_pos").cast("string"), lit("null"))))))
+      .select((df.columns.map(col) :+ col("_slice")).toIndexedSeq: _*)
     // tails ride the SAME write job as fixed trailing slice indices
     // (nBatches + j) instead of one repartition(1) job each — sentinel
     // frames are single rows, so a dedicated Spark job per tail was pure
     // scheduling overhead across every file gate (guide §2.4)
-    val mainSlices = withPos
-      .withColumn("_slice", expr(
-        s"CAST(((_feed_pos - ${minT}L + 1L) * ${nBatches}L - 1L) div ${span}L AS INT)"))
-      .select((df.columns.map(col) :+ col("_slice")).toIndexedSeq: _*)
     val tailSlices = tails.zipWithIndex.map { case (t, j) =>
       t.select(df.columns.map(col).toIndexedSeq: _*)
         .withColumn("_slice", lit(nBatches + j))
     }
-    tailSlices.foldLeft(mainSlices)(_ unionByName _)
+    try tailSlices.foldLeft(mainSlices)(_ unionByName _)
       .repartition(col("_slice"))
       .write.partitionBy("_slice").parquet(tmpAll)
+    catch { case e: Exception
+        if Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(c => String.valueOf(c.getMessage).contains(outside)) =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmpAll))
+      throw new IllegalArgumentException(outside, e)
+    }
     val slices = 0 until nBatches + tails.length
-    // a knownBounds narrower than the real tsCol range puts rows in slice
-    // dirs outside [0, nBatches + tails): the loop below never moves
-    // those, so deleting tmpAll would drop them silently — refuse instead
-    val stray = Option(new java.io.File(tmpAll).listFiles()).toSeq.flatten
-      .map(_.getName).filter(_.startsWith("_slice="))
-      .filterNot(_.stripPrefix("_slice=").toIntOption.exists(slices.contains))
-    require(stray.isEmpty, s"FileFeed.sliced: rows landed in " +
-      s"${stray.sorted.mkString(", ")}, outside slices [0, ${slices.end}) — " +
-      s"knownBounds $knownBounds does not cover the $tsCol range")
     for (i <- slices) {
       val dir = new java.io.File(tmpAll, s"_slice=$i")
       val parts = Option(dir.listFiles()).toSeq.flatten

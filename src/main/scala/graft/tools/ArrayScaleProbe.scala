@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.SparkStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 
 /** ORDER-OF-MAGNITUDE probe for the array engine (dev tool, not a gate):
@@ -58,31 +57,10 @@ object ArrayScaleProbe {
     // zone-map aggregate (index-driven by design) — without decoding
     // 21.6 Gcells of fixture
     val metaOnly = sys.env.get("SPARK_GRAFT_ARRAY_METAONLY").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-array-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-array-scale-probe", defaultCpus = 32)
     import spark.implicits._
-
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def rec(name: String, v: Double): Unit = {
-      results(name) = v
-      System.err.println(f"[probe] $name: $v%.3f")
-    }
-    def time(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try { f; rec(name, (System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        System.err.println(s"[probe] $name FAILED: ${e.getMessage}")
-        rec(name, -1.0)
-      }
-    }
+    val probe = new ProbeRecord("array-scale")
+    import probe.{rec, time}
     def heapMb(): Double = {
       System.gc(); Thread.sleep(300); System.gc()
       val rt = Runtime.getRuntime
@@ -171,51 +149,20 @@ object ArrayScaleProbe {
       // by, and the denominator for MB/s when the wall number is
       // page-cache-writeback-bound on a single-disk box
       val preStoreBytes = duBytes(root)
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-      val spillDiskBytes = new java.util.concurrent.atomic.AtomicLong()
-      val spillMemBytes = new java.util.concurrent.atomic.AtomicLong()
-      val ingestLst = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            spillDiskBytes.addAndGet(m.diskBytesSpilled)
-            spillMemBytes.addAndGet(m.memoryBytesSpilled)
-          }
-          ()
-        }
-      }
       def gcMillis(): Long = {
         import scala.jdk.CollectionConverters._
         java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
           .asScala.map(_.getCollectionTime).sum
       }
       val preGc = gcMillis()
-      spark.sparkContext.addSparkListener(ingestLst)
-      time(s"ingest_$tag") { writePerf("perf", zDim) }
-      // The listener bus drains asynchronously; a fixed sleep raced slow
-      // task-end events and silently dropped them from the attribution
-      // metrics. Poll until the counters are stable for two consecutive
-      // probes (bounded at 10 s) — the public-API analog of
-      // listenerBus.waitUntilEmpty, which is private[spark].
-      locally {
-        var last = -1L
-        var stable = 0
-        var waitedMs = 0L
-        while (stable < 2 && waitedMs < 10000L) {
-          Thread.sleep(200); waitedMs += 200
-          val now = shuffleBytes.get() + spillDiskBytes.get() +
-            spillMemBytes.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-      }
-      spark.sparkContext.removeSparkListener(ingestLst)
+      val ingest = graft.metrics.SparkCost.measure(spark) {
+        time(s"ingest_$tag") { writePerf("perf", zDim) }
+      }.totals
       syncFs()
       rec(s"ingest_store_mb_$tag", (duBytes(root) - preStoreBytes) / 1048576.0)
-      rec(s"ingest_shuffle_mb_$tag", shuffleBytes.get() / 1048576.0)
-      rec(s"ingest_spill_disk_mb_$tag", spillDiskBytes.get() / 1048576.0)
-      rec(s"ingest_spill_mem_mb_$tag", spillMemBytes.get() / 1048576.0)
+      rec(s"ingest_shuffle_mb_$tag", ingest.shuffleWriteBytes / 1048576.0)
+      rec(s"ingest_spill_disk_mb_$tag", ingest.diskSpillBytes / 1048576.0)
+      rec(s"ingest_spill_mem_mb_$tag", ingest.memorySpillBytes / 1048576.0)
       rec(s"ingest_gc_sec_$tag", (gcMillis() - preGc) / 1000.0)
       rec(s"heap_after_ingest_mb_$tag", heapMb())
 
@@ -324,8 +271,8 @@ object ArrayScaleProbe {
       // not by wall time alone.
       time(s"compact_$tag") { store.compact("perf"); () }
       val cpVid = store.versions("perf").head._2
-      val postIdx = store.resolvedIndexPublic("perf", "foo",
-        store.metadata("perf", cpVid), lit(true))
+      val postIdx = store.resolvedIndexPinned("perf", "foo",
+        store.metadata("perf", cpVid))
       val scannedIdx = postIdx.queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.selectedPartitions.toPartitionArray.toSeq.map(_.filePath.toString)
@@ -381,10 +328,7 @@ object ArrayScaleProbe {
       ()
     }
 
-    val line = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"array-scale","timings":$line}""")
+    println(probe.line())
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: print the formatted physical plan of named SparkEntry
   * queries (post-execution, so AQE re-planning is final).
   *
@@ -12,14 +10,7 @@ object ExplainQuery {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args(1).split(",").toSeq
       else Seq("q_rel_pricing")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-explain", defaultCpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

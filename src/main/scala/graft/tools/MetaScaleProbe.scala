@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.SparkStore
-import org.apache.spark.sql.SparkSession
 
 /** METADATA-PLANE probe for deep version histories (dev tool, not a
   * gate): the 100 TB posture assumes multi-thousand-version datasets
@@ -47,30 +46,9 @@ object MetaScaleProbe {
     require(nVersions >= 500,
       "SPARK_GRAFT_META_VERSIONS must be >= 500: the 3x100 no-checkpoint " +
         "buckets + middle + last-100 overlap below that and the leg counts lie")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-meta-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def rec(name: String, v: Double): Unit = {
-      results(name) = v
-      System.err.println(f"[probe] $name: $v%.4f")
-    }
-    def time(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try { f; rec(name, (System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
-        System.err.println(s"[probe] $name FAILED: ${e.getMessage}")
-        rec(name, -1.0)
-      }
-    }
+    val spark = graft.GraftSession.local("graft-meta-scale-probe", defaultCpus = 32)
+    val probe = new ProbeRecord("meta-scale", digits = 4)
+    import probe.{rec, time}
     def heapMb(): Double = {
       System.gc(); Thread.sleep(300); System.gc()
       val rt = Runtime.getRuntime
@@ -206,10 +184,7 @@ object MetaScaleProbe {
     rec("heap_final_mb", heapMb())
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
 
-    val line = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"meta-scale","timings":$line}""")
+    println(probe.line())
     spark.stop()
   }
 }

@@ -1,63 +1,16 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.metrics.SparkCost
 
 /** Dev aid (guide §1): attribute where a SparkEntry query's wall time
-  * goes — per-job wall clock + per-stage task totals (run time, shuffle
-  * read/write bytes, input bytes, spill) — so optimization targets the
-  * measured cost, not the guessed one.
+  * goes — per-job wall clock + per-stage task totals
+  * ([[SparkCost.report]]) — so optimization targets the measured cost,
+  * not the guessed one. Runs on the bench's session shape
+  * ([[graft.GraftSession]]).
   *
   * Usage: runMain graft.tools.ProfileQuery <sfDir> <name>[,<name>] [reps]
-  * Env: SPARK_GRAFT_CPUS (default 32) to match the bench session shape.
   */
 object ProfileQuery {
-
-  final class Acc extends SparkListener {
-    case class St(var name: String = "", var runMs: Long = 0, var cpuMs: Long = 0,
-        var tasks: Int = 0, var input: Long = 0, var shRead: Long = 0,
-        var shWrite: Long = 0, var spill: Long = 0, var gcMs: Long = 0)
-    val stages = scala.collection.concurrent.TrieMap.empty[Int, St]
-    val jobs = scala.collection.concurrent.TrieMap.empty[Int, (Long, Long, String)]
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs(e.jobId) = (e.time, -1L,
-        Option(e.properties).map(_.getProperty("spark.job.description", "")).getOrElse(""))
-    override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      jobs.get(e.jobId).foreach { case (s, _, d) => jobs(e.jobId) = (s, e.time, d) }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val st = stages.getOrElseUpdate(e.stageInfo.stageId, St())
-      st.name = e.stageInfo.name.takeWhile(_ != '\n').take(80)
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val st = stages.getOrElseUpdate(e.stageId, St())
-      val m = e.taskMetrics
-      if (m != null) {
-        st.runMs += m.executorRunTime; st.cpuMs += m.executorCpuTime / 1000000
-        st.tasks += 1; st.input += m.inputMetrics.bytesRead
-        st.shRead += m.shuffleReadMetrics.totalBytesRead
-        st.shWrite += m.shuffleWriteMetrics.bytesWritten
-        st.spill += m.memoryBytesSpilled; st.gcMs += m.jvmGCTime
-      }
-    }
-    def report(): String = {
-      val sb = new StringBuilder
-      val js = jobs.toSeq.sortBy(_._1)
-      val wall = js.collect { case (_, (s, e, _)) if e > 0 => e - s }.sum
-      sb.append(f"jobs=${js.size} summed-job-wall=${wall}ms%n")
-      js.foreach { case (id, (s, e, d)) =>
-        if (e > 0 && e - s >= 20)
-          sb.append(f"  job $id%4d ${e - s}%6d ms  $d%n")
-      }
-      val ss = stages.toSeq.sortBy(-_._2.runMs).take(25)
-      sb.append("top stages by summed task run time:\n")
-      ss.foreach { case (id, st) =>
-        sb.append(f"  stage $id%4d run=${st.runMs}%7d cpu=${st.cpuMs}%7d gc=${st.gcMs}%5d " +
-          f"tasks=${st.tasks}%4d in=${st.input / 1024}%8dK sr=${st.shRead / 1024}%7dK " +
-          f"sw=${st.shWrite / 1024}%7dK spill=${st.spill / 1024}%6dK  ${st.name}%n")
-      }
-      sb.toString
-    }
-  }
 
   /** Poor-man's async-profiler: sample all live threads every ~60 ms,
     * bucket executor-task samples by their deepest "interesting" frame.
@@ -126,20 +79,11 @@ object ProfileQuery {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args(1).split(",").toSeq else Seq("q_pipe_novelty")
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    // extra session confs for A/B probes: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
+    val spark = graft.GraftSession.local("graft-profile", defaultCpus = 32)
+    // extra runtime SQL confs for A/B probes: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
     sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
+      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
     })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     try graft.queries.ArrayFixtures.get(spark, sfDir) catch { case _: Throwable => () }
     val sampleStacks = sys.env.get("SPARK_GRAFT_PROFILE_STACKS").contains("1")
     if (sys.env.get("SPARK_GRAFT_PROFILE_STREAM").contains("1"))
@@ -147,24 +91,21 @@ object ProfileQuery {
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       for (r <- 0 until reps) {
-        val acc = new Acc
-        spark.sparkContext.addSparkListener(acc)
         val sampler = if (sampleStacks && r == reps - 1) {
           val s = new Sampler; s.start(); Some(s)
         } else None
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val cost = SparkCost.measure(spark) {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         sampler.foreach { s =>
           s.halted = true
           println(s"---- stack samples for $n ----")
           println(s.report())
         }
-        // listenerBus is private[spark]; a short poll lets task-end events drain
-        Thread.sleep(400)
-        spark.sparkContext.removeSparkListener(acc)
         println(f"==== $n rep $r: $dt%.3f s ====")
-        println(acc.report())
+        println(cost.report())
       }
     }
     spark.stop()

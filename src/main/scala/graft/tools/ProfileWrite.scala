@@ -1,23 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.metrics.SparkCost
 
 /** Dev aid: staged timing of the array ingest path (bench_array_write).
-  * Prints one line per Spark job (duration + call site) plus wall-clock
-  * splits of the driver-side commit tail, so a write-path regression can
-  * be attributed to a stage instead of guessed at.
+  * Prints each rep's Spark jobs and stages ([[SparkCost.report]]) plus
+  * wall-clock splits of the driver-side commit tail, so a write-path
+  * regression can be attributed to a stage instead of guessed at.
   */
 object ProfileWrite {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-profile-write")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-profile-write", defaultCpus = 32)
     import spark.implicits._
     import graft.meta.{DatasetMeta, VariableDef}
     import graft.spark.SparkStore
@@ -30,22 +22,6 @@ object ProfileWrite {
       variables = Map("foo" -> VariableDef("short", Vector("x", "y", "z"), -3.0)))
     val root = java.nio.file.Files.createTempDirectory("graft_profile").toString
     val store = new SparkStore(spark, root)
-
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = js.stageInfos.map(si => s"${si.name.takeWhile(_ != '\n').take(60)}(n=${si.numTasks})")
-          .mkString(" | ")
-        jobStarts.put(js.jobId, (System.nanoTime(), site))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobStarts.get(je.jobId)).foreach { case (t0, site) =>
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (dt > 0.05)
-            System.err.println(f"[job] id=${je.jobId}%3d ${dt}%6.2f s  $site")
-        }
-      }
-    })
 
     def writeOnce(ds: String): Unit = {
       store.create(ds)
@@ -77,8 +53,9 @@ object ProfileWrite {
       try { new ProcessBuilder("sync").start().waitFor() } catch { case _: Throwable => () }
       System.err.println(s"==== rep $r ====")
       val t0 = System.nanoTime()
-      writeOnce(s"perf$r")
+      val cost = SparkCost.measure(spark)(writeOnce(s"perf$r"))
       System.err.println(f"[rep $r] total=${(System.nanoTime() - t0) / 1e9}%6.2f s")
+      System.err.print(cost.report())
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -41,16 +41,8 @@ object StreamScaleProbe {
     val legFilter = sys.env.get("SPARK_GRAFT_STREAM_LEGS")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
     def on(leg: String): Boolean = legFilter.forall(_.exists(leg.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false") // streaming plans
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-stream-scale-probe", defaultCpus = 32)
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // streaming plans
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -60,45 +60,21 @@ import org.apache.spark.sql.functions._
   * Legs: SPARK_GRAFT_SUSTAIN_LEGS=stream,race,history (default all)
   */
 object SustainProbe {
-  private val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-  private def rec(name: String, v: Double): Unit = {
-    results(name) = v
-    System.err.println(f"[probe] $name: $v%.3f")
-  }
-  private def time(name: String)(f: => Unit): Unit = {
-    val t0 = System.nanoTime()
-    try { f; rec(name, (System.nanoTime() - t0) / 1e9) }
-    catch { case e: Throwable =>
-      System.err.println(s"[probe] $name FAILED: ${e.getMessage}")
-      e.printStackTrace()
-      rec(name, -1.0)
-    }
-  }
+  private val probe = new ProbeRecord("sustain")
+  import probe.{rec, time}
 
   def main(args: Array[String]): Unit = {
     val legs = sys.env.getOrElse("SPARK_GRAFT_SUSTAIN_LEGS", "stream,race,history")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sustain-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-sustain-probe", defaultCpus = 32)
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     import spark.implicits._
 
     if (legs("stream")) runStreamLeg(spark)
     if (legs("race")) runRaceLeg(spark)
     if (legs("history")) runHistoryLeg(spark)
 
-    val line = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"sustain","timings":$line}""")
+    println(probe.line())
     spark.stop()
   }
 

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core.{DType, Slab, Slice}
 import graft.filters.FilterChain
-import org.apache.spark.sql.SparkSession
 
 /** Commit-path scaling probe for the torn-write machinery (dev tool, not
   * a gate). SparkStore.commitVersion now runs repairTornWrites; the
@@ -25,26 +24,9 @@ object TornScaleProbe {
   def main(args: Array[String]): Unit = {
     val scales = sys.env.getOrElse("SPARK_GRAFT_TORN_SCALES", "65536,262144")
       .split(",").toSeq.map(_.trim.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-torn-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-torn-scale-probe", defaultCpus = 32)
     import spark.implicits._
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try f catch { case e: Throwable =>
-        System.err.println(s"[torn-probe] failed: ${e.getMessage}"); return -1.0 }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val probe = new ProbeRecord("torn-scale", logTag = "torn-probe")
     for (nChunks <- scales) {
       val chunkX = 8L
       val dimX = nChunks * chunkX
@@ -56,11 +38,7 @@ object TornScaleProbe {
       val root = java.nio.file.Files.createTempDirectory("graft_torn_probe").toString
       val store = new graft.spark.SparkStore(spark, root)
 
-      def rec(name: String)(f: => Unit): Unit = {
-        val t = time(f)
-        results(s"${name}_c$nChunks") = t
-        System.err.println(f"[torn-probe] ${name}_c$nChunks: $t%.2f s")
-      }
+      def rec(name: String)(f: => Unit): Unit = probe.time(s"${name}_c$nChunks")(f)
       def fullWrite(w: graft.spark.SparkVersionWriter, salt: Long): Unit = {
         val cellsPerSlab = 8192L
         val nSlabs = (dimX + cellsPerSlab - 1) / cellsPerSlab
@@ -121,10 +99,7 @@ object TornScaleProbe {
       graft.spark.SparkStore.clearBlobCache()
       spark.catalog.clearCache()
     }
-    val line = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"torn-scale","timings":$line}""")
+    println(probe.line())
     spark.stop()
   }
 }

@@ -60,8 +60,7 @@ class CompactionSpec extends AnyFunSuite {
     // admissible versions at upTo=w are exactly {w} — the scan's
     // partition pruning must select only version=w files (inputFiles is
     // pre-pruning, so inspect the FileSourceScan's selected partitions)
-    val scanned = store.resolvedIndexPublic("ds", "n", store.metadata("ds", w),
-      org.apache.spark.sql.functions.lit(true))
+    val scanned = store.resolvedIndexPinned("ds", "n", store.metadata("ds", w))
       .queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.selectedPartitions.toPartitionArray.toSeq.map(_.filePath.toString)
@@ -95,15 +94,13 @@ class CompactionSpec extends AnyFunSuite {
     StoreFs.writeString(StoreFs.child(bad, "junk.parquet"), "not parquet")
     // latest read resolves and its file index holds ONLY version=w files
     assert(values(store, w) == expected(true))
-    val dfW = store.resolvedIndexPublic("ds", "n", store.metadata("ds", w),
-      org.apache.spark.sql.functions.lit(true))
+    val dfW = store.resolvedIndexPinned("ds", "n", store.metadata("ds", w))
     assert(dfW.inputFiles.nonEmpty &&
       dfW.inputFiles.forall(_.contains(s"version=$w")),
       s"head resolve must read only version=$w: ${dfW.inputFiles.toSeq}")
     // pinned time travel below the checkpoint: v1's snapshot admits {v1}
     assert(values(store, v1) == (0L until 48L).map(h => h -> 2 * h).toMap)
-    val df1 = store.resolvedIndexPublic("ds", "n", store.metadata("ds", v1),
-      org.apache.spark.sql.functions.lit(true))
+    val df1 = store.resolvedIndexPinned("ds", "n", store.metadata("ds", v1))
     assert(df1.inputFiles.nonEmpty &&
       df1.inputFiles.forall(_.contains(s"version=$v1")),
       s"pinned v1 resolve must read only version=$v1: ${df1.inputFiles.toSeq}")

@@ -75,16 +75,22 @@ class FileFeedSliceSpec extends AnyFunSuite {
 
   test("knownBounds narrower than the data fails loudly instead of dropping rows") {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("ff-bounds").toString
-    val df = (0L to 89L).toDF("ts_s")
-    // claimed range [30, 59]: rows at 0-29 map below slice 0, 60-89 above
-    // the last slice
-    val e = intercept[IllegalArgumentException] {
-      FileFeed.sliced(df, "ts_s", nBatches = 3, workDir = work,
-        knownBounds = Some((30L, 59L)))
+    // claimed range [30, 59] over 3 slices of 10: rows at 0-29 map below
+    // slice 0, rows at 60-89 past the last slice, and rows at 60-69 onto
+    // slice 3 — a sentinel tail's index when the feed has one tail
+    val sentinel = Seq(1000L).toDF("ts_s")
+    for ((rows, tails) <- Seq(
+        (0L to 89L, Nil),
+        (0L to 59L, Nil),
+        (30L to 69L, Seq(sentinel)))) {
+      val work = java.nio.file.Files.createTempDirectory("ff-bounds").toString
+      val e = intercept[IllegalArgumentException] {
+        FileFeed.sliced(rows.toDF("ts_s"), "ts_s", nBatches = 3, workDir = work,
+          tails = tails, knownBounds = Some((30L, 59L)))
+      }
+      assert(e.getMessage.contains("outside slices [0, 3)"), e.getMessage)
+      assert(e.getMessage.contains("(30,59)"), e.getMessage)
     }
-    assert(e.getMessage.contains("outside slices [0, 3)"), e.getMessage)
-    assert(e.getMessage.contains("_slice=-"), e.getMessage)
   }
 
   test("NIO checkpoint manager: atomic create honors no-overwrite contract") {

@@ -423,19 +423,9 @@ class SimilaritySpec extends AnyFunSuite {
       bare.resolve("meta.props"))
     Similarity.attestVersion(spark, bare.toString, CorpusId(uri, 1L))
     // belt-and-braces: a job counter observes ZERO Spark jobs during it
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.attestVersion(spark, path, CorpusId(uri, 1L))
-      Thread.sleep(300) // listener bus is async; give a job time to surface
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"attestVersion launched ${jobs.get} Spark job(s)")
+    val jobs = SparkTestSession.jobsDuring(
+      Similarity.attestVersion(spark, path, CorpusId(uri, 1L)))
+    assert(jobs == 0, s"attestVersion launched $jobs Spark job(s)")
     // the pinned serving path answers
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
@@ -556,19 +546,9 @@ class SimilaritySpec extends AnyFunSuite {
     val path = java.nio.file.Files.createTempDirectory("graft-cid-ivf").toString
     Similarity.ivfBuildPinned(emb, path, reader, nCentroids = 16)
     // attest via the derived identity, with zero Spark jobs
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.attestVersion(spark, path, Similarity.corpusIdOf(reader))
-      Thread.sleep(300) // listener bus is async
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"attest via reader identity ran ${jobs.get} job(s)")
+    val jobs = SparkTestSession.jobsDuring(
+      Similarity.attestVersion(spark, path, Similarity.corpusIdOf(reader)))
+    assert(jobs == 0, s"attest via reader identity ran $jobs job(s)")
     // a reader pinned to a DIFFERENT version attests stale
     val w2 = store.addVersion("corpus", reader.meta)
     w2.write("v", Seq(Slab.empty(DType.DOUBLE, Slice(Seq(0L), Seq(1L)), 2.0)))

@@ -15,55 +15,33 @@ object SparkTestSession {
     // delayed-visibility race test raises it locally above its lag
     if (!sys.props.contains("graft.commit.settle.ms"))
       sys.props("graft.commit.settle.ms") = "25"
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
+    GraftSession.withCpus("graft-test", 4, Map(
       // mockfs://: test-only object-store-semantics FileSystem
       // (graft.testfs.MockObjectStoreFileSystem). The FileSystem route
       // registers via META-INF/services; the FileContext route (store
       // commit renames) resolves AbstractFileSystem from this key.
-      .config("spark.hadoop.fs.AbstractFileSystem.mockfs.impl",
-        "graft.testfs.MockAbstractFs")
+      "spark.hadoop.fs.AbstractFileSystem.mockfs.impl" ->
+        "graft.testfs.MockAbstractFs",
       // conf-faithfulness gate: the mock REQUIRES this driver-session
       // credential at every initialize — any mockfs resolution through a
       // classpath-default conf fails loudly (see the mock's scaladoc)
-      .config("spark.hadoop." + graft.testfs.MockObjectStoreFileSystem.CredentialKey,
-        graft.testfs.MockObjectStoreFileSystem.CredentialValue)
+      ("spark.hadoop." + graft.testfs.MockObjectStoreFileSystem.CredentialKey) ->
+        graft.testfs.MockObjectStoreFileSystem.CredentialValue,
       // keep Hadoop's content-blind global FS cache out of the gate: a
       // credentialed instance must not be handed to a credential-less conf
-      .config("spark.hadoop.fs.mockfs.impl.disable.cache", "true")
+      "spark.hadoop.fs.mockfs.impl.disable.cache" -> "true",
       // hos://: in-process loopback-HTTP object store (the offline
       // stand-in RealObjectStoreSpec runs against when no real endpoint
       // is configured; see graft.testfs.InProcessObjectStoreServer)
-      .config("spark.hadoop.fs.hos.impl",
-        "graft.testfs.HttpObjectStoreFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.hos.impl",
-        "graft.testfs.HttpObjectStoreAbstractFs")
-      .config("spark.hadoop.fs.hos.impl.disable.cache", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      "spark.hadoop.fs.hos.impl" -> "graft.testfs.HttpObjectStoreFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.hos.impl" ->
+        "graft.testfs.HttpObjectStoreAbstractFs",
+      "spark.hadoop.fs.hos.impl.disable.cache" -> "true"))
   }
 
   /** Spark jobs started while `body` runs. */
-  def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      Thread.sleep(300) // listener bus is async; give a job time to surface
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
+  def jobsDuring(body: => Unit): Int =
+    graft.metrics.SparkCost.measure(spark)(body).jobs.size
 }
 
 /** Distributed read/write path over the Parquet-backed SparkStore —
@@ -370,8 +348,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 32).map(_.toDouble))))
     val v1 = w1.finishVersion()
     SparkStore.clearBlobCache()
-    val h1 = store.resolvedIndexPublic("ds", "v", store.metadata("ds", v1),
-        org.apache.spark.sql.functions.lit(true))
+    val h1 = store.resolvedIndexPinned("ds", "v", store.metadata("ds", v1))
       .filter(org.apache.spark.sql.functions.col("coordKey") === "1")
       .select("hash").head().getString(0)
     val holders = SparkStore.parquetFilesUnder(store.chunksDir).filter { f =>

@@ -83,8 +83,7 @@ class VersionDiffSpec extends AnyFunSuite {
     assert(VersionDiff.diffCells(store, "m", "v", v1, v2).count() == 1L)
     SparkStore.clearBlobCache()
     // lose v1's blob of the changed chunk 1 (v2's lands in a later file)
-    val h = store.resolvedIndexPublic("m", "v", store.metadata("m", v1),
-        org.apache.spark.sql.functions.lit(true))
+    val h = store.resolvedIndexPinned("m", "v", store.metadata("m", v1))
       .filter(org.apache.spark.sql.functions.col("coordKey") === "1")
       .select("hash").head().getString(0)
     SparkStore.parquetFilesUnder(store.chunksDir)
@@ -114,12 +113,10 @@ class VersionDiffSpec extends AnyFunSuite {
     assert(diff.count() == 2L)
     // structural: of 8 chunks, exactly ONE pair survives the hash filter —
     // count the rows feeding the decode by re-deriving the changed set
-    val changed = store.resolvedIndexPublic("p", "v", store.metadata("p", v1),
-        org.apache.spark.sql.functions.lit(true))
+    val changed = store.resolvedIndexPinned("p", "v", store.metadata("p", v1))
       .select(org.apache.spark.sql.functions.col("coordKey"),
         org.apache.spark.sql.functions.col("hash").as("h1"))
-      .join(store.resolvedIndexPublic("p", "v", store.metadata("p", v2),
-          org.apache.spark.sql.functions.lit(true))
+      .join(store.resolvedIndexPinned("p", "v", store.metadata("p", v2))
         .select(org.apache.spark.sql.functions.col("coordKey"),
           org.apache.spark.sql.functions.col("hash").as("h2")), "coordKey")
       .filter(!(org.apache.spark.sql.functions.col("h1") <=>

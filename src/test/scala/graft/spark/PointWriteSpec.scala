@@ -6,7 +6,7 @@ import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.source.GraftScan
 import graft.testfs.MockObjectStoreFileSystem
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The writer's point/range split: a base-resolving write touching at
@@ -45,7 +45,7 @@ class PointWriteSpec extends AnyFunSuite {
     s.reader("d").onVersion(vid).getSlice("v", all).bytes
 
   private def resolvedAt(s: SparkStore, vid: Long) =
-    s.resolvedIndexPublic("d", "v", s.metadata("d", vid), lit(true))
+    s.resolvedIndexPinned("d", "v", s.metadata("d", vid))
       .select("coordKey", "hash", "stats").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.get(2)))).toMap
 
@@ -210,5 +210,28 @@ class PointWriteSpec extends AnyFunSuite {
     wb3.write("v", Seq(content))
     wb3.finishVersion()
     assert(blobRows() == before)
+  }
+
+  test("a dedup-only commit adds no file to chunks/, and neither does a " +
+      "vacuum with no live swept blob") {
+    def chunkFiles(s: SparkStore) =
+      Option(new java.io.File(s.chunksDir).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val (s, _) = seeded(tmpRoot())
+    val seededFiles = chunkFiles(s)
+    assert(seededFiles.nonEmpty)
+    // content the store already holds, once range-planned (all 1,600
+    // chunks) and once point-planned (a 4-chunk box)
+    for (update <- Seq(base, box(10, 14, 10, 14)(baseF))) {
+      val w = s.addVersion("d", grid)
+      w.write("v", Seq(update))
+      val v = w.finishVersion()
+      assert(chunkFiles(s) == seededFiles,
+        s"a dedup-only commit of ${update.slice} adopted a file")
+      assert(java.util.Arrays.equals(sliceAt(s, v), base.bytes))
+    }
+    s.destroy("d")
+    assert(s.vacuum(0L) > 0L)
+    assert(chunkFiles(s).isEmpty)
   }
 }

@@ -1,7 +1,6 @@
 package graft.testtools
 
 import graft.core.{DType, Slab, Slice}
-import org.apache.spark.sql.SparkSession
 
 /** Worker-process main for the cross-JVM writer-token test — the analog
   * of the reference's slave entrypoint (script.clj:54-83): bootstraps
@@ -17,14 +16,7 @@ object TokenWorkerMain {
     val token = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tokenFile)),
       java.nio.charset.StandardCharsets.UTF_8)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-token-worker-$half")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.withCpus(s"graft-token-worker-$half", 2)
     try {
       val store = new graft.spark.SparkStore(spark, root)
       val w = store.writerFromToken(ds, token)
