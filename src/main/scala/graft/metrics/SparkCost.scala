@@ -6,36 +6,43 @@ import org.apache.spark.sql.graft.ListenerBusDrain
 import scala.collection.mutable
 
 /** Spark's own cost of a body of work — the one SparkListener of the
-  * project. It records every job (wall time and description) and, per
-  * stage, executor run and CPU time, tasks, input bytes, shuffle read and
-  * write bytes, memory and disk spill, and GC time. Use it through
-  * [[SparkCost.measure]], which scopes it to one body and drains the
-  * listener bus before reading, so the totals are complete on return. */
-final class SparkCost private () extends SparkListener {
+  * project. It records every job of its job group (wall time and
+  * description) and, per stage of those jobs, executor run and CPU time,
+  * tasks, input bytes, shuffle read and write bytes, memory and disk
+  * spill, and GC time. Use it through [[SparkCost.measure]], which scopes
+  * it to one body and drains the listener bus before reading, so the
+  * totals are complete on return. */
+final class SparkCost private (group: String) extends SparkListener {
   import SparkCost._
 
   private val jobsById = mutable.HashMap.empty[Int, Job]
   private val stagesById = mutable.HashMap.empty[Int, Stage]
+  private val ownStages = mutable.HashSet.empty[Int]
 
   private def stage(id: Int): Stage = stagesById.getOrElseUpdate(id, new Stage(id))
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    val desc = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")))
-      .filter(_.nonEmpty)
-      .getOrElse(e.stageInfos.map(s => s"${firstLine(s.name)}(n=${s.numTasks})")
-        .mkString(" | "))
-    jobsById(e.jobId) = Job(e.jobId, e.time, -1L, desc)
+    val props = Option(e.properties)
+    if (props.exists(p => p.getProperty(GroupKey) == group)) {
+      val desc = props
+        .flatMap(p => Option(p.getProperty(DescriptionKey)))
+        .filter(_.nonEmpty)
+        .getOrElse(e.stageInfos.map(s => s"${firstLine(s.name)}(n=${s.numTasks})")
+          .mkString(" | "))
+      jobsById(e.jobId) = Job(e.jobId, e.time, -1L, desc)
+      ownStages ++= e.stageIds
+    }
   }
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
     jobsById.get(e.jobId).foreach(j => jobsById(e.jobId) = j.copy(endMs = e.time))
   }
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-    stage(e.stageInfo.stageId).name = firstLine(e.stageInfo.name)
+    if (ownStages(e.stageInfo.stageId))
+      stage(e.stageInfo.stageId).name = firstLine(e.stageInfo.name)
   }
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
-    if (m != null) {
+    if (m != null && ownStages(e.stageId)) {
       val st = stage(e.stageId)
       st.tasks += 1
       st.runMs += m.executorRunTime
@@ -100,16 +107,39 @@ object SparkCost {
 
   private def firstLine(s: String): String = s.takeWhile(_ != '\n').take(80)
 
+  private val groups = new java.util.concurrent.atomic.AtomicLong()
+
+  // the local properties `SparkContext.setJobGroup` sets, which `measure`
+  // saves and restores
+  private val GroupKey = "spark.jobGroup.id"
+  private val DescriptionKey = "spark.job.description"
+  private val InterruptKey = "spark.job.interruptOnCancel"
+
   /** Run `body` with a fresh SparkCost attached and return it once every
-    * event of the body's jobs has been delivered. The bus is drained
-    * before attaching too, so earlier work's queued events stay out. */
+    * event of the body's jobs has been delivered. The body runs in a
+    * fresh job group whose description is the caller's job description
+    * (or the group's name), so only jobs started from this thread — and
+    * from the threads it starts, such as adaptive execution's query-stage
+    * submissions, which inherit its local properties — are counted, and
+    * each carries that description. The caller's group, description and
+    * interrupt flag are restored afterwards. The bus is drained before
+    * attaching too, so earlier work's queued events stay out. */
   def measure(spark: SparkSession)(body: => Unit): SparkCost = {
     val sc = spark.sparkContext
-    val cost = new SparkCost
+    val group = s"graft-cost-${groups.incrementAndGet()}"
+    val cost = new SparkCost(group)
+    val saved = Seq(GroupKey, DescriptionKey, InterruptKey)
+      .map(k => k -> sc.getLocalProperty(k))
     ListenerBusDrain.drain(sc)
     sc.addSparkListener(cost)
+    sc.setJobGroup(group,
+      Option(sc.getLocalProperty(DescriptionKey)).getOrElse(group),
+      interruptOnCancel = false)
     try { body; ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(cost)
+    finally {
+      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.removeSparkListener(cost)
+    }
     cost
   }
 }

@@ -6,11 +6,13 @@ import graft.meta.DatasetMeta
 import graft.metrics.Instrument
 import graft.spark.source.{ChunkBlobReader, ChunkFileScope, ChunkSlabCursor, GraftScan,
   PinnedGraftTable, Resolved}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Spark-native, Parquet-backed dataset store — the distributed counterpart
@@ -30,7 +32,9 @@ import scala.jdk.CollectionConverters._
   *    (reference: impl.clj:246-278; SURVEY §4).
   *  - writes take the reads' point/range split (SparkVersionWriter): an
   *    update touching ≤ GraftScan.PointLookupThreshold chunks resolves
-  *    its bases to the driver and lands its blobs as one file.
+  *    its bases to the driver and lands its blobs as one file — with no
+  *    Spark job at all when its input is driver-held and small
+  *    (GraftScan.onDriver).
   *  - chunk blobs are written once, content-deduplicated within the
   *    batch (drop-adjacent over hash-sorted rows) and against the store —
   *    a left-anti join against existing hashes, or a by-hash probe on
@@ -1562,32 +1566,58 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     floored.map(_.versionId.get)
   }
 
-  /** Pinned MVCC resolve for point plans, collected to the driver as
-    * coordKey → (hash, stats): the same winners as [[resolvedIndexPinned]]
-    * in ONE job with no shuffle. Each task keeps, per coordKey, its
-    * greatest (version, seq, hash) row ([[keepWinners]]); the driver
-    * reduces the per-task winners the same way. Driver rows are bounded
-    * by covering chunks × index input partitions, so callers keep to
-    * point-sized windows (`GraftScan.PointLookupThreshold`,
-    * `chunked=true`'s ChunkedMaxChunks). */
+  /** Pinned MVCC resolve for point plans, as coordKey → (hash, stats): the
+    * same winners as [[resolvedIndexPinned]], from [[resolvedPoints]]. */
   private[spark] def resolvedPointsPinned(name: String, varName: String,
-      pinned: DatasetMeta, coordFilter: Column): Map[String, (String, Row)] =
+      pinned: DatasetMeta, keys: PointKeys,
+      driverBytes: Long = GraftScan.DriverPointBytes): Map[String, (String, Row)] =
     resolvedPoints(name, varName, pinnedAdmissible(name, varName, pinned),
-      coordFilter).map { case (k, r) => k -> (r.getString(3), r.getStruct(4)) }
+      keys, driverBytes).map { case (k, r) => k -> (r.getString(3), r.getStruct(4)) }
 
   /** The point resolve over an explicit admissible set: coordKey → its
-    * winning (coordKey, version, seq, hash, stats) row, in ONE job with
-    * no shuffle. The writer's point-planned base resolve calls it with
-    * the parent's admissible set plus its own in-flight version. */
+    * winning (coordKey, version, seq, hash, stats) row, for the chunks
+    * `keys` keeps. The admitted index part files are read by
+    * `PointIndexReader.winners` — in-process on the driver when
+    * `GraftScan.onDriver` admits `keys`' chunk count and the files' listed
+    * sizes (`driverBytes`, a test hook, bounds the bytes), else in one
+    * shuffle-free job over the files whose per-task winners the driver
+    * reduces the same way. The writer's point-planned base resolve calls
+    * it with the parent's admissible set plus its own in-flight version. */
   private[spark] def resolvedPoints(name: String, varName: String,
-      admissible: Seq[Long], coordFilter: Column): Map[String, Row] = {
-    val winners = admittedIndexDF(name, varName, admissible)
-      .filter(col("var") === varName && col("version").isin(admissible: _*))
-      .filter(coordFilter)
-      .select("coordKey", "version", "seq", "hash", "stats")
-      .rdd.mapPartitions(SparkStore.keepWinners)
-      .collect()
+      admissible: Seq[Long], keys: PointKeys,
+      driverBytes: Long = GraftScan.DriverPointBytes): Map[String, Row] =
+      Instrument.timed("store.resolvePoints") {
+    val files = admittedIndexFiles(name, varName, admissible)
+    val winners: Array[Row] =
+      if (files.isEmpty) Array.empty
+      else if (GraftScan.onDriver(keys.size, files.map(_._3).sum, driverBytes))
+        PointIndexReader.winners(files.iterator.map(f => (f._1, f._2)), keys).toArray
+      else {
+        val hconfBc = StoreFs.broadcastConf()
+        spark.sparkContext.parallelize(files.map(f => (f._1, f._2)),
+            math.min(files.size, spark.sparkContext.defaultParallelism))
+          .mapPartitions { it =>
+            StoreFs.installExecutorConf(hconfBc.value)
+            PointIndexReader.winners(it, keys)
+          }
+          .collect()
+      }
     SparkStore.keepWinners(winners.iterator).map(r => r.getString(0) -> r).toMap
+  }
+
+  /** The part files of `varName`'s index partitions for the `admissible`
+    * versions, as (path, version, length) — one listing per version, and
+    * none of the variable's other partitions. Hidden files (`_`/`.`) are
+    * skipped, as Spark's file index skips them. */
+  private def admittedIndexFiles(name: String, varName: String,
+      admissible: Seq[Long]): Seq[(String, Long, Long)] = {
+    val varDir = StoreFs.child(indexDir(name), "var=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(varName))
+    admissible.distinct.flatMap { v =>
+      StoreFs.listFiles(StoreFs.child(varDir, s"version=$v")).collect {
+        case (p, n, len) if !n.startsWith("_") && !n.startsWith(".") => (p, v, len)
+      }
+    }
   }
 
   /** `coordFilter` is applied to the RAW index scan, before the group-by:
@@ -1946,8 +1976,8 @@ object SparkPinnedReader {
   * window (`ChunkWindow`), the DSv2 scan's planner (`GraftScan`) and
   * `ChunkSlabCursor`. `exploded` IS the DSv2 scan; getSlice /
   * streamChunks / explodedMulti / statsAggregate run that scan's input
-  * partitions as an RDD of cursors (`overCursors`). No read joins the
-  * chunk table. */
+  * partitions as an RDD of cursors (`overCursors`), and a small getSlice
+  * drains them on the driver. No read joins the chunk table. */
 final class SparkPinnedReader(store: SparkStore, name: String, val meta: DatasetMeta) {
   import store.spark
   import spark.implicits._
@@ -1975,10 +2005,7 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     * whose blob is missing fails the task (`SparkPinnedReader.requireBlob`). */
   private def overCursors[T: Encoder: scala.reflect.ClassTag](varName: String,
       request: Slice)(rows: ChunkSlabCursor => Iterator[T]): Dataset[T] = {
-    val r = Resolved(store, meta, name, varName)
-    val box = Slice(request.start, request.stop)
-    val parts = new GraftScan(r, box, empty = false, r.schema)
-      .planInputPartitions()
+    val (parts, box) = scanParts(varName, request)
     val metaJson = meta.toJson
     val hconfBc = StoreFs.broadcastConf()
     spark.createDataset(
@@ -1987,6 +2014,15 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
           StoreFs.installExecutorConf(hconfBc.value)
           it.flatMap(p => rows(new ChunkSlabCursor(p, metaJson, varName, box)))
         })
+  }
+
+  /** The input partitions of this version's DSv2 scan of `request`'s
+    * step-1 bounding box (planned now, on the driver), and that box. */
+  private def scanParts(varName: String,
+      request: Slice): (Array[org.apache.spark.sql.connector.read.InputPartition], Slice) = {
+    val r = Resolved(store, meta, name, varName)
+    val box = Slice(request.start, request.stop)
+    (new GraftScan(r, box, empty = false, r.schema).planInputPartitions(), box)
   }
 
   /** (coordKey, coord, hash, bytes|null) for every chunk covering the
@@ -2220,7 +2256,9 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
   /** Driver-side slab assembly for small windows (R1 get-slice,
     * reference: io/mandoline.clj:260-270). Requests above `maxCells`
     * are refused — the response slab lives on the driver; use
-    * `exploded()`/`streamChunks()` for large reads. */
+    * `exploded()`/`streamChunks()` for large reads. The chunk fetch
+    * drains the scan's cursors in-process when `GraftScan.onDriver` admits
+    * the covering chunks and their decoded bytes, else in one job. */
   def getSlice(varName: String, request: Slice, checkBounds: Boolean = true,
       maxCells: Long = SparkPinnedReader.MaxSliceCells): Slab = {
     val varSlice = meta.varSlice(varName)
@@ -2235,11 +2273,18 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
     val dtype = meta.dtype(varName)
     val fill = meta.fill(varName)
     val response = Slab.empty(dtype, request, fill)
-    val rows = SparkPinnedReader.raisingMissingBlob(
-      chunkRows(varName, request).collect())
-    rows.foreach { r =>
-      if (!r.isNullAt(3)) {
-        val coord = r.getSeq[Long](1).toVector
+    val covering = new ChunkWindow(request, meta.chunkGridSlice(varName)).size
+    val rows: Iterator[(String, Array[Long], String, Array[Byte])] =
+      if (GraftScan.onDriver(covering, covering * GraftScan.chunkBytes(meta, varName))) {
+        val (parts, box) = scanParts(varName, request)
+        val metaJson = meta.toJson
+        parts.iterator.flatMap(p =>
+          new ChunkSlabCursor(p, metaJson, varName, box).framedChunks)
+      } else SparkPinnedReader.raisingMissingBlob(
+        overCursors(varName, request)(_.framedChunks).collect()).iterator
+    rows.foreach { case (_, chunkCoord, _, framed) =>
+      if (framed != null) {
+        val coord = chunkCoord.toVector
         val chunkSlice = meta.chunkSlice(varName, coord)
         // strided request: chunks in the bounding box that hold no
         // lattice point are skipped; the rest gather-subset to the
@@ -2249,7 +2294,7 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
           if (request.stepIsOne) Some(request)
           else request.intersectLatticeOpt(chunkSlice)
         clip.foreach { c =>
-          val slab = Slab(dtype, chunkSlice, FilterChain.decode(r.getAs[Array[Byte]](3)))
+          val slab = Slab(dtype, chunkSlice, FilterChain.decode(framed))
           response.mergeFrom(
             if (request.stepIsOne) slab.intersectWith(request)
             else slab.subset(c))
@@ -2260,25 +2305,32 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
   }
 }
 
-/** Distributed write path (W1-W8): shred slabs into chunk fragments,
-  * merge each touched chunk onto its base, append the new blobs, append
-  * the index rows. Writes take the reads' point/range split at the same
-  * threshold (`GraftScan.PointLookupThreshold`):
-  *  - POINT: a write that merges onto resolved bases and touches at most
-  *    the threshold's chunks. Its touched keys and base rows come to the
-  *    driver in one shuffle-free job each; one shuffle groups fragments
-  *    by chunk, each task fetching its bases by hash; the new blobs land
-  *    as ONE hash-sorted file after a by-hash dedup probe.
-  *  - RANGE: every other write (first writes, REPLACE versions, larger
-  *    updates). Bases join in by coordinate (`withBlobs`), fragments
-  *    cogroup with them, and blobs dedup against the chunk table and land
-  *    in hash-range-partitioned files.
-  * Both plans fold, encode and take stats through one kernel
-  * (`SparkVersionWriter.mergeChunk`) and append index rows the same way.
-  * The point plan writes all new blobs from one task, so the larger the
-  * chunks, the fewer it can take before the range plan is faster:
-  * measured on 4 cores, incompressible 128 KB chunks break even near
-  * 1,000 chunks (README, "Scale design"). */
+/** Write path (W1-W8): shred slabs into chunk fragments, merge each
+  * touched chunk onto its base, append the new blobs, append the index
+  * rows. Writes take the reads' point/range split at the same threshold
+  * (`GraftScan.PointLookupThreshold`), and point passes take the reads'
+  * placement rule (`GraftScan.onDriver`):
+  *  - ON THE DRIVER: a single writer's pass whose input the driver
+  *    already holds (a LocalRelation: `write(Seq[Slab])`, `Seq(…).toDF`)
+  *    and that fits the rule — touched keys from the slab boxes, bases
+  *    from the point resolve, then shred, merge, by-hash dedup probe and
+  *    one blob part file plus one index part file (`PartFileWriter`,
+  *    Spark's own parquet writer), all in-process: no Spark job.
+  *  - POINT IN TASKS: any other pass that merges onto resolved bases and
+  *    touches at most the threshold's chunks, shared (token) writers'
+  *    included. Touched keys come to the driver in one shuffle-free job;
+  *    one more job merges in parallel and lands both part files from ONE
+  *    writer task, whose result is each chunk's hash.
+  *  - RANGE: every other write (first writes and REPLACE versions beyond
+  *    the driver placement, larger updates). Bases join in by coordinate
+  *    (`withBlobs`), fragments cogroup with them, and blobs dedup against
+  *    the chunk table and land in hash-range-partitioned files.
+  * Every plan folds, encodes and takes stats through one kernel
+  * (`SparkVersionWriter.mergeChunk`); both point placements run the same
+  * `PointPass` kernels. The task-placed point plan writes all new blobs
+  * from one task, so the larger the chunks, the fewer it can take before
+  * the range plan is faster: measured on 4 cores, incompressible 128 KB
+  * chunks break even near 1,000 chunks (README, "Scale design"). */
 final class SparkVersionWriter(store: SparkStore, name: String,
     val meta: DatasetMeta, val parentMeta: Option[DatasetMeta],
     /** True for writers rebuilt from a token: the version may have
@@ -2292,7 +2344,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     shared: Boolean = false) {
   import store.spark
   import spark.implicits._
-  import SparkVersionWriter.{Frag, Merged}
+  import SparkVersionWriter.{Frag, Merged, SlabRow}
 
   def token: String = meta.toJson
   private def vid = meta.versionId.get
@@ -2333,57 +2385,32 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     * only) returns this pass's per-chunk (content hash, base row seq,
     * base row hash) — content identity plus merge PROVENANCE, which the
     * ownership verify compares (baseSeq −1 / baseHash "" when the base
-    * was a committed-version row or fill); the single-writer path
-    * collects nothing. `baseOverride` (retry passes only) pins each
+    * was a committed-version row or fill); single-writer passes collect
+    * nothing. `baseOverride` (retry passes only) pins each
     * chunk's merge base to an explicit (seq, hash) row chosen at verify
     * time instead of the MVCC resolve — the CAS-retry "re-read current,
-    * merge onto it" step. The pass is point-planned when it resolves a
-    * base and touches at most `GraftScan.PointLookupThreshold` chunks,
-    * range-planned otherwise (see the class doc). */
+    * merge onto it" step. The pass runs on the driver, point-planned in
+    * tasks, or range-planned (see the class doc). */
   private def writeOnce(varName: String, slabRows: DataFrame,
       collectHashes: Boolean = false,
       baseOverride: Option[Seq[(String, Long, String)]] = None,
       replacesByCoord: Map[String, String] = Map.empty)
       : Option[Map[String, (String, Long, String)]] = {
-    val metaJson = meta.toJson
     val varN = varName
     val jobSeqBase = lastSeqBase.updateAndGet(prev =>
       math.max(System.currentTimeMillis(), prev + 1)) << 20
-
-    // 1. shred: slab → per-chunk clipped fragments (flatMap, no shuffle yet)
-    val frags: Dataset[Frag] = slabRows
-      .select("start", "stop", "bytes", "seq").as[(Array[Long], Array[Long], Array[Byte], Long)]
-      .flatMap { case (start, stop, bytes, seq) =>
-        // the per-call seq space is 20 bits (jobSeqBase << 20 | seq); a
-        // larger seq would bleed into a LATER job's range and corrupt
-        // cross-call last-writer-wins ordering — fail the job instead
-        if (seq < 0L || seq >= (1L << 20))
-          throw new IllegalArgumentException(
-            s"slab seq $seq outside [0, 2^20): one writeRows call is " +
-              "limited to 2^20 slab rows — split the write into batches")
-        val m = DatasetMeta.fromJson(metaJson)
-        val dt = m.dtype(varN)
-        val slabSlice = Slice(start.toVector, stop.toVector)
-        val slab = Slab(dt, slabSlice, bytes)
-        val grid = m.chunkGridSlice(varN)
-        ChunkGrid.toChunkCoordinates(slabSlice, grid).iterator.map { coord =>
-          val chunkSlice = ChunkGrid.fromChunkCoordinate(grid, coord)
-          val clipped = slab.intersectWith(chunkSlice)
-          (SparkStore.coordKey(coord), coord.toArray, jobSeqBase + seq,
-            clipped.slice.start.toArray, clipped.slice.stop.toArray, clipped.bytes)
-        }
-      }
-
+    // 1. shred: slab → per-chunk clipped fragments
+    val shred = new SparkVersionWriter.Shredder(meta.toJson, varN, jobSeqBase)
     // On a pinned-base retry, merge ONLY the overridden coordinates: the
     // retry's slab rows can span both lost and still-owned chunks, and an
     // owned chunk absent from the override would otherwise merge with
     // no base at all and re-merge onto FILL — erasing cells it already
     // holds, with a bumped seq that would make the damage win
-    val fragsEff = baseOverride match {
-      case Some(ov) =>
-        val keys = ov.map(_._1).toSet
-        frags.filter(f => keys.contains(f._1))
-      case None => frags
+    val overridden = baseOverride.map(_.iterator.map(_._1).toSet)
+    def frags: Dataset[Frag] = {
+      val all = slabRows.select("start", "stop", "bytes", "seq").as[SlabRow]
+        .flatMap(r => shred(r))
+      overridden.fold(all)(keys => all.filter(f => keys.contains(f._1)))
     }
 
     // 2. plan. A pass RESOLVES A BASE — the current in-flight version's
@@ -2396,32 +2423,151 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     //    entirely and folds fragments onto fill. A REPLACE version (INSERT
     //    OVERWRITE) merges against FILL, never the parent — the committed
     //    version must contain only this write's cells. A retry's bases
-    //    are its pinned override. A base-resolving pass that touches at
-    //    most the point threshold's chunks is point-planned.
+    //    are its pinned override. A single writer's DRIVER-HELD input (a
+    //    LocalRelation, as write(Seq[Slab]) and Seq(…).toDF build) names
+    //    its touched chunks with no job, and runs on the driver within
+    //    `GraftScan.onDriver`'s bound; any other base-resolving pass that
+    //    touches at most the point threshold's chunks is point-planned in
+    //    tasks.
     val resolvesBase = baseOverride.isDefined ||
       (store.hasIndexData(name, varN, meta.parent, vid) &&
         !SparkStore.isReplaceOf(meta, varN))
     val threshold = GraftScan.PointLookupThreshold
-    val pointKeys: Option[Seq[String]] =
-      if (!resolvesBase) None
-      else baseOverride match {
-        case Some(ov) => Some(ov.map(_._1).distinct).filter(_.size <= threshold)
-        case None =>
-          Some(touchedCapped(varN, slabRows, threshold).asScala.toSeq)
-            .filter(_.size <= threshold)
-      }
-    // a point pass lists the chunk files once: its base fetch and its
-    // dedup probe both scope by that listing
-    val point = pointKeys.map(keys =>
-      (keys, spark.sparkContext.broadcast(ChunkFileScope.ranged(store))))
+    val local = if (shared) None else localSlabRows(slabRows)
+    val touched: Option[java.util.Set[String]] = (overridden, local) match {
+      case (Some(keys), _) => Some(keys.asJava)
+      case (None, Some(rows)) =>
+        val keysOf = slabChunkKeys(varN)
+        Some(rows.foldLeft(new java.util.HashSet[String]()) { (acc, r) =>
+          SparkVersionWriter.addCapped(acc, keysOf(r._1, r._2), threshold) })
+      case _ if resolvesBase => Some(touchedCapped(varN, slabRows, threshold))
+      case _ => None
+    }
+    val pointKeys = touched.filter(_.size <= threshold).map(_.asScala.toSet)
 
+    (local, pointKeys) match {
+      case (Some(rows), Some(keys)) if GraftScan.onDriver(keys.size,
+          rows.iterator.map(_._3.length.toLong).sum +
+            keys.size * GraftScan.chunkBytes(meta, varN)) =>
+        val pass = pointPass(varN, keys, resolvesBase, baseOverride,
+          replacesByCoord, jobSeqBase)
+        val ranged = ChunkFileScope.ranged(store)
+        val merged = pass.merge(ranged,
+            rows.iterator.flatMap(r => shred(r)).toArray.sortBy(_._1).iterator)
+          .toArray.sortBy(_._3)
+        val mine = adoptPoint(pass, pass.land(ranged, merged.iterator))
+        if (collectHashes) Some(mine) else None
+      case (_, Some(keys)) if resolvesBase =>
+        val mine = pointInTasks(varN, frags, keys, baseOverride,
+          replacesByCoord, jobSeqBase)
+        if (collectHashes) Some(mine) else None
+      case _ =>
+        rangePass(varN, slabRows, frags, resolvesBase, baseOverride,
+          replacesByCoord, jobSeqBase, collectHashes)
+    }
+  }
+
+  /** `slabRows`' rows when its optimized plan is a LocalRelation: rows
+    * the driver already holds, read straight from the relation — no job,
+    * and no query planned to read them. */
+  private def localSlabRows(slabRows: DataFrame): Option[Array[SlabRow]] =
+    slabRows.queryExecution.optimizedPlan match {
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val types = lr.schema.fields.map(f => f.name -> f.dataType).toMap
+        def at(c: String) = lr.output.indexWhere(_.name == c)
+        val Seq(start, stop, bytes, seq) = Seq("start", "stop", "bytes", "seq").map(at)
+        val coords = Seq("start", "stop").map(types.get)
+        // the slab row types exactly; any other frame reads through Spark
+        if (coords.forall(_.contains(ArrayType(LongType, containsNull = false))) &&
+            types.get("bytes").contains(BinaryType) && types.get("seq").contains(LongType))
+          Some(lr.data.iterator.map(r => (r.getArray(start).toLongArray(),
+            r.getArray(stop).toLongArray(), r.getBinary(bytes), r.getLong(seq))).toArray)
+        else Some(slabRows.select("start", "stop", "bytes", "seq").as[SlabRow].collect())
+      case _ => None
+    }
+
+  /** A point pass's driver-built state: bases resolved (or taken from a
+    * retry's pinned override), fresh staging dirs, and the part-file
+    * writers its one landing writer uses. */
+  private def pointPass(varN: String, keys: Set[String], resolvesBase: Boolean,
+      baseOverride: Option[Seq[(String, Long, String)]],
+      replaces: Map[String, String], seq: Long): SparkVersionWriter.PointPass = {
+    // coordKey → (base blob hash, baseSeq, baseHash); absent → fill base
+    val bases: Map[String, (String, Long, String)] = baseOverride match {
+      case Some(ov) => ov.iterator.map { case (k, s, h) => k -> ((h, s, h)) }.toMap
+      case None if !resolvesBase => Map.empty
+      case None =>
+        // chain-scoped on the writer's own parent manifest, plus this
+        // in-flight version — as the range plan's base resolve
+        val admissible =
+          parentMeta.toSeq.flatMap(store.pinnedAdmissible(name, varN, _)) :+ vid
+        store.resolvedPoints(name, varN, admissible, PointKeys.Exactly(keys))
+          .map { case (k, r) =>
+            val own = r.getLong(1) == vid
+            k -> ((r.getString(3), if (own) r.getLong(2) else -1L,
+              if (own) r.getString(3) else ""))
+          }
+    }
+    SparkVersionWriter.PointPass(meta.toJson, varN, vid, seq, bases, replaces,
+      PartFileWriter(spark, SparkVersionWriter.blobFileSchema,
+        Map("compression" -> "uncompressed"), "-"),
+      PartFileWriter(spark, SparkVersionWriter.indexFileSchema, Map.empty, "."),
+      store.newChunkStagingDir(), store.newIndexStagingDir(name))
+  }
+
+  /** The point pass in Spark tasks, for input the driver does not hold:
+    * ONE job. Fragments shuffle by coordinate and merge in parallel tasks
+    * (`PointPass.merge`); the merged chunks shuffle to ONE hash-sorted
+    * writer task (`PointPass.land`), which writes the blob and index part
+    * files and returns each chunk's (coordKey, hash, baseSeq, baseHash) as
+    * the job result — nothing is persisted or recomputed. */
+  private def pointInTasks(varN: String, frags: Dataset[Frag], keys: Set[String],
+      baseOverride: Option[Seq[(String, Long, String)]],
+      replaces: Map[String, String], seq: Long): Map[String, (String, Long, String)] = {
+    val pass = pointPass(varN, keys, resolvesBase = true, baseOverride, replaces, seq)
+    // one chunk-file listing for the base fetch and the dedup probe
+    val ranged = spark.sparkContext.broadcast(ChunkFileScope.ranged(store))
+    val hconfBc = StoreFs.broadcastConf()
+    val landed = frags.rdd.keyBy(_._1)
+      .repartitionAndSortWithinPartitions(
+        new org.apache.spark.HashPartitioner(spark.sessionState.conf.numShufflePartitions))
+      .mapPartitions { it =>
+        StoreFs.installExecutorConf(hconfBc.value)
+        pass.merge(ranged.value, it.map(_._2))
+      }
+      .keyBy(_._3)
+      .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(1))
+      .mapPartitions { it =>
+        StoreFs.installExecutorConf(hconfBc.value)
+        Iterator.single(pass.land(ranged.value, it.map(_._2)))
+      }
+      .collect().head
+    adoptPoint(pass, landed)
+  }
+
+  /** Adopts a landed point pass — blobs and their range sidecar BEFORE
+    * index rows, as every append (see vacuum) — and drops its staging
+    * dirs (a failed task attempt's files included). */
+  private def adoptPoint(pass: SparkVersionWriter.PointPass,
+      landed: SparkVersionWriter.Landed): Map[String, (String, Long, String)] = {
+    store.writeChunkRangeSidecar(store.adoptChunkFiles(landed.chunkDir))
+    StoreFs.deleteTree(pass.chunkStaging)
+    store.adoptIndexFiles(name, landed.indexDir)
+    StoreFs.deleteTree(pass.indexStaging)
+    landed.chunks.iterator.map { case (k, h, bs, bh) => k -> ((h, bs, bh)) }.toMap
+  }
+
+  /** The RANGE pass: merge (`rangeMerged`), hash-range blob append and
+    * index append over one persisted merge; shared writers collect their
+    * per-chunk hashes from it. */
+  private def rangePass(varN: String, slabRows: DataFrame, frags: Dataset[Frag],
+      resolvesBase: Boolean, baseOverride: Option[Seq[(String, Long, String)]],
+      replacesByCoord: Map[String, String], jobSeqBase: Long,
+      collectHashes: Boolean): Option[Map[String, (String, Long, String)]] = {
     // 3. merge: one row per touched chunk — the merged blob, its stats
     //    and the base row it folded
-    val merged = (point match {
-      case Some((keys, ranged)) =>
-        pointMerged(varN, fragsEff, keys, baseOverride, ranged)
-      case None => rangeMerged(varN, slabRows, fragsEff, resolvesBase, baseOverride)
-    }).toDF("coordKey", "coord", "hash", "bytes",
+    val merged = rangeMerged(varN, slabRows, frags, resolvesBase, baseOverride)
+      .toDF("coordKey", "coord", "hash", "bytes",
         "scnt", "slmin", "slmax", "slsum", "sdmin", "sdmax", "snan",
         "baseSeq", "baseHash")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2440,10 +2586,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       //    collision. Blobs are already LZ4-framed — parquet does not
       //    recompress them.
       val staging = store.newChunkStagingDir()
-      point match {
-        case Some((_, ranged)) => appendBlobsPoint(merged, staging, ranged)
-        case None => appendBlobsRange(merged, staging)
-      }
+      appendBlobsRange(merged, staging)
       store.writeChunkRangeSidecar(store.adoptChunkFiles(staging))
 
       // 5. index append, hive-partitioned by (var, version) so the MVCC
@@ -2542,47 +2685,6 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       }
   }
 
-  /** POINT-planned merge over the ≤ threshold touched `keys`. Base rows
-    * resolve to the driver in ONE job with no shuffle (the parent's
-    * admissible versions plus this in-flight one, `coordKey IN keys`); a
-    * retry takes them from its pinned override with no job. ONE shuffle
-    * then groups fragments by coordinate, and each task fetches its
-    * chunks' base blobs by hash in batches, through only the chunk files
-    * whose hash range can hold them. A base whose blob is missing fails
-    * the write (`SparkPinnedReader.requireBlob`). */
-  private def pointMerged(varN: String, frags: Dataset[Frag], keys: Seq[String],
-      baseOverride: Option[Seq[(String, Long, String)]],
-      ranged: Broadcast[Array[(String, String, String)]]): Dataset[Merged] = {
-    // coordKey → (base blob hash, baseSeq, baseHash); absent → fill base
-    val bases: Map[String, (String, Long, String)] = baseOverride match {
-      case Some(ov) => ov.iterator.map { case (k, s, h) => k -> ((h, s, h)) }.toMap
-      case None =>
-        val admissible =
-          parentMeta.toSeq.flatMap(store.pinnedAdmissible(name, varN, _)) :+ vid
-        store.resolvedPoints(name, varN, admissible, col("coordKey").isin(keys: _*))
-          .map { case (k, r) =>
-            val own = r.getLong(1) == vid
-            k -> ((r.getString(3), if (own) r.getLong(2) else -1L,
-              if (own) r.getString(3) else ""))
-          }
-    }
-    val metaJson = meta.toJson
-    val hconfBc = StoreFs.broadcastConf()
-    frags.repartition(col("_1")).sortWithinPartitions("_1").mapPartitions { it =>
-      StoreFs.installExecutorConf(hconfBc.value)
-      val m = DatasetMeta.fromJson(metaJson)
-      ChunkFileScope.fetchByHash(ranged.value, SparkVersionWriter.runsByKey(it))(
-        g => bases.get(g._1).map(_._1).orNull).map { case ((key, fs), bytes) =>
-        bases.get(key) match {
-          case Some((h, baseSeq, baseHash)) =>
-            SparkPinnedReader.requireBlob(key, h, bytes)
-            SparkVersionWriter.mergeChunk(m, varN, key, fs, bytes, baseSeq, baseHash)
-          case None => SparkVersionWriter.mergeChunk(m, varN, key, fs, null, -1L, "")
-        }
-      }
-    }
-  }
-
   /** RANGE blob append, arranged so blob BYTES move exactly ONCE — the
     * range shuffle that lays out hash-sorted disjoint part files:
     *  - already-in-store hashes (re-ingested content) are a string-only
@@ -2626,32 +2728,6 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       // cross-partition duplicates land adjacent in the hash-sorted
       // range partitions: drop-adjacent finishes the dedup shuffle-free
       .mapPartitions(it => SparkVersionWriter.dropAdjacent(it))
-      .toDF("hash", "ref", "bytes")
-      .write.option("compression", "uncompressed")
-      .parquet(staging)
-  }
-
-  /** POINT blob append: ONE hash-sorted, drop-adjacent file. Its dedup
-    * probe runs in the same task, by hash: each batch of new hashes reads
-    * only the `hash` column of the chunk files whose range can hold one
-    * (`ChunkBlobReader.storedHashes`), and never the per-JVM blob cache —
-    * a cached blob may already be vacuumed from the store. */
-  private def appendBlobsPoint(merged: DataFrame, staging: String,
-      ranged: Broadcast[Array[(String, String, String)]]): Unit = {
-    val hconfBc = StoreFs.broadcastConf()
-    merged.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-      .coalesce(1).sortWithinPartitions("hash")
-      .as[(String, Long, Array[Byte])]
-      .mapPartitions { it =>
-        StoreFs.installExecutorConf(hconfBc.value)
-        SparkVersionWriter.dropAdjacent(it).grouped(ChunkBlobReader.OrTreeLimit)
-          .flatMap { batch =>
-            val hs = batch.iterator.map(_._1).toSet
-            val stored = ChunkBlobReader.storedHashes(
-              ChunkFileScope.filesFor(ranged.value, hs.iterator), hs)
-            batch.iterator.filterNot(r => stored.contains(r._1))
-          }
-      }
       .toDF("hash", "ref", "bytes")
       .write.option("compression", "uncompressed")
       .parquet(staging)
@@ -2800,6 +2876,137 @@ object SparkVersionWriter {
   private[spark] type Merged = (String, Array[Long], String, Array[Byte],
     Long, Option[Long], Option[Long], Option[Long], Option[Double],
     Option[Double], Long, Long, String)
+
+  /** One slab row: (start, stop, raw big-endian bytes, seq). */
+  private[spark] type SlabRow = (Array[Long], Array[Long], Array[Byte], Long)
+
+  /** The writer's one slab → fragment rule: a slab row clipped to each
+    * chunk it covers, its seq offset into the pass's `seqBase`. The range
+    * and task placements run it in tasks, the driver placement in-process. */
+  private[spark] final class Shredder(metaJson: String, varN: String,
+      seqBase: Long) extends Serializable {
+    @transient private lazy val meta = DatasetMeta.fromJson(metaJson)
+
+    def apply(row: SlabRow): Iterator[Frag] = {
+      val (start, stop, bytes, seq) = row
+      // the per-call seq space is 20 bits (seqBase | seq); a larger seq
+      // would bleed into a LATER call's range and corrupt cross-call
+      // last-writer-wins ordering — fail the write instead
+      if (seq < 0L || seq >= (1L << 20))
+        throw new IllegalArgumentException(
+          s"slab seq $seq outside [0, 2^20): one writeRows call is " +
+            "limited to 2^20 slab rows — split the write into batches")
+      val slabSlice = Slice(start.toVector, stop.toVector)
+      val slab = Slab(meta.dtype(varN), slabSlice, bytes)
+      val grid = meta.chunkGridSlice(varN)
+      ChunkGrid.toChunkCoordinates(slabSlice, grid).iterator.map { coord =>
+        val clipped = slab.intersectWith(ChunkGrid.fromChunkCoordinate(grid, coord))
+        (SparkStore.coordKey(coord), coord.toArray, seqBase + seq,
+          clipped.slice.start.toArray, clipped.slice.stop.toArray, clipped.bytes)
+      }
+    }
+  }
+
+  /** Columns of a blob part file, as a Spark write of the chunk rows
+    * declares them. */
+  private[spark] val blobFileSchema = StructType(Seq(
+    StructField("hash", StringType), StructField("ref", LongType, nullable = false),
+    StructField("bytes", BinaryType)))
+
+  /** Columns of an index part file — `SparkStore.indexSchema` without the
+    * (var, version) partition columns — as a Spark write of the index rows
+    * declares them. */
+  private[spark] val indexFileSchema = StructType(Seq(
+    StructField("seq", LongType, nullable = false),
+    StructField("coordKey", StringType),
+    StructField("coord", ArrayType(LongType, containsNull = false)),
+    StructField("hash", StringType),
+    StructField("stats", StructType(SparkStore.statsSchema.fields.map(f =>
+      if (f.name == "cnt" || f.name == "nan") f.copy(nullable = false) else f)),
+      nullable = false),
+    StructField("baseSeq", LongType, nullable = false),
+    StructField("baseHash", StringType),
+    StructField("replacesHash", StringType)))
+
+  /** Where one point pass landed: its blob and index attempt dirs (under
+    * the pass's staging dirs) and each merged chunk's (coordKey, hash,
+    * baseSeq, baseHash). */
+  private[spark] final case class Landed(chunkDir: String, indexDir: String,
+      chunks: Array[(String, String, Long, String)])
+
+  /** A point pass's kernels over iterators, the same on the driver and in
+    * tasks: `merge` folds each chunk's fragments onto its base, `land`
+    * writes one blob part file and one index part file. Built on the
+    * driver; serializable, so the task placement ships it. */
+  private[spark] final case class PointPass(metaJson: String, varN: String,
+      vid: Long, seq: Long, bases: Map[String, (String, Long, String)],
+      replaces: Map[String, String], blobFiles: PartFileWriter,
+      indexFiles: PartFileWriter, chunkStaging: String, indexStaging: String) {
+    @transient private lazy val meta = DatasetMeta.fromJson(metaJson)
+
+    /** Merged chunks of coordKey-sorted fragments, each base blob fetched
+      * by hash in batches through only the chunk files of `ranged` whose
+      * hash range can hold it. A base whose blob is missing fails the
+      * write (`SparkPinnedReader.requireBlob`): merging onto fill would
+      * erase the chunk's untouched cells. */
+    def merge(ranged: Array[(String, String, String)],
+        frags: Iterator[Frag]): Iterator[Merged] =
+      ChunkFileScope.fetchByHash(ranged, runsByKey(frags))(
+          g => bases.get(g._1).map(_._1).orNull).map { case ((key, fs), bytes) =>
+        bases.get(key) match {
+          case Some((h, baseSeq, baseHash)) =>
+            SparkPinnedReader.requireBlob(key, h, bytes)
+            mergeChunk(meta, varN, key, fs, bytes, baseSeq, baseHash)
+          case None => mergeChunk(meta, varN, key, fs, null, -1L, "")
+        }
+      }
+
+    /** Writes hash-sorted `merged` chunks as ONE blob part file — adjacent
+      * duplicates dropped, then hashes the store already holds, found by
+      * `ChunkBlobReader.storedHashes` over `ranged`'s candidate files
+      * (never the per-JVM blob cache: a cached blob may already be
+      * vacuumed) — and ONE index part file under
+      * `var=<escaped>/version=<vid>/`. Each call writes into fresh attempt
+      * dirs, so a retried task never mixes files with a failed attempt. */
+    def land(ranged: Array[(String, String, String)],
+        merged: Iterator[Merged]): Landed = {
+      val attempt = java.util.UUID.randomUUID.toString
+      val chunkDir = StoreFs.child(chunkStaging, attempt)
+      val indexDir = StoreFs.child(indexStaging, attempt)
+      val partition = StoreFs.child(StoreFs.child(indexDir, "var=" +
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(varN)),
+        s"version=$vid")
+      val chunks = Array.newBuilder[(String, String, Long, String)]
+      scala.util.Using.resources(new PartFileWriter.Lazy(indexFiles, partition),
+          new PartFileWriter.Lazy(blobFiles, chunkDir)) { (index, blobs) =>
+        val blobRows = merged.map { m =>
+          index.write(indexRow(m))
+          chunks += ((m._1, m._3, m._12, m._13))
+          (m._3, -1L, m._4)
+        }
+        dropAdjacent(blobRows).grouped(ChunkBlobReader.OrTreeLimit).foreach { batch =>
+          val hs = batch.iterator.map(_._1).toSet
+          val stored = ChunkBlobReader.storedHashes(
+            ChunkFileScope.filesFor(ranged, hs.iterator), hs)
+          batch.foreach { case (h, ref, b) =>
+            if (!stored.contains(h))
+              blobs.write(new GenericInternalRow(Array[Any](UTF8String.fromString(h), ref, b)))
+          }
+        }
+      }
+      Landed(chunkDir, indexDir, chunks.result())
+    }
+
+    private def indexRow(m: Merged): InternalRow = {
+      def str(s: String) = if (s == null) null else UTF8String.fromString(s)
+      new GenericInternalRow(Array[Any](seq, str(m._1),
+        UnsafeArrayData.fromPrimitiveArray(m._2), str(m._3),
+        new GenericInternalRow(Array[Any](m._5, m._6.getOrElse(null),
+          m._7.getOrElse(null), m._8.getOrElse(null), m._9.getOrElse(null),
+          m._10.getOrElse(null), m._11)),
+        m._12, str(m._13), replaces.get(m._1).map(str).orNull))
+    }
+  }
 
   /** Adds `keys` to `into` until it holds more than `limit` keys. */
   private[spark] def addCapped(into: java.util.HashSet[String],

@@ -284,6 +284,24 @@ private[graft] object StoreFs {
     }
   }
 
+  /** Direct child FILES of `p` as (fullPath, name, length); empty when
+    * `p` is absent. */
+  def listFiles(p: String): Seq[(String, String, Long)] = {
+    val lp = localPath(p)
+    if (lp != null) {
+      if (!NFiles.exists(lp)) Seq.empty
+      else scala.util.Using.resource(NFiles.list(lp)) { s =>
+        s.iterator().asScala.filter(NFiles.isRegularFile(_))
+          .map(c => (c.toString, c.getFileName.toString, NFiles.size(c))).toSeq
+      }
+    } else {
+      val (f, hp) = fs(p)
+      if (!f.exists(hp)) Seq.empty
+      else f.listStatus(hp).toSeq.filter(_.isFile)
+        .map(s => (s.getPath.toString, s.getPath.getName, s.getLen))
+    }
+  }
+
   /** Every FILE under `p`, recursive, as full paths (empty when absent). */
   def filesUnder(p: String): Seq[String] = {
     val lp = localPath(p)

@@ -3,7 +3,7 @@ package graft.spark.source
 import graft.core._
 import graft.filters.FilterChain
 import graft.meta.{DatasetMeta, VariableDef}
-import graft.spark.{SparkPinnedReader, SparkStore, StoreFs}
+import graft.spark.{PointKeys, SparkPinnedReader, SparkStore, StoreFs}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1029,10 +1029,12 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
   @volatile private var resolvedMemo: ((Slice, Option[Long]),
     Map[String, (String, SlabStats)]) = _
 
-  /** (coordKey → (hash, stats)) resolved driver-side — callers are bounded
-    * by PointLookupThreshold / ChunkedMaxChunks. With a `prefix` (the
+  /** (coordKey → (hash, stats)) collected to the driver by the point
+    * resolve (`SparkStore.resolvedPointsPinned`: in-process or in one job,
+    * by `GraftScan.onDriver`) — callers are bounded by
+    * PointLookupThreshold / ChunkedMaxChunks. With a `prefix` (the
     * limit-pushdown walk: the window's first `prefix` linear chunks) the
-    * index scan is pre-filtered to that prefix's bounding box, NOT the
+    * resolve keeps only that prefix's bounding box, NOT the
     * whole window — a LIMIT against a petabyte variable must not collect
     * its full resolved index.
     *
@@ -1048,15 +1050,15 @@ private[spark] class GraftScan(r: Resolved, request0: Slice, empty: Boolean,
     val hit = resolvedMemo
     if (hit != null && hit._1 == key) return hit._2
     val w = window
-    val filt = prefix match {
+    val keys = prefix match {
       case Some(k) =>
         val cs = (0L until k).map(w.coordOf)
-        coordFilter(w.lo.indices.map(i => cs.map(_(i)).min),
+        PointKeys.Box(w.lo.indices.map(i => cs.map(_(i)).min),
           w.lo.indices.map(i => cs.map(_(i)).max))
-      case None => coordFilter(w.lo.toSeq, w.hi.toSeq)
+      case None => PointKeys.Box(w.lo.toSeq, w.hi.toSeq)
     }
     GraftScan.pointResolves.incrementAndGet()
-    val resolved = r.store.resolvedPointsPinned(r.dataset, r.variable, r.meta, filt)
+    val resolved = r.store.resolvedPointsPinned(r.dataset, r.variable, r.meta, keys)
       .map { case (k, (h, st)) => k -> (h, GraftScan.statsOf(st)) }
     resolvedMemo = (key, resolved)
     resolved
@@ -1226,6 +1228,22 @@ private[spark] object GraftScan {
     * `SparkPinnedReader`'s getSlice / streamChunks / explodedMulti — and
     * for every base-resolving write (`SparkVersionWriter`). */
   val PointLookupThreshold = 1024L
+
+  /** The byte half of the point placement rule: see [[onDriver]]. */
+  val DriverPointBytes: Long = 16L << 20
+
+  /** Placement of a point plan (a resolve, a getSlice drain, a commit):
+    * in-process on the driver when it covers at most
+    * [[PointLookupThreshold]] chunks and at most `maxBytes` (default
+    * [[DriverPointBytes]]) of input, else in Spark tasks. Both placements
+    * run the same kernels; only the driver's memory and a single
+    * thread's throughput bound the first. */
+  def onDriver(chunks: Long, bytes: Long, maxBytes: Long = DriverPointBytes): Boolean =
+    chunks <= PointLookupThreshold && bytes <= maxBytes
+
+  /** Decoded bytes of one chunk of `varName`. */
+  def chunkBytes(meta: DatasetMeta, varName: String): Long =
+    meta.chunkGridSlice(varName).step.product * meta.dtype(varName).size
 
   /** Point resolves run by `GraftScan` plans (per JVM, monotonic) — the
     * observable the per-scan resolve memo is pinned on. */
@@ -1593,7 +1611,6 @@ private[source] object GraftMicroBatchStream {
 /** Executor-side reader for scan-manifest buckets. */
 private[source] object ScanManifestReader {
   import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.GroupReadSupport
 
   private def foreachRow(files: Array[String])(f: Group => Unit): Unit = {
@@ -1602,9 +1619,7 @@ private[source] object ScanManifestReader {
     // scheme may need driver-session spark.hadoop.* settings to resolve
     val conf = ChunkBlobReader.sharedConf
     files.foreach { file =>
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file))
-        .withConf(conf).build()
+      val reader = ChunkBlobReader.groupReader(new GroupReadSupport(), file, conf).build()
       try {
         var g = reader.read()
         while (g != null) { f(g); g = reader.read() }
@@ -1648,6 +1663,7 @@ private[source] object ScanManifestReader {
   * fall back to one min/max range predicate with exact membership checked
   * against the in-memory wanted set. */
 private[spark] object ChunkBlobReader {
+  import org.apache.parquet.example.data.Group
   import org.apache.parquet.filter2.compat.FilterCompat
   import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
   import org.apache.parquet.hadoop.ParquetReader
@@ -1708,9 +1724,10 @@ private[spark] object ChunkBlobReader {
   private[spark] def footerRange(f: String,
       conf: org.apache.hadoop.conf.Configuration): Option[(String, String)] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      // options from `conf`: the one-argument open reads them from a fresh
+      // Configuration, which re-parses the Hadoop default resources
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile(f, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try {
         val blocks = r.getFooter.getBlocks.asScala
         val ranges = blocks.flatMap { b =>
@@ -1839,9 +1856,7 @@ private[spark] object ChunkBlobReader {
     candidates.foreach { f =>
       if (out.size < wanted.size) {
         blobFilesOpened.incrementAndGet()
-        val reader = ParquetReader
-          .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(f))
-          .withConf(conf)
+        val reader = groupReader(new GroupReadSupport(), f, conf)
           .withFilter(FilterCompat.get(pred))
           .build()
         try {
@@ -1876,9 +1891,7 @@ private[spark] object ChunkBlobReader {
     val pred = hashFilter(wanted.toArray.sorted)
     files.foreach { f =>
       if (found.size < wanted.size) {
-        val reader = ParquetReader
-          .builder(new HashColumnReadSupport, new org.apache.hadoop.fs.Path(f))
-          .withConf(sharedConf)
+        val reader = groupReader(new ColumnsReadSupport(Seq("hash")), f, sharedConf)
           .withFilter(FilterCompat.get(pred))
           .build()
         try {
@@ -1894,15 +1907,40 @@ private[spark] object ChunkBlobReader {
     found.toSet
   }
 
-  /** Projects a chunk file onto its `hash` column, whatever the file's
-    * declared repetition of it. */
-  private final class HashColumnReadSupport extends GroupReadSupport {
+  /** A record reader builder for part file `f` under `conf`. Not
+    * `ParquetReader.builder(readSupport, path)`: that builder first reads
+    * its options from a fresh `new Configuration()`, which re-parses the
+    * Hadoop default XML resources on every call — milliseconds per file
+    * opened, whatever conf `withConf` later sets. */
+  private[spark] def groupReader(readSupport: GroupReadSupport, f: String,
+      conf: org.apache.hadoop.conf.Configuration): ParquetReader.Builder[Group] =
+    new ParquetReader.Builder[Group](inputFile(f, conf),
+        new org.apache.parquet.conf.HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport: GroupReadSupport = readSupport
+    }
+
+  /** Part file `f` to read: through java.nio when its path is
+    * scheme-less (as `StoreFs` reads it), else through its Hadoop
+    * filesystem under `conf`. */
+  private[spark] def inputFile(f: String,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.parquet.io.InputFile =
+    StoreFs.localPath(f) match {
+      case null => org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), conf)
+      case local => new org.apache.parquet.io.LocalInputFile(local)
+    }
+
+  /** Projects a part file onto those of `columns` it has, whatever the
+    * file's declared repetition of them. */
+  private[spark] final class ColumnsReadSupport(columns: Seq[String])
+      extends GroupReadSupport {
     override def init(conf: org.apache.hadoop.conf.Configuration,
         keyValueMetaData: java.util.Map[String, String],
         fileSchema: org.apache.parquet.schema.MessageType)
         : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
       new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
         new org.apache.parquet.schema.MessageType(fileSchema.getName,
-          fileSchema.getType(fileSchema.getFieldIndex("hash"))))
+          columns.filter(fileSchema.containsField)
+            .map(c => fileSchema.getType(fileSchema.getFieldIndex(c))).asJava))
   }
 }

@@ -76,4 +76,34 @@ class InstrumentSpec extends AnyFunSuite {
         "store.vacuum" -> 1.0))
     } finally Instrument.disable()
   }
+
+  test("the point resolve timer counts one per resolve when enabled, none " +
+      "when disabled") {
+    val spark = SparkTestSession.spark
+    Instrument.disable()
+    Instrument.reset()
+    val meta = DatasetMeta(Map("x" -> 16L), Map("x" -> 4L),
+      Map("v" -> VariableDef("int", Vector("x"), 0.0)))
+    val root = java.nio.file.Files.createTempDirectory("graft-resolve-timer").toString
+    val store = new graft.spark.SparkStore(spark, root)
+    store.create("ds")
+    val w = store.addVersion("ds", meta)
+    w.write("v", Seq(Slab.fromDoubles(DType.INT, Slice(Seq(0L), Seq(16L)),
+      (0 until 16).map(_.toDouble))))
+    val vid = w.finishVersion()
+    // one point resolve each: a getSlice and a DSv2 window read
+    def reads(): Unit = {
+      store.reader("ds").onVersion(vid).getSlice("v", Slice(Seq(2L), Seq(9L)))
+      spark.read.format("graft").option("root", root).option("dataset", "ds")
+        .option("variable", "v").load().filter("x < 6").collect()
+      ()
+    }
+    reads()
+    assert(!Instrument.snapshot.contains("store.resolvePoints"))
+    Instrument.enable(spark)
+    try {
+      reads()
+      assert(Instrument.snapshot("store.resolvePoints")("count") == 2.0)
+    } finally Instrument.disable()
+  }
 }

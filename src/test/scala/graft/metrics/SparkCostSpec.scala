@@ -34,4 +34,39 @@ class SparkCostSpec extends AnyFunSuite {
     assert(e.getMessage == "boom")
     assert(SparkCost.measure(spark)(spark.range(3).collect()).jobs.size == 1)
   }
+
+  test("measure counts its own job group only: another thread's job is left " +
+      "out, an AQE aggregate's query-stage jobs are in with the description") {
+    val sc = spark.sparkContext
+    def aggregate(): Unit = {
+      spark.range(0, 100000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count()
+        .collect()
+      ()
+    }
+    val alone = SparkCost.measure(spark)(aggregate()).jobs.size
+    // AQE runs the shuffle map stage as a job of its own
+    assert(alone >= 2, s"$alone jobs")
+    // a thread started before `measure` runs its job inside the body
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val other = new Thread(() => {
+      go.await()
+      sc.parallelize(1 to 1000, 2).count()
+      ()
+    })
+    other.start()
+    sc.setJobDescription("aggregate under test")
+    try {
+      val cost = SparkCost.measure(spark) {
+        go.countDown()
+        other.join()
+        aggregate()
+      }
+      assert(cost.jobs.size == alone, cost.report())
+      assert(cost.jobs.forall(_.description == "aggregate under test"), cost.report())
+      assert(cost.totals.tasks > 0)
+      // the caller's local properties are back
+      assert(sc.getLocalProperty("spark.job.description") == "aggregate under test")
+      assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+    } finally sc.setJobDescription(null)
+  }
 }

@@ -3,14 +3,15 @@ package graft.spark
 import graft.SparkTestSession
 import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
+import graft.spark.source.GraftScan
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one-stage point resolve (`resolvedPointsPinned`: per-task winners,
-  * reduced on the driver) picks the same (hash, stats) per coordinate as
-  * the grouped resolve (`resolvedIndexPinned`), under every admissible-
-  * set rule and tie-break. */
+/** The point resolve (`resolvedPointsPinned`: per-file winners read by
+  * `PointIndexReader`, on the driver or in tasks) picks the same (hash,
+  * stats) per coordinate as the grouped resolve (`resolvedIndexPinned`),
+  * in both placements, under every admissible-set rule and tie-break. */
 class PointResolveSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -29,17 +30,33 @@ class PointResolveSpec extends AnyFunSuite {
     Slab.empty(DType.LONG, Slice(Seq(lo), Seq(hi)), v)
 
   /** Both resolves at `vid` over the whole variable and over a window
-    * envelope, compared per coordinate; returns the full point resolve. */
+    * envelope, compared per coordinate, with the point resolve on the
+    * driver and in tasks (a zero byte bound); returns the full point
+    * resolve. */
   private def assertParity(store: SparkStore, vid: Long): Map[String, (String, Row)] = {
     val pinned = store.metadata("d", vid)
     def grouped(f: org.apache.spark.sql.Column) =
       store.resolvedIndexPinned("d", "v", pinned, coordFilter = f)
         .select("coordKey", "hash", "stats").collect()
         .map(r => r.getString(0) -> (r.getString(1), r.getStruct(2))).toMap
-    Seq(lit(true), col("coord")(0).between(2L, 5L)).map { f =>
-      val point = store.resolvedPointsPinned("d", "v", pinned, f)
-      assert(point == grouped(f), s"resolve parity at version $vid, filter $f")
-      point
+    Seq(lit(true) -> PointKeys.Box(Seq(0L), Seq(7L)),
+        col("coord")(0).between(2L, 5L) -> PointKeys.Box(Seq(2L), Seq(5L))).map {
+      case (f, keys) =>
+        val expected = grouped(f)
+        var tasksJobs = -1
+        val Seq(onDriver, inTasks) = Seq(GraftScan.DriverPointBytes, 0L).map { bound =>
+          var point: Map[String, (String, Row)] = null
+          val jobs = SparkTestSession.jobsDuring {
+            point = store.resolvedPointsPinned("d", "v", pinned, keys, bound)
+          }
+          if (bound == 0L) tasksJobs = jobs
+          else assert(jobs == 0, s"the driver placement ran $jobs job(s)")
+          point
+        }
+        assert(tasksJobs == 1, s"the task placement ran $tasksJobs job(s)")
+        assert(onDriver == expected, s"driver resolve parity at version $vid, filter $f")
+        assert(inTasks == expected, s"task resolve parity at version $vid, filter $f")
+        onDriver
     }.head
   }
 
@@ -104,7 +121,7 @@ class PointResolveSpec extends AnyFunSuite {
     store.compact("d")
     store.expireHistory("d")
     val e = intercept[IllegalStateException] {
-      store.resolvedPointsPinned("d", "v", pinned, lit(true))
+      store.resolvedPointsPinned("d", "v", pinned, PointKeys.Box(Seq(0L), Seq(7L)))
     }
     assert(e.getMessage.contains("expired"), e.getMessage)
   }

@@ -6,6 +6,7 @@ import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.source.GraftScan
 import graft.testfs.MockObjectStoreFileSystem
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -44,6 +45,17 @@ class PointWriteSpec extends AnyFunSuite {
   private def sliceAt(s: SparkStore, vid: Long): Array[Byte] =
     s.reader("d").onVersion(vid).getSlice("v", all).bytes
 
+  /** `slabs` as slab rows, in a frame the driver holds (a LocalRelation,
+    * as `write(Seq[Slab])` builds) or in a distributed one. */
+  private def frame(slabs: Seq[Slab], local: Boolean): DataFrame = {
+    import spark.implicits._
+    val rows = slabs.zipWithIndex.map { case (s, i) =>
+      (s.slice.start.toArray, s.slice.stop.toArray, s.bytes, i.toLong) }
+    (if (local) spark.createDataset(rows)
+      else spark.createDataset(spark.sparkContext.parallelize(rows, 2)))
+      .toDF("start", "stop", "bytes", "seq")
+  }
+
   private def resolvedAt(s: SparkStore, vid: Long) =
     s.resolvedIndexPinned("d", "v", s.metadata("d", vid))
       .select("coordKey", "hash", "stats").collect()
@@ -70,23 +82,40 @@ class PointWriteSpec extends AnyFunSuite {
     val rangeJobs = jobsDuring(wr.write("v", Seq(a, b)))
     val r2 = wr.finishVersion()
 
-    val (point, p1) = seeded(tmpRoot())
-    val wp = point.addVersion("d", grid)
-    val pointJobs = Seq(a, b).map(s => jobsDuring(wp.write("v", Seq(s))))
-    val p2 = wp.finishVersion()
-    // the two plans really ran: the point plan's job count is fixed and
-    // below the range plan's
-    info(s"Spark jobs per write: point $pointJobs, range $rangeJobs")
-    assert(pointJobs.forall(_ < rangeJobs), s"point $pointJobs, range $rangeJobs")
+    // the same two ≤ threshold writes, from slabs the driver holds (run on
+    // the driver) and from a distributed frame (point-planned in tasks)
+    def pointStore(local: Boolean) = {
+      val (st, v1) = seeded(tmpRoot())
+      val w = st.addVersion("d", grid)
+      val jobs = Seq(a, b).map(s => jobsDuring(w.writeRows("v", frame(Seq(s), local))))
+      (st, v1, w.finishVersion(), jobs)
+    }
+    val (driver, d1, d2, driverJobs) = pointStore(local = true)
+    val (tasks, t1, t2, tasksJobs) = pointStore(local = false)
+    // the three plans really ran: the driver runs no job, the task-placed
+    // point plan fewer than the range plan
+    info(s"Spark jobs per write: driver $driverJobs, tasks $tasksJobs, range $rangeJobs")
+    assert(driverJobs.forall(_ == 0), s"driver $driverJobs")
+    assert(tasksJobs.forall(j => j > 0 && j < rangeJobs), s"tasks $tasksJobs, range $rangeJobs")
 
-    assert(java.util.Arrays.equals(sliceAt(range, r1), base.bytes))
-    assert(java.util.Arrays.equals(sliceAt(point, p1), base.bytes))
-    assert(java.util.Arrays.equals(sliceAt(range, r2), expected.bytes))
-    assert(java.util.Arrays.equals(sliceAt(point, p2), expected.bytes))
-    assert(resolvedAt(range, r1) == resolvedAt(point, p1))
-    val resolved = resolvedAt(point, p2)
+    // getSlice on both sides of its placement bound: the whole variable
+    // (1,600 covering chunks, drained in a job) and a 3 × 3-chunk window
+    // (drained on the driver)
+    val window = Slice(Seq(37L, 37L), Seq(43L, 43L))
+    def windowAt(s: SparkStore, vid: Long) =
+      s.reader("d").onVersion(vid).getSlice("v", window).bytes
+    for ((s, v1, v2) <- Seq((range, r1, r2), (driver, d1, d2), (tasks, t1, t2))) {
+      assert(java.util.Arrays.equals(sliceAt(s, v1), base.bytes))
+      assert(java.util.Arrays.equals(sliceAt(s, v2), expected.bytes))
+      assert(java.util.Arrays.equals(windowAt(s, v2),
+        expected.intersectWith(window).bytes))
+    }
+    val resolved = resolvedAt(driver, d2)
     assert(resolved.size == 1600)
-    assert(resolvedAt(range, r2) == resolved)
+    for ((s, v1, v2) <- Seq((range, r1, r2), (tasks, t1, t2))) {
+      assert(resolvedAt(s, v1) == resolvedAt(driver, d1))
+      assert(resolvedAt(s, v2) == resolved)
+    }
   }
 
   test("a shared writer that loses > threshold chunks to a co-writer " +
@@ -147,29 +176,134 @@ class PointWriteSpec extends AnyFunSuite {
     assert(narrow.contains(SparkStore.coordKey(Vector(20L, 39L))))
   }
 
-  test("an 8-chunk update over existing data commits in at most 8 Spark jobs") {
-    val cube = DatasetMeta(
-      dimensions = Map("x" -> 30L, "y" -> 30L, "z" -> 30L),
-      chunkDimensions = Map("x" -> 10L, "y" -> 10L, "z" -> 10L),
-      variables = Map("v" -> VariableDef("short", Vector("x", "y", "z"), -3.0)))
-    def cells(lo: Long, hi: Long)(f: (Long, Long, Long) => Double) =
-      Slab.fromDoubles(DType.SHORT, Slice(Seq(lo, lo, lo), Seq(hi, hi, hi)),
-        for (x <- lo until hi; y <- lo until hi; z <- lo until hi) yield f(x, y, z))
+  private val cube = DatasetMeta(
+    dimensions = Map("x" -> 30L, "y" -> 30L, "z" -> 30L),
+    chunkDimensions = Map("x" -> 10L, "y" -> 10L, "z" -> 10L),
+    variables = Map("v" -> VariableDef("short", Vector("x", "y", "z"), -3.0)))
+
+  private def cells(lo: Long, hi: Long)(f: (Long, Long, Long) => Double) =
+    Slab.fromDoubles(DType.SHORT, Slice(Seq(lo, lo, lo), Seq(hi, hi, hi)),
+      for (x <- lo until hi; y <- lo until hi; z <- lo until hi) yield f(x, y, z))
+
+  private def cubeStore(): SparkStore = {
     val s = new SparkStore(spark, tmpRoot())
     s.create("d")
     val w1 = s.addVersion("d", cube)
     w1.write("v", Seq(cells(0, 30)((x, y, z) => (x + y + z).toDouble)))
     w1.finishVersion()
-    // an unaligned 10³ box: 2 chunks per axis
-    val upd = cells(5, 15)((x, y, z) => (x * y - z).toDouble)
-    val w2 = s.addVersion("d", cube)
-    var v2 = -1L
-    val jobs = jobsDuring { w2.write("v", Seq(upd)); v2 = w2.finishVersion() }
-    info(s"$jobs Spark jobs")
-    assert(jobs <= 8, s"$jobs jobs")
-    val got = s.reader("d").onVersion(v2)
-      .getSlice("v", Slice(Seq(5L, 5L, 5L), Seq(15L, 15L, 15L)))
-    assert(java.util.Arrays.equals(got.bytes, upd.bytes))
+    s
+  }
+
+  test("an 8-chunk update commits in 0 jobs from local slabs, <= 4 from a frame") {
+    val s = cubeStore()
+    // unaligned 10³ boxes: 2 chunks per axis
+    for ((local, lo, bound) <- Seq((true, 5L, 0), (false, 12L, 4))) {
+      val upd = cells(lo, lo + 10)((x, y, z) => (x * y - z + lo).toDouble)
+      val w = s.addVersion("d", cube)
+      var v = -1L
+      val jobs = jobsDuring {
+        w.writeRows("v", frame(Seq(upd), local))
+        v = w.finishVersion()
+      }
+      info(s"${if (local) "local slabs" else "distributed frame"}: $jobs Spark jobs")
+      assert(jobs <= bound, s"$jobs jobs")
+      val got = s.reader("d").onVersion(v)
+        .getSlice("v", Slice(Seq(lo, lo, lo), Seq(lo + 10, lo + 10, lo + 10)))
+      assert(java.util.Arrays.equals(got.bytes, upd.bytes))
+    }
+  }
+
+  test("a missing base blob fails a point commit in both placements, and an " +
+      "expired pin fails a driver-drained getSlice, with the same errors") {
+    val s = cubeStore()
+    val pinned = s.reader("d").onLastVersion()
+    val upd = cells(5, 15)((x, y, z) => (x - y * z).toDouble)
+    // the base's blobs are lost: no placement may merge onto fill
+    new java.io.File(s.chunksDir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => assert(f.delete()))
+    SparkStore.clearBlobCache()
+    for (local <- Seq(true, false)) {
+      val e = intercept[IllegalStateException] {
+        s.addVersion("d", cube).writeRows("v", frame(Seq(upd), local))
+      }
+      assert(e.getMessage.contains("missing from the chunk store"), e.getMessage)
+    }
+    // an expired pin: the resolve under the getSlice refuses
+    // (a REPLACE version: it merges onto fill, not onto the lost blobs)
+    val w = s.addReplaceVersion("d", cube, "v")
+    w.write("v", Seq(Slab.empty(DType.SHORT, Slice(Seq(0L, 0L, 0L), Seq(30L, 30L, 30L)), 1.0)))
+    w.finishVersion()
+    s.compact("d")
+    s.expireHistory("d")
+    val e = intercept[IllegalStateException] {
+      pinned.getSlice("v", Slice(Seq(0L, 0L, 0L), Seq(5L, 5L, 5L)))
+    }
+    assert(e.getMessage.contains("expired"), e.getMessage)
+  }
+
+  test("driver-written files read like task-written ones: range DSv2 read, " +
+      "VersionDiff, streaming tail, compact, expireHistory and vacuum") {
+    // two stores, one history: updates from local slabs (driver-placed)
+    // and the same updates from distributed frames (task-placed)
+    val updates = Seq(box(3, 31, 5, 27)((x, y) => (x - 2 * y).toDouble),
+      box(20, 50, 11, 13)((x, y) => (x * y).toDouble),
+      box(0, 80, 60, 62)((x, y) => (x + 5000).toDouble))
+    def build(local: Boolean) = {
+      val (st, v1) = seeded(tmpRoot())
+      val vs = v1 +: updates.map { u =>
+        val w = st.addVersion("d", grid)
+        val jobs = jobsDuring(w.writeRows("v", frame(Seq(u), local)))
+        assert(!local || jobs == 0, s"a local update ran $jobs job(s)")
+        w.finishVersion()
+      }
+      (st, vs)
+    }
+    val (drv, dv) = build(local = true)
+    val (tsk, tv) = build(local = false)
+    // every part file, Spark-written (the first version) or written in
+    // process (the updates), carries the same schema, metadata and codec
+    def footers(dir: String) = SparkStore.parquetFilesUnder(dir).toSeq.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), new org.apache.hadoop.conf.Configuration()))
+      try {
+        val md = r.getFooter
+        (md.getFileMetaData.getSchema.toString,
+          md.getFileMetaData.getKeyValueMetaData.toString,
+          md.getBlocks.get(0).getColumns.get(0).getCodec.toString)
+      } finally r.close()
+    }
+    for (dir <- Seq(drv.chunksDir, drv.indexDir("d"))) {
+      val fs = footers(dir)
+      assert(fs.size > 3 && fs.distinct.size == 1, fs.distinct.mkString("\n"))
+    }
+    def dsv2(s: SparkStore, vid: Long) = spark.read.format("graft")
+      .option("root", s.root).option("dataset", "d").option("variable", "v")
+      .option("version", vid.toString).load()
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    def diff(s: SparkStore, a: Long, b: Long) =
+      VersionDiff.diffCells(s, "d", "v", a, b).collect().map(_.toString).sorted.toSeq
+    def tail(s: SparkStore, a: Long, b: Long) =
+      s.resolvedIndexBetween("d", "v", a, b).select("coordKey", "hash", "stats")
+        .collect().map(_.toString).sorted.toSeq
+    val last = dsv2(drv, dv(3))
+    for (i <- 1 to 3) {
+      assert(dsv2(drv, dv(i)) == dsv2(tsk, tv(i)), s"DSv2 read at version #$i")
+      assert(diff(drv, dv(i - 1), dv(i)) == diff(tsk, tv(i - 1), tv(i)),
+        s"VersionDiff into version #$i")
+    }
+    assert(diff(drv, dv(0), dv(3)).nonEmpty)
+    assert(tail(drv, dv(0), dv(3)) == tail(tsk, tv(0), tv(3)))
+    assert(tail(drv, dv(1), dv(2)).size == 15 * 2)
+    // maintenance: checkpoint, expire, vacuum
+    val (dcp, tcp) = (drv.compact("d"), tsk.compact("d"))
+    assert(drv.expireHistory("d") == tsk.expireHistory("d"))
+    assert(drv.vacuum(0L) == tsk.vacuum(0L))
+    SparkStore.clearBlobCache()
+    assert(dsv2(drv, dcp) == dsv2(tsk, tcp))
+    assert(dsv2(drv, dcp) == last)
+    assert(resolvedAt(drv, dcp) == resolvedAt(tsk, tcp))
+    assert(java.util.Arrays.equals(sliceAt(drv, dcp), sliceAt(tsk, tcp)))
   }
 
   test("the point dedup probe never trusts the blob cache: content whose " +
