@@ -19,14 +19,17 @@ BENCHMARK.json. Then, per metric:
 
   rule   the claim rule: at least 10 pairs, the change better in at least
          nine of ten of them, and the medians' gap, in the better
-         direction, larger than the parent's interquartile range;
+         direction, larger than the parent's interquartile range; no
+         metric of a workload meets it when the change's runs fail a
+         larger share of their attempted operations than the parent's;
   bound  for end-to-end metrics, whether the change's median is worse than
          the parent's by more than the metric's BENCHMARK.json bound (a
          fraction of the parent's median).
 
 Only BENCHMARK.json (read from the change checkout) is read; nothing is
 written except the raw results with --out. The exit code is 1 when a run
-fails or answers wrongly, when an end-to-end metric is worse than its
+fails or answers wrongly, when the change fails a larger share of
+operations than the parent, when an end-to-end metric is worse than its
 bound, or when a --claim metric misses the rule.
 """
 import argparse
@@ -98,15 +101,33 @@ def run_once(checkout, workload, seed, secs, trace):
         if line.startswith("{"):
             last = line
     if last is None:
-        return {"correct": False, "failed": 1, "metrics": {},
+        return {"correct": False, "attempted": 1, "failed": 1, "metrics": {},
                 "exit": proc.returncode}
     result = json.loads(last)
     result["exit"] = proc.returncode
     return result
 
 
+def failures(runs, side):
+    """(failed, attempted) summed over one side's runs; side 1 is the
+    parent, 2 the change. A run that printed no result counts one failed
+    of one attempted (run_once)."""
+    failed = sum(r[side].get("failed", 0) for r in runs)
+    attempted = sum(r[side].get("attempted", 0) for r in runs)
+    return failed, attempted
+
+
+def fails_more(runs):
+    """True when the change fails a larger share of its attempted
+    operations than the parent."""
+    pf, pa = failures(runs, 1)
+    cf, ca = failures(runs, 2)
+    return cf * pa > pf * ca
+
+
 def report(workload, runs, dirs):
-    """runs: [(seed, parent result, change result)]. Returns summaries."""
+    """runs: [(seed, parent result, change result)]. Returns summaries,
+    their rule cleared when the change fails a larger share of operations."""
     names = sorted(set().union(*[set(p["metrics"]) & set(c["metrics"])
                                  for _, p, c in runs]))
     out = []
@@ -117,7 +138,13 @@ def report(workload, runs, dirs):
                  for _, p, c in runs
                  if n in p["metrics"] and n in c["metrics"]]
         out.append(summarize(n, pairs, *dirs[n]))
+    more = fails_more(runs)
+    for s in out:
+        s["rule"] = s["rule"] and not more
     print("== %s: %d pairs" % (workload, len(runs)))
+    print("failed/attempted ops: parent %d/%d, change %d/%d%s" % (
+        failures(runs, 1) + failures(runs, 2) +
+        (" -- the change fails a larger share: no gain counts" if more else "",)))
     print("%-36s %-34s %-34s %5s %5s %s" % (
         "metric", "parent q1/median/q3", "change q1/median/q3", "wins",
         "rule", "bound"))
@@ -164,6 +191,25 @@ def self_test():
             for i, (p, c) in enumerate(gain)]
     out = report("synthetic", runs, dirs)
     assert [s["metric"] for s in out] == ["op_ms"] and out[0]["rule"]
+    assert not fails_more(runs)
+    # the same gain with more of the change's operations failing: no rule
+    worse = [(i, dict(p, failed=0, attempted=100), dict(c, failed=2, attempted=100))
+             for i, p, c in runs]
+    assert fails_more(worse)
+    out = report("synthetic", worse, dirs)
+    assert not out[0]["rule"], out
+    # equal shares of failures leave the rule alone, and a fail-free
+    # change beats a failing parent
+    same = [(i, dict(p, failed=1, attempted=50), dict(c, failed=2, attempted=100))
+            for i, p, c in runs]
+    assert not fails_more(same) and report("synthetic", same, dirs)[0]["rule"]
+    fewer = [(i, dict(p, failed=3, attempted=100), dict(c, failed=0, attempted=100))
+             for i, p, c in runs]
+    assert not fails_more(fewer)
+    # a run that printed nothing counts as a failed operation
+    empty = [(0, {"failed": 0, "attempted": 10},
+              {"correct": False, "attempted": 1, "failed": 1, "metrics": {}})]
+    assert fails_more(empty)
     print("self-test ok")
     return 0
 
@@ -209,6 +255,8 @@ def main(argv):
             runs.append((seed, got["parent"], got["change"]))
         out = report(w, runs, dirs)
         raw[w] = {"runs": runs, "summary": out}
+        if fails_more(runs):
+            ok = False
         for s in out:
             if s["worse_than_bound"]:
                 ok = False

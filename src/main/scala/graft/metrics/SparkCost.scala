@@ -6,13 +6,13 @@ import org.apache.spark.sql.graft.ListenerBusDrain
 import scala.collection.mutable
 
 /** Spark's own cost of a body of work — the one SparkListener of the
-  * project. It records every job of its job group (wall time and
+  * project. It records every job carrying its job tag (wall time and
   * description) and, per stage of those jobs, executor run and CPU time,
   * tasks, input bytes, shuffle read and write bytes, memory and disk
   * spill, and GC time. Use it through [[SparkCost.measure]], which scopes
   * it to one body and drains the listener bus before reading, so the
   * totals are complete on return. */
-final class SparkCost private (group: String) extends SparkListener {
+final class SparkCost private (tag: String) extends SparkListener {
   import SparkCost._
 
   private val jobsById = mutable.HashMap.empty[Int, Job]
@@ -23,7 +23,7 @@ final class SparkCost private (group: String) extends SparkListener {
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val props = Option(e.properties)
-    if (props.exists(p => p.getProperty(GroupKey) == group)) {
+    if (props.exists(p => Option(p.getProperty(TagsKey)).exists(_.split(',').contains(tag)))) {
       val desc = props
         .flatMap(p => Option(p.getProperty(DescriptionKey)))
         .filter(_.nonEmpty)
@@ -107,37 +107,37 @@ object SparkCost {
 
   private def firstLine(s: String): String = s.takeWhile(_ != '\n').take(80)
 
-  private val groups = new java.util.concurrent.atomic.AtomicLong()
+  private val tags = new java.util.concurrent.atomic.AtomicLong()
 
-  // the local properties `SparkContext.setJobGroup` sets, which `measure`
-  // saves and restores
-  private val GroupKey = "spark.jobGroup.id"
+  // the local properties holding a thread's job tags (comma-separated,
+  // as `SparkContext.addJobTag` keeps them) and its job description
+  private val TagsKey = "spark.job.tags"
   private val DescriptionKey = "spark.job.description"
-  private val InterruptKey = "spark.job.interruptOnCancel"
 
   /** Run `body` with a fresh SparkCost attached and return it once every
-    * event of the body's jobs has been delivered. The body runs in a
-    * fresh job group whose description is the caller's job description
-    * (or the group's name), so only jobs started from this thread — and
-    * from the threads it starts, such as adaptive execution's query-stage
-    * submissions, which inherit its local properties — are counted, and
-    * each carries that description. The caller's group, description and
-    * interrupt flag are restored afterwards. The bus is drained before
+    * event of the body's jobs has been delivered. The body runs with a
+    * fresh job tag added to the thread's tags and with the caller's job
+    * description (or the tag, when there is none), so only jobs started
+    * from this thread — and from the threads it starts, such as adaptive
+    * execution's query-stage submissions, which inherit its local
+    * properties — are counted, and each carries that description. A tag
+    * leaves the caller's job group in place, so `cancelJobGroup` still
+    * reaches the body's jobs. The tag is removed and the caller's
+    * description restored afterwards. The bus is drained before
     * attaching too, so earlier work's queued events stay out. */
   def measure(spark: SparkSession)(body: => Unit): SparkCost = {
     val sc = spark.sparkContext
-    val group = s"graft-cost-${groups.incrementAndGet()}"
-    val cost = new SparkCost(group)
-    val saved = Seq(GroupKey, DescriptionKey, InterruptKey)
-      .map(k => k -> sc.getLocalProperty(k))
+    val tag = s"graft-cost-${tags.incrementAndGet()}"
+    val cost = new SparkCost(tag)
+    val description = sc.getLocalProperty(DescriptionKey)
     ListenerBusDrain.drain(sc)
     sc.addSparkListener(cost)
-    sc.setJobGroup(group,
-      Option(sc.getLocalProperty(DescriptionKey)).getOrElse(group),
-      interruptOnCancel = false)
+    sc.addJobTag(tag)
+    sc.setJobDescription(Option(description).getOrElse(tag))
     try { body; ListenerBusDrain.drain(sc) }
     finally {
-      saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      sc.removeJobTag(tag)
+      sc.setJobDescription(description)
       sc.removeSparkListener(cost)
     }
     cost

@@ -2468,21 +2468,12 @@ final class SparkVersionWriter(store: SparkStore, name: String,
   }
 
   /** `slabRows`' rows when its optimized plan is a LocalRelation: rows
-    * the driver already holds, read straight from the relation — no job,
-    * and no query planned to read them. */
+    * the driver already holds. Collecting a local relation runs no job
+    * (`LocalTableScanExec.executeCollect` returns its rows directly). */
   private def localSlabRows(slabRows: DataFrame): Option[Array[SlabRow]] =
     slabRows.queryExecution.optimizedPlan match {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val types = lr.schema.fields.map(f => f.name -> f.dataType).toMap
-        def at(c: String) = lr.output.indexWhere(_.name == c)
-        val Seq(start, stop, bytes, seq) = Seq("start", "stop", "bytes", "seq").map(at)
-        val coords = Seq("start", "stop").map(types.get)
-        // the slab row types exactly; any other frame reads through Spark
-        if (coords.forall(_.contains(ArrayType(LongType, containsNull = false))) &&
-            types.get("bytes").contains(BinaryType) && types.get("seq").contains(LongType))
-          Some(lr.data.iterator.map(r => (r.getArray(start).toLongArray(),
-            r.getArray(stop).toLongArray(), r.getBinary(bytes), r.getLong(seq))).toArray)
-        else Some(slabRows.select("start", "stop", "bytes", "seq").as[SlabRow].collect())
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(slabRows.select("start", "stop", "bytes", "seq").as[SlabRow].collect())
       case _ => None
     }
 

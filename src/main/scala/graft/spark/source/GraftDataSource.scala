@@ -1229,7 +1229,14 @@ private[spark] object GraftScan {
     * for every base-resolving write (`SparkVersionWriter`). */
   val PointLookupThreshold = 1024L
 
-  /** The byte half of the point placement rule: see [[onDriver]]. */
+  /** The byte half of the point placement rule: see [[onDriver]]. A
+    * starting value, not a break-even. A one-off run on 4 cores (local[4])
+    * put the break-even of each path elsewhere: about 3 MiB of index files
+    * for the resolve, about 8 MiB of decoded chunks for a getSlice, and
+    * for a driver-held commit at least 30 MiB of weighed bytes (the
+    * largest size tried, 1,000 chunks); README "Scale design" has the
+    * numbers. No one value fits all three. Every benchmark op weighs
+    * under 0.5 MiB and runs on the driver. */
   val DriverPointBytes: Long = 16L << 20
 
   /** Placement of a point plan (a resolve, a getSlice drain, a commit):

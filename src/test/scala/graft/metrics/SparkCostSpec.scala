@@ -35,7 +35,7 @@ class SparkCostSpec extends AnyFunSuite {
     assert(SparkCost.measure(spark)(spark.range(3).collect()).jobs.size == 1)
   }
 
-  test("measure counts its own job group only: another thread's job is left " +
+  test("measure counts its own jobs only: another thread's job is left " +
       "out, an AQE aggregate's query-stage jobs are in with the description") {
     val sc = spark.sparkContext
     def aggregate(): Unit = {
@@ -67,6 +67,36 @@ class SparkCostSpec extends AnyFunSuite {
       // the caller's local properties are back
       assert(sc.getLocalProperty("spark.job.description") == "aggregate under test")
       assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+      assert(sc.getJobTags().isEmpty)
     } finally sc.setJobDescription(null)
+  }
+
+  test("measure leaves the caller's job group in place: cancelJobGroup " +
+      "still reaches the body's jobs") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller", interruptOnCancel = false)
+    try {
+      val canceller = new Thread(() => {
+        while (sc.statusTracker.getJobIdsForGroup("caller-group").isEmpty)
+          Thread.sleep(10)
+        sc.cancelJobGroup("caller-group")
+      })
+      canceller.start()
+      val cost = SparkCost.measure(spark) {
+        assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+        val e = intercept[org.apache.spark.SparkException] {
+          sc.parallelize(1 to 2, 2).map { i =>
+            val deadline = System.nanoTime() + 60L * 1000000000L
+            while (System.nanoTime() < deadline &&
+                !org.apache.spark.TaskContext.get().isInterrupted()) Thread.sleep(10)
+            i
+          }.count()
+        }
+        assert(e.getMessage.contains("cancel"), e.getMessage)
+      }
+      canceller.join()
+      assert(cost.jobs.size == 1, cost.report())
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+    } finally sc.clearJobGroup()
   }
 }
