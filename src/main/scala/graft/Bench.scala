@@ -1,29 +1,31 @@
 package graft
 
+import graft.metrics.SparkCost
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — prints ONE JSON line with per-query seconds.
   *
-  * Each entry is run SPARK_GRAFT_BENCH_REPS times (default 3) and the
-  * MEDIAN is reported; per-run numbers are kept under "runs" so a
-  * regression is distinguishable from single-run JIT/IO jitter (a 1.9×
-  * swing on an unchanged query was observed at n=1).
+  * Sampling. The suite runs as SPARK_GRAFT_BENCH_REPS (default 3)
+  * interleaved passes: pass p runs every entry once, so a transient
+  * machine stall touches at most one rep of each entry. The array engine
+  * suite ([[ArrayBench]]) runs the same number of write reps and read
+  * passes after the query passes. Every rep is timed inside
+  * [[graft.metrics.SparkCost.measure]], so it carries its own executor
+  * CPU and run time, jobs, stages and shuffle bytes; a failed rep records
+  * -1.0.
   *
-  * Stall robustness (round-3 bench artifact was poisoned by a
-  * noisy-neighbor window landing on one query's back-to-back reps —
-  * 44.6 s recorded for a 1.5 s scan):
-  *  - reps are INTERLEAVED: the whole suite runs as N passes, so a
-  *    machine stall touches at most one rep of each affected query and
-  *    the cross-pass median discards it;
-  *  - the median additionally rejects reps > StallX× (default 3×) the
-  *    per-query minimum as stall artifacts (raw runs stay in the JSON
-  *    for audit);
-  *  - when the whole run lands in a contention window (record would be
-  *    REFUSED), a bounded quiet-window RECOVERY waits for canary entries
-  *    to reproduce their floors, then resamples only the contended
-  *    entries; an internally-quiet resample is adopted symmetrically
-  *    (published whether faster or slower) so one invocation lands a
-  *    clean record whenever quiet time exists.
+  * Publication. Each entry publishes the plain upper median of its
+  * successful reps (-1.0 when every rep failed), with their min and max
+  * and the median rep's Spark cost in the full record. Nothing is
+  * discarded, rerun or resampled.
+  *
+  * Refusal. An entry is contended when its median rep took more than
+  * [[ContendedWallX]]× its fastest rep (the fastest over
+  * [[ContendedMinSec]]) while its executor CPU time stayed within
+  * [[ContendedCpuX]]× the fastest rep's: the extra wall time was not the
+  * query's own work. A run with more than [[MaxContended]] contended
+  * entries is not a record: it is written as BENCH_ATTEMPT_* beside the
+  * configured files, which keep the previous record.
   *
   * Two groups:
   *  - every SparkEntry query (array-fixture ingest is warmed first so
@@ -31,123 +33,133 @@ import org.apache.spark.sql.SparkSession
   *  - engine throughput benchmarks shaped like the reference's
   *    performance fixture (400×600×900 short, 30³ chunks ≈ 412 MiB raw,
   *    8400 chunks — /root/reference/resources/performance.json:1-19),
-  *    scaled by SPARK_GRAFT_BENCH_SCALE (default 1/8 volume locally).
+  *    scaled by SPARK_GRAFT_BENCH_SCALE (default 1.0, the full volume).
   */
 object Bench {
 
-  /** Stall-discard threshold, relative to the per-query minimum rep.
-    * Matches the spread-guard flag threshold (3×): the justification is
-    * the same — an unchanged query cannot legitimately swing 3× between
-    * passes of the same suite on the same data, so a rep over 3× the
-    * entry's own minimum is a machine stall, not the query. (Round 10
-    * kept these thresholds split — discard at 5×, flag at 3× — and two
-    * entries' records were set by contended reps at ~3.5× their min that
-    * the flag saw but the discard filter kept. A REAL regression raises
-    * the minimum too, so a uniformly-slower query is never masked.)
-    */
-  val StallX: Double =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_STALLX", "3.0").toDouble
+  /** Entries whose fastest rep is at most this many seconds are never
+    * contended: at that size JIT, GC and scheduling jitter are a large
+    * share of a rep, and such an entry cannot move the record's total. */
+  val ContendedMinSec = 0.3
 
-  /** Median over successful reps, after dropping stall artifacts: any rep
-    * more than `stallX`× the per-query minimum. The env-tunable
-    * [[StallX]] is the production default; the explicit overload exists
-    * so tests pin a threshold instead of inheriting the environment's.
-    */
-  def median(xs: Seq[Double]): Double = median(xs, StallX)
+  /** The median rep must exceed the fastest by this factor: the same
+    * plan on the same data ran at the fastest rep's time in this run, so
+    * a median half as slow again means most reps ran well below what the
+    * machine proved it can do. */
+  val ContendedWallX = 1.5
 
-  def median(xs: Seq[Double], stallX: Double): Double = {
-    val ok = xs.filter(_ >= 0)
-    if (ok.isEmpty) -1.0
-    else {
-      val kept = ok.filter(_ <= stallX * ok.min)
-      val s = kept.sorted
-      s(s.length / 2) // upper median: pessimistic for even n
+  /** ...and its executor CPU time must be at most this factor of the
+    * fastest rep's. Contention (CPU steal, a noisy neighbour) stretches
+    * wall time but not the query's own CPU time; a plan that really does
+    * more work in some reps (an adaptive join flip, a cold cache) raises
+    * both. The slack covers the CPU cost of cache misses under
+    * contention. */
+  val ContendedCpuX = 1.25
+
+  /** A run with more contended entries than this is refused: a few are
+    * the normal spread of a 200-entry suite, more mean the run sat in a
+    * contended window. */
+  val MaxContended = 3
+
+  /** One timed rep: wall seconds (-1.0 when it failed) and the Spark cost
+    * of the jobs it ran. */
+  final case class Rep(sec: Double, cpuSec: Double = 0.0, runSec: Double = 0.0,
+      jobs: Int = 0, stages: Int = 0, shuffleBytes: Long = 0L)
+
+  val Failed: Rep = Rep(-1.0, -1.0, -1.0, -1, -1, -1L)
+
+  /** Time `body` inside [[SparkCost.measure]]; the timer excludes the
+    * listener-bus drains around it. */
+  def timed(spark: SparkSession, name: String)(body: => Unit): Rep =
+    try {
+      var sec = 0.0
+      val cost = SparkCost.measure(spark) {
+        val t0 = System.nanoTime()
+        body
+        sec = (System.nanoTime() - t0) / 1e9
+      }
+      val t = cost.totals
+      Rep(sec, t.cpuMs / 1e3, t.runMs / 1e3, cost.jobs.size, cost.stages.size,
+        t.shuffleWriteBytes)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      Failed
+    }
+
+  /** Upper median of the successful (non-negative) values: pessimistic
+    * for even n; -1.0 when there is none. */
+  def median(xs: Seq[Double]): Double = medianRep(xs.map(Rep(_))).sec
+
+  /** The successful rep at the upper median, or [[Failed]]. */
+  def medianRep(reps: Seq[Rep]): Rep = {
+    val s = reps.filter(_.sec >= 0).sortBy(_.sec)
+    if (s.isEmpty) Failed else s(s.length / 2)
+  }
+
+  /** The contention test of the class doc, over one entry's reps. */
+  def contended(reps: Seq[Rep]): Boolean = {
+    val ok = reps.filter(_.sec >= 0)
+    ok.length >= 2 && {
+      val fastest = ok.minBy(_.sec)
+      val mid = medianRep(ok)
+      fastest.sec > ContendedMinSec && mid.sec > ContendedWallX * fastest.sec &&
+        mid.cpuSec <= ContendedCpuX * fastest.cpuSec
     }
   }
 
-  /** Symmetric acceptance rule for a quiet-window recovery resample: the
-    * fresh sample REPLACES a floor-contended entry's sample iff it is
-    * internally quiet (its own median sits at its own floor) — and then
-    * its median is published WHETHER FASTER OR SLOWER than the contended
-    * one. Acceptance looks only at internal spread, never direction:
-    * a VERIFIED-quiet window's sample is the best measurement available,
-    * so its median stands even when slower (honest regression, cold
-    * cache). Every published number remains the plain median of one
-    * concrete sample — all reps, the accepted quiet resample, or (for
-    * guard-grown samples only, see [[publishedMedian]]) the pre-guard
-    * main passes — with every raw rep retained in "runs" and the
-    * pre-recovery medians kept as metadata for audit. */
-  def acceptRecovery(recovery: Seq[Double], floorX: Double): Boolean = {
-    val ok = recovery.filter(_ >= 0)
-    // one surviving rep is "internally quiet" by definition (the floor
-    // test needs >= 2 points) — never let it replace a full sample
-    ok.length >= 2 && !floorContended(ok, floorX)
-  }
+  /** The contended entries' names, sorted. */
+  def contendedEntries(samples: collection.Map[String, Seq[Rep]]): Seq[String] =
+    samples.collect { case (k, v) if contended(v) => k }.toSeq.sorted
 
-  /** Machine-contention signature, independent of any baseline: the
-    * entry's (stall-filtered) median sits more than `floorX` above its
-    * OWN same-run floor — the machine demonstrably runs the identical
-    * plan at `min`, so a median 1.5× above it is a contended sample,
-    * not the query. Sub-`minSec` entries are exempt (JIT jitter; too
-    * small to move any record). */
-  def floorContended(reps: Seq[Double], floorX: Double,
-      minSec: Double = 0.3): Boolean = {
-    val ok = reps.filter(_ >= 0)
-    ok.length >= 2 && ok.min > minSec && median(ok) > floorX * ok.min
-  }
-
-  /** Publication rule for a GUARD-GROWN sample (round-17 verdict item):
-    * the contamination guard only fires on entries that LOOK slow, so
-    * its extra reps are taken in a window at least as suspect as the
-    * main passes — when the grown sample's median lands ABOVE the
-    * pre-guard one, the growth added contamination, not information
-    * (r17: q_arr_argmax pre-guard 1.55×, published 2.58× after the
-    * guard's reruns hit a worse window). Both medians summarize
-    * same-HEAD measurements of the identical plan, and each IS the
-    * median of one concrete sample (pre-guard = the main passes), so
-    * the smaller is published and both are logged (preGuardMedians +
-    * the minKept entry list ride every record). Scope: guard-grown
-    * samples only — an entry recovered through a VERIFIED-quiet
-    * resample publishes that resample's median as-is, faster or slower
-    * (see [[acceptRecovery]]); an all-failed grown sample (-1) stays
-    * a visible failure, never papered over by a pre-guard number. */
-  def publishedMedian(preGuard: Option[Double], grown: Double): Double =
-    preGuard match {
-      case Some(pg) if pg >= 0 && grown >= 0 && pg < grown => pg
-      case _ => grown
-    }
+  def refused(contendedEntries: Seq[String]): Boolean =
+    contendedEntries.size > MaxContended
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // floor of 1: the summary loop reads runs(name) for every entry, so a
-    // zero-pass run would crash instead of printing the JSON line
+    // floor of 1: every entry needs at least one rep for its median
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val cpus = GraftSession.cpus(32)
     val spark = GraftSession.local("graft-bench", defaultCpus = 32)
 
     // Warm up: fixture ingest + parquet footer caches, excluded from
     // timings. MUST NOT abort the run — a broken fixture voids only the
-    // q_arr entries (each then records -1.0 via its own try/catch), not
-    // the whole round's record (BENCH_r07 lost every number to an
-    // uncaught warm-up failure here).
+    // q_arr entries (each then records -1.0 on its own), not the whole
+    // round's record (BENCH_r07 lost every number to an uncaught warm-up
+    // failure here).
     try graft.queries.ArrayFixtures.get(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] array-fixture warm-up failed " +
         s"(q_arr entries will record -1.0): ${e.getMessage}")
     }
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try f catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}"); return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // Dev aid: SPARK_GRAFT_BENCH_ONLY=substr,substr runs a subset (full run when unset).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     def wanted(name: String) = only.forall(_.exists(name.contains))
-    val runs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val runs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Rep]]
+    def record(name: String, rep: Rep): Unit =
+      runs(name) = runs.getOrElse(name, Vector.empty[Rep]) :+ rep
     val entries = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => wanted(q._1))
+
+    // ANN serving path, measured separately: the index build is the
+    // expensive once-per-corpus pass (Lloyd + assignment over all N
+    // vectors); queries against the prebuilt index never re-scan the
+    // corpus. ivf_query should land ≪ q_pipe_knn_ivf (which rebuilds
+    // per run). verifyCorpus=false in the timed body: the fingerprint
+    // attestation is a once-per-batch pinning cost, not per-query — the
+    // build entry already includes computing the fingerprint.
+    def ivfPass(): Unit = {
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivf")
+      try {
+        record("bench_ivf_build", timed(spark, "bench_ivf_build") {
+          graft.pipeline.Similarity.ivfBuild(emb, idx.toString, nCentroids = 16) })
+        record("bench_ivf_query", timed(spark, "bench_ivf_query") {
+          graft.pipeline.Similarity
+            .ivfQuery(emb, idx.toString, k = 5, nQueries = 20, verifyCorpus = false)
+            .write.format("noop").mode("overwrite").save() })
+      } finally deleteTree(idx)
+    }
+
     // Interleaved passes: pass p runs EVERY query once, so a transient
     // machine stall poisons at most one rep per query instead of all
     // reps of whichever query it lands on (BENCH_r03's failure mode).
@@ -158,83 +170,14 @@ object Bench {
     // (A/B full runs: aggregate 1.18× without vs 1.23× with). Cross-entry
     // pressure is real (q_pipe_dedup_incr_serve: 0.65 s in isolation vs
     // 1.4-1.9 s mid-suite) but per-entry forced GC is the wrong remedy;
-    // the suite keeps the section-boundary jvmHygiene() instead.
+    // the suite keeps the section-boundary JVM hygiene below instead.
     for (pass <- 0 until reps) {
       entries.foreach { case (name, fn) =>
-        val t = time { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        runs(name) = runs.getOrElse(name, Vector.empty[Double]) :+ t
+        record(name, timed(spark, name) {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save() })
       }
+      if (wanted("bench_ivf_build") || wanted("bench_ivf_query")) ivfPass()
       System.err.println(s"[bench] pass ${pass + 1}/$reps done")
-    }
-    // Median-of-5 for entries whose ~1.5 s medians repeatedly recorded
-    // 40-70% above their proven floors on 3-rep samples (round-11 record:
-    // one contended rep in a 3-sample sets the upper median one slot
-    // above the clean floor, and the guard rightly doesn't flag medians
-    // under its threshold). Same remedy as bench_array_write's
-    // minWriteReps=5 — more samples, nothing discarded. The engine-side
-    // analogs live in ArrayBench (minNoisyReadReps).
-    // formats from round 11; dsir/boilerplate/semdedup joined in round 12
-    // (same shape: 3-rep records of [2.10, 1.99, 1.62]-like samples where
-    // the warm floor sits at/below ~1.15× baseline but the upper median
-    // rides the contended early reps)
-    // The q_arr_sql catalog family joined in round 16: sub-second
-    // fixed-overhead entries (catalog-routed 2-D slices over a tiny
-    // fixture) whose 3-rep upper medians ride one slow-window recovery
-    // resample to 2× floors that were set in a quieter window
-    // (BENCH_r15's single >2× blemish was exactly q_arr_sql at 0.62 s
-    // vs a 0.30 s floor) — more samples, nothing discarded.
-    val extraRepQueries = Set("q_pipe_formats", "q_pipe_dsir",
-      "q_pipe_boilerplate", "q_pipe_semdedup")
-    def needsExtraReps(name: String): Boolean =
-      extraRepQueries.contains(name) || name == "q_arr_sql" ||
-        name.startsWith("q_arr_sql_")
-    for (pass <- reps until math.max(reps, 5)) {
-      entries.filter(e => needsExtraReps(e._1)).foreach { case (name, fn) =>
-        val t = time { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        runs(name) = runs(name) :+ t
-      }
-    }
-    entries.foreach { case (name, _) =>
-      System.err.println(f"[bench] $name: ${median(runs(name))}%.2f s  " +
-        runs(name).map(t => f"$t%.2f").mkString("[", ", ", "]"))
-    }
-
-    // ANN serving path, measured separately: the index build is the
-    // expensive once-per-corpus pass (Lloyd + assignment over all N
-    // vectors); queries against the prebuilt index never re-scan the
-    // corpus. ivf_query should land ≪ q_pipe_knn_ivf (which rebuilds
-    // per run). verifyCorpus=false in the timed body: the fingerprint
-    // attestation is a once-per-batch pinning cost, not per-query — the
-    // build entry already includes computing the fingerprint.
-    // `record` gates which entries APPEND reps (the guard reruns must not
-    // add fresh post-hygiene reps to entries that were never flagged —
-    // that silently changes their medians); the build always executes
-    // because the query entry needs its index.
-    def ivfPass(queryReps: Int,
-        record: String => Boolean = _ => true): Seq[(String, Seq[Double])] = {
-      val out = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivf").toString
-      val buildT = time { graft.pipeline.Similarity.ivfBuild(emb, idx, nCentroids = 16) }
-      if (record("bench_ivf_build"))
-        out("bench_ivf_build") = Vector(buildT)
-      if (record("bench_ivf_query"))
-        for (_ <- 0 until queryReps)
-          out("bench_ivf_query") =
-            out.getOrElse("bench_ivf_query", Vector.empty[Double]) :+ time {
-              graft.pipeline.Similarity
-                .ivfQuery(emb, idx, k = 5, nQueries = 20, verifyCorpus = false)
-                .write.format("noop").mode("overwrite").save() }
-      out.toSeq
-    }
-    def mergeInto(target: scala.collection.mutable.LinkedHashMap[String, Seq[Double]],
-        extra: Seq[(String, Seq[Double])]): Unit =
-      extra.foreach { case (k, v) =>
-        target(k) = target.getOrElse(k, Vector.empty[Double]) ++ v }
-    if (wanted("bench_ivf_build") || wanted("bench_ivf_query")) {
-      mergeInto(runs, ivfPass(reps))
-      System.err.println(f"[bench] bench_ivf_build: ${median(runs("bench_ivf_build"))}%.2f s" +
-        f"  bench_ivf_query: ${median(runs("bench_ivf_query"))}%.2f s")
     }
 
     // JVM hygiene between suite sections: the query passes pin blocks
@@ -244,306 +187,59 @@ object Bench {
     // storage-memory eviction, not the engine (observed: the SAME array
     // suite measures spj_join 12.6 s late in a full run vs 2.6 s in a
     // fresh JVM). Dropping them is free and outside every timed body.
-    def jvmHygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // up to 256 MB of query-suite fixture blobs otherwise stay pinned
-      // in old-gen while the engine suite is timed
-      graft.spark.SparkStore.clearBlobCache()
-      // the streaming gates' stopped queries leave loaded state-store
-      // providers behind until periodic maintenance unloads them — with
-      // 11 streaming entries × passes that is real heap pressure on
-      // whatever is timed next (the per-gate unload in FileFeed/Replay
-      // covers the gates themselves; this covers anything they missed)
-      try org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-      catch { case _: Throwable => () }
-      System.gc()
-    }
-    jvmHygiene()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    // up to 256 MB of query-suite fixture blobs otherwise stay pinned
+    // in old-gen while the engine suite is timed
+    graft.spark.SparkStore.clearBlobCache()
+    // the streaming gates' stopped queries leave loaded state-store
+    // providers behind until periodic maintenance unloads them — with
+    // 11 streaming entries × passes that is real heap pressure on
+    // whatever is timed next (the per-gate unload in FileFeed/Replay
+    // covers the gates themselves; this covers anything they missed)
+    try org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+    catch { case _: Throwable => () }
+    System.gc()
 
     // Engine throughput: performance.json-shaped dense array write + read.
     if (only.forall(_.exists(_.startsWith("bench"))))
       runs ++= ArrayBench.run(spark, reps)
 
-    // ---- contamination guard (rounds 5/6 both lost their official
-    // records to noisy-neighbor windows that inflated EVERY rep of some
-    // entries, which the 5×-min stall filter cannot see). Compare each
-    // entry's MINIMUM rep against the best-known-clean median committed
-    // in bench_baseline.json: a minimum that exceeds guardX× the clean
-    // number means no rep of this entry ran on a quiet machine, so give
-    // it one more rep now — if the machine has calmed the stall filter
-    // then discards the inflated ones; if it hasn't, the record keeps
-    // the honest (slow) numbers and the rerun is noted for audit. ----
-    val guardX = sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARDX", "3.0").toDouble
-    val baseline: Map[String, Double] = {
-      val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_baseline.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-        "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    }
-    def contaminated(name: String): Boolean = {
-      val ok = runs.getOrElse(name, Nil).filter(_ >= 0)
-      ok.nonEmpty && baseline.get(name).exists(b => b > 0 && ok.min > guardX * b)
-    }
-    // Inter-rep spread guard (round-9's record loss: the whole-suite
-    // guard above only fires when EVERY rep is inflated, but one
-    // contended rep among three still sets the upper median — observed
-    // reps like [3.40, 0.60, 2.70] s recorded 2.70 while the machine
-    // demonstrably ran the same query at 0.60). Flag an entry when
-    //  - its WARM-rep max/min ratio exceeds spreadX (default 3: no
-    //    unchanged query legitimately swings 3× between passes on the
-    //    same data). The first rep is excluded — it structurally carries
-    //    one-time fixture construction + JIT (q_arr_stream_ingest's
-    //    first pass BUILDS its dataset: 11.8 s vs 0.25 s warm in a
-    //    clean run) and the median discards it anyway; sub-0.3 s
-    //    entries are exempt (JIT jitter, too small to move any
-    //    record) — or
-    //  - its median lands over medX× the clean baseline while its min
-    //    rep is under (the median is poisoned, the machine is capable).
-    // Flagged entries get TWO interleaved extra reps per guard round; a
-    // REAL regression (all reps consistently slow) is never flagged, so
-    // honest slow numbers survive. The guard LOOPS (bounded): round 10's
-    // record lost bench_array_read_full even after one rerun because the
-    // contention window covered all five reps ([12.8, 5.7, 2.7, 14.7,
-    // 0.95] — two survive the stall filter and the pessimistic upper
-    // median takes the worse one). If an entry's median is STILL poisoned
-    // after its rerun while its min proves the machine can run it clean,
-    // more samples are the only honest remedy — nothing is discarded
-    // beyond the stall filter, the sample just grows until the median
-    // stabilizes or the round budget is spent.
-    val spreadX = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPREADX", "3.0").toDouble
-    // medX 1.5 (was 1.8 through round 11): the round-11 record kept three
-    // entries whose medians sat 1.69-1.74× baseline over floors ≤1.3× —
-    // legitimately under the old flag but 40-70% above what the machine
-    // demonstrably runs. 1.5× still never flags a REAL regression (those
-    // raise the min too, failing the `min under` arm).
-    val medX = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDX", "1.5").toDouble
-    val guardRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARD_ROUNDS", "3").toInt
-    // firstRound also flags on raw inter-rep spread (catches entries with
-    // no baseline); later rounds continue ONLY on a still-poisoned or
-    // still-contaminated median — old contended reps keep the historical
-    // spread wide forever, so spread alone must not re-flag a rescued
-    // entry.
-    // floorX: baseline-free contention arm (round-13's record poison had
-    // 9 entries whose medians sat 1.5-3.4× baseline while their SAME-RUN
-    // floors were 1.1-1.9× — the machine proved the plan, the sample was
-    // contended). Flagging on median > floorX × own-min needs no clean
-    // baseline and keeps resampling until the median converges toward
-    // the floor or the round budget is spent. When a clean baseline
-    // EXISTS, a wide floor ratio with a median still AT the historical
-    // clean median is not contention — it is the entry's own bimodality
-    // (AQE/cache mode flips) — so the floor arm additionally requires
-    // the median to exceed medX × baseline; without this, >K genuinely
-    // bimodal entries would refuse every record forever.
-    val floorX = sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOORX", "1.5").toDouble
-    def floorSuspicious(name: String, med: Double, ok: Seq[Double]): Boolean =
-      floorContended(ok, floorX) && med > floorX * ok.min &&
-        baseline.get(name).forall(b => b <= 0 || med > medX * b)
-    def noisy(name: String, firstRound: Boolean): Boolean = {
-      val ok = runs.getOrElse(name, Nil).filter(_ >= 0)
-      ok.length >= 2 && {
-        val warm = if (ok.length > 2) ok.drop(1) else ok
-        val bigSpread = firstRound && warm.length >= 2 &&
-          warm.max > 0.3 && warm.max / math.max(warm.min, 1e-3) > spreadX
-        val poisonedMedian = baseline.get(name).exists(b =>
-          b > 0 && median(ok) > medX * b && ok.min <= medX * b)
-        bigSpread || poisonedMedian || floorSuspicious(name, median(ok), ok)
-      }
-    }
-    def flaggedNow(firstRound: Boolean): Seq[String] =
-      runs.keys.filter(n => contaminated(n) || noisy(n, firstRound)).toSeq.sorted
-    // Audit trail (benchmark integrity): the guard is one-sided — it only
-    // reruns entries that look slow — so the full record keeps each
-    // flagged entry's median BEFORE its first rerun, letting an audit
-    // reconstruct what the unguarded record would have said.
-    val preGuardMedians = scala.collection.mutable.Map.empty[String, Double]
-    val everFlagged = scala.collection.mutable.SortedSet.empty[String]
-    var guardRound = 0
-    var flaggedEntries = flaggedNow(firstRound = true)
-    while (flaggedEntries.nonEmpty && guardRound < guardRounds) {
-      flaggedEntries.foreach { n =>
-        if (!preGuardMedians.contains(n)) preGuardMedians(n) = median(runs(n))
-      }
-      everFlagged ++= flaggedEntries
-      System.err.println(s"[bench] contamination guard round ${guardRound + 1}: " +
-        s"rerunning ${flaggedEntries.mkString(", ")}")
-      val rerunPasses = 2
-      for (_ <- 0 until rerunPasses) { // interleaved, like the main passes
-        jvmHygiene()
-        entries.filter(e => flaggedEntries.contains(e._1)).foreach { case (name, fn) =>
-          runs(name) = runs(name) :+ time {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        }
-      }
-      if (flaggedEntries.exists(_.startsWith("bench_ivf")))
-        mergeInto(runs, ivfPass(rerunPasses, record = flaggedEntries.contains))
-      if (flaggedEntries.exists(ArrayBench.entryNames.contains)) {
-        jvmHygiene()
-        // the array suite is interdependent (reads need the fresh write),
-        // so the whole suite EXECUTES, but only flagged entries RECORD
-        ArrayBench.run(spark, rerunPasses, minWriteReps = 1,
-            minNoisyReadReps = rerunPasses)
-          .filter { case (k, _) => flaggedEntries.contains(k) }
-          .foreach { case (k, v) =>
-            runs(k) = runs.getOrElse(k, Vector.empty[Double]) ++ v }
-      }
-      guardRound += 1
-      flaggedEntries = flaggedNow(firstRound = false)
+    runs.foreach { case (name, v) =>
+      System.err.println(f"[bench] $name: ${median(v.map(_.sec))}%.2f s  " +
+        v.map(r => f"${r.sec}%.2f").mkString("[", ", ", "]") + "  cpu " +
+        v.map(r => f"${r.cpuSec}%.2f").mkString("[", ", ", "]"))
     }
 
-    // ---- quiet-window RECOVERY (round-15): a refused record leaves the
-    // round without a driver-stamped clean number, so a single invocation
-    // must be able to outlast a contention window. When the record WOULD
-    // be refused, wait for the machine to go quiet (cheap canary entries
-    // re-probed until they reproduce their own same-run floors), then
-    // resample ONLY the floor-contended entries from scratch. Acceptance
-    // is SYMMETRIC (see acceptRecovery): an internally-quiet resample
-    // replaces the entry's sample whether it lands faster or slower —
-    // the published number is always the median of one actual sample.
-    // Bounded: recoverRounds × (quietTries × quietSleep + one resample).
-    val effective = scala.collection.mutable.Map.empty[String, Seq[Double]]
-    val rejectedSamples = scala.collection.mutable.Map.empty[String, Seq[Double]]
-    def effReps(k: String): Seq[Double] = effective.getOrElse(k, runs(k))
-    def contendedNow(): Seq[String] = runs.keys.filter { k =>
-      val ok = effReps(k).filter(_ >= 0)
-      floorSuspicious(k, median(ok), ok)
-    }.toSeq.sorted
-    val contendedK =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CONTENDED_K", "3").toInt
-    val recoverRounds =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RECOVER_ROUNDS", "2").toInt
-    val quietTries =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_TRIES", "6").toInt
-    val quietSleepMs =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_SLEEP_MS", "20000").toLong
-    var contendedEntries = contendedNow()
-    var recoveryRound = 0
-    while (contendedEntries.size > contendedK && recoveryRound < recoverRounds) {
-      // canaries: the three cheapest proven-floor query entries that are
-      // NOT themselves contended — if they reproduce their floors, the
-      // machine is quiet enough to trust a resample
-      val entryFns = entries.toMap
-      val canaries = entries.map(_._1)
-        .filter { n =>
-          !contendedEntries.contains(n) && {
-            val ok = runs(n).filter(_ >= 0); ok.nonEmpty && ok.min > 0.3 } }
-        .sortBy(n => runs(n).filter(_ >= 0).min).take(3)
-      def canaryQuiet(): Boolean = canaries.nonEmpty && canaries.forall { n =>
-        val floor = runs(n).filter(_ >= 0).min
-        val t = time {
-          entryFns(n)(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        t >= 0 && t <= 1.35 * floor
-      }
-      if (canaries.isEmpty) {
-        // no canary can ever report quiet — the wait loop's outcome is
-        // predetermined, so refuse now instead of sleeping through it
-        System.err.println("[bench] recovery: no eligible canaries " +
-          "(subset run or all floors <= 0.3 s) — refusing without waiting")
-        recoveryRound = recoverRounds
-        contendedEntries = contendedNow()
-        // skip the wait/resample body entirely for this round
-      } else {
-      jvmHygiene()
-      var tries = 0
-      var quiet = canaryQuiet()
-      while (!quiet && tries < quietTries) {
-        System.err.println(s"[bench] recovery: machine still contended, " +
-          s"waiting ${quietSleepMs / 1000} s (probe ${tries + 1}/$quietTries)")
-        Thread.sleep(quietSleepMs); tries += 1; quiet = canaryQuiet()
-      }
-      if (!quiet) {
-        System.err.println("[bench] recovery: no quiet window found — " +
-          "the record will be refused honestly")
-        recoveryRound = recoverRounds
-      } else {
-        System.err.println(s"[bench] recovery round ${recoveryRound + 1}: " +
-          s"resampling ${contendedEntries.mkString(", ")}")
-        val sample = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-        val resamplePasses = 3
-        for (_ <- 0 until resamplePasses) {
-          jvmHygiene()
-          entries.filter(e => contendedEntries.contains(e._1)).foreach {
-            case (name, fn) =>
-              sample(name) = sample.getOrElse(name, Vector.empty[Double]) :+ time {
-                fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          }
-        }
-        if (contendedEntries.exists(_.startsWith("bench_ivf")))
-          mergeInto(sample, ivfPass(resamplePasses, record = contendedEntries.contains))
-        if (contendedEntries.exists(ArrayBench.entryNames.contains)) {
-          jvmHygiene()
-          mergeInto(sample, ArrayBench.run(spark, resamplePasses,
-              minWriteReps = 1, minNoisyReadReps = resamplePasses)
-            .filter { case (k, _) => contendedEntries.contains(k) })
-        }
-        sample.foreach { case (k, v) =>
-          if (!preGuardMedians.contains(k)) preGuardMedians(k) = median(runs(k))
-          if (acceptRecovery(v, floorX)) effective(k) = v
-          // REJECTED resamples go to the audit map only — folding them
-          // into runs(k) would make a non-recovered entry's published
-          // median the median of (main sample ++ rejected contended
-          // reps): a mixture that is the median of no actual sample
-          else rejectedSamples(k) = rejectedSamples.getOrElse(k,
-            Vector.empty[Double]) ++ v
-        }
-        recoveryRound += 1
-      }
-      contendedEntries = contendedNow()
-      } // canaries.nonEmpty
-    }
-
-    // Published medians: the plain median of each entry's effective
-    // sample (all reps, or the accepted quiet resample), EXCEPT that a
-    // guard-grown sample whose median landed above the pre-guard one
-    // publishes the pre-guard median instead — see publishedMedian.
-    // minKept logs every entry where that rule fired.
-    val minKept = scala.collection.mutable.SortedSet.empty[String]
-    val meds = runs.map { case (k, v) =>
-      val post = median(effReps(k))
-      val pub =
-        if (effective.contains(k)) post // verified-quiet resample stands
-        else publishedMedian(preGuardMedians.get(k), post)
-      if (pub != post) minKept += k
-      k -> pub
-    }
-    // Record-level acceptance: a run where MANY entries' medians still
-    // sit >floorX above their own same-run floors after the guard AND
-    // the quiet-window recovery is a machine-contention artifact, not a
-    // measurement — it must not silently become the official record. It
-    // is emitted as BENCH_ATTEMPT_* with "contended":true (stdout
-    // carries the flag so a driver-captured copy self-identifies), and
-    // BENCH_SUMMARY.json / the default full file keep the previous
-    // clean record.
-    val contended = contendedEntries.size > contendedK
+    val meds = runs.map { case (k, v) => k -> median(v.map(_.sec)) }
+    val contendedNames = contendedEntries(runs)
+    val contended = refused(contendedNames)
+    def names(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = meds.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val rs = runs.map { case (k, v) =>
-      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
+      "\"" + k + "\":" + v.map(_.sec).mkString("[", ",", "]") }.mkString("{", ",", "}")
+    // per entry: the spread of its successful reps, its median rep's
+    // Spark cost (every field -1 when no rep succeeded) and every rep's
+    // CPU time, so a refusal can be checked from the record
+    val es = runs.map { case (k, v) =>
+      val ok = v.map(_.sec).filter(_ >= 0)
+      val m = medianRep(v)
+      s""""$k":{"min":${ok.minOption.getOrElse(-1.0)},"max":${ok.maxOption.getOrElse(-1.0)},""" +
+        s""""cpuSec":${m.cpuSec},"runSec":${m.runSec},"jobs":${m.jobs},""" +
+        s""""stages":${m.stages},"shuffleBytes":${m.shuffleBytes},""" +
+        s""""cpuRuns":${v.map(_.cpuSec).mkString("[", ",", "]")}}"""
+    }.mkString("{", ",", "}")
     val total = meds.values.filter(_ >= 0).sum
-    val reran = everFlagged.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val recoveredNames = effective.keys.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val parallelism = spark.sparkContext.defaultParallelism
     // FULL record (every median at full precision + every raw rep) goes
     // to a local file — BENCH_r08's stdout line hit ~18 KB at 155
     // entries and overflowed the driver's bounded tail capture
     // ("parsed": null), so stdout must stay small and the audit trail
-    // moves to disk.
-    val preGuard = preGuardMedians.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val contJson = contendedEntries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the accepted quiet-window resamples (raw reps) — the published
-    // median of each recovered entry is the median of exactly this sample
-    val recJson = effective.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    // rejected quiet-window resamples: audit-only — never folded into an
-    // entry's published sample (see the recovery loop)
-    val rejJson = rejectedSamples.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    val minKeptJson = minKept.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // moves to disk. The keys reran through stallX described noise guards
+    // that no longer exist; they stay, empty, so readers of older records
+    // keep parsing.
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","contended":$contended,"contendedEntries":$contJson,"queries":$qs,"runs":$rs,"reps":$reps,"reran":$reran,"minKept":$minKeptJson,"preGuardMedians":$preGuard,"recoverySamples":$recJson,"rejectedSamples":$rejJson,"stallX":$StallX,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","contended":$contended,"contendedEntries":${names(contendedNames)},"queries":$qs,"runs":$rs,"reps":$reps,"reran":[],"minKept":[],"preGuardMedians":{},"recoverySamples":{},"rejectedSamples":{},"stallX":0,"sf":"$sfDir","cpus":$cpus,"defaultParallelism":$parallelism,"entries":$es}"""
     // attempt files land BESIDE the configured record (same directory),
     // so a driver pointing the outputs elsewhere still finds the refused
     // run's audit trail
@@ -577,11 +273,10 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json"),
       "SPARK_GRAFT_BENCH_SUMMARY")
     if (contended) System.err.println(
-      s"[bench] RECORD REFUSED (contended): ${contendedEntries.size} entries' " +
-        s"medians sit >${floorX}x their own same-run floors after " +
-        s"$guardRounds guard rounds (${contendedEntries.mkString(", ")}); " +
-        "emitting BENCH_ATTEMPT_* beside the configured record — the " +
-        "official record is unchanged")
+      s"[bench] RECORD REFUSED (contended): ${contendedNames.size} entries' " +
+        s"median reps ran over ${ContendedWallX}x their fastest at flat CPU time " +
+        s"(${contendedNames.mkString(", ")}); emitting BENCH_ATTEMPT_* beside " +
+        "the configured record — the official record is unchanged")
     val fullPath =
       if (contended) attemptSibling(fullConfigured, "full")
       else fullConfigured
@@ -589,20 +284,19 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}") }
     // Compact stdout line. THE DRIVER PARSES PER-QUERY TIMINGS FROM THIS
-    // LINE — round 18's lesson: audit metadata (reran + preGuardMedians,
-    // 87 entries each that run) consumed the byte budget before a single
-    // query entry was picked, so PERF_r18 lost every per-query comparison
-    // (n_common: 0, phantom "dropped" list, empty scaling block). The
-    // QUERIES MAP NOW COMES FIRST and the default budget is sized so all
-    // ~207 entries fit (~7 KB; the round-18 line itself parsed at ~5 KB);
-    // audit metadata rides only in whatever budget remains, degrading to
-    // always-present counts — the full lists and preGuardMedians live in
-    // the full file unconditionally.
+    // LINE, so the queries map comes before any other list and the
+    // default budget is sized so all ~207 entries fit (~7 KB).
     // Locale.ROOT: the f interpolator uses the default locale, which on
     // e.g. a de_DE JVM renders "0,123" — malformed JSON for the driver
     def f3(d: Double): String =
       if (d < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_STDOUT_BYTES", "24000").toInt
+    def compact(picked: collection.Map[String, Double]): String = {
+      val othersTotal =
+        meds.collect { case (k, v) if !picked.contains(k) && v >= 0 => v }.sum
+      val q = picked.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","contended":$contended,"queries":$q,"others":{"n":${meds.size - picked.size},"total":${f3(othersTotal)}},"n_queries":${meds.size},"reps":$reps,"reranN":0,"recoveredN":0,"minKeptN":0,"reran":[],"recovered":[],"minKept":[],"preGuardMedians":{},"full":"$fullPath","sf":"$sfDir","cpus":$cpus,"defaultParallelism":$parallelism}"""
+    }
     // bench_* first, then slowest-first: with the default budget EVERY
     // entry fits; the ordering only matters if a deployment shrinks the
     // budget, in which case the most informative entries survive
@@ -611,28 +305,12 @@ object Bench {
       bench.sortBy(_._1) ++ rest.sortBy(-_._2)
     }
     val picked = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var used = 320 // fixed keys + counts + "full"/"sf" path headroom
+    var used = compact(picked).length
     ordered.foreach { case (k, v) =>
       val cost = k.length + f3(v).length + 4
       if (used + cost <= budget) { picked(k) = v; used += cost }
     }
-    val othersTotal = meds.collect { case (k, v) if !picked.contains(k) && v >= 0 => v }.sum
-    val qsCompact = picked.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // Audit metadata AFTER the queries map, included only if it still
-    // fits: each list collapses to [] (its count is always present) and
-    // preGuardMedians to {} when the budget is spent. Readers needing the
-    // full audit trail use the full file, which always carries everything.
-    val preGuardCompactFull = preGuardMedians.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    def budgeted(s: String, empty: String): String =
-      if (used + s.length <= budget) { used += s.length; s } else empty
-    val reranC = budgeted(reran, "[]")
-    val recoveredC = budgeted(recoveredNames, "[]")
-    val minKeptC = budgeted(minKeptJson, "[]")
-    val preGuardC = budgeted(preGuardCompactFull, "{}")
-    val compactLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","contended":$contended,"queries":$qsCompact,"others":{"n":${meds.size - picked.size},"total":${f3(othersTotal)}},"n_queries":${meds.size},"reps":$reps,"reranN":${everFlagged.size},"recoveredN":${effective.size},"minKeptN":${minKept.size},"reran":$reranC,"recovered":$recoveredC,"minKept":$minKeptC,"preGuardMedians":$preGuardC,"full":"$fullPath","sf":"$sfDir"}"""
+    val compactLine = compact(picked)
     println(compactLine)
     // The same line as the SINGLE line of BENCH_SUMMARY.json: under sbt
     // the stdout line prints mid-stream and sbt's own "[success]" trailer
@@ -649,24 +327,30 @@ object Bench {
       System.err.println(s"[bench] could not write $summaryPath: ${e.getMessage}") }
     spark.stop()
   }
+
+  /** Delete a temp directory and everything under it. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
+    val files = java.nio.file.Files.walk(root)
+    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally files.close()
+  }
 }
 
 /** Dense-array engine benchmarks (BASELINE.md engine-side targets). */
 object ArrayBench {
+  import Bench.{Failed, Rep, timed}
   import graft.core._
   import graft.meta.{DatasetMeta, VariableDef}
   import graft.spark.SparkStore
 
-  /** Every entry this suite can emit (the contamination guard in Bench
-    * uses this to route a flagged array entry to a whole-suite rerun —
-    * the entries are interdependent: reads need a written dataset). */
-  val entryNames: Set[String] = Set(
-    "bench_array_write", "bench_array_read_full", "bench_array_read_window",
-    "bench_dsv2_read_full", "bench_array_slice_driver", "bench_stats_agg",
-    "bench_chunked_agg", "bench_spj_join")
+  /** The read entries, in the order each read pass times them. */
+  private val readEntries = Seq(
+    "bench_array_read_full", "bench_array_read_window", "bench_dsv2_read_full",
+    "bench_array_slice_driver", "bench_stats_agg", "bench_chunked_agg",
+    "bench_spj_join")
 
-  def run(spark: SparkSession, reps: Int,
-      minWriteReps: Int = 5, minNoisyReadReps: Int = 5): Seq[(String, Seq[Double])] = {
+  def run(spark: SparkSession, reps: Int): Seq[(String, Seq[Rep])] = {
     // volume scale: 1.0 = the reference's full 216M-cell fixture
     val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "1.0").toDouble
     val zDim = math.max(30L, (900 * scale).toLong)
@@ -675,21 +359,13 @@ object ArrayBench {
       dimensions = dims,
       chunkDimensions = Map("x" -> 30L, "y" -> 30L, "z" -> 30L),
       variables = Map("foo" -> VariableDef("short", Vector("x", "y", "z"), -3.0)))
-    val root = java.nio.file.Files.createTempDirectory("graft_bench").toString
+    val rootPath = java.nio.file.Files.createTempDirectory("graft_bench")
+    val root = rootPath.toString
     val store = new SparkStore(spark, root)
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val results = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Rep]]
 
-    def time(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        f
-        val dt = (System.nanoTime() - t0) / 1e9
-        results(name) = results.getOrElse(name, Nil) :+ dt
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        results(name) = results.getOrElse(name, Nil) :+ -1.0
-      }
-    }
+    def time(name: String)(f: => Unit): Unit =
+      results(name) = results.getOrElse(name, Vector.empty[Rep]) :+ timed(spark, name)(f)
 
     // Distributed ingest: one x-slab per row, generated on executors.
     // Each rep writes a FRESH dataset — content-addressed dedup would make
@@ -717,122 +393,41 @@ object ArrayBench {
       w.writeRows("foo", slabRows)
       w.finishVersion()
     }
-    // Untimed small-volume warmup (never larger than the timed shape):
-    // first-write reps otherwise measure JIT compilation of the
-    // shred/hash/compress/parquet path, not steady-state throughput
-    // (observed 10 s cold vs 4 s warm for the SAME full write).
-    val warmZ = math.min(zDim, 60L)
-    writePerf(prepare("warm", warmZ), warmZ)
-    // The write medians still swing ~3× run-to-run (page-cache flush
-    // stalls on ~400 MB of fresh blobs per rep land on random reps);
-    // median-of-5 keeps one stall from becoming the recorded number, and
-    // an UNTIMED sync between reps pays the dirty-page flush outside the
-    // timer so the next rep doesn't inherit the previous rep's writeback.
-    def syncFs(): Unit =
-      try { new ProcessBuilder("sync").start().waitFor() }
-      catch { case _: Throwable => () }
-    for (r <- 0 until math.max(reps, minWriteReps)) {
-      val w = prepare(s"perf$r", zDim)
+    try {
+      // Untimed small-volume warmup (never larger than the timed shape):
+      // first-write reps otherwise measure JIT compilation of the
+      // shred/hash/compress/parquet path, not steady-state throughput
+      // (observed 10 s cold vs 4 s warm for the SAME full write).
+      val warmZ = math.min(zDim, 60L)
+      writePerf(prepare("warm", warmZ), warmZ)
+      // An UNTIMED sync between write reps pays the dirty-page flush of
+      // ~400 MB of fresh blobs outside the timer, so the next rep doesn't
+      // inherit the previous rep's writeback.
+      def syncFs(): Unit =
+        try { new ProcessBuilder("sync").start().waitFor() }
+        catch { case _: Throwable => () }
+      for (r <- 0 until reps) {
+        val w = prepare(s"perf$r", zDim)
+        syncFs()
+        time("bench_array_write") { writePerf(w, zDim) }
+      }
       syncFs()
-      time("bench_array_write") { writePerf(w, zDim) }
-    }
-    syncFs()
 
-    if (store.versions("perf0").isEmpty) return results.toSeq // write failed
-    val reader = store.reader("perf0").onLastVersion()
-    // Untimed same-shape SHJ warm-up: the first timed spj rep otherwise
-    // pays JIT of the hash-join + columnar-decode path AND the cold page
-    // cache on the freshly-written blobs (observed 4.1 vs 2.9 s
-    // first-vs-last rep spread); every read entry warms the same way.
-    locally {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      try {
-        import org.apache.spark.sql.functions.col
-        def side = spark.read.format("graft").option("root", root)
-          .option("dataset", "perf0").option("variable", "foo")
-          .option("chunked", "true").load()
-          .filter(col("x") < 90)
-        side.alias("a").join(side.alias("b").hint("shuffle_hash"),
-          Seq("_chunk_x", "_chunk_y", "_chunk_z", "x", "y", "z"))
-          .select(col("a.value") + col("b.value"))
-          .write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] spj warm-up failed: ${e.getMessage}")
-      } finally {
-        spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
-        spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+      if (store.versions("perf0").isEmpty) { // the first write failed
+        readEntries.foreach(n => results(n) = Vector.fill(reps)(Failed))
+        return results.toSeq
       }
-    }
-    // Passes beyond `reps` run ONLY the three ~1.5 s entries whose 3-rep
-    // medians repeatedly recorded 40-70% above their proven floors
-    // (read_full 1.69× vs 1.22× floor, dsv2_read_full 1.70× vs 1.30 s,
-    // spj_join 1.50× vs 1.23× in the round-11 record) — median-of-5 for
-    // them, unchanged cost for the entries whose 3-rep medians were clean.
-    for (r <- 0 until math.max(reps, minNoisyReadReps)) {
-      val allEntries = r < reps
-      time("bench_array_read_full") {
-        val df = reader.exploded("foo", Slice(Seq(0L, 0L, 0L), Seq(400L, 600L, zDim)))
-        df.write.format("noop").mode("overwrite").save()
-      }
-      // read_window/stats_agg/chunked_agg joined the median-of-5 set in
-      // round 15: sub-0.6 s fixed-cost probes whose 3-rep upper medians
-      // ride one elevated rep to 2× their (very tight) best-ever
-      // baselines — more samples, nothing discarded, same remedy as
-      // read_full/dsv2/spj (round 11)
-      time("bench_array_read_window") {
-        // chunk-aligned window: must touch exactly 8 chunks
-        val df = reader.exploded("foo", Slice(Seq(30L, 30L, 0L), Seq(90L, 90L, 60L)))
-        df.write.format("noop").mode("overwrite").save()
-      }
-      time("bench_dsv2_read_full") {
-        // same cells via the DSv2 range-partition + columnar path
-        spark.read.format("graft").option("root", root)
-          .option("dataset", "perf0").option("variable", "foo").load()
-          .write.format("noop").mode("overwrite").save()
-      }
-      if (allEntries) time("bench_array_slice_driver") {
-        reader.getSlice("foo", Slice(Seq(100L, 100L, 0L), Seq(130L, 130L, 30L)))
-      }
-      time("bench_stats_agg") {
-        // full-variable min/max/sum/count: pushed-down partials answered
-        // from zone-map index stats — no interior blob is decoded (compare
-        // bench_array_read_full, which decodes all 216M cells)
-        import org.apache.spark.sql.functions.{count, lit, max, min, sum}
-        val row = spark.read.format("graft").option("root", root)
-          .option("dataset", "perf0").option("variable", "foo").load()
-          .agg(min("value"), max("value"), sum("value"), count(lit(1)))
-          .collect()(0)
-        require(row.getLong(3) == 400L * 600L * zDim, "bad pushed count")
-      }
-      time("bench_chunked_agg") {
-        // grid-aligned per-chunk stats via the chunked scan: the reported
-        // KeyGroupedPartitioning elides the groupBy shuffle entirely
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        try {
-          import org.apache.spark.sql.functions.{count, lit, sum}
-          spark.read.format("graft").option("root", root)
-            .option("dataset", "perf0").option("variable", "foo")
-            .option("chunked", "true").load()
-            .groupBy("_chunk_x", "_chunk_y", "_chunk_z")
-            .agg(sum("value"), count(lit(1)))
-            .write.format("noop").mode("overwrite").save()
-        } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-      }
-      // GC outside the timer: late-suite reps otherwise inherit the
-      // previous entries' garbage (observed in-JVM rep drift 4.2→7.9 s
-      // on an unchanged plan in the round-8 official run)
-      System.gc()
-      time("bench_spj_join") {
-        // storage-partitioned join: two chunked scans of the same grid
-        // joined on (_chunk_*, dims) — the reported KeyGroupedPartitioning
-        // co-locates matching chunks, so NO Exchange moves either side
-        // (plan shape pinned by DataSourceSpec). Window = a chunk-aligned
-        // quarter (54M cells/side). The build side is hinted to a
-        // shuffled-hash join: both sides arrive in identical row-major
-        // order from the same decode, so the in-partition SMJ sorts are
-        // pure waste — hashing one side is ~1.5× faster here and stays
-        // exchange-free (pinned by DataSourceSpec's hinted-SHJ probe).
+      val reader = store.reader("perf0").onLastVersion()
+      // storage-partitioned join: two chunked scans of the same grid
+      // joined on (_chunk_*, dims) — the reported KeyGroupedPartitioning
+      // co-locates matching chunks, so NO Exchange moves either side
+      // (plan shape pinned by DataSourceSpec). Window = a chunk-aligned
+      // quarter (54M cells/side). The build side is hinted to a
+      // shuffled-hash join: both sides arrive in identical row-major
+      // order from the same decode, so the in-partition SMJ sorts are
+      // pure waste — hashing one side is ~1.5× faster here and stays
+      // exchange-free (pinned by DataSourceSpec's hinted-SHJ probe).
+      def spjJoin(): Unit = {
         spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
         spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
         try {
@@ -850,7 +445,65 @@ object ArrayBench {
           spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
         }
       }
-    }
-    results.toSeq
+      // Untimed same-shape SHJ warm-up: the first timed spj rep otherwise
+      // pays JIT of the hash-join + columnar-decode path AND the cold page
+      // cache on the freshly-written blobs (observed 4.1 vs 2.9 s
+      // first-vs-last rep spread); every read entry warms the same way.
+      try spjJoin()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] spj warm-up failed: ${e.getMessage}")
+      }
+      for (_ <- 0 until reps) {
+        time("bench_array_read_full") {
+          val df = reader.exploded("foo", Slice(Seq(0L, 0L, 0L), Seq(400L, 600L, zDim)))
+          df.write.format("noop").mode("overwrite").save()
+        }
+        time("bench_array_read_window") {
+          // chunk-aligned window: must touch exactly 8 chunks
+          val df = reader.exploded("foo", Slice(Seq(30L, 30L, 0L), Seq(90L, 90L, 60L)))
+          df.write.format("noop").mode("overwrite").save()
+        }
+        time("bench_dsv2_read_full") {
+          // same cells via the DSv2 range-partition + columnar path
+          spark.read.format("graft").option("root", root)
+            .option("dataset", "perf0").option("variable", "foo").load()
+            .write.format("noop").mode("overwrite").save()
+        }
+        time("bench_array_slice_driver") {
+          reader.getSlice("foo", Slice(Seq(100L, 100L, 0L), Seq(130L, 130L, 30L)))
+        }
+        time("bench_stats_agg") {
+          // full-variable min/max/sum/count: pushed-down partials answered
+          // from zone-map index stats — no interior blob is decoded (compare
+          // bench_array_read_full, which decodes all 216M cells)
+          import org.apache.spark.sql.functions.{count, lit, max, min, sum}
+          val row = spark.read.format("graft").option("root", root)
+            .option("dataset", "perf0").option("variable", "foo").load()
+            .agg(min("value"), max("value"), sum("value"), count(lit(1)))
+            .collect()(0)
+          require(row.getLong(3) == 400L * 600L * zDim, "bad pushed count")
+        }
+        time("bench_chunked_agg") {
+          // grid-aligned per-chunk stats via the chunked scan: the reported
+          // KeyGroupedPartitioning elides the groupBy shuffle entirely
+          spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+          try {
+            import org.apache.spark.sql.functions.{count, lit, sum}
+            spark.read.format("graft").option("root", root)
+              .option("dataset", "perf0").option("variable", "foo")
+              .option("chunked", "true").load()
+              .groupBy("_chunk_x", "_chunk_y", "_chunk_z")
+              .agg(sum("value"), count(lit(1)))
+              .write.format("noop").mode("overwrite").save()
+          } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+        }
+        // GC outside the timer: late-suite reps otherwise inherit the
+        // previous entries' garbage (observed in-JVM rep drift 4.2→7.9 s
+        // on an unchanged plan in the round-8 official run)
+        System.gc()
+        time("bench_spj_join")(spjJoin())
+      }
+      results.toSeq
+    } finally Bench.deleteTree(rootPath)
   }
 }

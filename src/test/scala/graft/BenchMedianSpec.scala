@@ -1,95 +1,78 @@
 package graft
 
+import graft.Bench.Rep
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's recorded-statistic semantics — the medians ARE the
-  * round's official record, so their stall handling is load-bearing:
-  * round 10's record kept two entries over the 2× bar because contended
-  * reps at ~3.5× the per-entry minimum slipped under the then-5× discard
-  * threshold while the 3× spread guard flagged them. The discard and
-  * flag thresholds are now the same 3× (Bench.StallX; the spec pins stallX=3.0 explicitly so a
-  * SPARK_GRAFT_BENCH_STALLX set in the test environment cannot flip the
-  * expected medians). */
+/** Pins the bench's publication and refusal rule — the medians ARE the
+  * round's official record. Each entry publishes the plain upper median
+  * of its successful reps; an entry is contended when its median rep ran
+  * over 1.5× its fastest (> 0.3 s) rep at no more than 1.25× the fastest
+  * rep's executor CPU time; more than 3 contended entries refuse the
+  * record. */
 class BenchMedianSpec extends AnyFunSuite {
 
-  test("median ignores failed reps (-1) and is upper-median for even n") {
-    assert(Bench.median(Seq(-1.0, 2.0, 1.0), 3.0) == 2.0)
-    assert(Bench.median(Seq(1.0, 2.0), 3.0) == 2.0) // upper: pessimistic
-    assert(Bench.median(Seq(-1.0), 3.0) == -1.0)
-    assert(Bench.median(Nil, 3.0) == -1.0)
-  }
+  /** Reps with the given wall seconds, each with CPU time = its wall. */
+  private def working(secs: Double*): Seq[Rep] = secs.map(s => Rep(s, cpuSec = s))
 
-  test("reps over StallX x the minimum are discarded as machine stalls") {
-    // round-10 failure shape: 3 of 5 reps contended at ~3.5x min — the
-    // old 5x threshold kept them and they set the median
-    val contended = Seq(0.69, 0.88, 0.69, 0.25, 0.19)
-    assert(Bench.median(contended, 3.0) == 0.25)
-    // a clean cluster with one huge stall: stall dropped, median clean
-    assert(Bench.median(Seq(1.0, 1.1, 14.7), 3.0) == 1.1)
+  /** Reps with the given wall seconds and the same CPU time. */
+  private def flatCpu(cpuSec: Double, secs: Double*): Seq[Rep] =
+    secs.map(s => Rep(s, cpuSec = cpuSec))
+
+  test("median ignores failed reps (-1) and is upper-median for even n") {
+    assert(Bench.median(Seq(-1.0, 2.0, 1.0)) == 2.0)
+    assert(Bench.median(Seq(1.0, 2.0)) == 2.0) // upper: pessimistic
+    assert(Bench.median(Seq(-1.0)) == -1.0)
+    assert(Bench.median(Nil) == -1.0)
+    assert(Bench.medianRep(Seq(Rep(-1.0), Rep(2.0, cpuSec = 5.0), Rep(1.0))) ==
+      Rep(2.0, cpuSec = 5.0))
+    assert(Bench.medianRep(Seq(Bench.Failed)) == Bench.Failed)
   }
 
   test("a real regression (uniformly slow reps) is never masked") {
-    // all reps slow together => min rises => nothing is discarded
-    val regressed = Seq(4.0, 4.2, 4.1)
-    assert(Bench.median(regressed, 3.0) == 4.1)
+    // published as is: all reps slow together, so the median is slow too
+    val regressed = flatCpu(4.0, 4.0, 4.2, 4.1)
+    assert(Bench.median(regressed.map(_.sec)) == 4.1)
+    // and not flagged: the median sits next to the fastest rep
+    assert(!Bench.contended(regressed))
   }
 
   test("first-rep fixture construction is discarded relative to warm reps") {
-    // q_arr_stream_ingest shape: first pass builds the dataset
-    assert(Bench.median(Seq(11.8, 0.25, 0.26), 3.0) == 0.26)
+    // q_arr_stream_ingest shape: the first pass builds the dataset; the
+    // plain median of three reps already leaves it out
+    assert(Bench.median(Seq(11.8, 0.25, 0.26)) == 0.26)
   }
 
-  test("acceptRecovery is SYMMETRIC: an internally-quiet resample is " +
-      "adopted whether it lands faster or slower; a still-contended " +
-      "resample is rejected (the verified-quiet sample always stands — " +
-      "the min-of-two publication rule applies to guard-grown samples " +
-      "only, see publishedMedian)") {
-    // quiet resample, faster than whatever it replaces: accepted
-    assert(Bench.acceptRecovery(Seq(0.60, 0.62, 0.61), 1.5))
-    // quiet resample that happens to be SLOWER (honest regression or a
-    // cold cache): still accepted — acceptance looks only at internal
-    // spread, never at direction
-    assert(Bench.acceptRecovery(Seq(3.0, 3.1, 3.05), 1.5))
-    // resample itself contended (median >1.5x its own floor): rejected,
-    // the entry stays contended and the record refuses if too many do
-    assert(!Bench.acceptRecovery(Seq(0.53, 1.28, 1.30), 1.5))
-    // all-failed resample: rejected
-    assert(!Bench.acceptRecovery(Seq(-1.0, -1.0), 1.5))
-    // a SINGLE surviving rep is "internally quiet" only by vacuity (the
-    // floor test needs two points) — it must never replace a full sample
-    assert(!Bench.acceptRecovery(Seq(-1.0, -1.0, 4.2), 1.5))
+  test("wall time above the fastest rep at flat CPU time is contention; " +
+      "wall and CPU time rising together is the plan's own work") {
+    // round-13 shape: fastest 0.53 s, median 1.30 s, CPU unchanged
+    assert(Bench.contended(flatCpu(0.4, 0.53, 1.28, 1.30)))
+    // CPU up by at most 1.25x still counts as flat
+    assert(Bench.contended(Seq(Rep(0.53, cpuSec = 0.4), Rep(1.28, cpuSec = 0.5),
+      Rep(1.30, cpuSec = 0.5))))
+    // a bimodal plan: the slow reps do 2x the executor work
+    assert(!Bench.contended(working(0.53, 1.28, 1.30)))
+    // a clean sample: the median rides the fastest rep
+    assert(!Bench.contended(flatCpu(0.4, 0.53, 0.55, 0.58)))
+    // failed reps take no part
+    assert(Bench.contended(flatCpu(0.4, -1.0, 0.53, 1.30)))
   }
 
-  test("publishedMedian: a guard-grown sample never publishes ABOVE the " +
-      "pre-guard median (r17: argmax 1.55x pre-guard, 2.58x post-guard " +
-      "published — the guard's reruns hit a worse window)") {
-    // guard reruns landed slower: pre-guard median wins
-    assert(Bench.publishedMedian(Some(0.50), 0.82) == 0.50)
-    // guard reruns rescued the entry (the designed case): grown wins
-    assert(Bench.publishedMedian(Some(1.55), 0.60) == 0.60)
-    // never flagged: no pre-guard median exists, grown median stands
-    assert(Bench.publishedMedian(None, 0.82) == 0.82)
-    // equal: no-op (and not reported as a min-kept entry by the caller)
-    assert(Bench.publishedMedian(Some(0.82), 0.82) == 0.82)
-    // an all-failed grown sample stays a visible failure — a pre-guard
-    // number must not paper over a query that stopped running
-    assert(Bench.publishedMedian(Some(0.50), -1.0) == -1.0)
-    // a failed PRE-guard median never replaces a working grown one
-    assert(Bench.publishedMedian(Some(-1.0), 0.82) == 0.82)
+  test("sub-0.3 s entries and single reps are never flagged") {
+    assert(!Bench.contended(flatCpu(0.05, 0.05, 0.11, 0.12)))
+    assert(!Bench.contended(flatCpu(0.1, 0.30, 0.90, 0.95)))
+    assert(!Bench.contended(flatCpu(0.1, 2.0)))
+    assert(!Bench.contended(flatCpu(0.1, 2.0, -1.0, -1.0)))
+    assert(!Bench.contended(Nil))
   }
 
-  test("floorContended: median >1.5x own same-run floor is the " +
-      "machine-contention signature; fast entries and real regressions " +
-      "are exempt") {
-    // round-13 shape: floor 0.53 s, contended reps push median to 1.30
-    assert(Bench.floorContended(Seq(0.53, 1.28, 1.30), 1.5))
-    // clean sample: median rides the floor
-    assert(!Bench.floorContended(Seq(0.53, 0.55, 0.58), 1.5))
-    // a real regression raises the floor too -> ratio near 1, not flagged
-    assert(!Bench.floorContended(Seq(4.0, 4.2, 4.1), 1.5))
-    // sub-0.3 s entries are JIT jitter, never flagged
-    assert(!Bench.floorContended(Seq(0.05, 0.11, 0.12), 1.5))
-    // single rep: no spread information, not flagged
-    assert(!Bench.floorContended(Seq(2.0), 1.5))
+  test("more than three contended entries refuse the record; three do not") {
+    val clean = (1 to 20).map(i => s"q_clean_$i" -> flatCpu(0.5, 1.0, 1.1, 1.2))
+    val hit = (1 to 4).map(i => s"q_hit_$i" -> flatCpu(0.5, 0.6, 1.5, 1.6))
+    val four = Bench.contendedEntries((clean ++ hit).toMap)
+    assert(four == hit.map(_._1))
+    assert(Bench.refused(four))
+    val three = Bench.contendedEntries((clean ++ hit.take(3)).toMap)
+    assert(three.size == 3)
+    assert(!Bench.refused(three))
   }
 }

@@ -99,4 +99,25 @@ class SparkCostSpec extends AnyFunSuite {
       assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
     } finally sc.clearJobGroup()
   }
+
+  test("measure counts a streaming query's micro-batch jobs and task time: " +
+      "the stream thread started inside the body inherits the job tag") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    input.addData(1 to 1000: _*)
+    val cost = SparkCost.measure(spark) {
+      val q = input.toDS().groupBy($"value" % 7).count()
+        .writeStream.format("memory").queryName("spark_cost_stream")
+        .outputMode("complete").start()
+      try {
+        q.processAllAvailable()
+        assert(q.recentProgress.map(_.numInputRows).sum == 1000)
+      } finally q.stop()
+    }
+    assert(spark.table("spark_cost_stream").count() == 7)
+    assert(cost.jobs.nonEmpty, cost.report())
+    assert(cost.totals.tasks > 0 && cost.totals.runMs + cost.totals.cpuMs > 0,
+      cost.report())
+  }
 }
