@@ -195,7 +195,7 @@ object Bench {
     // the streaming gates' stopped queries leave loaded state-store
     // providers behind until periodic maintenance unloads them — with
     // 11 streaming entries × passes that is real heap pressure on
-    // whatever is timed next (the per-gate unload in FileFeed/Replay
+    // whatever is timed next (the per-gate unload in Gate.bounded
     // covers the gates themselves; this covers anything they missed)
     try org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
     catch { case _: Throwable => () }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.pipeline._
+import graft.streaming.Feed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -648,7 +649,7 @@ object PipelineQueries {
     "q_pipe_funnel_stream" -> ((s, dir) => {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
-      graft.streaming.FunnelStream.funnelStreamReplay(ev)
+      graft.streaming.FunnelStream.funnelGate(ev, feed = Feed.Memory)
     }),
 
     // cohort retention: users grouped by first-activity week, distinct
@@ -797,7 +798,7 @@ object PipelineQueries {
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
       graft.streaming.Sessionize
-        .sessionsStreamReplay(ev, gapSeconds = 1800L, nBatches = 3)
+        .sessionsGate(ev, gapSeconds = 1800L, nBatches = 3, Feed.Memory)
     }),
     // the SAME streaming sessionizer on its production path: a real
     // file-source stream (readStream.parquet over a chunked feed dir,
@@ -807,10 +808,8 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      val work = java.nio.file.Files
-        .createTempDirectory("graft-fstream").toString
       graft.streaming.Sessionize
-        .sessionsStreamFile(ev, gapSeconds = 1800L, nBatches = 3, work)
+        .sessionsGate(ev, gapSeconds = 1800L, nBatches = 3, Feed.Files())
     }),
     // the EventTimeTimeout sessionizer (unbounded-user production
     // variant: dormant sessions auto-close at the watermark, state is
@@ -819,10 +818,8 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      val work = java.nio.file.Files
-        .createTempDirectory("graft-tmo").toString
-      graft.streaming.Sessionize
-        .sessionsStreamFileTimeout(ev, gapSeconds = 1800L, nBatches = 3, work)
+      graft.streaming.Sessionize.timeoutGate(ev, gapSeconds = 1800L,
+        nBatches = 3)(graft.streaming.Sessionize.sessionsWithTimeout)
     }),
     // the watermarked window aggregate replayed over deterministic
     // micro-batches: per-(hour, event_type) counts/bytes, append-mode
@@ -832,30 +829,33 @@ object PipelineQueries {
         .filter(col("user_id") < 50)
         .select(col("ts_s"), col("event_type").as("lang"),
           col("props").as("text"))
-      graft.streaming.WindowedStats
-        .perWindowReplay(ev, windowSeconds = 3600L, horizonSeconds = 600L)
+      graft.streaming.WindowedStats.perWindowGate(ev, windowSeconds = 3600L,
+        horizonSeconds = 600L, feed = Feed.Memory)
     }),
     // UPDATE-mode streaming aggregation replayed: unwatermarked per-key
     // counts re-emitted as they refresh; the update log reduces to its
     // final row per key (max of the monotone count)
     "q_pipe_hourly_stream" -> ((s, dir) =>
-      graft.streaming.UpdateModeStats.hourlyCountsReplay(
+      graft.streaming.UpdateModeStats.hourlyCountsGate(
         EventTime.eventsWithSeconds(s, dir)
           .filter(col("user_id") < 50)
-          .select("user_id", "event_id", "event_type", "ts_s"))),
+          .select("user_id", "event_id", "event_type", "ts_s"),
+        feed = Feed.Memory)),
     // UPDATE-mode streaming heavy hitters replayed: per-term counts over
     // the document stream, update log reduced to final counts, exact
     // top-50 — shares the batch q_pipe_heavy oracle
     "q_pipe_heavy_stream" -> ((s, dir) =>
-      graft.streaming.UpdateModeStats.heavyHittersReplay(docs(s, dir))),
+      graft.streaming.UpdateModeStats.heavyHittersGate(docs(s, dir),
+        feed = Feed.Memory)),
     // STREAM-STATIC broadcast enrichment replayed: events joined to a
     // static per-user profile frame (stateless; static side re-planned
     // per micro-batch) ≡ the batch left join
     "q_pipe_enrich_stream" -> ((s, dir) =>
-      graft.streaming.StreamJoin.enrichReplay(
+      graft.streaming.StreamJoin.enrichGate(
         EventTime.eventsWithSeconds(s, dir)
           .filter(col("user_id") < 100)
-          .select("user_id", "event_id", "event_type", "ts_s"))),
+          .select("user_id", "event_id", "event_type", "ts_s"),
+        feed = Feed.Memory)),
     // watermarked STREAM-STREAM interval join replayed: click→purchase
     // attribution, inner join with event-time range condition — matches
     // emit when the pair completes, join state is watermark-bounded
@@ -865,8 +865,8 @@ object PipelineQueries {
           col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts_s"))
-      graft.streaming.StreamJoin
-        .clickAttributionReplay(ev, lookbackSeconds = 7200L, nBatches = 3)
+      graft.streaming.StreamJoin.clickAttributionGate(ev,
+        lookbackSeconds = 7200L, nBatches = 3, Feed.Memory)
     }),
     // LEFT OUTER stream-stream join replayed: unmatched purchases emit a
     // null click only after the watermark closes their window (sentinel
@@ -877,39 +877,34 @@ object PipelineQueries {
           col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts_s"))
-      graft.streaming.StreamJoin
-        .clickAttributionOuterReplay(ev, lookbackSeconds = 7200L, nBatches = 3)
+      graft.streaming.StreamJoin.clickAttributionOuterGate(ev,
+        lookbackSeconds = 7200L, nBatches = 3, Feed.Memory)
     }),
     // streaming exact dedup replayed: horizon covers the corpus spread so
     // within-watermark dedup must equal global dedup — one row per
     // distinct fingerprint
     "q_pipe_dedup_stream" -> ((s, dir) =>
-      graft.streaming.StreamingDedup.byFingerprintReplay(
+      graft.streaming.StreamingDedup.byFingerprintGate(
         docs(s, dir).select(col("doc_id").cast("long").as("doc_id"),
-          col("text")))),
+          col("text")), feed = Feed.Memory)),
     // the same within-watermark dedup on its production path: file-source
     // stream in, parquet sink out, no document row on the driver — and
     // since round 15 a NON-time-ordered feed (bounded disorder, ±120 s
     // displacement) consumed under the corpus-wide watermark horizon
     "q_pipe_dedup_fstream" -> ((s, dir) =>
-      graft.streaming.StreamingDedup.byFingerprintStreamFile(
+      graft.streaming.StreamingDedup.byFingerprintGate(
         docs(s, dir).select(col("doc_id").cast("long").as("doc_id"),
-          col("text")),
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-dedup-fstream").toString,
-        oooSkewSeconds = 120L)),
+          col("text")), feed = Feed.Files(oooSkewSeconds = 120L))),
     // the SAME production dedup stream under the RocksDB state-store
     // provider — the backend a 100 TB deployment actually runs (state on
     // local SSD + block cache, not executor heap, so the dedup horizon is
     // bounded by disk, not memory). Shares the heap-provider oracle:
     // state-backend choice must be invisible to results.
     "q_pipe_dedup_rocks" -> ((s, dir) =>
-      graft.streaming.StreamingDedup.byFingerprintStreamFile(
+      graft.streaming.StreamingDedup.byFingerprintGate(
         docs(s, dir).select(col("doc_id").cast("long").as("doc_id"),
-          col("text")),
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-dedup-rocks").toString,
-        oooSkewSeconds = 120L, rocksDb = true)),
+          col("text")), feed = Feed.Files(oooSkewSeconds = 120L),
+        rocksDb = true)),
     // the EventTimeTimeout sessionizer under RocksDB: timers +
     // flatMapGroupsWithState state live in the disk-backed store; the
     // trailing no-data batch must still fire every armed timeout
@@ -917,11 +912,9 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileTimeout(
-        ev, gapSeconds = 1800L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-tmo-rocks").toString,
-        rocksDb = true)
+      graft.streaming.Sessionize.timeoutGate(ev, gapSeconds = 1800L,
+        nBatches = 3, rocksDb = true)(
+        graft.streaming.Sessionize.sessionsWithTimeout)
     }),
     // the gap sessionizer on Spark 4's transformWithState — the
     // successor stateful API (typed state handles + explicit event-time
@@ -932,10 +925,9 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileTws(
-        ev, gapSeconds = 1800L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-tws").toString)
+      graft.streaming.Sessionize.timeoutGate(ev, gapSeconds = 1800L,
+        nBatches = 3, rocksDb = true)(
+        graft.streaming.Sessionize.sessionsTws)
     }),
     // the OUT-OF-ORDER sessionizer on a genuinely disordered feed:
     // fragment-merge sessions (order-independent) under a real watermark
@@ -945,10 +937,9 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileOoo(ev,
-        gapSeconds = 1800L, skewSeconds = 240L, delaySeconds = 600L,
-        nBatches = 4, workDir = java.nio.file.Files
-          .createTempDirectory("graft-ooo").toString)
+      graft.streaming.Sessionize.outOfOrderGate(ev, gapSeconds = 1800L,
+        skewSeconds = 240L, delaySeconds = 600L, nBatches = 4)(
+        graft.streaming.Sessionize.sessionsOutOfOrder)
     }),
     // batch→stream MIGRATION: the feed cut at its event-time midpoint,
     // pre-cut sessions computed as a batch backfill whose per-user open
@@ -959,10 +950,8 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileWarm(
-        ev, gapSeconds = 1800L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-warm").toString)
+      graft.streaming.Sessionize.warmGate(ev, gapSeconds = 1800L,
+        nBatches = 3)
     }),
     // the MapState engine: scalar session core in a ValueState,
     // per-event-type counts in a MapState (point updates instead of
@@ -972,10 +961,9 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileTwsMap(
-        ev, gapSeconds = 1800L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-tws-map").toString)
+      graft.streaming.Sessionize.timeoutGate(ev, gapSeconds = 1800L,
+        nBatches = 3, rocksDb = true)(
+        graft.streaming.Sessionize.sessionsTwsMap)
     }),
     // the same disordered feed through the transformWithState fragment
     // sessionizer (ListState + explicit timers) — both modern-API legs
@@ -984,10 +972,9 @@ object PipelineQueries {
       val ev = EventTime.eventsWithSeconds(s, dir)
         .select(col("user_id"), col("ts_s"), col("event_type"))
         .filter(col("user_id") < 50)
-      graft.streaming.Sessionize.sessionsStreamFileOooTws(ev,
-        gapSeconds = 1800L, skewSeconds = 240L, delaySeconds = 600L,
-        nBatches = 4, workDir = java.nio.file.Files
-          .createTempDirectory("graft-ooo-tws").toString)
+      graft.streaming.Sessionize.outOfOrderGate(ev, gapSeconds = 1800L,
+        skewSeconds = 240L, delaySeconds = 600L, nBatches = 4,
+        rocksDb = true)(graft.streaming.Sessionize.sessionsOutOfOrderTws)
     }),
     // LEFT OUTER stream-stream join on its production path: real file
     // source, parquet sink, watermark-driven unmatched-row flush via two
@@ -998,10 +985,8 @@ object PipelineQueries {
           col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts_s"))
-      graft.streaming.StreamJoin.clickAttributionOuterStreamFile(ev,
-        lookbackSeconds = 7200L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-oj-fstream").toString)
+      graft.streaming.StreamJoin.clickAttributionOuterGate(ev,
+        lookbackSeconds = 7200L, nBatches = 3, Feed.Files())
     }),
     // watermarked window aggregate on its production path: append-mode
     // windows close on real micro-batch watermark advancement
@@ -1010,10 +995,8 @@ object PipelineQueries {
         .filter(col("user_id") < 50)
         .select(col("ts_s"), col("event_type").as("lang"),
           col("props").as("text"))
-      graft.streaming.WindowedStats.perWindowStreamFile(ev,
-        windowSeconds = 3600L, horizonSeconds = 600L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-ws-fstream").toString)
+      graft.streaming.WindowedStats.perWindowGate(ev, windowSeconds = 3600L,
+        horizonSeconds = 600L, nBatches = 3, Feed.Files())
     }),
     // TTL-bounded MapState profile accumulator on the production path:
     // per-user event-type counts in transformWithState MapState created
@@ -1021,30 +1004,26 @@ object PipelineQueries {
     // invisible to in-horizon answers, so the gate hashes against the
     // plain batch groupBy oracle
     "q_pipe_profile_ttl" -> ((s, dir) =>
-      graft.streaming.ProfileState.profilesStreamFile(
+      graft.streaming.ProfileState.profilesGate(
         EventTime.eventsWithSeconds(s, dir)
           .filter(col("user_id") < 50)
           .select("user_id", "event_type", "ts_s"),
-        ttlMs = 3600000L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-prof-ttl").toString)),
+        ttlMs = 3600000L, nBatches = 3)),
     // UPDATE-mode hourly counts on the production path: file source in,
     // foreachBatch parquet update log out, reduced to final rows
     "q_pipe_hourly_fstream" -> ((s, dir) =>
-      graft.streaming.UpdateModeStats.hourlyCountsStreamFile(
+      graft.streaming.UpdateModeStats.hourlyCountsGate(
         EventTime.eventsWithSeconds(s, dir)
           .filter(col("user_id") < 50)
           .select("user_id", "event_id", "event_type", "ts_s"),
-        nBatches = 3, workDir = java.nio.file.Files
-          .createTempDirectory("graft-hr-fstream").toString)),
+        nBatches = 3, Feed.Files())),
     // the live funnel state machine on the production path: file source
     // in, foreachBatch update log out, final stage per user reduced
     "q_pipe_funnel_fstream" -> ((s, dir) =>
-      graft.streaming.FunnelStream.funnelStreamFile(
+      graft.streaming.FunnelStream.funnelGate(
         EventTime.eventsWithSeconds(s, dir)
           .select(col("user_id"), col("ts_s"), col("event_type")),
-        nBatches = 3, workDir = java.nio.file.Files
-          .createTempDirectory("graft-fn-fstream").toString)),
+        nBatches = 3, Feed.Files())),
     // INNER stream-stream interval join on the production path, over a
     // DISORDERED feed (±300 s « the join's own watermark delays): real
     // file source in, parquet sink out — shares the replay gate's oracle
@@ -1054,30 +1033,24 @@ object PipelineQueries {
           col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("ts_s"))
-      graft.streaming.StreamJoin.clickAttributionStreamFile(ev,
-        lookbackSeconds = 7200L, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-ij-fstream").toString,
-        oooSkewSeconds = 300L)
+      graft.streaming.StreamJoin.clickAttributionGate(ev,
+        lookbackSeconds = 7200L, nBatches = 3, Feed.Files(oooSkewSeconds = 300L))
     }),
     // UPDATE-mode heavy hitters on the production path: file source in,
     // foreachBatch parquet update log out, exact top-50 — shares the
     // batch q_pipe_heavy oracle
     "q_pipe_heavy_fstream" -> ((s, dir) =>
-      graft.streaming.UpdateModeStats.heavyHittersStreamFile(
-        docs(s, dir), k = 50, nBatches = 3,
-        workDir = java.nio.file.Files
-          .createTempDirectory("graft-hh-fstream").toString)),
+      graft.streaming.UpdateModeStats.heavyHittersGate(
+        docs(s, dir), k = 50, nBatches = 3, Feed.Files())),
     // stream-static broadcast enrichment on the production path: the
     // profile is re-broadcast per REAL micro-batch, enriched rows land
     // through a parquet sink
     "q_pipe_enrich_fstream" -> ((s, dir) =>
-      graft.streaming.StreamJoin.enrichStreamFile(
+      graft.streaming.StreamJoin.enrichGate(
         EventTime.eventsWithSeconds(s, dir)
           .filter(col("user_id") < 100)
           .select("user_id", "event_id", "event_type", "ts_s"),
-        nBatches = 3, workDir = java.nio.file.Files
-          .createTempDirectory("graft-en-fstream").toString)))
+        nBatches = 3, Feed.Files())))
 
   /** Shared word-set CTE for the oracle side. */
   private val wordsCte =

@@ -776,21 +776,9 @@ final class SparkStore(val spark: SparkSession, val root: String) {
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
         if (repaired.isEmpty) return
-        val newBlobs = repaired
-          .select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-          .join(chunkHashesDF, Seq("hash"), "left_anti")
-        val staging = newChunkStagingDir()
-        newBlobs.repartitionByRange(col("hash")).sortWithinPartitions("hash")
-          .write.option("compression", "uncompressed").parquet(staging)
-        writeChunkRangeSidecar(adoptChunkFiles(staging))
-        appendIndexRows(name, repaired.select(
-          col("var"), lit(vid).as("version"), col("seq"),
-          col("coordKey"), col("coord"), col("hash"),
-          struct(col("scnt").as("cnt"), col("slmin").as("lmin"),
-            col("slmax").as("lmax"), col("slsum").as("lsum"),
-            col("sdmin").as("dmin"), col("sdmax").as("dmax"),
-            col("snan").as("nan")).as("stats"),
-          col("baseSeq"), col("baseHash"), col("replacesHash")))
+        appendBlobsRange(repaired)
+        appendIndexRows(name, indexRowsOf(repaired, col("var"), vid,
+          col("seq"), col("replacesHash")))
       } finally repaired.unpersist()
     } finally torn.unpersist()
   }
@@ -877,7 +865,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     val base = StoreFs.child(root, ".scan_manifest")
     val dir = StoreFs.child(base, java.util.UUID.randomUUID().toString)
     StoreFs.mkdirs(base)
-    SparkStore.registerManifestForCleanup(dir)
+    StoreFs.deleteAtExit(dir)
     dir
   }
 
@@ -1293,6 +1281,73 @@ final class SparkStore(val spark: SparkSession, val root: String) {
       }
     StoreFs.deleteTree(staging)
   }
+
+  /** RANGE blob append of (hash, bytes) rows — the write path's range
+    * pass and torn-write repair both land blobs through it: staged,
+    * adopted into the chunks dir with its hash-range sidecar, and
+    * arranged so blob BYTES move exactly ONCE — the range shuffle that
+    * lays out hash-sorted disjoint part files:
+    *  - already-in-store hashes (re-ingested content) are a string-only
+    *    semi join against chunkHashesDF, broadcast back as a LEFT-ANTI
+    *    filter below the range shuffle. The broadcast is bounded by the
+    *    batch's re-ingested DISTINCT hashes (40 B each); the worst case —
+    *    an idempotent full re-write — broadcasts the batch's hash set and
+    *    then writes zero blobs.
+    *  - within-batch duplicates land ADJACENT in the hash-sorted range
+    *    partitions and are dropped in-pass (mapPartitions), costing no
+    *    shuffle at all.
+    * Earlier shapes both failed at scale, caught by the round-18
+    * incompressible-content probe: a plain join of the cogroup output
+    * with the winner coordKeys let the planner BROADCAST the blob side
+    * (the cogroup's static size estimate derives from its tiny
+    * spark.range inputs — 1.6 GB of driver results at the x4 shape), and
+    * pinning the build side with a shuffle-hash hint re-shuffled every
+    * blob byte a second time (the cogroup's coordKey clustering does not
+    * survive object serialization, so the join could not reuse it).
+    * RANGE-partitioning by hash, then sorting within partitions, gives
+    * each part file a DISJOINT hash range (footer min/max), so a point
+    * lookup opens one candidate file per ingest generation instead of
+    * every file (file-level pruning in ChunkBlobReader.fileHashRange —
+    * without disjoint files, per-chunk tasks paid an open per file:
+    * measured 277 ms/task on a 2240-chunk grid agg, ~8 ms after). */
+  private[spark] def appendBlobsRange(rows: DataFrame): Unit = {
+    import spark.implicits._
+    val staging = newChunkStagingDir()
+    val existing = rows.select("hash").distinct()
+      .join(chunkHashesDF, Seq("hash"), "left_semi")
+    rows.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
+      .join(broadcast(existing), Seq("hash"), "left_anti")
+      .as[(String, Long, Array[Byte])]
+      // map-side pre-dedup (hashes only in memory, bounded by the
+      // partition's distinct chunks): a constant variable collapses to
+      // one row per partition BEFORE the shuffle, preserving the old
+      // shape's property that duplicate content never moves
+      .mapPartitions { it =>
+        val seen = new java.util.HashSet[String]()
+        it.filter(r => seen.add(r._1))
+      }
+      .repartitionByRange(col("_1")).sortWithinPartitions("_1")
+      // cross-partition duplicates land adjacent in the hash-sorted
+      // range partitions: drop-adjacent finishes the dedup shuffle-free
+      .mapPartitions(it => SparkVersionWriter.dropAdjacent(it))
+      .toDF("hash", "ref", "bytes")
+      .write.option("compression", "uncompressed")
+      .parquet(staging)
+    writeChunkRangeSidecar(adoptChunkFiles(staging))
+  }
+
+  /** Index rows of merged chunk rows (coordKey, coord, hash, the s* stats
+    * columns, baseSeq, baseHash) — the one projection every chunk append
+    * lands through [[appendIndexRows]]. */
+  private[spark] def indexRowsOf(rows: DataFrame, varCol: Column, vid: Long,
+      seqCol: Column, replacesCol: Column): DataFrame =
+    rows.select(varCol.as("var"), lit(vid).as("version"), seqCol.as("seq"),
+      col("coordKey"), col("coord"), col("hash"),
+      struct(col("scnt").as("cnt"), col("slmin").as("lmin"),
+        col("slmax").as("lmax"), col("slsum").as("lsum"),
+        col("sdmin").as("dmin"), col("sdmax").as("dmax"),
+        col("snan").as("nan")).as("stats"),
+      col("baseSeq"), col("baseHash"), replacesCol.as("replacesHash"))
 
   /** Stage-and-adopt index append: the ONLY way index rows land. */
   private[graft] def appendIndexRows(name: String,
@@ -1804,20 +1859,6 @@ object SparkStore {
     * may reuse the dir. Deleted FIRST by the vacuum sweep for the mirror
     * guarantee (a half-deleted dir reads as a miss, never as truncated). */
   val ManifestCompleteMarker: String = "_COMPLETE"
-
-  // one shared JVM shutdown hook for all scan-manifest dirs (a hook
-  // thread per scan would accumulate in long-lived drivers)
-  private val manifestDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val manifestHook: Unit = Runtime.getRuntime.addShutdownHook(
-    new Thread(() => manifestDirs.forEach { dir =>
-      try StoreFs.deleteTree(dir) catch { case _: java.io.IOException => }
-    }))
-  private[spark] def registerManifestForCleanup(dir: String): Unit = {
-    manifestHook
-    manifestDirs.add(dir)
-    ()
-  }
 
   /** Per-chunk zone-map struct stored beside each index row (nullable end
     * to end: index files written before stats existed read as null, which
@@ -2576,9 +2617,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       //    vacuum's compaction; part-file names carry fresh UUIDs, so no
       //    collision. Blobs are already LZ4-framed — parquet does not
       //    recompress them.
-      val staging = store.newChunkStagingDir()
-      appendBlobsRange(merged, staging)
-      store.writeChunkRangeSidecar(store.adoptChunkFiles(staging))
+      store.appendBlobsRange(merged)
 
       // 5. index append, hive-partitioned by (var, version) so the MVCC
       //    resolve prunes whole files by version instead of filtering
@@ -2591,14 +2630,8 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       val replacesCol =
         if (replacesByCoord.isEmpty) lit(null).cast("string")
         else element_at(typedLit(replacesByCoord), col("coordKey"))
-      store.appendIndexRows(name, merged.select(
-        lit(varN).as("var"), lit(vid).as("version"), lit(jobSeqBase).as("seq"),
-        col("coordKey"), col("coord"), col("hash"),
-        struct(col("scnt").as("cnt"), col("slmin").as("lmin"),
-          col("slmax").as("lmax"), col("slsum").as("lsum"),
-          col("sdmin").as("dmin"), col("sdmax").as("dmax"),
-          col("snan").as("nan")).as("stats"),
-        col("baseSeq"), col("baseHash"), replacesCol.as("replacesHash")))
+      store.appendIndexRows(name, store.indexRowsOf(merged, lit(varN), vid,
+        lit(jobSeqBase), replacesCol))
       // collected for shared writers only: bounded by THIS call's touched
       // chunk count (token slaves write bounded batches; the unbounded
       // bulk-ingest path is single-writer and never collects)
@@ -2674,54 +2707,6 @@ final class SparkVersionWriter(store: SparkStore, name: String,
             base.fold("")(_._4)))
         }
       }
-  }
-
-  /** RANGE blob append, arranged so blob BYTES move exactly ONCE — the
-    * range shuffle that lays out hash-sorted disjoint part files:
-    *  - already-in-store hashes (re-ingested content) are a string-only
-    *    semi join against chunkHashesDF, broadcast back as a LEFT-ANTI
-    *    filter below the range shuffle. The broadcast is bounded by the
-    *    batch's re-ingested DISTINCT hashes (40 B each); the worst case —
-    *    an idempotent full re-write — broadcasts the batch's hash set and
-    *    then writes zero blobs.
-    *  - within-batch duplicates land ADJACENT in the hash-sorted range
-    *    partitions and are dropped in-pass (mapPartitions), costing no
-    *    shuffle at all.
-    * Earlier shapes both failed at scale, caught by the round-18
-    * incompressible-content probe: a plain join of the cogroup output
-    * with the winner coordKeys let the planner BROADCAST the blob side
-    * (the cogroup's static size estimate derives from its tiny
-    * spark.range inputs — 1.6 GB of driver results at the x4 shape), and
-    * pinning the build side with a shuffle-hash hint re-shuffled every
-    * blob byte a second time (the cogroup's coordKey clustering does not
-    * survive object serialization, so the join could not reuse it).
-    * RANGE-partitioning by hash, then sorting within partitions, gives
-    * each part file a DISJOINT hash range (footer min/max), so a point
-    * lookup opens one candidate file per ingest generation instead of
-    * every file (file-level pruning in ChunkBlobReader.fileHashRange —
-    * without disjoint files, per-chunk tasks paid an open per file:
-    * measured 277 ms/task on a 2240-chunk grid agg, ~8 ms after). */
-  private def appendBlobsRange(merged: DataFrame, staging: String): Unit = {
-    val existing = merged.select("hash").distinct()
-      .join(store.chunkHashesDF, Seq("hash"), "left_semi")
-    merged.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-      .join(broadcast(existing), Seq("hash"), "left_anti")
-      .as[(String, Long, Array[Byte])]
-      // map-side pre-dedup (hashes only in memory, bounded by the
-      // partition's distinct chunks): a constant variable collapses to
-      // one row per partition BEFORE the shuffle, preserving the old
-      // shape's property that duplicate content never moves
-      .mapPartitions { it =>
-        val seen = new java.util.HashSet[String]()
-        it.filter(r => seen.add(r._1))
-      }
-      .repartitionByRange(col("_1")).sortWithinPartitions("_1")
-      // cross-partition duplicates land adjacent in the hash-sorted
-      // range partitions: drop-adjacent finishes the dedup shuffle-free
-      .mapPartitions(it => SparkVersionWriter.dropAdjacent(it))
-      .toDF("hash", "ref", "bytes")
-      .write.option("compression", "uncompressed")
-      .parquet(staging)
   }
 
   /** Keys of the chunks one slab row's [start, stop) box covers — the

@@ -492,6 +492,22 @@ private[graft] object StoreFs {
   def deleteIfExists(p: String): Unit =
     try delete(p) catch { case _: java.io.IOException => () }
 
+  // one shared JVM shutdown hook for every tree deleted at exit (a hook
+  // thread per registration would accumulate in long-lived drivers)
+  private val exitTrees =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => exitTrees.forEach { dir =>
+      try deleteTree(dir) catch { case _: java.io.IOException => }
+    }))
+
+  /** Delete the tree at `dir` when the JVM exits (best effort). */
+  def deleteAtExit(dir: String): Unit = {
+    exitHook
+    exitTrees.add(dir)
+    ()
+  }
+
   /** Recursive tree delete; missing is fine. */
   def deleteTree(p: String): Unit = {
     val lp = localPath(p)

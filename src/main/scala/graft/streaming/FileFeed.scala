@@ -3,20 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic FILE-SOURCE feed for the streaming gates' production
-  * twins: a bounded frame is cut into `nBatches` uniform event-time
-  * slices, each written by a Spark job as ONE parquet file with strictly
-  * increasing mtimes, so `readStream.parquet` (oldest-first,
-  * maxFilesPerTrigger=1) replays them as time-ordered micro-batches —
-  * the real unbounded path (file landing zone → stateful operator →
-  * distributed sink), with no event row ever crossing the driver. The
-  * only driver reads are the min/max of the slicing column (two scalar
-  * aggregates, planning-sized).
+/** Deterministic FILE-SOURCE feed — the [[Feed.Files]] feed of the gate
+  * runner ([[Gate]]), plus the session-conf helpers every stream shares:
+  * a bounded frame is cut into `nBatches` uniform event-time slices, each
+  * written by a Spark job as ONE parquet file with strictly increasing
+  * mtimes, so `readStream.parquet` (oldest-first, maxFilesPerTrigger=1)
+  * replays them as time-ordered micro-batches — the real unbounded path
+  * (file landing zone → stateful operator → distributed sink), with no
+  * event row ever crossing the driver. The only driver reads are the
+  * min/max of the slicing column (two scalar aggregates, planning-sized).
   *
-  * This replaces the MemoryStream replay harness's driver-collected feed
-  * for gates that must prove the production path end-to-end; the replay
-  * harness remains the right tool for per-batch-composition-sensitive
-  * tests (it controls batch membership exactly).
+  * [[Feed.Memory]] ([[Replay]]) stays the right tool for tests sensitive
+  * to per-batch composition (it controls batch membership exactly).
   */
 object FileFeed {
 
@@ -140,81 +138,6 @@ object FileFeed {
       .option("maxFilesPerTrigger", 1).parquet(feed)
   }
 
-  /** Run a streaming frame to completion through a parquet sink
-    * (AvailableNow) and return the sunk rows as a batch frame.
-    * `narrowTo` bounds `spark.sql.shuffle.partitions` for the stream's
-    * lifetime (restored after): a bounded gate feed doesn't need one
-    * state-store instance per session shuffle partition per micro-batch
-    * — the partition count is captured into the checkpoint at start. */
-  def runToParquet(out: DataFrame, workDir: String,
-      narrowTo: Option[Int] = None, rocksDb: Boolean = false): DataFrame = {
-    val spark = out.sparkSession
-    withNarrowShuffle(spark, narrowTo) {
-      withLocalCheckpoints(spark, s"$workDir/ckpt") {
-      // changelog checkpointing when RocksDB: the production commit path
-      // (per-batch cost ~ batch delta, not total state; the default mode
-      // zips a FULL snapshot per store per micro-batch — measured as the
-      // dominant task wait of the transformWithState gates). Recovery
-      // equivalence under all three modes is pinned by RocksDbStateSpec.
-      withStateProvider(spark, rocksDb, changelog = rocksDb) {
-        val q = out.writeStream.format("parquet")
-          .option("path", s"$workDir/out")
-          .option("checkpointLocation", s"$workDir/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      }
-    }
-    unloadStateStores()
-    spark.read.parquet(s"$workDir/out")
-  }
-
-  /** Drop the finished query's executor-side state-store providers: a
-    * stopped query's in-memory state maps otherwise linger in the JVM
-    * until the periodic maintenance unloads them (minutes), and a
-    * sequence of bounded gate streams in one JVM accumulates hundreds of
-    * loaded providers' worth of heap pressure that bleeds into whatever
-    * runs next. A later streaming query reloads providers on demand. */
-  private def unloadStateStores(): Unit =
-    try org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-    catch { case _: Throwable => () }
-
-  /** UPDATE-mode production sink: parquet has no native update sink, so
-    * the documented production pattern is `foreachBatch` appending each
-    * micro-batch's refreshed rows — an UPDATE LOG on disk that a reader
-    * reduces to final values (for the monotone aggregates the gates use,
-    * max per key). Rows go executor → parquet inside foreachBatch; the
-    * driver never sees them. Returns the full update log. */
-  def runUpdatesToParquet(out: DataFrame, workDir: String,
-      narrowTo: Option[Int] = None, rocksDb: Boolean = false): DataFrame = {
-    val spark = out.sparkSession
-    val path = s"$workDir/out"
-    withNarrowShuffle(spark, narrowTo) {
-      withLocalCheckpoints(spark, s"$workDir/ckpt") {
-      // changelog checkpointing when RocksDB: the production commit path
-      // (per-batch cost ~ batch delta, not total state; the default mode
-      // zips a FULL snapshot per store per micro-batch — measured as the
-      // dominant task wait of the transformWithState gates). Recovery
-      // equivalence under all three modes is pinned by RocksDbStateSpec.
-      withStateProvider(spark, rocksDb, changelog = rocksDb) {
-        val q = out.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-            batch.write.mode("append").parquet(path); ()
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$workDir/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      }
-    }
-    unloadStateStores()
-    spark.read.parquet(path)
-  }
-
   /** Route checkpoint I/O through [[LocalNioCheckpointFileManager]] when
     * (and only when) the checkpoint root is on the local filesystem —
     * the default FileContext manager forks a `chmod` subprocess per
@@ -229,19 +152,6 @@ object FileFeed {
     val isLocal = scheme == null || scheme == "file"
     if (!isLocal || spark.conf.getOption(key).nonEmpty) body
     else withConf(spark, key, classOf[LocalNioCheckpointFileManager].getName)(body)
-  }
-
-  private def withNarrowShuffle[A](spark: SparkSession, narrowTo: Option[Int])(
-      body: => A): A = narrowTo match {
-    case None => body
-    case Some(n) =>
-      // SPARK_GRAFT_STREAM_NARROW overrides the caller's width (A/B dial
-      // + deployment sizing: state-store instance count per operator is a
-      // scale-dependent choice — a production feed wants >= cores, a
-      // bounded gate feed wants few instances; see OPTIMIZATION_r19.md)
-      val eff = sys.env.get("SPARK_GRAFT_STREAM_NARROW")
-        .map(_.toInt).getOrElse(n)
-      withConf(spark, "spark.sql.shuffle.partitions", eff.toString)(body)
   }
 
   /** Pin one session conf for `body`'s span, restoring the previous

@@ -23,12 +23,8 @@ object FunnelStream {
   /** Same-timestamp tie rule as the batch twin's `>=` constraints: a view
     * at t qualifies a click at the same t, a click a purchase — so at
     * equal ts the earlier funnel stage must be processed first. */
-  private def typeRank(t: String): Int = t match {
-    case "view" => 0
-    case "click" => 1
-    case "purchase" => 2
-    case _ => 3
-  }
+  private val StageRank = Map("view" -> 0, "click" -> 1, "purchase" -> 2)
+  private def typeRank(t: String): Int = StageRank.getOrElse(t, 3)
 
   /** (user_id, stage) updates; stage = 0 none, 1 viewed, 2 clicked after
     * first view, 3 purchased after first qualifying click. */
@@ -56,48 +52,26 @@ object FunnelStream {
       }
   }
 
-  /** Replay twin producing q_pipe_funnel's exact one-row schema so both
-    * share one oracle. Input rows are globally sorted by (ts_s, stage
-    * rank) before slicing, matching the event-time order a watermarked
-    * production source delivers. */
-  def funnelStreamReplay(events: DataFrame, nBatches: Int = 3): DataFrame = {
+  /** Gate for [[stageUpdates]], on either feed, in q_pipe_funnel's exact
+    * one-row schema so both share one oracle: the update log of stages is
+    * reduced to the final stage per user (stages are monotone). Events at
+    * one timestamp stay in funnel-stage order across micro-batches: the
+    * memory feed sorts by (ts_s, stage rank), and the file feed's uniform
+    * event-time slices keep equal-ts events in one micro-batch, which the
+    * operator sorts the same way. Input columns: user_id, ts_s,
+    * event_type. */
+  def funnelGate(events: DataFrame, nBatches: Int = 3, feed: Feed): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val rows = events.select("user_id", "ts_s", "event_type")
-      .collect()
-      .map(r => Ev(r.getLong(0), r.getLong(1), r.getString(2)))
-      .sortBy(e => (e.ts_s, typeRank(e.event_type), e.user_id))
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      outputMode = "update") { ds => stageUpdates(ds).toDF("user_id", "stage") }
-    val finalStage = sunk.groupBy("user_id").agg(max("stage").as("stage"))
-    finalStage.agg(
-        sum(when(col("stage") >= 1, 1L).otherwise(0L)).as("n_view"),
-        sum(when(col("stage") >= 2, 1L).otherwise(0L)).as("n_click"),
-        sum(when(col("stage") >= 3, 1L).otherwise(0L)).as("n_purchase"))
-      .select(col("n_view"), col("n_click"), col("n_purchase"),
-        expr("n_click * 1000 div n_view").as("click_pm"),
-        expr("n_purchase * 1000 div n_click").as("purchase_pm"))
-  }
-
-  /** PRODUCTION twin of [[funnelStreamReplay]]: the same per-user
-    * `mapGroupsWithState` state machine fed from a real file source
-    * ([[FileFeed]]), stage updates sunk through `foreachBatch` as an
-    * on-disk update log, reduced to the final stage per user (stages are
-    * monotone). Same-timestamp cross-stage ordering is handled inside
-    * the operator (per-batch sort by (ts, stage rank)) — the feed's
-    * uniform event-time slices keep equal-ts events in one micro-batch,
-    * so no pre-sort of the input is needed, unlike the replay harness.
-    * Input columns: user_id, ts_s, event_type. */
-  def funnelStreamFile(events: DataFrame, nBatches: Int = 3,
-      workDir: String): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("ts_s").cast("long"), col("event_type").cast("string"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir).as[Ev]
-    val sunk = FileFeed.runUpdatesToParquet(
-      stageUpdates(stream).toDF("user_id", "stage"), workDir,
-      narrowTo = Some(4))
+    val span = Gate.span(events.select(col("user_id").cast("long"),
+        col("ts_s").cast("long"), col("event_type").cast("string"))
+      .withColumn("rank", coalesce(
+        element_at(typedLit(StageRank), col("event_type")), lit(3))),
+      Seq("ts_s", "rank", "user_id"), feed)
+    val sunk = Gate.run(span, nBatches, outputMode = "update") { s =>
+      stageUpdates(s.select("user_id", "ts_s", "event_type").as[Ev])
+        .toDF("user_id", "stage")
+    }
     val finalStage = sunk.groupBy("user_id").agg(max("stage").as("stage"))
     finalStage.agg(
         sum(when(col("stage") >= 1, 1L).otherwise(0L)).as("n_view"),

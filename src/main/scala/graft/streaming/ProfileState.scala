@@ -72,29 +72,29 @@ object ProfileState {
         TimeMode.ProcessingTime(), OutputMode.Update())
   }
 
-  /** PRODUCTION gate runner: per-user event-type counts accumulated in
-    * TTL'd MapState over a real file feed, update log reduced to final
-    * values. Within the TTL horizon (gate feeds replay in seconds; the
-    * TTL is generous) results must equal the batch `groupBy` exactly —
-    * retention bounding must be invisible to in-horizon answers. */
-  def profilesStreamFile(events: DataFrame, ttlMs: Long, nBatches: Int,
-      workDir: String): DataFrame = {
+  /** Gate for [[profiles]]: per-user event-type counts accumulated in
+    * TTL'd MapState over the fed events, update log reduced to final
+    * values. Within the TTL horizon (gate feeds run in seconds; the TTL is
+    * generous) results must equal the batch `groupBy` exactly — retention
+    * bounding must be invisible to in-horizon answers. Runs on the file
+    * feed. Input columns: user_id, event_type, ts_s. */
+  def profilesGate(events: DataFrame, ttlMs: Long, nBatches: Int): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("event_type").cast("string"), col("ts_s").cast("long"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir)
-    val typed = stream.select(col("user_id"), col("event_type")).as[PEvent]
+    val span = Gate.span(events.select(col("user_id").cast("long"),
+      col("event_type").cast("string"), col("ts_s").cast("long")),
+      Seq("ts_s"), Feed.Files())
     // PINNED off: in ProcessingTime mode every no-data batch advances
     // processing time, so the engine would interleave empty micro-batches
-    // (full state commits each) with the file batches for no benefit —
+    // (full state commits each) with the fed batches for no benefit —
     // TTL expiry is filtered on read, never driven by empty batches
-    val sunk = FileFeed.withConf(spark,
+    FileFeed.withConf(spark,
         "spark.sql.streaming.noDataMicroBatches.enabled", "false") {
-      FileFeed.runUpdatesToParquet(profiles(typed, ttlMs).toDF(),
-        workDir, narrowTo = Some(4), rocksDb = true)
-    }
-    sunk.groupBy("user_id", "event_type").agg(max(col("n")).as("n"))
+      Gate.run(span, nBatches, outputMode = "update", rocksDb = true) { s =>
+        profiles(s.select(col("user_id"), col("event_type")).as[PEvent],
+          ttlMs).toDF()
+      }
+    }.groupBy("user_id", "event_type").agg(max(col("n")).as("n"))
       .orderBy("user_id", "event_type")
   }
 }

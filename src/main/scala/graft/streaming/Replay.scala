@@ -3,17 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Deterministic micro-batch replay harness: feeds a bounded, pre-sorted
-  * event list through a real Structured Streaming query (MemoryStream →
-  * the operator under test → memory sink) in contiguous slices, then
-  * returns the sink contents as a frozen batch DataFrame.
+/** Deterministic micro-batch replay — the [[Feed.Memory]] feed of the gate
+  * runner ([[Gate]]), and the harness for tests that hand-order arrivals:
+  * a bounded, pre-sorted row list goes through a real Structured Streaming
+  * query (MemoryStream → the operator under test → memory sink) in
+  * contiguous slices, and the sink contents come back as a frozen batch
+  * DataFrame.
   *
-  * This is the correctness-gate twin of a production stream: state
-  * carries across batches, watermarks advance exactly as they would live
-  * (batch N's emissions use the watermark from batch N−1), and the DuckDB
-  * oracle checks the collected output. Driver-side data is inherent to
-  * MemoryStream and the caller caps the input — the scale path is the
-  * same operator over readStream sources.
+  * State carries across batches and watermarks advance exactly as they
+  * would live (batch N's emissions use the watermark from batch N−1).
+  * Driver-side data is inherent to MemoryStream and the caller caps the
+  * input; [[Feed.Files]] is the same operator over a real file source.
   */
 private[graft] object Replay {
 
@@ -29,43 +29,17 @@ private[graft] object Replay {
     require(rows.nonEmpty, "Replay.run: empty input")
     val input = MemoryStream[T]
     val name = "replay_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // Stateful streaming cost here is dominated by one state-store
-    // instance per shuffle partition per micro-batch; the replay input is
-    // bounded, so run the stream narrow (the partition count is captured
-    // into the query's offset metadata at start, then restored — batch
-    // queries on the session are unaffected).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // memory-sink replays checkpoint to a Spark-managed LOCAL temp dir,
-    // so the NIO manager applies (kills the per-file chmod forks of the
-    // default FileContext manager — see LocalNioCheckpointFileManager)
-    val ckptKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevCkptMgr = spark.conf.getOption(ckptKey)
-    if (prevCkptMgr.isEmpty)
-      spark.conf.set(ckptKey, classOf[LocalNioCheckpointFileManager].getName)
-    val q =
-      try build(input.toDS())
+    // a memory sink checkpoints to a Spark-managed local temp dir
+    Gate.bounded(spark, System.getProperty("java.io.tmpdir")) {
+      val q = build(input.toDS())
         .writeStream.format("memory").queryName(name)
         .outputMode(outputMode).start()
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        if (prevCkptMgr.isEmpty) spark.conf.unset(ckptKey)
-      }
-    try {
-      val per = math.max(1, (rows.length + nBatches - 1) / nBatches)
-      rows.grouped(per).foreach { b =>
-        input.addData(b.toIndexedSeq); q.processAllAvailable()
-      }
-      tailBatches.foreach { b =>
-        input.addData(b.toIndexedSeq); q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      // drop the finished query's in-memory state-store providers now
-      // instead of waiting minutes for the maintenance unload — gate
-      // suites run many bounded streams per JVM (see FileFeed)
-      try org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-      catch { case _: Throwable => () }
+      try {
+        val per = math.max(1, (rows.length + nBatches - 1) / nBatches)
+        (rows.grouped(per) ++ tailBatches).foreach { b =>
+          input.addData(b.toIndexedSeq); q.processAllAvailable()
+        }
+      } finally q.stop()
     }
     val out = spark.table(name)
     val frozen = spark.createDataFrame(

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful event sessionization over a stream: gap-based sessions per
@@ -59,50 +61,70 @@ object Sessionize {
       }
   }
 
-  /** Deterministic micro-batch REPLAY of the streaming path, producing the
-    * batch twin's exact output schema so one DuckDB oracle gates both.
-    *
-    * The bounded input (caller caps it — the gate uses user_id < 50) is
-    * split into `nBatches` contiguous event-time slices and fed through a
-    * MemoryStream into the real `flatMapGroupsWithState` operator, state
-    * carrying across batches. A final per-user sentinel batch at
-    * max(ts)+2·gap closes every open session (the sentinel's own
-    * singleton session stays open in state and is never emitted). Closed
-    * sessions are then renumbered per user by start time — session starts
-    * are strictly increasing within a user, so this matches the batch
-    * twin's running new-session sum exactly.
-    *
-    * Driver-side collect is inherent to a replay harness (MemoryStream
-    * feeds from local data); this is a correctness gate, not a scale path
-    * — the scale path is `sessions` on a real source.
-    */
-  def sessionsStreamReplay(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    import spark.implicits._
+  /** Gate for [[sessions]], on either feed, in the batch twin's schema
+    * (one oracle gates both). The bounded input (caller caps it — the
+    * gate uses user_id < 50) is fed in `nBatches` event-time slices, state
+    * carrying across batches; a final sentinel batch at max(ts)+2·gap,
+    * one row per input event, closes every user's open session (the
+    * sentinels' own session stays open in state and is never emitted).
+    * Input columns: user_id, ts_s, event_type. */
+  def sessionsGate(events: DataFrame, gapSeconds: Long, nBatches: Int = 3,
+      feed: Feed): DataFrame = {
+    val span = Gate.span(eventCols(events), Seq("ts_s"), feed)
+    val flush = span.frame.select(col("user_id"),
+      lit(span.maxT + 2 * gapSeconds).as("ts_s"), lit("_flush").as("event_type"))
+    numbered(Gate.run(span, nBatches, Seq(flush)) { s =>
+      sessions(typed(s, None), gapMs = gapSeconds * 1000L).toDF()
+    })
+  }
 
-    val rows = events.select("user_id", "ts_s", "event_type")
-      .collect()
-      .map(r => Event(r.getLong(0),
-        new java.sql.Timestamp(r.getLong(1) * 1000L), r.getString(2)))
-      .sortBy(_.ts.getTime)
-    require(rows.nonEmpty, "sessionsStreamReplay: empty input")
-    val maxT = rows.last.ts.getTime
-    val sentinels = rows.map(_.user_id).distinct.map(u =>
-      Event(u, new java.sql.Timestamp(maxT + 2 * gapSeconds * 1000L), "_flush"))
+  /** (user_id, ts_s, event_type) cast to the gate's column types. */
+  private def eventCols(events: DataFrame): DataFrame =
+    events.select(col("user_id").cast("long"), col("ts_s").cast("long"),
+      col("event_type").cast("string"))
 
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      tailBatches = Seq(sentinels.toIndexedSeq)) { ds =>
-      sessions(ds, gapMs = gapSeconds * 1000L).toDF()
-    }
+  /** A fed (user_id, ts_s, event_type) frame as events, watermarked
+    * `delaySeconds` behind event time when given. */
+  private def typed(fed: DataFrame, delaySeconds: Option[Long]): Dataset[Event] = {
+    val ev = fed.select(col("user_id"), timestamp_seconds(col("ts_s")).as("ts"),
+      col("event_type"))
+    delaySeconds.fold(ev)(d => ev.withWatermark("ts", s"$d seconds"))
+      .as(Encoders.product[Event])
+  }
+
+  /** One watermark sentinel row at `ts`, for user −1 ([[numbered]] drops it). */
+  private def wmSentinel(spark: SparkSession, ts: Long): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(-1L, ts, "_wm")),
+      eventSchema)
+
+  private val eventSchema = StructType(Seq(StructField("user_id", LongType),
+    StructField("ts_s", LongType), StructField("event_type", StringType)))
+
+  /** Closed sessions renumbered per user by start time — session starts
+    * strictly increase within a user, so this equals the batch twin's
+    * running new-session sum — in its schema (user_id, session_no,
+    * n_events, n_types, duration_s); sentinel users (< 0) dropped. */
+  private def numbered(sessions: DataFrame): DataFrame = {
     val byStart = Window.partitionBy("user_id").orderBy("start_ms")
-    sunk
+    sessions.filter(col("user_id") >= 0)
       .withColumn("session_no", row_number().over(byStart).cast("long"))
       .select(col("user_id"), col("session_no"),
         col("n_events"), col("n_types").cast("long").as("n_types"),
         (col("duration_ms") / 1000L).cast("long").as("duration_s"))
       .orderBy("user_id", "session_no")
+  }
+
+  /** Exact conservation: every event of `ev` lies in exactly one closed
+    * session of `sessions` (per-user counts) — else fail loudly, never
+    * return silently-partial sessions. */
+  private def requireConserved(ev: DataFrame, sessions: DataFrame,
+      failure: Long => String): Unit = {
+    val expected = ev.groupBy("user_id").agg(count(lit(1)).as("n_in"))
+    val got = sessions.filter(col("user_id") >= 0)
+      .groupBy("user_id").agg(sum("n_events").as("n_out"))
+    val bad = expected.join(got, Seq("user_id"), "left_outer")
+      .filter(col("n_out").isNull || col("n_out") =!= col("n_in")).count()
+    if (bad > 0) throw new IllegalStateException(failure(bad))
   }
 
   /** Event-time-timeout sessionizer — the unbounded-user-space
@@ -160,115 +182,70 @@ object Sessionize {
       }
   }
 
-  /** PRODUCTION-SHAPED twin of [[sessionsStreamReplay]]: the same
-    * `flatMapGroupsWithState` operator fed from a REAL file-source
-    * stream — `spark.readStream.parquet` over a chunked feed directory —
-    * with results landing through a parquet sink. No event row ever
-    * crosses the driver: the feed slices are written by Spark jobs
-    * (executor → file), the stream reads them back one file per
-    * micro-batch, and the sink writes distributed. This is the unbounded
-    * path a cluster runs (swap the feed dir for a Kafka/object-store
-    * landing zone); the only driver reads are two scalar aggregates
-    * (min/max ts) used to cut deterministic slice boundaries for the
-    * gate's oracle comparison.
-    *
-    * Slicing: `nBatches` uniform event-time ranges, one parquet FILE per
-    * slice with strictly increasing mtimes, so the file source (oldest-
-    * first, maxFilesPerTrigger=1) replays them as ordered micro-batches —
-    * any time-ordered slicing yields the same closed sessions. A final
-    * per-user sentinel file at max(ts)+2·gap closes every open session
-    * (the sentinel's own singleton session stays in state, never
-    * emitted), exactly like the replay harness. */
-  def sessionsStreamFile(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3, workDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("ts_s").cast("long"), col("event_type").cast("string"))
-    val mm = ev.agg(min(col("ts_s")), max(col("ts_s"))).head()
-    val (minT, maxT) = (mm.getLong(0), mm.getLong(1))
-    val sentinels = ev.select("user_id").distinct()
-      .withColumn("ts_s", lit(maxT + 2 * gapSeconds))
-      .withColumn("event_type", lit("_flush"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        tails = Seq(sentinels), knownBounds = Some((minT, maxT)))
-      .select(col("user_id"), timestamp_seconds(col("ts_s")).as("ts"),
-        col("event_type")).as[Event]
-    // narrowTo matches every sibling file gate: a bounded feed does not
-    // need one state-store instance per session shuffle partition per
-    // micro-batch (this gate alone ran 32-wide: 4× the providers, delta
-    // files and tasks of the other sessionizer gates for the same rows)
-    val sunk = FileFeed.runToParquet(
-      sessions(stream, gapMs = gapSeconds * 1000L).toDF(), workDir,
-      narrowTo = Some(4))
-
-    val byStart = Window.partitionBy("user_id").orderBy("start_ms")
-    sunk
-      .withColumn("session_no", row_number().over(byStart).cast("long"))
-      .select(col("user_id"), col("session_no"),
-        col("n_events"), col("n_types").cast("long").as("n_types"),
-        (col("duration_ms") / 1000L).cast("long").as("duration_s"))
-      .orderBy("user_id", "session_no")
+  /** Gate for the auto-closing engines ([[sessionsWithTimeout]],
+    * [[sessionsTws]], [[sessionsTwsMap]]) on a time-ordered file feed: open
+    * sessions close when the watermark (delay 0) passes them, so the tail
+    * is ONE watermark sentinel (user −1, dropped) at max(ts)+2·gap. The
+    * timeouts it arms fire in the trailing NO-DATA micro-batch the engine
+    * runs for state cleanup — `spark.sql.streaming.noDataMicroBatches
+    * .enabled` is PINNED true for the stream's lifetime (it is the
+    * mechanism these operators depend on, not a default to inherit);
+    * `pinNoData = false` exists only for the spec that proves the gate
+    * fails LOUDLY without it. Loud-fail invariant: by feed end every input
+    * event lies in a closed session, so a per-user count mismatch means
+    * trailing timeouts never fired — the gate throws instead of returning
+    * silently-partial rows. The transformWithState engines need
+    * `rocksDb = true` (the API refuses the heap provider). */
+  def timeoutGate(events: DataFrame, gapSeconds: Long, nBatches: Int = 3,
+      rocksDb: Boolean = false, pinNoData: Boolean = true)(
+      op: (Dataset[Event], Long) => Dataset[Session]): DataFrame = {
+    val ev = eventCols(events)
+    val sunk = closing(ev, gapSeconds, 0L, 0L, nBatches, rocksDb,
+      pinNoData)(op)
+    requireConserved(ev, sunk, bad =>
+      s"timeoutGate: $bad user(s) have unclosed sessions — trailing " +
+        "no-data micro-batches did not fire the armed timeouts/timers" +
+        (if (pinNoData) ""
+         else " (spark.sql.streaming.noDataMicroBatches.enabled was " +
+           "deliberately unpinned — this loud failure is the expected " +
+           "outcome without it)"))
+    numbered(sunk)
   }
 
-  /** File-source gate for [[sessionsWithTimeout]]: unlike
-    * [[sessionsStreamFile]] it needs NO per-user sentinel flush — open
-    * sessions auto-close when the watermark passes them, so the tail is
-    * ONE single-row watermark-advancing sentinel (negative user_id,
-    * filtered from the result). The timeouts it arms fire in the
-    * trailing NO-DATA micro-batch the engine runs for state cleanup —
-    * `spark.sql.streaming.noDataMicroBatches.enabled` is PINNED true for
-    * the stream's lifetime (it is the mechanism this operator depends
-    * on, not a default to inherit); `pinNoData = false` exists only for
-    * the spec that proves the gate fails LOUDLY without it. Loud-fail
-    * invariant: every input user closes at least one session by feed
-    * end (the sentinel's watermark passes every open session), so a
-    * user missing from the sink means trailing timeouts never fired —
-    * the gate throws instead of returning silently-partial rows. This
-    * is the shape an unbounded-user production feed runs. */
-  def sessionsStreamFileTimeout(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3, workDir: String, pinNoData: Boolean = true,
-      rocksDb: Boolean = false): DataFrame =
-    runTimeoutGate(events, gapSeconds, nBatches, workDir, pinNoData,
-      rocksDb, "sessionsStreamFileTimeout")(ds =>
-      sessionsWithTimeout(ds, gapMs = gapSeconds * 1000L).toDF())
-
-  /** The same auto-closing gate on the `transformWithState` engine (see
-    * [[sessionsTws]]). transformWithState REQUIRES the RocksDB state
-    * store, so the provider is always switched for the stream's span. */
-  def sessionsStreamFileTws(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3, workDir: String,
-      pinNoData: Boolean = true): DataFrame =
-    runTimeoutGate(events, gapSeconds, nBatches, workDir, pinNoData,
-      rocksDb = true, "sessionsStreamFileTws")(ds =>
-      sessionsTws(ds, gapMs = gapSeconds * 1000L).toDF())
-
-  /** The auto-closing gate on the MapState engine ([[sessionsTwsMap]]). */
-  def sessionsStreamFileTwsMap(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3, workDir: String): DataFrame =
-    runTimeoutGate(events, gapSeconds, nBatches, workDir, pinNoData = true,
-      rocksDb = true, "sessionsStreamFileTwsMap")(ds =>
-      sessionsTwsMap(ds, gapMs = gapSeconds * 1000L).toDF())
+  /** Run `op` with watermark delay `delaySeconds` over the events on a
+    * file feed displaced by up to ±`skewSeconds`, plus one watermark
+    * sentinel past every open session, no-data micro-batches pinned to
+    * `pinNoData`; returns the sunk sessions. */
+  private def closing(ev: DataFrame, gapSeconds: Long, delaySeconds: Long,
+      skewSeconds: Long, nBatches: Int, rocksDb: Boolean, pinNoData: Boolean)(
+      op: (Dataset[Event], Long) => Dataset[Session]): DataFrame = {
+    val spark = ev.sparkSession
+    val span = Gate.span(ev, Seq("ts_s"), Feed.Files(skewSeconds))
+    val tail = wmSentinel(spark, span.maxT + 2 * gapSeconds + 2 * delaySeconds)
+    FileFeed.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled", pinNoData.toString) {
+      Gate.run(span, nBatches, Seq(tail), rocksDb = rocksDb) { s =>
+        op(typed(s, Some(delaySeconds)), gapSeconds * 1000L).toDF()
+      }
+    }
+  }
 
   /** BATCH→STREAM MIGRATION gate ([[sessionsTwsWarm]]): the feed is cut
     * at its event-time midpoint; everything before the cut is a batch
     * BACKFILL (sessions computed relationally — closed ones emitted
     * directly, each user's last session becomes the stream's SEEDED open
     * state), everything at/after the cut streams through the warm-start
-    * processor from a real file source. The union must equal the
-    * full-feed sessionization exactly (same oracle), proving the
-    * migration cut is invisible: a session SPANNING the cut is continued
-    * by the stream, not restarted, and a seeded session whose user never
-    * returns still closes at the watermark. */
-  def sessionsStreamFileWarm(events: DataFrame, gapSeconds: Long,
-      nBatches: Int = 3, workDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * processor. The union must equal the full-feed sessionization
+    * exactly (same oracle), proving the migration cut is invisible: a
+    * session SPANNING the cut is continued by the stream, not restarted,
+    * and a seeded session whose user never returns still closes at the
+    * watermark. The stream side runs on the file feed. */
+  def warmGate(events: DataFrame, gapSeconds: Long,
+      nBatches: Int = 3): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapSeconds * 1000L
-    val ev = events.select(col("user_id").cast("long"),
-      col("ts_s").cast("long"), col("event_type").cast("string"))
+    val ev = eventCols(events)
     val Array(minT, maxT) = ev.agg(min(col("ts_s")), max(col("ts_s")))
       .head() match { case r => Array(r.getLong(0), r.getLong(1)) }
     val cut = (minT + maxT) / 2
@@ -307,99 +284,29 @@ object Sessionize {
       .map { case (u, s0, l, n, ts) =>
         (u, SessionState(s0 * 1000L, l * 1000L, n, ts.toSet)) }
     // --- stream side: post-cut slice through the warm-start processor
-    val post = ev.filter(col("ts_s") >= cut)
-    val sentinel = spark.range(1).select(lit(-1L).as("user_id"),
-      lit(maxT + 2 * gapSeconds).as("ts_s"), lit("_wm").as("event_type"))
     // bounds (cut, maxT) instead of a dedicated min/max job over post:
     // the true post-cut minimum is >= cut, so slicing from cut only
     // shifts slice boundaries within the same ordered range — session
     // results are batch-composition-invariant (the ooo gates prove it),
     // and an empty leading slice still feeds one (empty) micro-batch
-    val stream = FileFeed.sliced(post, "ts_s", nBatches, workDir,
-        tails = Seq(sentinel), knownBounds = Some((cut, maxT)))
-      .select(col("user_id"), timestamp_seconds(col("ts_s")).as("ts"),
-        col("event_type"))
-      .withWatermark("ts", "0 seconds")
-      .as[Event]
+    val span = Gate.span(ev.filter(col("ts_s") >= cut), Seq("ts_s"),
+      Feed.Files(), bounds = Some((cut, maxT)))
     val sunk = FileFeed.withConf(spark,
       "spark.sql.streaming.noDataMicroBatches.enabled", "true") {
-      FileFeed.runToParquet(
-        sessionsTwsWarm(stream, gapMs, warm).toDF(), workDir,
-        narrowTo = Some(4), rocksDb = true)
+      Gate.run(span, nBatches, Seq(wmSentinel(spark, maxT + 2 * gapSeconds)),
+        rocksDb = true) { s =>
+        sessionsTwsWarm(typed(s, Some(0L)), gapMs, warm).toDF()
+      }
     }
     val all = sunk.filter(col("user_id") >= 0)
       .select("user_id", "start_ms", "end_ms", "n_events", "n_types",
         "duration_ms")
       .unionByName(closedPre)
-    // conservation: every event of the FULL feed lands in exactly one
-    // closed session — a mismatch means a seeded session was dropped,
-    // restarted, or double-counted across the cut
-    val expected = ev.groupBy("user_id").agg(count(lit(1)).as("n_in"))
-    val got = all.groupBy("user_id").agg(sum("n_events").as("n_out"))
-    val bad = expected.join(got, Seq("user_id"), "left_outer")
-      .filter(col("n_out").isNull || col("n_out") =!= col("n_in")).count()
-    if (bad > 0) throw new IllegalStateException(
-      s"sessionsStreamFileWarm: $bad user(s) lost or duplicated events " +
-        "across the migration cut")
-    val byStart = Window.partitionBy("user_id").orderBy("start_ms")
-    all
-      .withColumn("session_no", row_number().over(byStart).cast("long"))
-      .select(col("user_id"), col("session_no"),
-        col("n_events"), col("n_types").cast("long").as("n_types"),
-        (col("duration_ms") / 1000L).cast("long").as("duration_s"))
-      .orderBy("user_id", "session_no")
-  }
-
-  private def runTimeoutGate(events: DataFrame, gapSeconds: Long,
-      nBatches: Int, workDir: String, pinNoData: Boolean,
-      rocksDb: Boolean, gateName: String)(
-      op: Dataset[Event] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("ts_s").cast("long"), col("event_type").cast("string"))
-    val mm = ev.agg(min(col("ts_s")), max(col("ts_s"))).head()
-    val (minT, maxT) = (mm.getLong(0), mm.getLong(1))
-    def sentinel(ts: Long): DataFrame = spark.range(1).select(
-      lit(-1L).as("user_id"), lit(ts).as("ts_s"), lit("_wm").as("event_type"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        tails = Seq(sentinel(maxT + 2 * gapSeconds)),
-        knownBounds = Some((minT, maxT)))
-      .select(col("user_id"), timestamp_seconds(col("ts_s")).as("ts"),
-        col("event_type"))
-      .withWatermark("ts", "0 seconds") // feed is time-ordered
-      .as[Event]
-    val sunk = FileFeed.withConf(spark,
-      "spark.sql.streaming.noDataMicroBatches.enabled", pinNoData.toString) {
-      FileFeed.runToParquet(op(stream), workDir,
-        narrowTo = Some(4), rocksDb = rocksDb)
-    }
-    // exact conservation: every input event belongs to exactly one CLOSED
-    // session by feed end (the sentinel's watermark passes every open
-    // session), so any per-user count mismatch means armed timeouts never
-    // fired in a trailing no-data micro-batch — fail loudly, never return
-    // silently-partial sessions
-    val expected = ev.groupBy("user_id").agg(count(lit(1)).as("n_in"))
-    val got = sunk.filter(col("user_id") >= 0)
-      .groupBy("user_id").agg(sum("n_events").as("n_out"))
-    val bad = expected.join(got, Seq("user_id"), "left_outer")
-      .filter(col("n_out").isNull || col("n_out") =!= col("n_in"))
-      .count()
-    if (bad > 0) throw new IllegalStateException(
-      s"$gateName: $bad user(s) have unclosed sessions — trailing " +
-        "no-data micro-batches did not fire the armed timeouts/timers" +
-        (if (pinNoData) ""
-         else " (spark.sql.streaming.noDataMicroBatches.enabled was " +
-           "deliberately unpinned — this loud failure is the expected " +
-           "outcome without it)"))
-    val byStart = Window.partitionBy("user_id").orderBy("start_ms")
-    sunk.filter(col("user_id") >= 0)
-      .withColumn("session_no", row_number().over(byStart).cast("long"))
-      .select(col("user_id"), col("session_no"),
-        col("n_events"), col("n_types").cast("long").as("n_types"),
-        (col("duration_ms") / 1000L).cast("long").as("duration_s"))
-      .orderBy("user_id", "session_no")
+    // a mismatch means a seeded session was dropped, restarted, or
+    // double-counted across the cut
+    requireConserved(ev, all, bad => s"warmGate: $bad user(s) lost or " +
+      "duplicated events across the migration cut")
+    numbered(all)
   }
 
   /** [[sessionsWithTimeout]] re-expressed on `transformWithState` —
@@ -655,66 +562,23 @@ object Sessionize {
       }
   }
 
-  /** Gate for [[sessionsOutOfOrder]]: a NON-time-ordered file feed
-    * (bounded disorder — `FileFeed.sliced(oooSkewSeconds)` displaces
-    * rows across micro-batch boundaries by up to ±skew) consumed with a
-    * REAL watermark delay (> 2·skew, so no row is late-dropped and the
-    * oracle stays the exact batch twin). One far-future sentinel row
-    * advances the watermark past every open fragment; trailing no-data
-    * micro-batches fire the timeouts (pinned on, like
-    * [[sessionsStreamFileTimeout]]). */
-  def sessionsStreamFileOoo(events: DataFrame, gapSeconds: Long,
-      skewSeconds: Long, delaySeconds: Long, nBatches: Int = 4,
-      workDir: String): DataFrame =
-    runOooGate(events, gapSeconds, skewSeconds, delaySeconds, nBatches,
-      workDir, rocksDb = false)(ds =>
-      sessionsOutOfOrder(ds, gapMs = gapSeconds * 1000L).toDF())
-
-  /** The disordered-feed gate on the `transformWithState` fragment
-    * sessionizer (see [[sessionsOutOfOrderTws]]); RocksDB-only API, so
-    * the provider is always switched. */
-  def sessionsStreamFileOooTws(events: DataFrame, gapSeconds: Long,
-      skewSeconds: Long, delaySeconds: Long, nBatches: Int = 4,
-      workDir: String): DataFrame =
-    runOooGate(events, gapSeconds, skewSeconds, delaySeconds, nBatches,
-      workDir, rocksDb = true)(ds =>
-      sessionsOutOfOrderTws(ds, gapMs = gapSeconds * 1000L).toDF())
-
-  private def runOooGate(events: DataFrame, gapSeconds: Long,
-      skewSeconds: Long, delaySeconds: Long, nBatches: Int,
-      workDir: String, rocksDb: Boolean)(
-      op: Dataset[Event] => DataFrame): DataFrame = {
+  /** Gate for the out-of-order engines ([[sessionsOutOfOrder]],
+    * [[sessionsOutOfOrderTws]]): on a NON-time-ordered file feed (rows
+    * displaced across micro-batch boundaries by up to ±`skewSeconds`,
+    * [[Feed.Files]]) consumed with a REAL watermark delay
+    * (> 2·skew, so no row is late-dropped and the oracle stays the exact
+    * batch twin). One far-future sentinel row advances the watermark past
+    * every open fragment; trailing no-data micro-batches fire the
+    * timeouts (pinned on, as in [[timeoutGate]]). */
+  def outOfOrderGate(events: DataFrame, gapSeconds: Long, skewSeconds: Long,
+      delaySeconds: Long, nBatches: Int = 4, rocksDb: Boolean = false)(
+      op: (Dataset[Event], Long) => Dataset[Session]): DataFrame = {
     require(2 * skewSeconds < gapSeconds,
       "disorder bound must stay under the session gap")
     require(delaySeconds > 2 * skewSeconds,
       "watermark delay must cover the feed's displacement bound")
-    import org.apache.spark.sql.expressions.Window
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("ts_s").cast("long"), col("event_type").cast("string"))
-    val maxT = ev.agg(max(col("ts_s"))).head().getLong(0)
-    def sentinel(ts: Long): DataFrame = spark.range(1).select(
-      lit(-1L).as("user_id"), lit(ts).as("ts_s"), lit("_wm").as("event_type"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        tails = Seq(sentinel(maxT + 2 * gapSeconds + 2 * delaySeconds)),
-        oooSkewSeconds = skewSeconds)
-      .select(col("user_id"), timestamp_seconds(col("ts_s")).as("ts"),
-        col("event_type"))
-      .withWatermark("ts", s"$delaySeconds seconds")
-      .as[Event]
-    val sunk = FileFeed.withConf(spark,
-      "spark.sql.streaming.noDataMicroBatches.enabled", "true") {
-      FileFeed.runToParquet(op(stream), workDir,
-        narrowTo = Some(4), rocksDb = rocksDb)
-    }
-    val byStart = Window.partitionBy("user_id").orderBy("start_ms")
-    sunk.filter(col("user_id") >= 0)
-      .withColumn("session_no", row_number().over(byStart).cast("long"))
-      .select(col("user_id"), col("session_no"),
-        col("n_events"), col("n_types").cast("long").as("n_types"),
-        (col("duration_ms") / 1000L).cast("long").as("duration_s"))
-      .orderBy("user_id", "session_no")
+    numbered(closing(eventCols(events), gapSeconds, delaySeconds, skewSeconds,
+      nBatches, rocksDb, pinNoData = true)(op))
   }
 
   /** Scalar core of an open session when the distinct-type set lives in
@@ -865,7 +729,6 @@ object Sessionize {
     * (window lag → gap flag → running session id), DuckDB-oracle-checkable.
     * Input columns: user_id, event_id, event_type, ts_s (epoch seconds). */
   def sessionsBatch(events: DataFrame, gapSeconds: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
     val withGap = events
       .withColumn("prev_ts", lag(col("ts_s"), 1).over(byUser))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Watermarked stream-stream interval join: click→purchase attribution
@@ -21,8 +21,8 @@ object StreamJoin {
   final case class Ev(user_id: Long, event_id: Long, event_type: String,
       ts: java.sql.Timestamp)
 
-  /** The streaming join itself (works on a real `readStream` source too —
-    * the replay gate feeds it a MemoryStream). Clicks carry a watermark
+  /** The streaming join itself (any streaming source; the gate feeds it
+    * a MemoryStream or a file source). Clicks carry a watermark
     * of 2·lookback (a click must outlive every purchase it could serve,
     * plus reorder slack); purchases carry lookback.
     */
@@ -57,32 +57,11 @@ object StreamJoin {
       .select(col("user_id"), col("event_id"), col("event_type"),
         coalesce(col("n_purchases"), lit(0L)).as("n_purchases"))
 
-  /** Replay gate for the stream-static join: the profile (per-user
-    * purchase counts) is computed once as a batch frame, the event stream
-    * replays against it, and the enriched rows must equal the batch
-    * left join. */
-  def enrichReplay(events: DataFrame, nBatches: Int = 3): DataFrame = {
-    val spark: SparkSession = events.sparkSession
-    import spark.implicits._
-    val profile = events.filter(col("event_type") === "purchase")
-      .groupBy("user_id").agg(count(lit(1)).as("n_purchases"))
-    val rows = events.select("user_id", "event_id", "event_type", "ts_s")
-      .collect()
-      .map(r => Ev(r.getLong(0), r.getLong(1), r.getString(2),
-        new java.sql.Timestamp(r.getLong(3) * 1000L)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    Replay.run(spark, rows.toIndexedSeq, nBatches) { ds =>
-      enrichWithProfile(ds, profile)
-    }.orderBy("event_id")
-  }
-
   /** LEFT OUTER variant: purchases with no click in the window emit a
     * null-click row — but only once the watermark proves no matching
     * click can still arrive, which is the part of stream-stream joins
     * that trips people up (an unmatched row's emission is *watermark-
-    * driven*, not arrival-driven). The replay feeds a far-future
-    * sentinel batch to push the watermark past every purchase's match
-    * window, so the collected output equals the full batch left join. */
+    * driven*, not arrival-driven): see [[clickAttributionOuterGate]]. */
   def clickAttributionOuter(events: Dataset[Ev],
       lookbackSeconds: Long): DataFrame = {
     val base = events.toDF()
@@ -103,154 +82,67 @@ object StreamJoin {
         (unix_timestamp(col("p_ts")) - unix_timestamp(col("c_ts"))).as("gap_s"))
   }
 
-  /** Replay gate for the outer join: sentinel events (one per side, a
-    * throwaway user far in the future) advance both watermarks past
-    * every real purchase, flushing the unmatched-left state. The
-    * sentinel pair matches itself and is filtered from the result. */
-  def clickAttributionOuterReplay(events: DataFrame, lookbackSeconds: Long,
-      nBatches: Int = 3): DataFrame = {
-    val spark: SparkSession = events.sparkSession
-    import spark.implicits._
-    val rows = events.select("user_id", "event_id", "event_type", "ts_s")
-      .collect()
-      .map(r => Ev(r.getLong(0), r.getLong(1), r.getString(2),
-        new java.sql.Timestamp(r.getLong(3) * 1000L)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val sentinelUser = -1L
-    val farFuture = rows.last.ts.getTime + 10L * lookbackSeconds * 1000L
-    val sentinels = Seq(
-      Ev(sentinelUser, -1L, "click", new java.sql.Timestamp(farFuture)),
-      Ev(sentinelUser, -2L, "purchase", new java.sql.Timestamp(farFuture)))
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      tailBatches = Seq(sentinels, sentinels.map(e =>
-        e.copy(event_id = e.event_id - 10,
-          ts = new java.sql.Timestamp(farFuture + lookbackSeconds * 1000L))))) {
-      ds => clickAttributionOuter(ds, lookbackSeconds)
-    }
-    sunk.filter(col("user_id") =!= sentinelUser)
-      .orderBy("purchase_id", "click_id")
-  }
-
-  /** PRODUCTION twin of [[clickAttributionOuterReplay]]: the same
-    * watermarked LEFT OUTER stream-stream join fed from a REAL
-    * `readStream.parquet` file source ([[FileFeed]] slices, one per
-    * micro-batch) into a parquet sink — no event row on the driver. This
-    * is the path whose emission timing matters most: an unmatched
-    * purchase's null-click row emits only when the WATERMARK proves no
-    * matching click can still arrive, so the flush is driven by real
-    * micro-batch watermark advancement (two far-future sentinel files —
-    * append emission lags the watermark by one batch), not by a replay
-    * harness's batch boundaries. Input columns: user_id, event_id,
+  /** Gate for [[enrichWithProfile]], on either feed: the profile
+    * (per-user purchase counts) is computed once as a batch frame, the
+    * event stream is fed against it, and the enriched rows must equal the
+    * batch left join. Input columns (all gates here): user_id, event_id,
     * event_type, ts_s (epoch seconds). */
-  def clickAttributionOuterStreamFile(events: DataFrame, lookbackSeconds: Long,
-      nBatches: Int = 3, workDir: String): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("event_type").cast("string"),
-      col("ts_s").cast("long"))
-    // one agg answers both needs: the sentinel timestamp AND the slice
-    // bounds FileFeed.sliced would otherwise re-aggregate (guide §2.4)
-    val mm = ev.agg(min(col("ts_s")), max(col("ts_s"))).head()
-    val (minT, maxT) = (mm.getLong(0), mm.getLong(1))
-    val sentinelUser = -1L
-    val farFuture = maxT + 10L * lookbackSeconds
-    // one click+purchase pair per sentinel file: the pair matches itself
-    // (advancing both sides' watermarks) and is filtered from the result
-    def sentinelPair(ts: Long, idBase: Long): DataFrame =
-      Seq((sentinelUser, idBase, "click", ts),
-        (sentinelUser, idBase - 1L, "purchase", ts))
-        .toDF("user_id", "event_id", "event_type", "ts_s")
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        tails = Seq(sentinelPair(farFuture, -1L),
-          sentinelPair(farFuture + lookbackSeconds, -11L)),
-        knownBounds = Some((minT, maxT)))
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        timestamp_seconds(col("ts_s")).as("ts")).as[Ev]
-    val sunk = FileFeed.runToParquet(
-      clickAttributionOuter(stream, lookbackSeconds), workDir,
-      narrowTo = Some(4))
-    sunk.filter(col("user_id") =!= sentinelUser)
-      .orderBy("purchase_id", "click_id")
-  }
-
-  /** PRODUCTION twin of [[enrichReplay]]: stream-static broadcast
-    * enrichment with the event stream arriving from a real file source
-    * and the enriched rows landing through a parquet sink. Stateless —
-    * the static profile is re-planned (and re-broadcast) per micro-batch,
-    * which is exactly how a production feed picks up dimension updates. */
-  def enrichStreamFile(events: DataFrame, nBatches: Int = 3,
-      workDir: String): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("event_type").cast("string"),
-      col("ts_s").cast("long"))
+  def enrichGate(events: DataFrame, nBatches: Int = 3, feed: Feed): DataFrame = {
+    val ev = eventCols(events)
     val profile = ev.filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(count(lit(1)).as("n_purchases"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        timestamp_seconds(col("ts_s")).as("ts")).as[Ev]
-    val sunk = FileFeed.runToParquet(
-      enrichWithProfile(stream, profile), workDir, narrowTo = Some(4))
-    sunk.orderBy("event_id")
+    Gate.run(Gate.span(ev, Seq("ts_s", "event_id"), feed), nBatches) { s =>
+      enrichWithProfile(typed(s), profile)
+    }.orderBy("event_id")
   }
 
-  /** PRODUCTION twin of [[clickAttributionReplay]]: the INNER watermarked
-    * stream-stream join from a real file source into a parquet sink.
-    * Matches emit in whatever micro-batch completes the pair, so no
-    * sentinel flush is needed — but inner-join APPEND emission still
-    * waits on watermark advancement in Spark's implementation when a
-    * watermark is present, so one far-future sentinel pair flushes the
-    * final batches' matches. Feed is OOO-sliced (bounded disorder ≪ the
-    * join's own watermark delays), proving set-equivalence under the
-    * production arrival shape. */
-  def clickAttributionStreamFile(events: DataFrame, lookbackSeconds: Long,
-      nBatches: Int = 3, workDir: String, oooSkewSeconds: Long = 0L): DataFrame = {
+  /** Gate for the INNER join [[clickAttribution]], on either feed (the
+    * file feed may be disordered: bounded skew ≪ the join's own watermark
+    * delays). Inner-join matches emit in whatever micro-batch completes
+    * the pair, so no sentinel flush is needed. Gated against the plain
+    * SQL interval join. */
+  def clickAttributionGate(events: DataFrame, lookbackSeconds: Long,
+      nBatches: Int = 3, feed: Feed): DataFrame =
+    Gate.run(Gate.span(eventCols(events), Seq("ts_s", "event_id"), feed),
+      nBatches) { s =>
+      clickAttribution(typed(s), lookbackSeconds)
+    }.orderBy("purchase_id", "click_id")
+
+  /** Gate for the LEFT OUTER join [[clickAttributionOuter]], on either
+    * feed. An unmatched purchase's null-click row emits only when the
+    * WATERMARK proves no matching click can still arrive, so two
+    * far-future sentinel pairs (append emission lags the watermark by one
+    * batch) push both watermarks past every real purchase's match window;
+    * the collected output then equals the full batch left join. */
+  def clickAttributionOuterGate(events: DataFrame, lookbackSeconds: Long,
+      nBatches: Int = 3, feed: Feed): DataFrame = {
+    val span = Gate.span(eventCols(events), Seq("ts_s", "event_id"), feed)
+    val farFuture = span.maxT + 10L * lookbackSeconds
     val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("user_id").cast("long"),
-      col("event_id").cast("long"), col("event_type").cast("string"),
-      col("ts_s").cast("long"))
-    val mm = ev.agg(min(col("ts_s")), max(col("ts_s"))).head()
-    val (minT, maxT) = (mm.getLong(0), mm.getLong(1))
-    val sentinelUser = -1L
-    def sentinelPair(ts: Long, idBase: Long): DataFrame =
-      Seq((sentinelUser, idBase, "click", ts),
-        (sentinelUser, idBase - 1L, "purchase", ts))
-        .toDF("user_id", "event_id", "event_type", "ts_s")
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        tails = Seq(sentinelPair(maxT + 10L * lookbackSeconds, -1L)),
-        oooSkewSeconds = oooSkewSeconds,
-        // a perturbed feed's slicing position is not ts_s — only the
-        // ordered variant can reuse this agg's bounds
-        knownBounds = if (oooSkewSeconds <= 0) Some((minT, maxT)) else None)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        timestamp_seconds(col("ts_s")).as("ts")).as[Ev]
-    val sunk = FileFeed.runToParquet(
-      clickAttribution(stream, lookbackSeconds), workDir, narrowTo = Some(4))
-    sunk.filter(col("user_id") =!= sentinelUser)
+    Gate.run(span, nBatches, Seq(sentinelPair(spark, farFuture, -1L),
+      sentinelPair(spark, farFuture + lookbackSeconds, -11L))) { s =>
+      clickAttributionOuter(typed(s), lookbackSeconds)
+    }.filter(col("user_id") =!= SentinelUser)
       .orderBy("purchase_id", "click_id")
   }
 
-  /** Deterministic micro-batch replay of the streaming join over bounded
-    * input (caller caps it; the gate uses user_id < 200). Events feed in
-    * event-time order across `nBatches` contiguous slices; inner-join
-    * matches emit in whatever batch completes the pair, so no sentinel
-    * flush is needed. Gated against the plain SQL interval join.
-    */
-  def clickAttributionReplay(events: DataFrame, lookbackSeconds: Long,
-      nBatches: Int = 3): DataFrame = {
-    val spark: SparkSession = events.sparkSession
+  private val SentinelUser = -1L
+
+  /** A click and a purchase of the sentinel user at `ts`: the pair matches
+    * itself, advancing both sides' watermarks, and the gate drops it. */
+  private def sentinelPair(spark: SparkSession, ts: Long,
+      idBase: Long): DataFrame = {
     import spark.implicits._
-    val rows = events.select("user_id", "event_id", "event_type", "ts_s")
-      .collect()
-      .map(r => Ev(r.getLong(0), r.getLong(1), r.getString(2),
-        new java.sql.Timestamp(r.getLong(3) * 1000L)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches) { ds =>
-      clickAttribution(ds, lookbackSeconds)
-    }
-    sunk.orderBy("purchase_id", "click_id")
+    Seq((SentinelUser, idBase, "click", ts),
+      (SentinelUser, idBase - 1L, "purchase", ts))
+      .toDF("user_id", "event_id", "event_type", "ts_s")
   }
+
+  private def eventCols(events: DataFrame): DataFrame =
+    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+      col("event_type").cast("string"), col("ts_s").cast("long"))
+
+  private def typed(fed: DataFrame): Dataset[Ev] =
+    fed.select(col("user_id"), col("event_id"), col("event_type"),
+      timestamp_seconds(col("ts_s")).as("ts")).as(Encoders.product[Ev])
 }

@@ -25,59 +25,25 @@ object StreamingDedup {
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("fp")
 
-  final case class SDoc(ts: java.sql.Timestamp, text: String)
-
-  /** Deterministic micro-batch replay of `byFingerprint` for the oracle
-    * gate: documents arrive in doc_id order with synthetic event times
-    * doc_id seconds apart, the horizon covers the whole corpus spread, so
-    * within-watermark dedup must equal GLOBAL exact dedup — exactly one
-    * surviving row per distinct fingerprint (which row survives is the
-    * state store's pick, so the gate pins the fp SET, not the doc ids). */
-  def byFingerprintReplay(docs: DataFrame, nBatches: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    val rows = docs.select("doc_id", "text").collect()
-      .sortBy(_.getLong(0))
-      // +1 day offset: a ts of exactly epoch 0 equals the state store's
-      // INITIAL watermark and is discarded as late before first-seen
-      // emission (observed: doc_id 0 silently vanished from the output)
-      .map(r => SDoc(new java.sql.Timestamp((r.getLong(0) + 86400L) * 1000L),
-        r.getString(1)))
-    import spark.implicits._
-    val horizon = s"${rows.length + 86400} seconds"
-    val out = Replay.run(spark, rows.toIndexedSeq, nBatches) { ds =>
-      byFingerprint(ds.toDF(), horizon)
-    }
-    out.select(col("fp")).orderBy("fp")
-  }
-
-  /** PRODUCTION-SHAPED twin of [[byFingerprintReplay]]: the same
-    * `dropDuplicatesWithinWatermark` operator fed from a real
-    * `readStream.parquet` file source (time-ordered slices, one per
-    * micro-batch — [[FileFeed]]) into a parquet sink. No document row
-    * crosses the driver; same synthetic doc_id-seconds event times and
-    * whole-corpus horizon as the replay, so the same oracle gates it. */
-  def byFingerprintStreamFile(docs: DataFrame, nBatches: Int = 3,
-      workDir: String, oooSkewSeconds: Long = 0L,
+  /** Gate for [[byFingerprint]], on either feed: documents arrive in
+    * doc_id order with synthetic event times doc_id seconds apart, and the
+    * horizon — which doubles as the watermark DELAY — covers the whole
+    * corpus spread, so no row is late-dropped and no state evicts mid-feed
+    * even on a disordered feed: within-watermark dedup must equal GLOBAL
+    * exact dedup, one surviving row per distinct fingerprint (which row
+    * survives is the state store's pick, so the gate pins the fp SET).
+    * Input columns: doc_id, text. */
+  def byFingerprintGate(docs: DataFrame, nBatches: Int = 3, feed: Feed,
       rocksDb: Boolean = false): DataFrame = {
-    val ev = docs.select(col("doc_id").cast("long"), col("text"))
-      .withColumn("ts_s", col("doc_id") + 86400L)
-    val mm = ev.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    val (minId, maxId) = (mm.getLong(0), mm.getLong(1))
-    // the horizon doubles as the watermark DELAY, so it dwarfs any
-    // bounded feed disorder: no row is ever late-dropped and no state
-    // evicts mid-feed — within-watermark dedup equals global dedup on a
-    // non-time-ordered feed too
-    val horizon = s"${maxId + 1 + 86400} seconds"
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        oooSkewSeconds = oooSkewSeconds,
-        // ts_s = doc_id + 86400 exactly, so the id agg already knows the
-        // slice bounds (perturbed feeds cannot reuse them)
-        knownBounds =
-          if (oooSkewSeconds <= 0) Some((minId + 86400L, maxId + 86400L))
-          else None)
-      .select(timestamp_seconds(col("ts_s")).as("ts"), col("text"))
-    val sunk = FileFeed.runToParquet(byFingerprint(stream, horizon), workDir,
-      narrowTo = Some(4), rocksDb = rocksDb)
-    sunk.select(col("fp")).orderBy("fp")
+    // +1 day offset: a ts of exactly epoch 0 equals the state store's
+    // INITIAL watermark and is discarded as late before first-seen
+    // emission (observed: doc_id 0 silently vanished from the output)
+    val span = Gate.span(docs.select(col("doc_id").cast("long"), col("text"))
+      .withColumn("ts_s", col("doc_id") + 86400L), Seq("ts_s"), feed)
+    val horizon = s"${span.maxT + 1} seconds"
+    Gate.run(span, nBatches, rocksDb = rocksDb) { s =>
+      byFingerprint(s.select(timestamp_seconds(col("ts_s")).as("ts"),
+        col("text")), horizon)
+    }.select(col("fp")).orderBy("fp")
   }
 }

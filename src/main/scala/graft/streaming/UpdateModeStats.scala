@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** UPDATE-mode streaming aggregation: unwatermarked per-key counts that
@@ -8,15 +8,13 @@ import org.apache.spark.sql.functions._
   * dashboard/serving shape (append mode can't emit an unwatermarked
   * aggregate at all; update mode is the surface Spark provides for it).
   *
-  * The replay gate freezes the update stream deterministically: a
-  * memory-sink update log carries every intermediate emission, and for a
+  * The gate freezes the update stream deterministically: the sunk update
+  * log carries every intermediate emission, and for a
   * MONOTONE aggregate (a count of non-negative arrivals) the final value
   * per key is simply the max over its emissions — no reliance on sink
   * row order.
   */
 object UpdateModeStats {
-
-  final case class KV(hour_s: Long, event_type: String)
 
   /** The streaming aggregation itself: counts + exact value sums per
     * (hour bucket, event_type). State is O(distinct keys); at 100 TB/day
@@ -28,92 +26,40 @@ object UpdateModeStats {
       .groupBy("hour_s", "event_type")
       .agg(count(lit(1)).as("n"))
 
-  /** Deterministic replay: feed in `nBatches` event-time slices, then
-    * reduce the update log to its per-key final row (max of the monotone
-    * count). Gated against the plain batch GROUP BY. */
-  def hourlyCountsReplay(events: DataFrame, nBatches: Int = 3): DataFrame = {
-    val spark: SparkSession = events.sparkSession
-    import spark.implicits._
-    val rows = events.select("user_id", "event_id", "event_type", "ts_s")
-      .collect()
-      .map(r => StreamJoin.Ev(r.getLong(0), r.getLong(1), r.getString(2),
-        new java.sql.Timestamp(r.getLong(3) * 1000L)))
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      outputMode = "update") { ds =>
-      hourlyCounts(ds.toDF()
-        .withColumn("ts_s", unix_timestamp(col("ts"))))
-    }
-    sunk.groupBy("hour_s", "event_type")
-      .agg(max(col("n")).as("n"))
-      .orderBy("hour_s", "event_type")
-  }
-
-  /** PRODUCTION twin of [[hourlyCountsReplay]]: the same unwatermarked
-    * UPDATE-mode aggregation fed from a real `readStream.parquet` file
-    * source, sunk through `foreachBatch` as an on-disk update log (the
-    * documented production pattern for update mode over file sinks —
-    * parquet has no native update sink), then reduced to final values
-    * (max of the monotone count per key). No event row on the driver.
-    * Input columns: user_id, event_id, event_type, ts_s. */
-  def hourlyCountsStreamFile(events: DataFrame, nBatches: Int = 3,
-      workDir: String): DataFrame = {
-    val ev = events.select(col("user_id").cast("long"),
+  /** Gate for [[hourlyCounts]], on either feed: the input is fed in
+    * `nBatches` event-time slices, and the update log (memory sink, or
+    * the file feed's `foreachBatch` parquet log) reduces to its per-key
+    * final row — max of the monotone count. Gated against the plain batch
+    * GROUP BY. Input columns: user_id, event_id, event_type, ts_s. */
+  def hourlyCountsGate(events: DataFrame, nBatches: Int = 3,
+      feed: Feed): DataFrame = {
+    val span = Gate.span(events.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("event_type").cast("string"),
-      col("ts_s").cast("long"))
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir)
-      .select(col("event_type"), col("ts_s"))
-    val sunk = FileFeed.runUpdatesToParquet(
-      hourlyCounts(stream), workDir, narrowTo = Some(4))
-    sunk.groupBy("hour_s", "event_type")
+      col("ts_s").cast("long")), Seq("ts_s", "event_id"), feed)
+    Gate.run(span, nBatches, outputMode = "update") { s =>
+      hourlyCounts(s.select(col("event_type"), col("ts_s")))
+    }.groupBy("hour_s", "event_type")
       .agg(max(col("n")).as("n"))
       .orderBy("hour_s", "event_type")
   }
-
-  final case class Doc(doc_id: Long, text: String)
 
   /** Streaming heavy hitters: term counts as an UPDATE-mode aggregation
-    * over a replayed document stream, reduced to final counts (max of the
-    * monotone per-term emissions) and cut to the exact top-k. Shares the
-    * batch heavy-hitters oracle — the streaming route must land on the
-    * identical exact answer.
+    * over a document stream fed in doc_id order (either feed), reduced to
+    * final counts (max of the monotone per-term emissions) and cut to the
+    * exact top-k. Shares the batch heavy-hitters oracle — the streaming
+    * route must land on the identical exact answer.
     *
     * Scale: state is O(vocabulary) (terms, not documents); a production
     * deployment bounds emission with a watermarked window — unwatermarked
-    * update mode is exactly the always-fresh dashboard shape. The
-    * driver-side collect here is the gate's bounded replay harness, not
-    * part of the operator. */
-  def heavyHittersReplay(docs: DataFrame, k: Int = 50,
-      nBatches: Int = 3): DataFrame = {
-    val spark: SparkSession = docs.sparkSession
-    import spark.implicits._
-    val rows = docs.select("doc_id", "text").collect()
-      .map(r => Doc(r.getLong(0), r.getString(1)))
-      .sortBy(_.doc_id)
-    val sunk = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      outputMode = "update") { ds =>
-      ds.toDF()
-        .select(explode(graft.pipeline.TextOps.tokens(col("text"))).as("term"))
+    * update mode is exactly the always-fresh dashboard shape. */
+  def heavyHittersGate(docs: DataFrame, k: Int = 50, nBatches: Int = 3,
+      feed: Feed): DataFrame = {
+    val span = Gate.span(docs.select(col("doc_id").cast("long"), col("text")),
+      Seq("doc_id"), feed)
+    Gate.run(span, nBatches, outputMode = "update") { s =>
+      s.select(explode(graft.pipeline.TextOps.tokens(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("cnt"))
-    }
-    sunk.groupBy("term").agg(max(col("cnt")).as("cnt"))
-      .orderBy(col("cnt").desc, col("term"))
-      .limit(k)
-  }
-
-  /** PRODUCTION twin of [[heavyHittersReplay]]: the same UPDATE-mode
-    * term-count aggregation over a real file-source document stream,
-    * update log sunk via `foreachBatch` to parquet, reduced to exact
-    * final counts and the exact top-k. No document row on the driver. */
-  def heavyHittersStreamFile(docs: DataFrame, k: Int = 50,
-      nBatches: Int = 3, workDir: String): DataFrame = {
-    val ev = docs.select(col("doc_id").cast("long"), col("text"))
-    val stream = FileFeed.sliced(ev, "doc_id", nBatches, workDir)
-    val counts = stream
-      .select(explode(graft.pipeline.TextOps.tokens(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("cnt"))
-    val sunk = FileFeed.runUpdatesToParquet(counts, workDir, narrowTo = Some(4))
-    sunk.groupBy("term").agg(max(col("cnt")).as("cnt"))
+    }.groupBy("term").agg(max(col("cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("term"))
       .limit(k)
   }

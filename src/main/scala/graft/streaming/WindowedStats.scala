@@ -32,64 +32,26 @@ object WindowedStats {
         col("window.end").as("window_end"),
         col("lang"), col("n_docs"), col("n_chars"))
 
-  final case class WEvent(ts: java.sql.Timestamp, lang: String, text: String)
-
-  /** Deterministic micro-batch replay of `perWindow` for the oracle gate:
-    * the bounded input (ts_s: epoch seconds, lang, text) is fed in
-    * event-time order through the real watermarked window aggregate; two
-    * sentinel batches past max(ts)+horizon+window advance the watermark
-    * and flush every real window out of append-mode state (the sentinels'
-    * own window stays open and is never emitted). Window bounds come back
-    * as epoch seconds — timestamp-free for stable cross-engine hashing. */
-  def perWindowReplay(events: DataFrame, windowSeconds: Long,
-      horizonSeconds: Long, nBatches: Int = 3): DataFrame = {
+  /** Gate for [[perWindow]], on either feed: the bounded input (ts_s:
+    * epoch seconds, lang, text) is fed in event-time order through the
+    * real watermarked window aggregate; two sentinel batches at
+    * max(ts)+horizon+2·window flush every real window out of append-mode
+    * state (the first advances the watermark past them, and append
+    * emission lags the watermark by one micro-batch; the sentinels' own
+    * window is dropped). Window bounds come back as epoch seconds —
+    * timestamp-free for stable cross-engine hashing. */
+  def perWindowGate(events: DataFrame, windowSeconds: Long,
+      horizonSeconds: Long, nBatches: Int = 3, feed: Feed): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val rows = events.select("ts_s", "lang", "text").collect()
-      .map(r => WEvent(new java.sql.Timestamp(r.getLong(0) * 1000L),
-        r.getString(1), r.getString(2)))
-      .sortBy(_.ts.getTime)
-    val flushT = new java.sql.Timestamp(rows.last.ts.getTime +
-      (horizonSeconds + 2 * windowSeconds) * 1000L)
-    val sentinel = WEvent(flushT, "_flush", "")
-    val out = Replay.run(spark, rows.toIndexedSeq, nBatches,
-      tailBatches = Seq(Seq(sentinel), Seq(sentinel))) { ds =>
-      perWindow(ds.toDF(), s"$windowSeconds seconds", s"$horizonSeconds seconds")
+    val span = Gate.span(events.select(col("ts_s").cast("long"),
+      col("lang").cast("string"), col("text").cast("string")), Seq("ts_s"), feed)
+    val flush = Seq((span.maxT + horizonSeconds + 2 * windowSeconds, "_flush",
+      "")).toDF("ts_s", "lang", "text")
+    val sunk = Gate.run(span, nBatches, Seq(flush, flush)) { s =>
+      perWindow(s.select(timestamp_seconds(col("ts_s")).as("ts"), col("lang"),
+        col("text")), s"$windowSeconds seconds", s"$horizonSeconds seconds")
     }
-    out.filter(col("lang") =!= "_flush")
-      .select(
-        expr("unix_micros(window_start) div 1000000").cast("long").as("window_start_s"),
-        expr("unix_micros(window_end) div 1000000").cast("long").as("window_end_s"),
-        col("lang"), col("n_docs"), col("n_chars"))
-      .orderBy("window_start_s", "lang")
-  }
-
-  /** PRODUCTION twin of [[perWindowReplay]]: the same watermarked window
-    * aggregate fed from a real `readStream.parquet` file source
-    * ([[FileFeed]]) into a parquet sink — append-mode windows close on
-    * real micro-batch watermark advancement (two sentinel files past
-    * max(ts)+horizon+2·window), no event row on the driver. Input
-    * columns: ts_s (epoch seconds), lang, text. */
-  def perWindowStreamFile(events: DataFrame, windowSeconds: Long,
-      horizonSeconds: Long, nBatches: Int = 3, workDir: String): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col("ts_s").cast("long"),
-      col("lang").cast("string"), col("text").cast("string"))
-    val mm = ev.agg(min(col("ts_s")), max(col("ts_s"))).head()
-    val (minT, maxT) = (mm.getLong(0), mm.getLong(1))
-    val flushT = maxT + horizonSeconds + 2 * windowSeconds
-    def sentinel(ts: Long): DataFrame =
-      Seq((ts, "_flush", "")).toDF("ts_s", "lang", "text")
-    val stream = FileFeed.sliced(ev, "ts_s", nBatches, workDir,
-        // two sentinel files: append emission lags the watermark by one
-        // micro-batch (the first advances it, the second flushes)
-        tails = Seq(sentinel(flushT), sentinel(flushT + windowSeconds)),
-        knownBounds = Some((minT, maxT)))
-      .select(timestamp_seconds(col("ts_s")).as("ts"), col("lang"), col("text"))
-    val sunk = FileFeed.runToParquet(
-      perWindow(stream, s"$windowSeconds seconds", s"$horizonSeconds seconds"),
-      workDir, narrowTo = Some(4))
     sunk.filter(col("lang") =!= "_flush")
       .select(
         expr("unix_micros(window_start) div 1000000").cast("long").as("window_start_s"),

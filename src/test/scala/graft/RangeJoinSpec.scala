@@ -66,7 +66,8 @@ class RangeJoinSpec extends AnyFunSuite {
     }
     val df = events.toDF("user_id", "event_id", "event_type", "ts_s")
     val got = graft.streaming.StreamJoin
-      .clickAttributionReplay(df, lookbackSeconds = 300L, nBatches = 4)
+      .clickAttributionGate(df, lookbackSeconds = 300L, nBatches = 4,
+        feed = graft.streaming.Feed.Memory)
       .select("purchase_id", "click_id", "gap_s")
       .as[(Long, Long, Long)].collect().toSet
     val want = (for {

@@ -53,27 +53,46 @@ class RocksDbStateSpec extends AnyFunSuite {
     }
   }
 
+  /** The production dedup stream (file feed in `dir`/feed, parquet sink,
+    * checkpoint at `dir`/ckpt, changelog commits under RocksDB as the
+    * gates run it) over `rows`; returns the sunk rows. */
+  private def dedupStream(rows: Seq[(Long, String)], dir: Path,
+      rocksDb: Boolean): DataFrame = {
+    val ev = docsDf(rows).withColumn("ts_s", col("doc_id") + 86400L)
+    val stream = FileFeed.sliced(ev, "ts_s", nBatches = 3, dir.toString)
+      .select(timestamp_seconds(col("ts_s")).as("ts"), col("text"))
+    FileFeed.withStateProvider(spark, rocksDb, changelog = rocksDb) {
+      StreamingDedup.byFingerprint(stream, horizon = "10 days")
+        .writeStream.format("parquet")
+        .option("path", s"$dir/out").option("checkpointLocation", s"$dir/ckpt")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    spark.read.parquet(s"$dir/out")
+  }
+
   test("RocksDB provider: engaged for real, results identical to heap") {
     val rows = (0L until 24L).map(i => (i, s"doc body ${i % 16}")) // 8 dups
     val heapDir = Files.createTempDirectory("rocks-heap")
     val rocksDir = Files.createTempDirectory("rocks-rocks")
-    val heap = fps(StreamingDedup.byFingerprintStreamFile(
-      docsDf(rows), workDir = heapDir.toString))
-    val rocks = fps(StreamingDedup.byFingerprintStreamFile(
-      docsDf(rows), workDir = rocksDir.toString, rocksDb = true))
-    assert(heap == rocks)
-    assert(heap.size == 16)
-    assert(heap.distinct.size == heap.size, "duplicate fingerprints emitted")
-    // provider engagement: RocksDB checkpoints state as <version>.zip
-    // snapshots (or .changelog files); the heap provider writes .delta
-    assert(stateFiles(heapDir.resolve("ckpt"), ".delta").nonEmpty,
-      "heap run left no .delta state files")
-    val rocksCkpt = rocksDir.resolve("ckpt")
-    assert(stateFiles(rocksCkpt, ".zip").nonEmpty ||
-      stateFiles(rocksCkpt, ".changelog").nonEmpty,
-      "RocksDB run left no RocksDB-format state files — provider did not engage")
-    assert(stateFiles(rocksCkpt, ".delta").isEmpty,
-      "RocksDB run wrote heap-provider deltas")
+    try {
+      val heap = fps(dedupStream(rows, heapDir, rocksDb = false))
+      val rocks = fps(dedupStream(rows, rocksDir, rocksDb = true))
+      assert(heap == rocks)
+      assert(heap.size == 16)
+      assert(heap.distinct.size == heap.size, "duplicate fingerprints emitted")
+      // provider engagement: RocksDB checkpoints state as <version>.zip
+      // snapshots (or .changelog files); the heap provider writes .delta
+      assert(stateFiles(heapDir.resolve("ckpt"), ".delta").nonEmpty,
+        "heap run left no .delta state files")
+      val rocksCkpt = rocksDir.resolve("ckpt")
+      assert(stateFiles(rocksCkpt, ".zip").nonEmpty ||
+        stateFiles(rocksCkpt, ".changelog").nonEmpty,
+        "RocksDB run left no RocksDB-format state files — provider did not engage")
+      assert(stateFiles(rocksCkpt, ".delta").isEmpty,
+        "RocksDB run wrote heap-provider deltas")
+    } finally Seq(heapDir, rocksDir).foreach(d =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(d.toFile))
   }
 
   // mode = (rocksDb, changelogCheckpointing): heap deltas, RocksDB

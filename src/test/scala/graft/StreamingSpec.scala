@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Slice
 import graft.spark.SparkStore
-import graft.streaming.StreamingIngest
+import graft.streaming.{Feed, StreamingIngest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
@@ -11,6 +11,13 @@ import java.sql.Timestamp
   * land in later versions; time travel walks stream progress. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  /** A fresh dir under the temp dir, deleted when the JVM exits. */
+  private def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    graft.spark.StoreFs.deleteAtExit(dir)
+    dir
+  }
 
   test("stateful sessionization via flatMapGroupsWithState: gap splits, state carries across batches") {
     import spark.implicits._
@@ -48,11 +55,9 @@ class StreamingSpec extends AnyFunSuite {
     val ev = graft.queries.EventTime
       .eventsWithSeconds(spark, "/root/testdata/sf0.001")
       .filter(col("user_id") < 20)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-fstream-spec").toString
-    val streamed = Sessionize.sessionsStreamFile(
+    val streamed = Sessionize.sessionsGate(
         ev.select("user_id", "ts_s", "event_type"),
-        gapSeconds = 1800L, nBatches = 3, workDir = work)
+        gapSeconds = 1800L, nBatches = 3, feed = Feed.Files())
       .collect().map(_.toSeq).toSeq
     val batch = Sessionize.sessionsBatch(
         ev.select("user_id", "event_id", "event_type", "ts_s"),
@@ -70,11 +75,9 @@ class StreamingSpec extends AnyFunSuite {
     val ev = graft.queries.EventTime
       .eventsWithSeconds(spark, "/root/testdata/sf0.001")
       .filter(col("user_id") < 20)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-tmo-spec").toString
-    val streamed = Sessionize.sessionsStreamFileTimeout(
+    val streamed = Sessionize.timeoutGate(
         ev.select("user_id", "ts_s", "event_type"),
-        gapSeconds = 1800L, nBatches = 3, workDir = work)
+        gapSeconds = 1800L, nBatches = 3)(Sessionize.sessionsWithTimeout)
       .collect().map(_.toSeq).toSeq
     val batch = Sessionize.sessionsBatch(
         ev.select("user_id", "event_id", "event_type", "ts_s"),
@@ -91,13 +94,11 @@ class StreamingSpec extends AnyFunSuite {
     val ev = graft.queries.EventTime
       .eventsWithSeconds(spark, "/root/testdata/sf0.001")
       .filter(col("user_id") < 5)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft-tmo-loud-spec").toString
     val e = intercept[IllegalStateException] {
-      Sessionize.sessionsStreamFileTimeout(
+      Sessionize.timeoutGate(
         ev.select("user_id", "ts_s", "event_type"),
-        gapSeconds = 1800L, nBatches = 3, workDir = work,
-        pinNoData = false).collect()
+        gapSeconds = 1800L, nBatches = 3,
+        pinNoData = false)(Sessionize.sessionsWithTimeout).collect()
     }
     assert(e.getMessage.contains("noDataMicroBatches"),
       s"wrong failure: ${e.getMessage}")
@@ -105,11 +106,9 @@ class StreamingSpec extends AnyFunSuite {
     // conf cannot break the pinned gate
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try {
-      val work2 = java.nio.file.Files
-        .createTempDirectory("graft-tmo-pin-spec").toString
-      val rows = Sessionize.sessionsStreamFileTimeout(
+      val rows = Sessionize.timeoutGate(
         ev.select("user_id", "ts_s", "event_type"),
-        gapSeconds = 1800L, nBatches = 3, workDir = work2).collect()
+        gapSeconds = 1800L, nBatches = 3)(Sessionize.sessionsWithTimeout).collect()
       assert(rows.nonEmpty, "pinned gate must close sessions regardless " +
         "of the session default")
       assert(spark.conf.get(
@@ -187,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
   test("graft streaming source tails committed versions (chunk-granular deltas)") {
     import graft.core._
     import graft.meta.{DatasetMeta, VariableDef}
-    val root = java.nio.file.Files.createTempDirectory("graft-tail").toString
+    val root = tempDir("graft-tail")
     val store = new SparkStore(spark, root)
     store.create("tail")
     val meta = DatasetMeta(
@@ -226,9 +225,9 @@ class StreamingSpec extends AnyFunSuite {
       "the stream is down arrive as the next batch") {
     import graft.core._
     import graft.meta.{DatasetMeta, VariableDef}
-    val root = java.nio.file.Files.createTempDirectory("graft-cdc").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-cdc-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString
+    val root = tempDir("graft-cdc")
+    val out = tempDir("graft-cdc-out")
+    val ckpt = tempDir("graft-cdc-ckpt")
     val store = new SparkStore(spark, root)
     store.create("cdc")
     val meta = DatasetMeta(
@@ -261,7 +260,7 @@ class StreamingSpec extends AnyFunSuite {
   test("each micro-batch commits a version; late data lands in a later version") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val root = tempDir("graft-stream")
     val store = new SparkStore(spark, root)
 
     val input = MemoryStream[Timestamp]
@@ -304,12 +303,11 @@ class StreamingSpec extends AnyFunSuite {
       (h0 + 2) * 3600L + 60, (h0 + 2) * 3600L + 120, (h0 + 2) * 3600L + 180)
     val events = secs.toDF("ts_s")
     val store = new SparkStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-fstream-ing").toString)
+      tempDir("graft-fstream-ing"))
     val nBatches = 3
     val nVersions = StreamingIngest.hourlyVersionedStreamFile(
       events, store, "fs_ev", h0, hours = 10L, nBatches = nBatches,
-      workDir = java.nio.file.Files
-        .createTempDirectory("graft-fstream-feed").toString)
+      workDir = tempDir("graft-fstream-feed"))
     assert(nVersions == nBatches,
       s"expected exactly one committed version per real micro-batch " +
         s"($nBatches), got $nVersions")

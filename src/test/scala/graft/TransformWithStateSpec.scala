@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
-import java.nio.file.Files
 
 /** `transformWithState` sessionizer (Spark 4's successor API to
   * flatMapGroupsWithState): engine choice must be invisible to results,
@@ -29,13 +28,12 @@ class TransformWithStateSpec extends AnyFunSuite {
     } yield (u, 1000000L + k * 7200L + j * 30L + u * 11L,
       if (j == 0) "view" else "click")).toSeq
     val gap = 1800L
-    val tws = Sessionize.sessionsStreamFileTws(evFrame(rows), gap,
-      workDir = Files.createTempDirectory("tws-eq").toString)
-    val fmg = Sessionize.sessionsStreamFileTimeout(evFrame(rows), gap,
-      workDir = Files.createTempDirectory("tws-eq-fmg").toString,
-      rocksDb = true)
-    val twsMap = Sessionize.sessionsStreamFileTwsMap(evFrame(rows), gap,
-      workDir = Files.createTempDirectory("tws-eq-map").toString)
+    val tws = Sessionize.timeoutGate(evFrame(rows), gap,
+      rocksDb = true)(Sessionize.sessionsTws)
+    val fmg = Sessionize.timeoutGate(evFrame(rows), gap,
+      rocksDb = true)(Sessionize.sessionsWithTimeout)
+    val twsMap = Sessionize.timeoutGate(evFrame(rows), gap,
+      rocksDb = true)(Sessionize.sessionsTwsMap)
     val batch = Sessionize.sessionsBatch(
       evFrame(rows).withColumn("event_id", col("ts_s")), gap)
     def dump(df: org.apache.spark.sql.DataFrame) =
@@ -55,12 +53,13 @@ class TransformWithStateSpec extends AnyFunSuite {
       k <- 0 until 3
       j <- 0 until 4
     } yield (u, 500000L + k * 3600L + j * 60L + u * 7L, "click")).toSeq
-    val tws = Sessionize.sessionsStreamFileOooTws(evFrame(rows),
+    val tws = Sessionize.outOfOrderGate(evFrame(rows),
       gapSeconds = 600L, skewSeconds = 90L, delaySeconds = 200L,
-      workDir = Files.createTempDirectory("ooo-tws").toString)
-    val fmg = Sessionize.sessionsStreamFileOoo(evFrame(rows),
-      gapSeconds = 600L, skewSeconds = 90L, delaySeconds = 200L,
-      workDir = Files.createTempDirectory("ooo-fmg").toString)
+      rocksDb = true)(
+      Sessionize.sessionsOutOfOrderTws)
+    val fmg = Sessionize.outOfOrderGate(evFrame(rows),
+      gapSeconds = 600L, skewSeconds = 90L, delaySeconds = 200L)(
+      Sessionize.sessionsOutOfOrder)
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     assert(dump(tws) == dump(fmg))
@@ -75,9 +74,8 @@ class TransformWithStateSpec extends AnyFunSuite {
     // and never returns: its seeded state must still close via watermark.
     val u1 = (0 until 7).map(j => (1L, 1000L + j * 300L, "click"))
     val u2 = Seq((2L, 1100L, "view"), (2L, 1200L, "view"))
-    val warm = Sessionize.sessionsStreamFileWarm(evFrame(u1 ++ u2),
-      gapSeconds = 600L,
-      workDir = Files.createTempDirectory("warm-span").toString)
+    val warm = Sessionize.warmGate(evFrame(u1 ++ u2),
+      gapSeconds = 600L)
     val rows = warm.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getLong(2), r.getLong(3), r.getLong(4))).toSeq.sorted
     // (user, session_no, n_events, n_types, duration_s)
@@ -186,8 +184,8 @@ class TransformWithStateSpec extends AnyFunSuite {
     } yield (u, 1000L + k * 60L + u, if (k % 3 == 0) "view" else "click"))
       .toDF("user_id", "ts_s", "event_type")
       .select(col("user_id"), col("event_type"), col("ts_s"))
-    val got = ProfileState.profilesStreamFile(ev, ttlMs = 3600000L,
-      nBatches = 3, workDir = Files.createTempDirectory("ttl-prof").toString)
+    val got = ProfileState.profilesGate(ev, ttlMs = 3600000L,
+      nBatches = 3)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     val want = ev.groupBy("user_id", "event_type")
       .agg(count(lit(1)).as("n")).orderBy("user_id", "event_type")
