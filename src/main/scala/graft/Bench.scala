@@ -149,15 +149,15 @@ object Bench {
     // build entry already includes computing the fingerprint.
     def ivfPass(): Unit = {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivf")
+      val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivf").toString
       try {
         record("bench_ivf_build", timed(spark, "bench_ivf_build") {
-          graft.pipeline.Similarity.ivfBuild(emb, idx.toString, nCentroids = 16) })
+          graft.pipeline.Similarity.ivfBuild(emb, idx, nCentroids = 16) })
         record("bench_ivf_query", timed(spark, "bench_ivf_query") {
           graft.pipeline.Similarity
-            .ivfQuery(emb, idx.toString, k = 5, nQueries = 20, verifyCorpus = false)
+            .ivfQuery(emb, idx, k = 5, nQueries = 20, verifyCorpus = false)
             .write.format("noop").mode("overwrite").save() })
-      } finally deleteTree(idx)
+      } finally graft.spark.StoreFs.deleteTree(idx)
     }
 
     // Interleaved passes: pass p runs EVERY query once, so a transient
@@ -327,14 +327,6 @@ object Bench {
       System.err.println(s"[bench] could not write $summaryPath: ${e.getMessage}") }
     spark.stop()
   }
-
-  /** Delete a temp directory and everything under it. */
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
-    val files = java.nio.file.Files.walk(root)
-    try files.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally files.close()
-  }
 }
 
 /** Dense-array engine benchmarks (BASELINE.md engine-side targets). */
@@ -359,8 +351,7 @@ object ArrayBench {
       dimensions = dims,
       chunkDimensions = Map("x" -> 30L, "y" -> 30L, "z" -> 30L),
       variables = Map("foo" -> VariableDef("short", Vector("x", "y", "z"), -3.0)))
-    val rootPath = java.nio.file.Files.createTempDirectory("graft_bench")
-    val root = rootPath.toString
+    val root = java.nio.file.Files.createTempDirectory("graft_bench").toString
     val store = new SparkStore(spark, root)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Rep]]
 
@@ -504,6 +495,6 @@ object ArrayBench {
         time("bench_spj_join")(spjJoin())
       }
       results.toSeq
-    } finally Bench.deleteTree(rootPath)
+    } finally graft.spark.StoreFs.deleteTree(root)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession shape every graft entry point runs on —
-  * Bench, Verify, the probes and the dev tools — in the style of an
+  * Bench, Verify and the dev tools — in the style of an
   * idempotent `SqlStrategy.setup`: `getOrCreate` hands a second caller
   * the session the first one built.
   *

@@ -58,7 +58,7 @@ object ArrayFixtures {
   private def build(spark: SparkSession, sfDir: String): Handles = {
     val counts = hourCounts(spark, sfDir)
     val h = counts.length.toLong
-    val root = java.nio.file.Files.createTempDirectory("graft_fixture").toString
+    val root = graft.spark.StoreFs.tempDirAtExit("graft_fixture")
     val store = new SparkStore(spark, root)
 
     def countsSlab(dtype: DType, upto: Long): Slab =

@@ -37,8 +37,7 @@ object ArrayQueries {
         else {
           import graft.core._
           import graft.meta.{DatasetMeta, VariableDef}
-          val root = java.nio.file.Files
-            .createTempDirectory("graft_vacuum_fixture").toString
+          val root = graft.spark.StoreFs.tempDirAtExit("graft_vacuum_fixture")
           val store = new graft.spark.SparkStore(s, root)
           val meta = DatasetMeta(
             dimensions = Map("h" -> 20L),
@@ -87,8 +86,7 @@ object ArrayQueries {
         else {
           import graft.core._
           import graft.meta.{DatasetMeta, VariableDef}
-          val root = java.nio.file.Files
-            .createTempDirectory("graft_5d_fixture").toString
+          val root = graft.spark.StoreFs.tempDirAtExit("graft_5d_fixture")
           val store = new graft.spark.SparkStore(s, root)
           val meta = DatasetMeta(
             dimensions = Map("a" -> 6L, "b" -> 5L, "c" -> 4L,
@@ -197,8 +195,7 @@ object ArrayQueries {
         else {
           import graft.core._
           import graft.meta.{DatasetMeta, VariableDef}
-          val root = java.nio.file.Files
-            .createTempDirectory("graft_compact_fixture").toString
+          val root = graft.spark.StoreFs.tempDirAtExit("graft_compact_fixture")
           val store = new graft.spark.SparkStore(s, root)
           store.create("cds")
           val meta = DatasetMeta(
@@ -243,8 +240,7 @@ object ArrayQueries {
           .select("ts_s").collect().map(_.getLong(0)).sorted
         val h0 = secs.head / 3600L
         val hours = secs.last / 3600L - h0 + 1
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_stream_ingest").toString
+        val root = graft.spark.StoreFs.tempDirAtExit("graft_stream_ingest")
         val store = new graft.spark.SparkStore(s, root)
         val input = MemoryStream[TsRow]
         // generous watermark: the replay must never drop state mid-run
@@ -279,13 +275,12 @@ object ArrayQueries {
         val mm = evs.agg(min(col("ts_s")), max(col("ts_s"))).head()
         val h0 = mm.getLong(0) / 3600L
         val hours = mm.getLong(1) / 3600L - h0 + 1
-        val store = new graft.spark.SparkStore(s, java.nio.file.Files
-          .createTempDirectory("graft_ingest_fstream").toString)
+        val store = new graft.spark.SparkStore(s,
+          graft.spark.StoreFs.tempDirAtExit("graft_ingest_fstream"))
         val nBatches = 3
         val n = graft.streaming.StreamingIngest.hourlyVersionedStreamFile(
           evs, store, "evstream", h0, hours, nBatches,
-          workDir = java.nio.file.Files
-            .createTempDirectory("graft_ingest_feed").toString)
+          workDir = graft.spark.StoreFs.tempDirAtExit("graft_ingest_feed"))
         H(store, hours, n, nBatches)
     }
   }
@@ -691,8 +686,7 @@ object ArrayQueries {
         w1.write("n", Seq(Slab.fromDoubles(DType.LONG,
           Slice(Seq(0L), Seq(fx.hours)), counts.map(_.toDouble).toIndexedSeq)))
         w1.finishVersion()
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_rollup_ckpt").toString
+        val ckpt = graft.spark.StoreFs.tempDirAtExit("graft_rollup_ckpt")
         graft.streaming.Rollup.maintain(s, store.root, "rollsrc", "n",
           "rollview", Map("h" -> 8L), ckpt)
         Thread.sleep(2)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.pipeline._
+import graft.spark.StoreFs
 import graft.streaming.Feed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,8 +64,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedDocsDir(s: SparkSession, dir: String): String =
     partitionedDirs.computeIfAbsent(dir, { d =>
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_part_docs").toString
+      val out = StoreFs.tempDirAtExit("graft_part_docs")
       docs(s, d).write.mode("overwrite").partitionBy("lang").parquet(out)
       out
     })
@@ -73,7 +73,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfIndexFor(s: SparkSession, dir: String): String =
     ivfIndexes.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+      val path = StoreFs.tempDirAtExit("graft-ivf")
       Similarity.ivfBuild(emb(s, d), path, nCentroids = 16)
       path
     })
@@ -84,7 +84,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def dedupIndexFor(s: SparkSession, dir: String): String =
     dedupIndexes.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft-dedup-idx").toString
+      val path = StoreFs.tempDirAtExit("graft-dedup-idx")
       Dedup.dedupIndexBuild(docs(s, d).filter(col("doc_id") % 5 =!= 0), path)
       path
     })
@@ -96,7 +96,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ivfPqIndexFor(s: SparkSession, dir: String): String =
     ivfPqIndexes.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+      val path = StoreFs.tempDirAtExit("graft-ivfpq")
       Similarity.ivfBuild(emb(s, d), path, nCentroids = 16, pqM = 8, pqKsub = 16)
       path
     })
@@ -107,7 +107,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25IndexFor(s: SparkSession, dir: String): String =
     bm25Indexes.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+      val path = StoreFs.tempDirAtExit("graft-bm25")
       TextOps.bm25BuildIndex(docs(s, d), path)
       path
     })
@@ -119,7 +119,7 @@ object PipelineQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25IncrIndexFor(s: SparkSession, dir: String): String =
     bm25IncrIndexes.computeIfAbsent(dir, { d =>
-      val path = java.nio.file.Files.createTempDirectory("graft-bm25i").toString
+      val path = StoreFs.tempDirAtExit("graft-bm25i")
       TextOps.bm25BuildIndex(docs(s, d).filter(col("doc_id") % 5 =!= 0), path)
       TextOps.bm25AppendBatch(docs(s, d).filter(col("doc_id") % 5 === 0), path)
       path

@@ -20,8 +20,7 @@ object BinaryFiles {
     * q_pipe_multimodal gate) as `<doc_id>.ppm`, once per (sfDir, JVM). */
   private def exportDir(spark: SparkSession, sfDir: String): String =
     written.computeIfAbsent(sfDir, { d =>
-      val base = java.nio.file.Files.createTempDirectory("graft-binfiles")
-        .toString
+      val base = graft.spark.StoreFs.tempDirAtExit("graft-binfiles")
       val w = col("n_chars") % 64 + 1
       val h = (col("n_chars") * 7) % 48 + 1
       val header = concat(lit("P6\n"), w.cast("string"), lit(" "),

@@ -20,7 +20,7 @@ object TextFormats {
   /** Write docs as JSONL + CSV under a temp dir (once per sfDir). */
   private def roundTripDir(spark: SparkSession, sfDir: String): String =
     written.computeIfAbsent(sfDir, { d =>
-      val base = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+      val base = graft.spark.StoreFs.tempDirAtExit("graft-fmt")
       val docs = spark.read.parquet(s"$d/documents.parquet")
       docs.write.mode("overwrite").json(s"$base/jsonl")
       docs.write.mode("overwrite").option("header", "true").csv(s"$base/csv")

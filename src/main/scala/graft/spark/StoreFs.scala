@@ -508,6 +508,13 @@ private[graft] object StoreFs {
     ()
   }
 
+  /** A fresh local temp dir, deleted when the JVM exits. */
+  def tempDirAtExit(prefix: String): String = {
+    val dir = NFiles.createTempDirectory(prefix).toString
+    deleteAtExit(dir)
+    dir
+  }
+
   /** Recursive tree delete; missing is fine. */
   def deleteTree(p: String): Unit = {
     val lp = localPath(p)

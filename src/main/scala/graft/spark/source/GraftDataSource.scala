@@ -1263,8 +1263,8 @@ private[spark] object GraftScan {
     * Overridable per session via `spark.graft.chunkedMaxChunks` for
     * drivers provisioned to hold more — a dial, not a fix: per-chunk
     * partitions are the co-location tool for bounded grid windows, and
-    * whole-grid work at scale belongs on the range scan (the round-16
-    * ArrayScaleProbe pins both shapes at 84k chunks). */
+    * whole-grid work at scale belongs on the range scan (both shapes
+    * measured at 84k chunks, PLANS.md round 16). */
   val ChunkedMaxChunksDefault: Long = 1L << 16
   def ChunkedMaxChunks: Long = {
     // no-active-session threads legitimately fall back to the default;

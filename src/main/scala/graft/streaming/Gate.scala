@@ -106,8 +106,7 @@ object Gate {
             (ds: Dataset[Row]) => build(ds.toDF()))(Encoders.row(schema))
         }
       case Feed.Files(skew) =>
-        val work = java.nio.file.Files.createTempDirectory("graft-gate").toString
-        StoreFs.deleteAtExit(work)
+        val work = StoreFs.tempDirAtExit("graft-gate")
         try {
           val stream = FileFeed.sliced(span.input, span.order.head, nBatches,
             work, tails.map(aligned), skew,

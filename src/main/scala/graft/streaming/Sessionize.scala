@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale shape: state is partitioned by user_id (one `SessionState` per
   * user ever seen — `NoTimeout`, so the deterministic gates control
   * eviction themselves via sentinel flushes), so state size is O(user
-  * population), not O(events); StreamScaleProbe pins this. A production
+  * population), not O(events) (PLANS.md round 14). A production
   * deployment with an unbounded user space would switch to
   * `EventTimeTimeout` so dormant users' sessions auto-close at the
   * watermark instead of living in state forever.

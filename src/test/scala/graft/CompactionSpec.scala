@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Checkpoint answers latest reads alone, streaming tail skips it, time
   * travel below it survives until history is expired, and expiry makes
   * overwritten blobs vacuum-reclaimable. */
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = graft.SparkTestSession.spark
 
-  private def freshStore(): SparkStore = new SparkStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-compact").toString)
+  private def freshStore(): SparkStore =
+    new SparkStore(spark, tempRoot("graft-compact"))
 
   private def meta1d = DatasetMeta(
     dimensions = Map("h" -> 48L),

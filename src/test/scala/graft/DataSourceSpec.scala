@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** spark.read.format("graft"): schema inference, pushdown → chunk
   * pruning, column pruning, version time travel, post-scan residuals. */
-class DataSourceSpec extends AnyFunSuite {
+class DataSourceSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   private def mkStore(): (SparkStore, Long, Long) = {
-    val root = java.nio.file.Files.createTempDirectory("graft-dsv2").toString
+    val root = tempRoot("graft-dsv2")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(
@@ -133,7 +133,7 @@ class DataSourceSpec extends AnyFunSuite {
   }
 
   test("create=true: df.write to a fresh dataset creates it + v1 in one shot") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dsv2-create").toString
+    val root = tempRoot("graft-dsv2-create")
     import spark.implicits._
     val cells = (for { x <- 0L to 3L; y <- 0L to 2L }
       yield (x, y, (x * 10 + y).toDouble)).toDF("x", "y", "value")
@@ -210,7 +210,7 @@ class DataSourceSpec extends AnyFunSuite {
 
   test("full-variable scan above the point threshold plans coordinate ranges: " +
       "O(buckets) driver state, manifest resolved distributedly, parity with exploded") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dsv2-full").toString
+    val root = tempRoot("graft-dsv2-full")
     val store = new SparkStore(spark, root)
     store.create("big")
     // 1100 covering chunks > GraftScan.PointLookupThreshold (1024) → range path
@@ -336,7 +336,7 @@ class DataSourceSpec extends AnyFunSuite {
 
   test("CROSS-VARIABLE storage-partitioned join: two variables of one " +
       "grid join on (_chunk_*, dims) with no Exchange, fill included") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dsv2-xv").toString
+    val root = tempRoot("graft-dsv2-xv")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(
@@ -390,7 +390,7 @@ class DataSourceSpec extends AnyFunSuite {
 
   test("scan manifests are cached by (dataset, variable, version, window): " +
       "a repeated large scan reuses the published manifest, no new planning job") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dsv2-cache").toString
+    val root = tempRoot("graft-dsv2-cache")
     val store = new SparkStore(spark, root)
     store.create("big")
     val meta = DatasetMeta(

@@ -14,11 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's posture of proving the store protocol over swappable
   * remote backends (/root/reference/README.md:16-19,
   * src/io/mandoline/impl.clj:77-119). */
-class MockFsSpec extends AnyFunSuite {
+class MockFsSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   private def mockRoot(): String =
-    "mockfs://" + java.nio.file.Files.createTempDirectory("graft-mockfs").toString
+    "mockfs://" + tempRoot("graft-mockfs")
 
   private def meta1d(n: Long = 10L, chunk: Long = 4L) = DatasetMeta(
     dimensions = Map("x" -> n), chunkDimensions = Map("x" -> chunk),

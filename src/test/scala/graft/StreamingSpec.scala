@@ -1,8 +1,9 @@
 package graft
 
 import graft.core.Slice
-import graft.spark.SparkStore
+import graft.spark.{SparkStore, StoreFs}
 import graft.streaming.{Feed, StreamingIngest}
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
@@ -11,13 +12,6 @@ import java.sql.Timestamp
   * land in later versions; time travel walks stream progress. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-
-  /** A fresh dir under the temp dir, deleted when the JVM exits. */
-  private def tempDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-    graft.spark.StoreFs.deleteAtExit(dir)
-    dir
-  }
 
   test("stateful sessionization via flatMapGroupsWithState: gap splits, state carries across batches") {
     import spark.implicits._
@@ -186,7 +180,7 @@ class StreamingSpec extends AnyFunSuite {
   test("graft streaming source tails committed versions (chunk-granular deltas)") {
     import graft.core._
     import graft.meta.{DatasetMeta, VariableDef}
-    val root = tempDir("graft-tail")
+    val root = StoreFs.tempDirAtExit("graft-tail")
     val store = new SparkStore(spark, root)
     store.create("tail")
     val meta = DatasetMeta(
@@ -225,9 +219,9 @@ class StreamingSpec extends AnyFunSuite {
       "the stream is down arrive as the next batch") {
     import graft.core._
     import graft.meta.{DatasetMeta, VariableDef}
-    val root = tempDir("graft-cdc")
-    val out = tempDir("graft-cdc-out")
-    val ckpt = tempDir("graft-cdc-ckpt")
+    val root = StoreFs.tempDirAtExit("graft-cdc")
+    val out = StoreFs.tempDirAtExit("graft-cdc-out")
+    val ckpt = StoreFs.tempDirAtExit("graft-cdc-ckpt")
     val store = new SparkStore(spark, root)
     store.create("cdc")
     val meta = DatasetMeta(
@@ -260,7 +254,7 @@ class StreamingSpec extends AnyFunSuite {
   test("each micro-batch commits a version; late data lands in a later version") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = tempDir("graft-stream")
+    val root = StoreFs.tempDirAtExit("graft-stream")
     val store = new SparkStore(spark, root)
 
     val input = MemoryStream[Timestamp]
@@ -303,11 +297,11 @@ class StreamingSpec extends AnyFunSuite {
       (h0 + 2) * 3600L + 60, (h0 + 2) * 3600L + 120, (h0 + 2) * 3600L + 180)
     val events = secs.toDF("ts_s")
     val store = new SparkStore(spark,
-      tempDir("graft-fstream-ing"))
+      StoreFs.tempDirAtExit("graft-fstream-ing"))
     val nBatches = 3
     val nVersions = StreamingIngest.hourlyVersionedStreamFile(
       events, store, "fs_ev", h0, hours = 10L, nBatches = nBatches,
-      workDir = tempDir("graft-fstream-feed"))
+      workDir = StoreFs.tempDirAtExit("graft-fstream-feed"))
     assert(nVersions == nBatches,
       s"expected exactly one committed version per real micro-batch " +
         s"($nBatches), got $nVersions")
@@ -316,5 +310,62 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.valueAt(Seq(0L)) == 2.0 && s.valueAt(Seq(1L)) == 1.0 &&
       s.valueAt(Seq(2L)) == 3.0 && s.valueAt(Seq(3L)) == -1.0,
       "overlay must equal the batch per-hour counts, fill −1 elsewhere")
+  }
+
+  test("operator state is horizon-bounded, not volume-bounded: at fixed " +
+      "event-time density, max state rows at 4× volume equal 1× within one batch") {
+    import graft.streaming.{Sessionize, StreamJoin}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // a session of its own with one shuffle partition: each micro-batch
+    // commits one state-store partition per operator, not four
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "1")
+    import ss.implicits._
+    implicit val sqlCtx = ss.sqlContext
+    val base = 1600000000L // event-time epoch, seconds
+    val nBatches = 12
+    /** The largest state-row count any progress of the query reports over
+      * `nBatches` time-ordered micro-batches of `evs`. */
+    def maxStateRows[T: Encoder](evs: IndexedSeq[T])(
+        op: MemoryStream[T] => DataFrame): Long = {
+      val input = MemoryStream[T]
+      val sink = s"state_bound_${System.nanoTime()}"
+      val q = op(input).writeStream.format("memory").queryName(sink)
+        .outputMode("append").start()
+      try evs.grouped(evs.length / nBatches).map { b =>
+        input.addData(b)
+        q.processAllAvailable()
+        Option(q.lastProgress).fold(0L)(_.stateOperators.map(_.numRowsTotal).sum)
+      }.max
+      finally { q.stop(); ss.catalog.dropTempView(sink) }
+    }
+    // one click and one purchase per event-time second, lookback 300 s
+    def joinMax(scale: Int): Long = maxStateRows((0 until 3000 * scale).flatMap { i =>
+      val ts = new Timestamp((base + i) * 1000L)
+      Seq(StreamJoin.Ev(i % 100L, 2L * i, "click", ts),
+        StreamJoin.Ev(i % 100L, 2L * i + 1, "purchase", ts))
+    })(in => StreamJoin.clickAttribution(in.toDS(), lookbackSeconds = 300L))
+    // ten events per event-time second, each from a user never seen before
+    def sessionsMax(scale: Int): Long = maxStateRows((0 until 6000 * scale).map(i =>
+      Sessionize.Event(i.toLong, new Timestamp((base + i / 10) * 1000L), "click")))(
+      in => Sessionize.sessionsWithTimeout(
+        in.toDS().withWatermark("ts", "0 seconds"), gapMs = 60000L).toDF())
+    // the four runs are independent queries; most of a micro-batch is
+    // driver latency, so they overlap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val runs = try Await.result(Future.sequence(for {
+        (leg, run) <- Seq[(String, Int => Long)]("join" -> joinMax, "sessions" -> sessionsMax)
+        scale <- Seq(1, 4)
+      } yield Future((leg, scale) -> run(scale))), 5.minutes).toMap
+      finally pool.shutdown()
+    // both legs feed 6,000 events at 1×, so one 1× batch is 500 events
+    val batchSlack = 6000L / nBatches
+    for (leg <- Seq("join", "sessions")) {
+      val (at1, at4) = (runs((leg, 1)), runs((leg, 4)))
+      assert(at1 > 0 && math.abs(at4 - at1) <= batchSlack,
+        s"$leg: max state rows $at1 at 1×, $at4 at 4× volume")
+    }
   }
 }

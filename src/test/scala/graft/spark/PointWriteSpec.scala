@@ -13,11 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The writer's point/range split: a base-resolving write touching at
   * most `GraftScan.PointLookupThreshold` chunks is point-planned, any
   * other is range-planned, and both plans commit the same versions. */
-class PointWriteSpec extends AnyFunSuite {
+class PointWriteSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = SparkTestSession.spark
 
-  private def tmpRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-ptwrite").toString
+  private def tmpRoot(): String = tempRoot("graft-ptwrite")
 
   // 40 × 40 = 1,600 chunks of 2 × 2 cells: more than the point threshold
   private val grid = DatasetMeta(

@@ -10,14 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Aggregate pushdown (partial, from zone-map stats) + value-predicate
   * chunk skipping on the DSv2 source. */
-class AggSkipSpec extends AnyFunSuite {
+class AggSkipSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = SparkTestSession.spark
-
-  /** A fresh store root under the temp dir, deleted when `body` ends. */
-  private def withRoot[A](prefix: String)(body: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(root) finally graft.spark.StoreFs.deleteTree(root)
-  }
 
   /** long v over [0,100) chunk 16: cells 1..40 written, fill −2 after. */
   private def withLong[A](body: String => A): A = withRoot("graft-agg") { root =>
