@@ -36,11 +36,8 @@ object FanOut {
     // and run ~2× faster at quarter width (langid 0.89→0.40 s, shuffle
     // 0.67→0.45 s) while the CPU-heavy entries lose little (novelty,
     // dup_spans within noise) — local-mode tasks share one JVM heap, so
-    // full-width allocation-heavy stages trade CPU for GC. Env dial
-    // SPARK_GRAFT_FANOUT overrides for probes or deployments that want
-    // full width (isolated executor heaps).
-    val target = sys.env.get("SPARK_GRAFT_FANOUT").map(_.toInt)
-      .getOrElse(math.max(2, sc.defaultParallelism / 4))
+    // full-width allocation-heavy stages trade CPU for GC.
+    val target = math.max(2, sc.defaultParallelism / 4)
     // idempotent: a frame whose plan already repartitions (this helper
     // upstream, or an operator's own salting/partitioning) has its
     // parallelism established — a second exchange would be pure cost

@@ -109,16 +109,17 @@ private[spark] object PointIndexReader {
   * options gives: the schema metadata, the codec and per-column min/max
   * statistics. A scheme-less path is written through java.nio, as
   * `StoreFs` does: the Hadoop local filesystem would fork a `chmod` per
-  * file. Files are named like a Spark task's part file,
-  * `part-00000-<uuid>`, so every file counts as its own ingest generation
-  * in `SparkStore.repairTornWrites`. */
+  * file. Files are named like one Spark job's part files,
+  * `part-<part>-<gen>`: the files a write pass lands share its generation
+  * id, so `SparkStore.repairTornWrites` counts the pass as one ingest
+  * generation. */
 private[spark] final class PartFileWriter private (conf: SerializableHadoopConf,
     codec: CompressionCodecName, suffix: String) extends Serializable {
 
-  /** A new part file in `dir`; rows go in through `write`, and `close`
-    * finishes the footer. */
-  def open(dir: String): ParquetWriter[InternalRow] = {
-    val path = StoreFs.child(dir, s"part-00000-${java.util.UUID.randomUUID}$suffix")
+  /** A new part file `part-<part>-<gen>` in `dir`; rows go in through
+    * `write`, and `close` finishes the footer. */
+  def open(dir: String, part: Int, gen: String): ParquetWriter[InternalRow] = {
+    val path = StoreFs.child(dir, f"part-$part%05d-$gen$suffix")
     val out = StoreFs.localPath(path) match {
       case null => HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf.value)
       case local =>
@@ -154,10 +155,12 @@ private[spark] object PartFileWriter {
 
   /** A writer that opens its file on the first row, so a file with no row
     * is never created. */
-  final class Lazy(files: PartFileWriter, dir: String) extends AutoCloseable {
+  final class Lazy(files: PartFileWriter, dir: String, part: Int, gen: String)
+      extends AutoCloseable {
     private var out: ParquetWriter[InternalRow] = null
+    def opened: Boolean = out != null
     def write(row: InternalRow): Unit = {
-      if (out == null) out = files.open(dir)
+      if (out == null) out = files.open(dir, part, gen)
       out.write(row)
     }
     override def close(): Unit = if (out != null) out.close()

@@ -32,14 +32,13 @@ import scala.jdk.CollectionConverters._
   *    (reference: impl.clj:246-278; SURVEY §4).
   *  - writes take the reads' point/range split (SparkVersionWriter): an
   *    update touching ≤ GraftScan.PointLookupThreshold chunks resolves
-  *    its bases to the driver and lands its blobs as one file — with no
-  *    Spark job at all when its input is driver-held and small
-  *    (GraftScan.onDriver).
+  *    its bases to the driver — with no Spark job at all when its input
+  *    is driver-held and small (GraftScan.onDriver) — and every pass
+  *    lands its blobs in hash-range part files, one landing per range.
   *  - chunk blobs are written once, content-deduplicated within the
-  *    batch (drop-adjacent over hash-sorted rows) and against the store —
-  *    a left-anti join against existing hashes, or a by-hash probe on
-  *    point writes (reference dedup bound:
-  *    test/io/mandoline/impl_test.clj:17-39).
+  *    batch (drop-adjacent over hash-sorted rows) and against the store
+  *    by a by-hash probe of the candidate chunk files (reference dedup
+  *    bound: test/io/mandoline/impl_test.clj:17-39).
   *  - reads enumerate ONLY covering chunk coordinates (array-analog of
   *    partition pruning, reference: io/mandoline.clj:250-256) — generated
   *    distributedly with spark.range, never collected on the driver — and
@@ -794,17 +793,6 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     else spark.read.schema(indexSchema).parquet(dir)
   }
 
-  /** The `hash` column of every stored blob — the dedup probes' view of
-    * the chunk table. Blob BYTES are never read through it: windows fetch
-    * through the DSv2 planner and `ChunkSlabCursor`, hash lists through
-    * [[withBlobs]]. */
-  private[spark] def chunkHashesDF: DataFrame = {
-    healChunksDir()
-    if (!StoreFs.exists(chunksDir)) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], chunksSchema).select("hash")
-    else spark.read.schema(chunksSchema).parquet(chunksDir).select("hash")
-  }
-
   /** `rows` plus a `bytesCol` column: the framed blob of each row's
     * `hashCol` hash, fetched BY HASH — the one blob fetch for hash lists
     * that are not a read window (write-path bases, diffs, torn-write
@@ -981,7 +969,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
       oldDF.join(referenced, Seq("hash"), "left_semi")
         .dropDuplicates("hash") // compact duplicate rows from racy appends
         // range-partition: compaction leaves the WHOLE swept store as one
-        // disjoint-file generation (see writeRows blob append)
+        // disjoint-file generation (see appendBlobsRange)
         .repartitionByRange(col("hash")).sortWithinPartitions("hash")
         .write.option("compression", "uncompressed").mode("overwrite").parquet(keptDir)
       val after = spark.read.parquet(keptDir).count()
@@ -1019,7 +1007,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * appended under the new `(var, version=W)` partition).
     *
     * Resolution at or after the checkpoint then admits ONLY versions ≥ W
-    * (see resolvedIndex): read planning cost becomes O(changes since the
+    * (see pinnedAdmissible): read planning cost becomes O(changes since the
     * last compact) instead of O(total version history) — what keeps a
     * long-lived, frequently-updated dataset readable after 10⁴ commits.
     * Time travel below W still resolves over the pre-checkpoint history;
@@ -1039,7 +1027,7 @@ final class SparkStore(val spark: SparkSession, val root: String) {
       val vid = w.meta.versionId.get
       latestMeta.variables.keys.toSeq.sorted.foreach { varN =>
         if (hasIndexData(name, varN, Some(latest), vid))
-          appendIndexRows(name, resolvedIndex(name, varN, upTo = latest)
+          appendIndexRows(name, resolvedIndexPinned(name, varN, latestMeta)
             .select(lit(varN).as("var"), lit(vid).as("version"),
               lit(0L).as("seq"), col("coordKey"), col("coord"), col("hash"),
               col("stats"), lit(-1L).as("baseSeq"), lit("").as("baseHash"),
@@ -1219,6 +1207,9 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     * exposure as a direct append) and the staging leftovers for vacuum's
     * sweep. */
   private[graft] def adoptChunkFiles(staging: String): Seq[String] = {
+    // before the mkdirs below: an empty live dir would hide a chunks dir
+    // that a crashed vacuum swap left under its pre-swap name
+    healChunksDir()
     StoreFs.mkdirs(chunksDir)
     val conf = graft.spark.source.ChunkBlobReader.sharedConf
     val adopted = StoreFs.list(staging)
@@ -1282,58 +1273,47 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     StoreFs.deleteTree(staging)
   }
 
-  /** RANGE blob append of (hash, bytes) rows — the write path's range
-    * pass and torn-write repair both land blobs through it: staged,
-    * adopted into the chunks dir with its hash-range sidecar, and
-    * arranged so blob BYTES move exactly ONCE — the range shuffle that
-    * lays out hash-sorted disjoint part files:
-    *  - already-in-store hashes (re-ingested content) are a string-only
-    *    semi join against chunkHashesDF, broadcast back as a LEFT-ANTI
-    *    filter below the range shuffle. The broadcast is bounded by the
-    *    batch's re-ingested DISTINCT hashes (40 B each); the worst case —
-    *    an idempotent full re-write — broadcasts the batch's hash set and
-    *    then writes zero blobs.
-    *  - within-batch duplicates land ADJACENT in the hash-sorted range
-    *    partitions and are dropped in-pass (mapPartitions), costing no
-    *    shuffle at all.
-    * Earlier shapes both failed at scale, caught by the round-18
-    * incompressible-content probe: a plain join of the cogroup output
-    * with the winner coordKeys let the planner BROADCAST the blob side
-    * (the cogroup's static size estimate derives from its tiny
-    * spark.range inputs — 1.6 GB of driver results at the x4 shape), and
-    * pinning the build side with a shuffle-hash hint re-shuffled every
-    * blob byte a second time (the cogroup's coordKey clustering does not
-    * survive object serialization, so the join could not reuse it).
-    * RANGE-partitioning by hash, then sorting within partitions, gives
-    * each part file a DISJOINT hash range (footer min/max), so a point
-    * lookup opens one candidate file per ingest generation instead of
-    * every file (file-level pruning in ChunkBlobReader.fileHashRange —
-    * without disjoint files, per-chunk tasks paid an open per file:
-    * measured 277 ms/task on a 2240-chunk grid agg, ~8 ms after). */
+  /** Blob append of (hash, bytes) rows — torn-write repair's: the rows
+    * shuffle into spark.sql.shuffle.partitions contiguous hash ranges
+    * ([[inHashRanges]]), and each range lands through the writer's blob
+    * kernel (`SparkVersionWriter.landBlobs`: adjacent duplicates dropped,
+    * stored hashes probed, one part file). The ranges' files are staged,
+    * adopted into the chunks dir as one generation and recorded in one
+    * range sidecar. Each file holds one hash range, so the generation's
+    * files are DISJOINT (footer min/max): a point lookup opens one
+    * candidate file per generation instead of every file (file-level
+    * pruning in ChunkBlobReader.fileHashRange — without disjoint files,
+    * per-chunk tasks paid an open per file: measured 277 ms/task on a
+    * 2240-chunk grid agg, ~8 ms after). */
   private[spark] def appendBlobsRange(rows: DataFrame): Unit = {
     import spark.implicits._
     val staging = newChunkStagingDir()
-    val existing = rows.select("hash").distinct()
-      .join(chunkHashesDF, Seq("hash"), "left_semi")
-    rows.select(col("hash"), lit(-1L).as("ref"), col("bytes"))
-      .join(broadcast(existing), Seq("hash"), "left_anti")
-      .as[(String, Long, Array[Byte])]
-      // map-side pre-dedup (hashes only in memory, bounded by the
-      // partition's distinct chunks): a constant variable collapses to
-      // one row per partition BEFORE the shuffle, preserving the old
-      // shape's property that duplicate content never moves
-      .mapPartitions { it =>
-        val seen = new java.util.HashSet[String]()
-        it.filter(r => seen.add(r._1))
+    val ranged = spark.sparkContext.broadcast(ChunkFileScope.ranged(this))
+    val files = SparkVersionWriter.blobFiles(spark)
+    val gen = java.util.UUID.randomUUID.toString
+    val dirs = inHashRanges(rows.select("hash", "bytes").as[(String, Array[Byte])].rdd
+        .keyBy(_._1), spark.sessionState.conf.numShufflePartitions) { (range, it) =>
+      SparkVersionWriter.landBlobs(ranged.value, it, files,
+        StoreFs.child(staging, java.util.UUID.randomUUID.toString), range, gen)
+    }
+    writeChunkRangeSidecar(dirs.toSeq.flatten.flatMap(adoptChunkFiles))
+    StoreFs.deleteTree(staging)
+  }
+
+  /** `rows`, keyed by blob hash, shuffled into `ranges` contiguous hash
+    * ranges (`ChunkFileScope.HashRanges`) and sorted by hash within each;
+    * `land` runs once per range in a task, and the driver gets each
+    * range's result. An empty range still runs `land`, over no rows. */
+  private[spark] def inHashRanges[T: scala.reflect.ClassTag, R: scala.reflect.ClassTag](
+      rows: org.apache.spark.rdd.RDD[(String, T)], ranges: Int)(
+      land: (Int, Iterator[T]) => R): Array[R] = {
+    val hconfBc = StoreFs.broadcastConf()
+    rows.repartitionAndSortWithinPartitions(ChunkFileScope.HashRanges(ranges))
+      .mapPartitionsWithIndex { (range, it) =>
+        StoreFs.installExecutorConf(hconfBc.value)
+        Iterator.single(land(range, it.map(_._2)))
       }
-      .repartitionByRange(col("_1")).sortWithinPartitions("_1")
-      // cross-partition duplicates land adjacent in the hash-sorted
-      // range partitions: drop-adjacent finishes the dedup shuffle-free
-      .mapPartitions(it => SparkVersionWriter.dropAdjacent(it))
-      .toDF("hash", "ref", "bytes")
-      .write.option("compression", "uncompressed")
-      .parquet(staging)
-    writeChunkRangeSidecar(adoptChunkFiles(staging))
+      .collect()
   }
 
   /** Index rows of merged chunk rows (coordKey, coord, hash, the s* stats
@@ -1555,11 +1535,6 @@ final class SparkStore(val spark: SparkSession, val root: String) {
       .parquet(paths: _*)
   }
 
-  /** MVCC index resolution: for each coordinate of `varName`, the hash of
-    * the greatest (version, seq) among versions that are committed-and-≤
-    * `upTo`, plus (optionally) the in-flight version itself
-    * (reference read rule: backend/mem.clj:32-49; write-side base lookup:
-    * impl.clj:246-250). */
   /** MVCC resolve for a PINNED read: the admissible version set is the
     * pinned version's own verified parent chain ([[pinnedChain]] — point
     * GETs, O(depth), checkpoint-floored), truncated at the newest
@@ -1675,30 +1650,6 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** `coordFilter` is applied to the RAW index scan, before the group-by:
-    * Catalyst cannot push a filter through max_by, and without this a
-    * windowed read would shuffle the variable's entire per-version index
-    * (filtering on the group key pre-aggregation is semantics-preserving —
-    * coord is functionally determined by coordKey). */
-  private[spark] def resolvedIndex(name: String, varName: String, upTo: Long,
-      includeUncommitted: Option[Long] = None,
-      coordFilter: Column = lit(true)): DataFrame = {
-    val manifests = versionManifests(name)
-    val committed = manifests.map(_._2).filter(_ <= upTo)
-    // a checkpoint's index alone answers its point in time: admit only
-    // versions at or after the newest checkpoint ≤ upTo, so resolve cost
-    // is O(changes since last compact), not O(version history). A
-    // per-variable REPLACE version (INSERT OVERWRITE) floors THIS
-    // variable the same way — older overlays of it stop resolving.
-    val floor = manifests.collect {
-      case (_, vid, m) if vid <= upTo &&
-        (SparkStore.isCheckpoint(m) || SparkStore.isReplaceOf(m, varName)) => vid
-    }.maxOption
-    val admissible = committed.filter(v => floor.forall(v >= _)) ++
-      includeUncommitted.toSeq
-    resolvedOver(name, varName, admissible, coordFilter)
-  }
-
   /** MVCC resolve restricted to committed versions in (fromExclusive,
     * toInclusive] — the per-micro-batch delta of the streaming source:
     * each changed coordinate with its hash as of `toInclusive`. */
@@ -1760,6 +1711,15 @@ final class SparkStore(val spark: SparkSession, val root: String) {
     true
   }
 
+  /** MVCC index resolution over an explicit admissible set: for each
+    * coordinate of `varName`, the hash of the greatest (version, seq)
+    * among the `admissible` versions (reference read rule:
+    * backend/mem.clj:32-49; write-side base lookup: impl.clj:246-250).
+    * `coordFilter` is applied to the RAW index scan, before the group-by:
+    * Catalyst cannot push a filter through max_by, and without this a
+    * windowed read would shuffle the variable's entire per-version index
+    * (filtering on the group key pre-aggregation is semantics-preserving —
+    * coord is functionally determined by coordKey). */
   private[spark] def resolvedOver(name: String, varName: String,
       admissible: Seq[Long], coordFilter: Column): DataFrame =
     admittedIndexDF(name, varName, admissible)
@@ -2347,31 +2307,31 @@ final class SparkPinnedReader(store: SparkStore, name: String, val meta: Dataset
 }
 
 /** Write path (W1-W8): shred slabs into chunk fragments, merge each
-  * touched chunk onto its base, append the new blobs, append the index
-  * rows. Writes take the reads' point/range split at the same threshold
-  * (`GraftScan.PointLookupThreshold`), and point passes take the reads'
-  * placement rule (`GraftScan.onDriver`):
-  *  - ON THE DRIVER: a single writer's pass whose input the driver
-  *    already holds (a LocalRelation: `write(Seq[Slab])`, `Seq(…).toDF`)
-  *    and that fits the rule — touched keys from the slab boxes, bases
-  *    from the point resolve, then shred, merge, by-hash dedup probe and
-  *    one blob part file plus one index part file (`PartFileWriter`,
-  *    Spark's own parquet writer), all in-process: no Spark job.
-  *  - POINT IN TASKS: any other pass that merges onto resolved bases and
-  *    touches at most the threshold's chunks, shared (token) writers'
-  *    included. Touched keys come to the driver in one shuffle-free job;
-  *    one more job merges in parallel and lands both part files from ONE
-  *    writer task, whose result is each chunk's hash.
-  *  - RANGE: every other write (first writes and REPLACE versions beyond
-  *    the driver placement, larger updates). Bases join in by coordinate
-  *    (`withBlobs`), fragments cogroup with them, and blobs dedup against
-  *    the chunk table and land in hash-range-partitioned files.
-  * Every plan folds, encodes and takes stats through one kernel
-  * (`SparkVersionWriter.mergeChunk`); both point placements run the same
-  * `PointPass` kernels. The task-placed point plan writes all new blobs
-  * from one task, so the larger the chunks, the fewer it can take before
-  * the range plan is faster: measured on 4 cores, incompressible 128 KB
-  * chunks break even near 1,000 chunks (README, "Scale design"). */
+  * touched chunk onto its base, land the new blobs and the index rows.
+  * Writes take the reads' point/range split at the same threshold
+  * (`GraftScan.PointLookupThreshold`) and the reads' placement rule
+  * (`GraftScan.onDriver`). A pass merges one of two ways:
+  *  - POINT MERGE (`PointPass.merge`): bases the driver already holds —
+  *    none for a first write or a REPLACE version (fragments fold onto
+  *    fill), a shared writer's pinned retry bases, or the point resolve's
+  *    winners for an update touching at most the threshold's chunks. It
+  *    runs in-process on the driver for a single writer's driver-held
+  *    input (a LocalRelation: `write(Seq[Slab])`, `Seq(…).toDF`) that
+  *    fits the placement rule, else in tasks over fragments shuffled by
+  *    coordinate.
+  *  - RANGE MERGE (`rangeMerged`): an update of more than the threshold's
+  *    chunks. Bases join in by coordinate (`withBlobs`) and cogroup with
+  *    the fragments.
+  * Both land through ONE kernel, `PointPass.land`: hash-sorted merged
+  * chunks, adjacent duplicates dropped, hashes the store holds skipped
+  * (`ChunkBlobReader.storedHashes`), one blob part file and one index part
+  * file (`PartFileWriter`). A driver-placed pass lands in-process with no
+  * Spark job. A task-placed pass shuffles its merged chunks into hash
+  * ranges (`ChunkFileScope.HashRanges`) and lands once per range: one
+  * range when it is known to touch at most the threshold's chunks, else
+  * spark.sql.shuffle.partitions of them. The driver then adopts every
+  * landed file as one ingest generation. Every merge folds, encodes and
+  * takes stats through one kernel (`SparkVersionWriter.mergeChunk`). */
 final class SparkVersionWriter(store: SparkStore, name: String,
     val meta: DatasetMeta, val parentMeta: Option[DatasetMeta],
     /** True for writers rebuilt from a token: the version may have
@@ -2422,7 +2382,7 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       }
     }
 
-  /** One merge-and-append pass. With `collectHashes` (shared writers
+  /** One merge-and-land pass. With `collectHashes` (shared writers
     * only) returns this pass's per-chunk (content hash, base row seq,
     * base row hash) — content identity plus merge PROVENANCE, which the
     * ownership verify compares (baseSeq −1 / baseHash "" when the base
@@ -2430,8 +2390,8 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     * nothing. `baseOverride` (retry passes only) pins each
     * chunk's merge base to an explicit (seq, hash) row chosen at verify
     * time instead of the MVCC resolve — the CAS-retry "re-read current,
-    * merge onto it" step. The pass runs on the driver, point-planned in
-    * tasks, or range-planned (see the class doc). */
+    * merge onto it" step. The pass merges and lands as the class doc
+    * describes. */
   private def writeOnce(varName: String, slabRows: DataFrame,
       collectHashes: Boolean = false,
       baseOverride: Option[Seq[(String, Long, String)]] = None,
@@ -2468,8 +2428,8 @@ final class SparkVersionWriter(store: SparkStore, name: String,
     //    LocalRelation, as write(Seq[Slab]) and Seq(…).toDF build) names
     //    its touched chunks with no job, and runs on the driver within
     //    `GraftScan.onDriver`'s bound; any other base-resolving pass that
-    //    touches at most the point threshold's chunks is point-planned in
-    //    tasks.
+    //    touches at most the point threshold's chunks resolves its bases
+    //    on the driver too, and a larger one resolves them distributedly.
     val resolvesBase = baseOverride.isDefined ||
       (store.hasIndexData(name, varN, meta.parent, vid) &&
         !SparkStore.isReplaceOf(meta, varN))
@@ -2485,27 +2445,47 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       case _ => None
     }
     val pointKeys = touched.filter(_.size <= threshold).map(_.asScala.toSet)
+    // coordKey → (base blob hash, baseSeq, baseHash), absent → fill base;
+    // None: the bases come from the range merge's distributed resolve
+    val bases: Option[Map[String, (String, Long, String)]] = baseOverride match {
+      case Some(ov) => Some(ov.iterator.map { case (k, s, h) => k -> ((h, s, h)) }.toMap)
+      case None if !resolvesBase => Some(Map.empty)
+      case None => pointKeys.map(resolvedBases(varN, _))
+    }
+    val pass = SparkVersionWriter.PointPass(meta.toJson, varN, vid, jobSeqBase,
+      bases.getOrElse(Map.empty), replacesByCoord, collectHashes,
+      java.util.UUID.randomUUID.toString, SparkVersionWriter.blobFiles(spark),
+      PartFileWriter(spark, SparkVersionWriter.indexFileSchema, Map.empty, "."),
+      store.newChunkStagingDir(), store.newIndexStagingDir(name))
 
-    (local, pointKeys) match {
+    val landed = (local, pointKeys) match {
       case (Some(rows), Some(keys)) if GraftScan.onDriver(keys.size,
           rows.iterator.map(_._3.length.toLong).sum +
             keys.size * GraftScan.chunkBytes(meta, varN)) =>
-        val pass = pointPass(varN, keys, resolvesBase, baseOverride,
-          replacesByCoord, jobSeqBase)
         val ranged = ChunkFileScope.ranged(store)
         val merged = pass.merge(ranged,
             rows.iterator.flatMap(r => shred(r)).toArray.sortBy(_._1).iterator)
           .toArray.sortBy(_._3)
-        val mine = adoptPoint(pass, pass.land(ranged, merged.iterator))
-        if (collectHashes) Some(mine) else None
-      case (_, Some(keys)) if resolvesBase =>
-        val mine = pointInTasks(varN, frags, keys, baseOverride,
-          replacesByCoord, jobSeqBase)
-        if (collectHashes) Some(mine) else None
+        Seq(pass.land(ranged, merged.iterator, 0))
       case _ =>
-        rangePass(varN, slabRows, frags, resolvesBase, baseOverride,
-          replacesByCoord, jobSeqBase, collectHashes)
+        // one chunk-file listing for the base fetch and the dedup probe
+        val ranged = spark.sparkContext.broadcast(ChunkFileScope.ranged(store))
+        val hconfBc = StoreFs.broadcastConf()
+        val n = spark.sessionState.conf.numShufflePartitions
+        val merged = if (bases.isDefined) {
+          frags.rdd.keyBy(_._1)
+            .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(n))
+            .mapPartitions { it =>
+              StoreFs.installExecutorConf(hconfBc.value)
+              pass.merge(ranged.value, it.map(_._2))
+            }
+        } else rangeMerged(varN, slabRows, frags).rdd
+        store.inHashRanges(merged.keyBy(_._3), if (pointKeys.isDefined) 1 else n) { (range, it) =>
+          pass.land(ranged.value, it, range)
+        }.toSeq
     }
+    val mine = adoptLanded(pass, landed)
+    if (collectHashes) Some(mine) else None
   }
 
   /** `slabRows`' rows when its optimized plan is a LocalRelation: rows
@@ -2518,183 +2498,71 @@ final class SparkVersionWriter(store: SparkStore, name: String,
       case _ => None
     }
 
-  /** A point pass's driver-built state: bases resolved (or taken from a
-    * retry's pinned override), fresh staging dirs, and the part-file
-    * writers its one landing writer uses. */
-  private def pointPass(varN: String, keys: Set[String], resolvesBase: Boolean,
-      baseOverride: Option[Seq[(String, Long, String)]],
-      replaces: Map[String, String], seq: Long): SparkVersionWriter.PointPass = {
-    // coordKey → (base blob hash, baseSeq, baseHash); absent → fill base
-    val bases: Map[String, (String, Long, String)] = baseOverride match {
-      case Some(ov) => ov.iterator.map { case (k, s, h) => k -> ((h, s, h)) }.toMap
-      case None if !resolvesBase => Map.empty
-      case None =>
-        // chain-scoped on the writer's own parent manifest, plus this
-        // in-flight version — as the range plan's base resolve
-        val admissible =
-          parentMeta.toSeq.flatMap(store.pinnedAdmissible(name, varN, _)) :+ vid
-        store.resolvedPoints(name, varN, admissible, PointKeys.Exactly(keys))
-          .map { case (k, r) =>
-            val own = r.getLong(1) == vid
-            k -> ((r.getString(3), if (own) r.getLong(2) else -1L,
-              if (own) r.getString(3) else ""))
-          }
-    }
-    SparkVersionWriter.PointPass(meta.toJson, varN, vid, seq, bases, replaces,
-      PartFileWriter(spark, SparkVersionWriter.blobFileSchema,
-        Map("compression" -> "uncompressed"), "-"),
-      PartFileWriter(spark, SparkVersionWriter.indexFileSchema, Map.empty, "."),
-      store.newChunkStagingDir(), store.newIndexStagingDir(name))
+  /** The point resolve's bases of `keys`: coordKey → (base blob hash,
+    * baseSeq, baseHash), chain-scoped on the writer's own parent manifest
+    * plus this in-flight version — as the range merge's base resolve. */
+  private def resolvedBases(varN: String, keys: Set[String])
+      : Map[String, (String, Long, String)] = {
+    val admissible =
+      parentMeta.toSeq.flatMap(store.pinnedAdmissible(name, varN, _)) :+ vid
+    store.resolvedPoints(name, varN, admissible, PointKeys.Exactly(keys))
+      .map { case (k, r) =>
+        val own = r.getLong(1) == vid
+        k -> ((r.getString(3), if (own) r.getLong(2) else -1L,
+          if (own) r.getString(3) else ""))
+      }
   }
 
-  /** The point pass in Spark tasks, for input the driver does not hold:
-    * ONE job. Fragments shuffle by coordinate and merge in parallel tasks
-    * (`PointPass.merge`); the merged chunks shuffle to ONE hash-sorted
-    * writer task (`PointPass.land`), which writes the blob and index part
-    * files and returns each chunk's (coordKey, hash, baseSeq, baseHash) as
-    * the job result — nothing is persisted or recomputed. */
-  private def pointInTasks(varN: String, frags: Dataset[Frag], keys: Set[String],
-      baseOverride: Option[Seq[(String, Long, String)]],
-      replaces: Map[String, String], seq: Long): Map[String, (String, Long, String)] = {
-    val pass = pointPass(varN, keys, resolvesBase = true, baseOverride, replaces, seq)
-    // one chunk-file listing for the base fetch and the dedup probe
-    val ranged = spark.sparkContext.broadcast(ChunkFileScope.ranged(store))
-    val hconfBc = StoreFs.broadcastConf()
-    val landed = frags.rdd.keyBy(_._1)
-      .repartitionAndSortWithinPartitions(
-        new org.apache.spark.HashPartitioner(spark.sessionState.conf.numShufflePartitions))
-      .mapPartitions { it =>
-        StoreFs.installExecutorConf(hconfBc.value)
-        pass.merge(ranged.value, it.map(_._2))
-      }
-      .keyBy(_._3)
-      .repartitionAndSortWithinPartitions(new org.apache.spark.HashPartitioner(1))
-      .mapPartitions { it =>
-        StoreFs.installExecutorConf(hconfBc.value)
-        Iterator.single(pass.land(ranged.value, it.map(_._2)))
-      }
-      .collect().head
-    adoptPoint(pass, landed)
-  }
-
-  /** Adopts a landed point pass — blobs and their range sidecar BEFORE
-    * index rows, as every append (see vacuum) — and drops its staging
-    * dirs (a failed task attempt's files included). */
-  private def adoptPoint(pass: SparkVersionWriter.PointPass,
-      landed: SparkVersionWriter.Landed): Map[String, (String, Long, String)] = {
-    store.writeChunkRangeSidecar(store.adoptChunkFiles(landed.chunkDir))
+  /** Adopts a landed pass — every blob dir, then ONE range sidecar for
+    * the pass, then every index dir, as every append orders them (see
+    * vacuum) — and drops its staging dirs (a failed task attempt's files
+    * included: only the dirs the successful attempts returned are
+    * adopted). */
+  private def adoptLanded(pass: SparkVersionWriter.PointPass,
+      landed: Seq[SparkVersionWriter.Landed]): Map[String, (String, Long, String)] = {
+    store.writeChunkRangeSidecar(landed.flatMap(_.chunkDir).flatMap(store.adoptChunkFiles))
     StoreFs.deleteTree(pass.chunkStaging)
-    store.adoptIndexFiles(name, landed.indexDir)
+    landed.flatMap(_.indexDir).foreach(store.adoptIndexFiles(name, _))
     StoreFs.deleteTree(pass.indexStaging)
-    landed.chunks.iterator.map { case (k, h, bs, bh) => k -> ((h, bs, bh)) }.toMap
+    landed.iterator.flatMap(_.chunks).map { case (k, h, bs, bh) => k -> ((h, bs, bh)) }.toMap
   }
 
-  /** The RANGE pass: merge (`rangeMerged`), hash-range blob append and
-    * index append over one persisted merge; shared writers collect their
-    * per-chunk hashes from it. */
-  private def rangePass(varN: String, slabRows: DataFrame, frags: Dataset[Frag],
-      resolvesBase: Boolean, baseOverride: Option[Seq[(String, Long, String)]],
-      replacesByCoord: Map[String, String], jobSeqBase: Long,
-      collectHashes: Boolean): Option[Map[String, (String, Long, String)]] = {
-    // 3. merge: one row per touched chunk — the merged blob, its stats
-    //    and the base row it folded
-    val merged = rangeMerged(varN, slabRows, frags, resolvesBase, baseOverride)
-      .toDF("coordKey", "coord", "hash", "bytes",
-        "scnt", "slmin", "slmax", "slsum", "sdmin", "sdmax", "snan",
-        "baseSeq", "baseHash")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      // 4. chunk append, content-deduplicated within the batch AND against
-      //    the store (reference dedup bound impl_test.clj:17-39). The
-      //    batch lands in a STAGING dir and its part files are adopted
-      //    into the live chunks dir — the exact new-file list then comes
-      //    from one O(new files) listing (diffing the live dir would cost
-      //    two full walks per ingest at millions of part files, and could
-      //    capture a concurrent writer's in-flight _temporary files), and
-      //    this generation's (file → hash range) sidecar means scan
-      //    planning never has to open footers. Same adopt pattern as
-      //    vacuum's compaction; part-file names carry fresh UUIDs, so no
-      //    collision. Blobs are already LZ4-framed — parquet does not
-      //    recompress them.
-      store.appendBlobsRange(merged)
-
-      // 5. index append, hive-partitioned by (var, version) so the MVCC
-      //    resolve prunes whole files by version instead of filtering
-      //    rows; staged + adopted (appendIndexRows) so concurrent token
-      //    writers' commit protocols never share a _temporary dir
-      // replacesHash: on a CAS retry, the writer's own superseded row's
-      // content hash (the retry re-delivers those cells) — lets the
-      // commit-time torn-write check mark the old row as covered. The
-      // map is bounded by the retry's lost-chunk count; null elsewhere.
-      val replacesCol =
-        if (replacesByCoord.isEmpty) lit(null).cast("string")
-        else element_at(typedLit(replacesByCoord), col("coordKey"))
-      store.appendIndexRows(name, store.indexRowsOf(merged, lit(varN), vid,
-        lit(jobSeqBase), replacesCol))
-      // collected for shared writers only: bounded by THIS call's touched
-      // chunk count (token slaves write bounded batches; the unbounded
-      // bulk-ingest path is single-writer and never collects)
-      if (collectHashes)
-        Some(merged.select("coordKey", "hash", "baseSeq", "baseHash").collect()
-          .map(r => r.getString(0) ->
-            (r.getString(1), r.getLong(2), r.getString(3))).toMap)
-      else None
-    } finally merged.unpersist()
-  }
-
-  /** RANGE-planned merge: base chunks are semi-joined to the coordinates
-    * the slabs actually touch, each base row's blob then fetched BY HASH
+  /** RANGE merge: base chunks are semi-joined to the coordinates the
+    * slabs actually touch, each base row's blob then fetched BY HASH
     * (`SparkStore.withBlobs`: hash-bucketed batches through the chunk
     * files whose hash range can hold them — never a scan of the whole
     * blob store); then ONE shuffle cogroups fragments with base chunks
     * by coordinate, so each coordinate is owned by exactly one task. A
     * resolved base hash whose blob is missing fails the write
     * (`SparkPinnedReader.requireBlob`): merging onto fill would silently
-    * erase the chunk's untouched cells. Without a base the cogroup sees
-    * an empty base side and folds fragments onto fill. */
-  private def rangeMerged(varN: String, slabRows: DataFrame, frags: Dataset[Frag],
-      resolvesBase: Boolean, baseOverride: Option[Seq[(String, Long, String)]])
-      : Dataset[Merged] = {
-    // (coordKey, hash, baseSeq, baseHash): base row identity — baseSeq −1
-    // / baseHash "" for a committed-version or fill base (only THIS
-    // version's rows can contend, so only a vid base needs an identity)
-    val baseIdx: Option[DataFrame] =
-      if (baseOverride.isDefined)
-        Some(baseOverride.get.toDF("coordKey", "baseSeq", "baseHash")
-          .withColumn("hash", col("baseHash")))
-      else if (!resolvesBase) None
-      else {
-        // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
-        // base-chunk loading is restricted to these (writing one slab to a
-        // petabyte variable must not load the whole variable's chunks)
-        val touched = touchedKeys(varN, slabRows)
-        // base resolution is CHAIN-scoped on the writer's own parent
-        // manifest (not the listing): a writer chained on a
-        // just-committed parent a lagging listing still omits must merge
-        // against the parent's real state, never the grandparent's
-        Some((parentMeta match {
-          case Some(pm) => store.resolvedIndexPinned(name, varN, pm,
-            includeUncommitted = Some(vid))
-          case None => store.resolvedOver(name, varN, Seq(vid),
-            org.apache.spark.sql.functions.lit(true))
-        })
-          .join(touched, Seq("coordKey"), "left_semi")
-          .select(col("coordKey"), col("hash"),
-            when(col("winVersion") === vid, col("winSeq")).otherwise(-1L)
-              .as("baseSeq"),
-            when(col("winVersion") === vid, col("hash")).otherwise("")
-              .as("baseHash")))
-      }
-    val baseChunks: Dataset[(String, Array[Byte], Long, String)] =
-      baseIdx match {
-        case None => spark.emptyDataset[(String, Array[Byte], Long, String)]
-        case Some(idx) =>
-          store.withBlobs(idx, "hash", "baseBytes", requireKeyCol = Some("coordKey"))
-            .select(col("coordKey"), col("baseBytes"), col("baseSeq"),
-              col("baseHash"))
-            .as[(String, Array[Byte], Long, String)]
-      }
+    * erase the chunk's untouched cells. A coordinate with no base folds
+    * its fragments onto fill. */
+  private def rangeMerged(varN: String, slabRows: DataFrame,
+      frags: Dataset[Frag]): Dataset[Merged] = {
+    // touched chunk coordinates, computed WITHOUT shuffling slab bytes —
+    // base-chunk loading is restricted to these (writing one slab to a
+    // petabyte variable must not load the whole variable's chunks)
+    val touched = touchedKeys(varN, slabRows)
+    // base resolution is CHAIN-scoped on the writer's own parent
+    // manifest (not the listing): a writer chained on a just-committed
+    // parent a lagging listing still omits must merge against the
+    // parent's real state, never the grandparent's. (coordKey, hash,
+    // baseSeq, baseHash): base row identity — baseSeq −1 / baseHash ""
+    // for a committed-version base (only THIS version's rows can contend,
+    // so only a vid base needs an identity)
+    val baseIdx = (parentMeta match {
+      case Some(pm) => store.resolvedIndexPinned(name, varN, pm,
+        includeUncommitted = Some(vid))
+      case None => store.resolvedOver(name, varN, Seq(vid), lit(true))
+    })
+      .join(touched, Seq("coordKey"), "left_semi")
+      .select(col("coordKey"), col("hash"),
+        when(col("winVersion") === vid, col("winSeq")).otherwise(-1L).as("baseSeq"),
+        when(col("winVersion") === vid, col("hash")).otherwise("").as("baseHash"))
+    val baseChunks = store.withBlobs(baseIdx, "hash", "baseBytes",
+        requireKeyCol = Some("coordKey"))
+      .select(col("coordKey"), col("baseBytes"), col("baseSeq"), col("baseHash"))
+      .as[(String, Array[Byte], Long, String)]
     val metaJson = meta.toJson
     frags.groupByKey(_._1)
       .cogroup(baseChunks.groupByKey(_._1)) { (key, fIt, bIt) =>
@@ -2857,8 +2725,8 @@ object SparkVersionWriter {
   private[spark] type SlabRow = (Array[Long], Array[Long], Array[Byte], Long)
 
   /** The writer's one slab → fragment rule: a slab row clipped to each
-    * chunk it covers, its seq offset into the pass's `seqBase`. The range
-    * and task placements run it in tasks, the driver placement in-process. */
+    * chunk it covers, its seq offset into the pass's `seqBase`. A
+    * task-placed pass runs it in tasks, the driver placement in-process. */
   private[spark] final class Shredder(metaJson: String, varN: String,
       seqBase: Long) extends Serializable {
     @transient private lazy val meta = DatasetMeta.fromJson(metaJson)
@@ -2904,20 +2772,27 @@ object SparkVersionWriter {
     StructField("baseHash", StringType),
     StructField("replacesHash", StringType)))
 
-  /** Where one point pass landed: its blob and index attempt dirs (under
-    * the pass's staging dirs) and each merged chunk's (coordKey, hash,
-    * baseSeq, baseHash). */
-  private[spark] final case class Landed(chunkDir: String, indexDir: String,
-      chunks: Array[(String, String, Long, String)])
+  /** Writer of blob part files: (hash, ref, bytes) rows, uncompressed —
+    * blobs are already LZ4-framed. */
+  private[spark] def blobFiles(spark: SparkSession): PartFileWriter =
+    PartFileWriter(spark, blobFileSchema, Map("compression" -> "uncompressed"), "-")
 
-  /** A point pass's kernels over iterators, the same on the driver and in
+  /** Where one landing wrote: its blob and index attempt dirs (None when
+    * it wrote no such file) and, for a pass that keeps them, each merged
+    * chunk's (coordKey, hash, baseSeq, baseHash). */
+  private[spark] final case class Landed(chunkDir: Option[String],
+      indexDir: Option[String], chunks: Array[(String, String, Long, String)])
+
+  /** A write pass's kernels over iterators, the same on the driver and in
     * tasks: `merge` folds each chunk's fragments onto its base, `land`
-    * writes one blob part file and one index part file. Built on the
-    * driver; serializable, so the task placement ships it. */
+    * writes one hash range's blob part file and index part file. Built on
+    * the driver; serializable, so the task placement ships it. Every file
+    * of the pass carries its generation id `gen`. */
   private[spark] final case class PointPass(metaJson: String, varN: String,
       vid: Long, seq: Long, bases: Map[String, (String, Long, String)],
-      replaces: Map[String, String], blobFiles: PartFileWriter,
-      indexFiles: PartFileWriter, chunkStaging: String, indexStaging: String) {
+      replaces: Map[String, String], keepChunks: Boolean, gen: String,
+      blobFiles: PartFileWriter, indexFiles: PartFileWriter,
+      chunkStaging: String, indexStaging: String) {
     @transient private lazy val meta = DatasetMeta.fromJson(metaJson)
 
     /** Merged chunks of coordKey-sorted fragments, each base blob fetched
@@ -2937,40 +2812,28 @@ object SparkVersionWriter {
         }
       }
 
-    /** Writes hash-sorted `merged` chunks as ONE blob part file — adjacent
-      * duplicates dropped, then hashes the store already holds, found by
-      * `ChunkBlobReader.storedHashes` over `ranged`'s candidate files
-      * (never the per-JVM blob cache: a cached blob may already be
-      * vacuumed) — and ONE index part file under
-      * `var=<escaped>/version=<vid>/`. Each call writes into fresh attempt
-      * dirs, so a retried task never mixes files with a failed attempt. */
+    /** Lands hash-sorted `merged` chunks of hash range `range`: their new
+      * blobs as ONE blob part file (`landBlobs`) and their rows as ONE
+      * index part file under `var=<escaped>/version=<vid>/`. Each call
+      * writes into fresh attempt dirs, so a retried task never mixes
+      * files with a failed attempt. */
     def land(ranged: Array[(String, String, String)],
-        merged: Iterator[Merged]): Landed = {
+        merged: Iterator[Merged], range: Int): Landed = {
       val attempt = java.util.UUID.randomUUID.toString
-      val chunkDir = StoreFs.child(chunkStaging, attempt)
       val indexDir = StoreFs.child(indexStaging, attempt)
       val partition = StoreFs.child(StoreFs.child(indexDir, "var=" +
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(varN)),
         s"version=$vid")
       val chunks = Array.newBuilder[(String, String, Long, String)]
-      scala.util.Using.resources(new PartFileWriter.Lazy(indexFiles, partition),
-          new PartFileWriter.Lazy(blobFiles, chunkDir)) { (index, blobs) =>
-        val blobRows = merged.map { m =>
+      val index = new PartFileWriter.Lazy(indexFiles, partition, range, gen)
+      val chunkDir =
+        try landBlobs(ranged, merged.map { m =>
           index.write(indexRow(m))
-          chunks += ((m._1, m._3, m._12, m._13))
-          (m._3, -1L, m._4)
-        }
-        dropAdjacent(blobRows).grouped(ChunkBlobReader.OrTreeLimit).foreach { batch =>
-          val hs = batch.iterator.map(_._1).toSet
-          val stored = ChunkBlobReader.storedHashes(
-            ChunkFileScope.filesFor(ranged, hs.iterator), hs)
-          batch.foreach { case (h, ref, b) =>
-            if (!stored.contains(h))
-              blobs.write(new GenericInternalRow(Array[Any](UTF8String.fromString(h), ref, b)))
-          }
-        }
-      }
-      Landed(chunkDir, indexDir, chunks.result())
+          if (keepChunks) chunks += ((m._1, m._3, m._12, m._13))
+          (m._3, m._4)
+        }, blobFiles, StoreFs.child(chunkStaging, attempt), range, gen)
+        finally index.close()
+      Landed(chunkDir, if (index.opened) Some(indexDir) else None, chunks.result())
     }
 
     private def indexRow(m: Merged): InternalRow = {
@@ -2984,6 +2847,29 @@ object SparkVersionWriter {
     }
   }
 
+  /** The blob kernel every commit and torn repair lands through: of
+    * hash-sorted (hash, framed blob) rows, adjacent duplicates dropped,
+    * then hashes the store already holds — found by
+    * `ChunkBlobReader.storedHashes` over `ranged`'s candidate files (never
+    * the per-JVM blob cache: a cached blob may already be vacuumed) — the
+    * rest go into ONE part file `part-<part>-<gen>` in `dir`. Returns
+    * `dir` when it wrote the file. */
+  private[spark] def landBlobs(ranged: Array[(String, String, String)],
+      blobs: Iterator[(String, Array[Byte])], files: PartFileWriter, dir: String,
+      part: Int, gen: String): Option[String] = {
+    val out = new PartFileWriter.Lazy(files, dir, part, gen)
+    try dropAdjacent(blobs).grouped(ChunkBlobReader.OrTreeLimit).foreach { batch =>
+      val hs = batch.iterator.map(_._1).toSet
+      val stored = ChunkBlobReader.storedHashes(
+        ChunkFileScope.filesFor(ranged, hs.iterator), hs)
+      batch.foreach { case (h, b) =>
+        if (!stored.contains(h))
+          out.write(new GenericInternalRow(Array[Any](UTF8String.fromString(h), -1L, b)))
+      }
+    } finally out.close()
+    if (out.opened) Some(dir) else None
+  }
+
   /** Adds `keys` to `into` until it holds more than `limit` keys. */
   private[spark] def addCapped(into: java.util.HashSet[String],
       keys: Iterator[String], limit: Long): java.util.HashSet[String] = {
@@ -2991,7 +2877,7 @@ object SparkVersionWriter {
     into
   }
 
-  /** The merge kernel of both write plans, for one touched chunk: fold
+  /** The merge kernel of both write merges, for one touched chunk: fold
     * its fragments in write order onto its base (`baseFramed`, a framed
     * blob, or fill when null), encode the result and take its zone-map
     * stats — computed while the slab is in memory, so read-side
@@ -3048,8 +2934,8 @@ object SparkVersionWriter {
   }
 
   /** Blob rows of a hash-sorted stream with adjacent duplicates dropped. */
-  private[spark] def dropAdjacent(it: Iterator[(String, Long, Array[Byte])])
-      : Iterator[(String, Long, Array[Byte])] = {
+  private def dropAdjacent(it: Iterator[(String, Array[Byte])])
+      : Iterator[(String, Array[Byte])] = {
     var last: String = null
     it.filter { r =>
       val keep = r._1 != last

@@ -724,9 +724,10 @@ private[source] final case class GraftFillRangePartition(
   * hashes (fill partitions ship none). At the target scale the chunks dir
   * holds millions of part files — a full listing embedded in every task
   * is O(tasks × files) serialized scheduler traffic. Blobs are written
-  * hash-SORTED into range-DISJOINT part files per ingest generation
-  * (SparkVersionWriter.writeRows), so the overlap test keeps ~1/nth of
-  * the files per hash bucket. Footer (min, max) ranges come from the same
+  * hash-SORTED, and a generation's part files are range-DISJOINT because
+  * each landing task owns one contiguous hash range ([[HashRanges]],
+  * `SparkVersionWriter.PointPass.land`), so the overlap test keeps ~1/nth
+  * of the files per hash bucket. Footer (min, max) ranges come from the same
   * per-JVM cache the executors use (`ChunkBlobReader.fileHashRange` —
   * part files are write-once, entries never go stale), so re-plans are
   * directory-listing-only. */
@@ -808,6 +809,14 @@ private[spark] object ChunkFileScope {
     import org.apache.spark.sql.functions.{conv, lit, shiftright, substring}
     shiftright(conv(substring(hash, 1, 8), 16, 10).cast("bigint") *
       lit(nBuckets.toLong), 32)
+  }
+
+  /** [[hashBucket]]'s rule as a partitioner of hash-keyed rows: `n`
+    * contiguous hash ranges, the same on every call, so no sampling job. */
+  final case class HashRanges(n: Int) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = ((java.lang.Long.parseLong(
+      key.asInstanceOf[String].substring(0, 8), 16) * n) >>> 32).toInt
   }
 
   /** Full-hash string span of manifest hash bucket `b` of `nBuckets`.

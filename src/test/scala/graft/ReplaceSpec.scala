@@ -6,7 +6,7 @@ import graft.spark.{SparkStore, VersionDiff}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-variable REPLACE versions (INSERT OVERWRITE semantics). */
-class ReplaceSpec extends AnyFunSuite {
+class ReplaceSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   private def meta2 = DatasetMeta(
@@ -24,7 +24,7 @@ class ReplaceSpec extends AnyFunSuite {
   test("replace truncates ONLY its variable; time travel keeps the old " +
       "overlay; diff sees removed cells as value→fill") {
     val store = new SparkStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_repl").toString)
+      tempRoot("graft_repl"))
     store.create("d")
     val w1 = store.addVersion("d", meta2)
     w1.write("a", Seq(Slab.fromDoubles(DType.LONG,
@@ -52,7 +52,7 @@ class ReplaceSpec extends AnyFunSuite {
   test("SQL DELETE: a rectangular delete is metadata-only, reads back as " +
       "fill, and time-travels; a value predicate routes to the row-level " +
       "path and fills exactly the matched cells") {
-    val root = java.nio.file.Files.createTempDirectory("graft_del").toString
+    val root = tempRoot("graft_del")
     val store = new SparkStore(spark, root)
     store.create("d")
     val m = DatasetMeta(Map("h" -> 20L), Map("h" -> 8L),
@@ -89,7 +89,7 @@ class ReplaceSpec extends AnyFunSuite {
 
   test("replace then compact: the checkpoint preserves replace semantics") {
     val store = new SparkStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_repl2").toString)
+      tempRoot("graft_repl2"))
     store.create("d")
     val w1 = store.addVersion("d", meta2)
     w1.write("a", Seq(Slab.empty(DType.LONG, Slice(Seq(0L), Seq(20L)), 3.0)))

@@ -4,7 +4,6 @@ import graft.core._
 import graft.meta.{DatasetMeta, VariableDef}
 import graft.spark.SparkStore
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
@@ -47,16 +46,14 @@ object SparkTestSession {
 /** Distributed read/write path over the Parquet-backed SparkStore —
   * the Spark-native analog of the reference's entire_flow / time-travel /
   * dedup suites. */
-class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SparkFlowSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
-  private var rootDir: java.nio.file.Path = _
 
-  override def beforeAll(): Unit = {
-    rootDir = java.nio.file.Files.createTempDirectory("graft-spark-test")
-  }
+  private def freshStore(): SparkStore = new SparkStore(spark, tempRoot("graft-spark-test"))
 
-  private def freshStore(): SparkStore =
-    new SparkStore(spark, java.nio.file.Files.createTempDirectory(rootDir, "store").toString)
+  /** The token file and worker logs of a cross-JVM test, in a dir the
+    * suite deletes (not in the store root). */
+  private def ioDir(): java.io.File = new java.io.File(tempRoot("graft-xjvm-io"))
 
   private def meta2d = DatasetMeta(
     dimensions = Map("x" -> 9L, "y" -> 10L), // deliberately not chunk-aligned
@@ -559,7 +556,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("edge chunks clipped on the TRAILING axis decode correctly (blobs hold " +
       "the full overhanging chunk; cell arithmetic must use chunk-grid shapes)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-edge").toString
+    val root = tempRoot("graft-edge")
     val store = new SparkStore(spark, root)
     store.create("ds")
     // dims (4,5) with chunks (4,4): chunk (0,1) spans y∈[4,8) but the
@@ -588,7 +585,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       "coords, master commits, union reads back (concurrency.clj:162-243)") {
     // separate SparkStore instances over one root = separate drivers: all
     // coordination state lives in parquet/manifest files, none in memory
-    val root = java.nio.file.Files.createTempDirectory("graft-mp").toString
+    val root = tempRoot("graft-mp")
     val master = new SparkStore(spark, root)
     master.create("ds")
     val w = master.addVersion("ds", meta2d)
@@ -622,7 +619,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     // alone on a thread whose ACTIVE session is its own newSession()
     // (separate session state and conf), and coordination is the
     // reference's ready→go→done handshake, not shared objects.
-    val root = java.nio.file.Files.createTempDirectory("graft-script").toString
+    val root = tempRoot("graft-script")
     val master = new SparkStore(spark, root)
     master.create("ds")
     val w = master.addVersion("ds", meta2d)
@@ -686,7 +683,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     // disjoint cells. Convergence requires the CAS analog: each token
     // writer verifies chunk ownership after landing and re-merges lost
     // chunks onto the winner's blob.
-    val root = java.nio.file.Files.createTempDirectory("graft-lop").toString
+    val root = tempRoot("graft-lop")
     val master = new SparkStore(spark, root)
     master.create("ds")
     val dims = Map("x" -> 20L, "y" -> 40L)
@@ -734,11 +731,12 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The full process boundary, not a simulation: nothing crosses but
     // argv + the filesystem. Workers are java subprocesses running
     // graft.testtools.TokenWorkerMain on THIS test JVM's classpath.
-    val root = java.nio.file.Files.createTempDirectory("graft-xjvm").toString
+    val root = tempRoot("graft-xjvm")
     val master = new SparkStore(spark, root)
     master.create("ds")
     val w = master.addVersion("ds", meta2d)
-    val tokenFile = java.nio.file.Files.createTempFile("graft-token", ".json")
+    val io = ioDir()
+    val tokenFile = java.nio.file.Files.createTempFile(io.toPath, "graft-token", ".json")
     java.nio.file.Files.writeString(tokenFile, w.token)
 
     val java17Opens = Seq(
@@ -751,7 +749,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def spawn(half: Int): (Process, java.io.File) = {
-      val out = java.io.File.createTempFile(s"graft-worker$half", ".log")
+      val out = java.io.File.createTempFile(s"graft-worker$half", ".log", io)
       val cmd = (Seq(
         System.getProperty("java.home") + "/bin/java", "-Xmx2g",
         "-cp", System.getProperty("java.class.path")) ++ java17Opens ++ Seq(
@@ -795,7 +793,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       "chunk written by every worker, one write() per column), master " +
       "commits — per-write CAS retries plus the commit-time torn-write " +
       "repair converge to all cells (concurrency.clj:162-243)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-xjvm4").toString
+    val root = tempRoot("graft-xjvm4")
     val master = new SparkStore(spark, root)
     master.create("ds")
     val meta = DatasetMeta(
@@ -803,7 +801,8 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       chunkDimensions = Map("x" -> 6L, "y" -> 7L), // 2 chunks, both shared 4-ways
       variables = Map("v" -> VariableDef("double", Vector("x", "y"), -1.0)))
     val w = master.addVersion("ds", meta)
-    val tokenFile = java.nio.file.Files.createTempFile("graft-token4", ".json")
+    val io = ioDir()
+    val tokenFile = java.nio.file.Files.createTempFile(io.toPath, "graft-token4", ".json")
     java.nio.file.Files.writeString(tokenFile, w.token)
     val java17Opens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -815,7 +814,7 @@ class SparkFlowSpec extends AnyFunSuite with BeforeAndAfterAll {
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def spawn(k: Int): (Process, java.io.File) = {
-      val out = java.io.File.createTempFile(s"graft-worker4-$k", ".log")
+      val out = java.io.File.createTempFile(s"graft-worker4-$k", ".log", io)
       val cmd = (Seq(
         System.getProperty("java.home") + "/bin/java", "-Xmx2g",
         "-cp", System.getProperty("java.class.path")) ++ java17Opens ++ Seq(

@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * forge that exact index state deterministically (the race itself is
   * exercised cross-process by SparkFlowSpec's chunk-sharing worker test)
   * and assert the commit repairs it. */
-class TornWriteSpec extends AnyFunSuite {
+class TornWriteSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   test("Slab.applyDiff: per-element three-way fold — only elements that " +
@@ -41,7 +41,7 @@ class TornWriteSpec extends AnyFunSuite {
       "the first writer's row (the verify-TOCTOU outcome) is re-merged at " +
       "commit; untouched chunks and single-row chunks stay as written") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-torn").toString
+    val root = tempRoot("graft-torn")
     val store = new SparkStore(spark, root)
     val meta = DatasetMeta(
       dimensions = Map("x" -> 9L, "y" -> 10L),
@@ -95,7 +95,7 @@ class TornWriteSpec extends AnyFunSuite {
       "re-delivers the superseded row's fragments, not its base's " +
       "content) — commit must repair, not skip") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-edge").toString
+    val root = tempRoot("graft-edge")
     val store = new SparkStore(spark, root)
     val meta = DatasetMeta(
       dimensions = Map("x" -> 4L), chunkDimensions = Map("x" -> 4L),
@@ -149,7 +149,7 @@ class TornWriteSpec extends AnyFunSuite {
 
   test("single-writer commits append no repair rows (generation-count " +
       "skip): two write() calls of one writer are provenance-chained") {
-    val root = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    val root = tempRoot("graft-chain")
     val store = new SparkStore(spark, root)
     val meta = DatasetMeta(
       dimensions = Map("x" -> 6L), chunkDimensions = Map("x" -> 3L),

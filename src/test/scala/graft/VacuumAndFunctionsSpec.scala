@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-class VacuumAndFunctionsSpec extends AnyFunSuite {
+class VacuumAndFunctionsSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   test("vacuum removes unreferenced blobs, keeps all referenced incl uncommitted") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vac").toString
+    val root = tempRoot("graft-vac")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(
@@ -44,7 +44,7 @@ class VacuumAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("missing blob for a resolved hash fails loudly instead of reading fill") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dangling").toString
+    val root = tempRoot("graft-dangling")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(
@@ -98,7 +98,7 @@ class VacuumAndFunctionsSpec extends AnyFunSuite {
 
   test("writeRows rejects slab seq outside the 20-bit per-call space") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-seq").toString
+    val root = tempRoot("graft-seq")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(
@@ -114,7 +114,7 @@ class VacuumAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("getSlice refuses requests above the driver cell budget") {
-    val root = java.nio.file.Files.createTempDirectory("graft-cap").toString
+    val root = tempRoot("graft-cap")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val meta = DatasetMeta(

@@ -6,11 +6,11 @@ import graft.spark.{SparkStore, VersionDiff}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cell-level CDC semantics across write, overwrite, grow, shrink. */
-class VersionDiffSpec extends AnyFunSuite {
+class VersionDiffSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   private def newStore(): SparkStore = new SparkStore(spark,
-    java.nio.file.Files.createTempDirectory("graft_diff").toString)
+    tempRoot("graft_diff"))
 
   private def meta(h: Long) = DatasetMeta(
     dimensions = Map("h" -> h),

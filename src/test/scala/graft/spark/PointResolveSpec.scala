@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `PointIndexReader`, on the driver or in tasks) picks the same (hash,
   * stats) per coordinate as the grouped resolve (`resolvedIndexPinned`),
   * in both placements, under every admissible-set rule and tie-break. */
-class PointResolveSpec extends AnyFunSuite {
+class PointResolveSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   private val meta = DatasetMeta(
@@ -21,7 +21,7 @@ class PointResolveSpec extends AnyFunSuite {
 
   private def newStore(): SparkStore = {
     val s = new SparkStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-ptres").toString)
+      tempRoot("graft-ptres"))
     s.create("d")
     s
   }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The writer's point/range split: a base-resolving write touching at
-  * most `GraftScan.PointLookupThreshold` chunks is point-planned, any
-  * other is range-planned, and both plans commit the same versions. */
+  * most `GraftScan.PointLookupThreshold` chunks resolves its bases as
+  * points, a larger one as a range, and both commit the same versions;
+  * every pass lands through one kernel, in contiguous hash ranges. */
 class PointWriteSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = SparkTestSession.spark
 
@@ -118,7 +119,7 @@ class PointWriteSpec extends AnyFunSuite with graft.TempRoots {
   }
 
   test("a shared writer that loses > threshold chunks to a co-writer " +
-      "re-merges them on the range plan with pinned bases") {
+      "re-merges them onto its pinned bases in one pass") {
     val root = "mockfs://" + tmpRoot()
     val (master, _) = seeded(root)
     val w = master.addVersion("d", grid)
@@ -149,6 +150,48 @@ class PointWriteSpec extends AnyFunSuite with graft.TempRoots {
     assert(retried.select("seq").distinct().count() == 1)
     val expected = box(0, 80, 0, 80)((x, y) => if (x % 2 == 0) fa(x, y) else fb(x, y))
     assert(java.util.Arrays.equals(sliceAt(master, v2), expected.bytes))
+  }
+
+  test("a pass over > threshold chunks lands one generation of range-" +
+      "disjoint blob files and one sidecar, and its commit runs no job") {
+    import graft.spark.source.ChunkBlobReader
+    val root = tmpRoot()
+    val s = new SparkStore(spark, root)
+    s.create("d")
+    def listed(dir: String, suffix: String) =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .map(_.getPath).filter(_.endsWith(suffix)).toSet
+    val sidecarDir = StoreFs.child(s.chunksDir, ".ranges")
+    val generation = "part-\\d+-([0-9a-fA-F-]{36})".r
+    // a first write from a distributed frame, then an update, each of all
+    // 1,600 chunks
+    val update = box(0, 80, 0, 80)((x, y) => (x * y + 7).toDouble)
+    for ((slab, i) <- Seq(base, update).zipWithIndex) {
+      val (blobsBefore, sidecarsBefore) =
+        (listed(s.chunksDir, ".parquet"), listed(sidecarDir, ".tsv"))
+      val w = if (i == 0) s.addVersion("d", grid)
+        else s.addVersion("d", s.metadata("d", s.versions("d").head._2))
+      val vid = w.meta.versionId.get
+      w.writeRows("v", frame(Seq(slab), local = false))
+      var committed = -1L
+      assert(jobsDuring { committed = w.finishVersion() } == 0,
+        s"write #$i: the commit ran a job")
+      assert(java.util.Arrays.equals(sliceAt(s, committed), slab.bytes))
+
+      val blobs = (listed(s.chunksDir, ".parquet") -- blobsBefore).toSeq
+      assert(blobs.size > 1, s"write #$i landed $blobs")
+      val ranges = blobs.map(f =>
+        ChunkBlobReader.footerRange(f, ChunkBlobReader.sharedConf).get).sorted
+      ranges.sliding(2).foreach { case Seq((_, hi), (lo, _)) =>
+        assert(hi < lo, s"write #$i: overlapping blob files $ranges") }
+      val index = listed(StoreFs.child(StoreFs.child(s.indexDir("d"), "var=v"),
+        s"version=$vid"), ".parquet").toSeq
+      assert(index.size > 1, s"write #$i landed $index")
+      assert(index.map(f => generation.findFirstMatchIn(StoreFs.name(f)).get.group(1))
+        .distinct.size == 1, s"write #$i: index files of several generations $index")
+      assert((listed(sidecarDir, ".tsv") -- sidecarsBefore).size == 1,
+        s"write #$i: not one new range sidecar")
+    }
   }
 
   test("the touched-key collect is one job whose driver-side set stops at " +

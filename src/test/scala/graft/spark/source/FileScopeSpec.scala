@@ -12,14 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * hashes — NOT the full chunks-dir listing. At the 100 TB target the
   * chunks dir is millions of part files; a full listing per task is
   * O(tasks × files) serialized scheduler traffic. */
-class FileScopeSpec extends AnyFunSuite {
+class FileScopeSpec extends AnyFunSuite with graft.TempRoots {
   private lazy val spark = SparkTestSession.spark
 
   /** A 1D variable with `nChunks` chunks of 4 cells, written across two
     * versions so the chunks dir holds two ingest generations of
     * hash-range-disjoint part files. */
   private def mk(nChunks: Int): (String, SparkStore) = {
-    val root = java.nio.file.Files.createTempDirectory("graft-scope").toString
+    val root = tempRoot("graft-scope")
     val store = new SparkStore(spark, root)
     store.create("ds")
     val n = nChunks * 4
@@ -27,23 +27,18 @@ class FileScopeSpec extends AnyFunSuite {
       dimensions = Map("x" -> n.toLong),
       chunkDimensions = Map("x" -> 4L),
       variables = Map("v" -> VariableDef("long", Vector("x"), -1.0)))
-    // at test scale AQE coalesces each ingest's repartitionByRange to ONE
-    // shuffle partition = one full-span part file; a real ingest writes
-    // many hash-range-disjoint files. Force that shape for the fixture.
-    // (The second version is an update: it takes that range-planned
-    // shape only above GraftScan.PointLookupThreshold chunks — a point-
-    // planned update lands as one hash-sorted file.)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      val w1 = store.addVersion("ds", meta)
-      w1.write("v", Seq(Slab.fromDoubles(DType.LONG,
-        Slice(Seq(0L), Seq(n / 2L)), (0 until n / 2).map(_.toDouble))))
-      w1.finishVersion()
-      val w2 = store.addVersion("ds", store.metadata("ds", store.versions("ds").head._2))
-      w2.write("v", Seq(Slab.fromDoubles(DType.LONG,
-        Slice(Seq(n / 2L), Seq(n.toLong)), (n / 2 until n).map(_.toDouble))))
-      w2.finishVersion()
-    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    // A pass over more than GraftScan.PointLookupThreshold chunks lands
+    // in spark.sql.shuffle.partitions contiguous hash ranges, one
+    // hash-range-disjoint part file each; a smaller one lands as one
+    // hash-sorted file.
+    val w1 = store.addVersion("ds", meta)
+    w1.write("v", Seq(Slab.fromDoubles(DType.LONG,
+      Slice(Seq(0L), Seq(n / 2L)), (0 until n / 2).map(_.toDouble))))
+    w1.finishVersion()
+    val w2 = store.addVersion("ds", store.metadata("ds", store.versions("ds").head._2))
+    w2.write("v", Seq(Slab.fromDoubles(DType.LONG,
+      Slice(Seq(n / 2L), Seq(n.toLong)), (n / 2 until n).map(_.toDouble))))
+    w2.finishVersion()
     (root, store)
   }
 
@@ -55,7 +50,7 @@ class FileScopeSpec extends AnyFunSuite {
 
   test("hash-range partitions carry only their bucket's overlapping files") {
     // each half > GraftScan.PointLookupThreshold chunks: both versions
-    // are range-planned writes, and the full read takes the range path
+    // land in hash ranges, and the full read takes the range path
     val (root, store) = mk(2100)
     val total = SparkStore.parquetFilesUnder(
       store.chunksDir).length
@@ -82,7 +77,7 @@ class FileScopeSpec extends AnyFunSuite {
   }
 
   test("point partitions scope files to their own hashes") {
-    // two range-planned generations, as above; the window below is
+    // two hash-range-landed generations, as above; the window below is
     // point-planned
     val (root, store) = mk(2100)
     val total = SparkStore.parquetFilesUnder(
@@ -165,16 +160,13 @@ class FileScopeSpec extends AnyFunSuite {
     // (default grace, seconds-old files), so driver-side listing state
     // stays bounded as generations accumulate.
     val (root, store) = mk(8) // two generations from the fixture
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
-      for (g <- 0 until 4) { // four more single-chunk generations
-        val w = store.addVersion("ds",
-          store.metadata("ds", store.versions("ds").head._2))
-        w.write("v", Seq(Slab.fromDoubles(DType.LONG,
-          Slice(Seq(0L), Seq(4L)), Seq(100.0 + g, 1.0, 2.0, 3.0))))
-        w.finishVersion()
-      }
-    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    for (g <- 0 until 4) { // four more single-chunk generations
+      val w = store.addVersion("ds",
+        store.metadata("ds", store.versions("ds").head._2))
+      w.write("v", Seq(Slab.fromDoubles(DType.LONG,
+        Slice(Seq(0L), Seq(4L)), Seq(100.0 + g, 1.0, 2.0, 3.0))))
+      w.finishVersion()
+    }
     val rangesDir = java.nio.file.Paths.get(store.chunksDir).resolve(".ranges")
     def tsvs() = scala.util.Using.resource(
       java.nio.file.Files.list(rangesDir)) { s =>
